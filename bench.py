@@ -144,16 +144,17 @@ def build_workload(spark, sf_dir):
         reference's runs/s, which amortizes over thousands of repeats.
         The plan is REBUILT per run: re-collecting the same DataFrame lets
         Spark skip whole stages via shuffle-output reuse, which would fake
-        the number. ``packed=True`` runs composite_packed (auto →
-        source-grouped route) — the relational rows behind the sinks'
-        one-row-per-tile seam — with the identical consumer agg."""
+        the number. ``packed=True`` runs composite_packed with the source
+        zoom declared (the fast mode, no winner pass) with the identical
+        consumer agg; the default runs composite with undeclared zooms."""
         from vtcomposite_spark.operators.composite import (composite,
                                                            composite_packed)
-        fn = composite_packed if packed else composite
         feats, targets = _fixture_grid_paths(fixture_name, n_src)
 
         def run():
-            return fn(feats, targets).agg(
+            rows = composite_packed(feats, targets, src_zooms=[8]) if packed \
+                else composite(feats, targets)
+            return rows.agg(
                 F.countDistinct("z", "x", "y").alias("tiles"),
                 F.count("*").alias("feats")).collect()[0]
         run()
@@ -212,10 +213,10 @@ def build_workload(spark, sf_dir):
     def _run_fused(src_zooms, steady_key, tiles_key, mb_key):
         """composite_encode_tiles at the SAME amortized grid as the sinks,
         so the strategies' ratio is readable from one artifact (the r4
-        artifact compared 1× vs 4× grids, which misled). src_zooms="auto"
-        (default) = the zoom-inference route, expected to converge to the
-        line sink's number; None = the generic join path (shuffle carries
-        each feature once per descendant target) — the A/B."""
+        artifact compared 1× vs 4× grids, which misled). src_zooms=[8] =
+        the declared single-zoom fast mode, expected to converge to the
+        line sink's number; None = undeclared zooms (winner pass + layer
+        splice) — the A/B."""
         from vtcomposite_spark.operators.composite import composite_encode_tiles
         feats, targets = _fixture_grid_paths(
             "linestrings-properties-16-10498-22872.mvt", N_LINE_SINK_SRC)
@@ -241,11 +242,11 @@ def build_workload(spark, sf_dir):
     def line_composite_encode_fused():
         """The closest analog of a reference bench run (whose output IS an
         encoded tile): scan -> composite -> encode with one shuffle + one
-        python seam. Default routing (src_zooms inference)."""
-        _run_fused("auto", "fused_steady_sec", "fused_tiles", "fused_mb")
+        python seam. The source zoom is declared."""
+        _run_fused([8], "fused_steady_sec", "fused_tiles", "fused_mb")
 
     def line_fused_generic():
-        """Forced generic join path at the SAME grid — the strategy A/B."""
+        """Undeclared zooms at the SAME grid — the mode A/B."""
         _run_fused(None, "fused_generic_steady_sec", "fused_generic_tiles",
                    "fused_generic_mb")
 
@@ -605,7 +606,7 @@ def run(sf_dir=None, cpus=None, quiet=False):
                                     / max(counters.get("line_steady_sec", 1e-9), 1e-9), 1),
         "poly_tiles_per_sec": round(counters.get("poly_tiles", 0)
                                     / max(counters.get("poly_steady_sec", 1e-9), 1e-9), 1),
-        # packed relational twins (composite_packed, auto → source-grouped),
+        # packed relational twins (composite_packed, declared zoom),
         # at the sinks' amortized grid — relational ROWS out, compare to
         # BASELINE.md rows 10/11 like the sinks
         "line_packed_tiles_per_sec": round(

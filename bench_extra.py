@@ -96,8 +96,8 @@ def main():
         return f, t
 
     from vtcomposite_spark.operators.composite import (
-        ancestor_join, apply_keep_layers, composite, composite_encode_tiles,
-        composite_packed, first_wins, overzoom_encode_tiles, _overzoom_prep)
+        composite, composite_encode_tiles, composite_packed,
+        overzoom_encode_tiles)
 
     LFIX = "linestrings-properties-16-10498-22872.mvt"
     PFIX = "polygons-properties-16-10498-22872.mvt"
@@ -111,10 +111,6 @@ def main():
             if not run(probe):
                 continue
             f, t = paths(fix, n)
-            sc.setJobDescription(f"{probe}: join+wins only")
-            timeit(f"{probe} join+wins (noop)", lambda: _overzoom_prep(
-                first_wins(apply_keep_layers(ancestor_join(f, t)))
-                .drop("keep_layers")))
             sc.setJobDescription(f"{probe}: full composite noop")
             timeit(f"{probe} composite (noop)", lambda: composite(f, t))
             sc.setJobDescription(f"{probe}: composite agg (bench shape)")
@@ -143,25 +139,17 @@ def main():
     if run("fused") or run("fused_generic"):
         f, t = paths(LFIX, N_LINE_SINK)
         if run("fused"):
-            sc.setJobDescription("fused auto")
-            timeit("fused auto", lambda: composite_encode_tiles(f, t),
-                   n=3, sink=tile_consume)
-            save_plan(composite_encode_tiles(f, t), "fused_auto_before.txt")
+            sc.setJobDescription("fused declared")
+            timeit("fused declared", lambda: composite_encode_tiles(
+                f, t, src_zooms=[8]), n=3, sink=tile_consume)
+            save_plan(composite_encode_tiles(f, t, src_zooms=[8]),
+                      "fused_declared_before.txt")
         if run("fused_generic"):
-            sc.setJobDescription("fused generic full")
-            timeit("fused generic", lambda: composite_encode_tiles(
-                f, t, src_zooms=None), n=3, sink=tile_consume)
-            sc.setJobDescription("fused generic: pre-seam pack noop")
-            from vtcomposite_spark.operators.composite import _pack_tiles
-
-            def pre_seam():
-                j = ancestor_join(f, t)
-                j = apply_keep_layers(j)
-                j = first_wins(j).drop("keep_layers")
-                return _pack_tiles(_overzoom_prep(j))
-            timeit("fused generic pre-seam pack (noop)", pre_seam)
-            save_plan(composite_encode_tiles(f, t, src_zooms=None),
-                      "fused_generic_before.txt")
+            sc.setJobDescription("fused undeclared")
+            timeit("fused undeclared", lambda: composite_encode_tiles(f, t),
+                   n=3, sink=tile_consume)
+            save_plan(composite_encode_tiles(f, t),
+                      "fused_undeclared_before.txt")
         sc.setJobDescription(None)
 
     if run("line_sink") or run("poly_sink"):
@@ -177,23 +165,23 @@ def main():
             sc.setJobDescription(f"{probe}: group+join only (noop)")
 
             def groups_only():
+                keys = ["src_z", "src_x", "src_y"]
                 feats = f.filter(F.col("src_z") == 8)
                 tt = (t.filter(F.col("z") >= 8)
+                      .withColumn("src_z", F.lit(8))
                       .withColumn("src_x", F.expr("x >> (z - 8)").cast("long"))
                       .withColumn("src_y", F.expr("y >> (z - 8)").cast("long")))
-                tgrp = (tt.groupBy("src_x", "src_y")
+                tgrp = (tt.groupBy(*keys)
                         .agg(F.collect_list(F.struct(
                             "z", "x", "y", "buffer_size", "compress"))
                             .alias("tgts")))
-                data_cols = [c for c in feats.columns
-                             if c not in ("src_z", "src_x", "src_y")]
+                data_cols = [c for c in feats.columns if c not in keys]
                 if parts:
-                    feats = feats.repartition(parts, "src_x", "src_y")
-                fgrp = (feats.groupBy("src_x", "src_y")
+                    feats = feats.repartition(parts, *keys)
+                fgrp = (feats.groupBy(*keys)
                         .agg(F.collect_list(F.struct(*data_cols))
                              .alias("feats")))
-                return fgrp.join(F.broadcast(tgrp),
-                                 on=["src_x", "src_y"], how="inner")
+                return fgrp.join(tgrp, on=keys)
             timeit(f"{probe} group+join (noop)", groups_only)
             save_plan(overzoom_encode_tiles(f, t, src_zoom=8,
                                             partitions=parts),

@@ -131,9 +131,14 @@ def test_columnar_encoder_fuzz_parity(layers):
 
 @pytest.fixture(scope="module")
 def fixture_buf():
-    with open("/root/reference/test/fixtures/four-points-quadrants.mvt",
-              "rb") as fh:
-        return fh.read()
+    """The four-points tile of FIXTURES.md §4: one point per quadrant of
+    z0/0/0 — the listed lon/lats at extent 4096 are (640, 832),
+    (3040, 736), (800, 2576) and (2928, 2288)."""
+    pts = [((640, 832), "top-left"), ((3040, 736), "top-right"),
+           ((800, 2576), "bottom-left"), ((2928, 2288), "bottom-right")]
+    return mvt.encode_tile([mvt.Layer(name="points", features=[
+        mvt.Feature(geom_type=1, parts=[[xy]], ring_types=[0],
+                    properties={"quadrant": q}) for xy, q in pts])])
 
 
 def test_truncated_buffers_fail_cleanly(fixture_buf):

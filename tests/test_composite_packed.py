@@ -1,7 +1,8 @@
-"""composite_packed — row-identical parity with the per-row composite().
+"""composite / composite_packed — row-identical parity with the per-row
+reference plan (tests/reference_plans.py).
 
-The packed path crosses the python seam one row per TILE in both
-directions (pack → clip kernel → re-pack → JVM inline); every
+The plan crosses the python seam one row per SOURCE GROUP in both
+directions (pack → fan/clip kernel → re-pack → JVM inline); every
 re-arrangement must be invisible in the relational rows. Mirrors the
 fused-sink parity matrix (tests/test_overzoom_fused.py) shape-for-shape.
 """
@@ -9,30 +10,18 @@ fused-sink parity matrix (tests/test_overzoom_fused.py) shape-for-shape.
 import pytest
 from pyspark.sql import functions as F
 
+from tests import reference_plans as R
 from vtcomposite_spark.operators import composite as C
 from vtcomposite_spark.sources import ingest
 
-
-def _canon(df):
-    def cell(v):
-        if isinstance(v, list):
-            return tuple(v)
-        if isinstance(v, dict):
-            return tuple(sorted(v.items()))
-        return v
-
-    from collections import Counter
-    cols = sorted(df.columns)
-    return Counter(tuple(cell(r[c]) for c in cols) for r in df.collect())
+_canon = R.canon_rows
 
 
-def _check(feats, targets, _src_zooms=None, **kw):
-    """Generic-join packed path by default (src_zooms=None); pass
-    _src_zooms to exercise the auto/source-grouped routes."""
-    want = C.composite(feats, targets, join_strategy="broadcast",
-                       src_zooms=None)
-    got = C.composite_packed(feats, targets, join_strategy="broadcast",
-                             src_zooms=_src_zooms, **kw)
+def _check(feats, targets, src_zooms=None):
+    """composite_packed (undeclared zooms by default) against the per-row
+    reference: same columns, same rows as a multiset."""
+    want = R.composite_rows(feats, targets)
+    got = C.composite_packed(feats, targets, src_zooms=src_zooms)
     assert got.columns == want.columns
     w, g = _canon(want), _canon(got)
     assert w  # non-trivial
@@ -115,41 +104,11 @@ def test_null_buffer_size_parity(spark, fixture_bytes):
          (4, 2, 3, None, None, False)],   # dz=0, NULL buffer: pass-through
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    _check(feats, targets)                      # generic packed path
-    _check(feats, targets, _src_zooms="auto")   # source-grouped route
-    got = C.composite_packed(feats, targets, src_zooms=None)
+    _check(feats, targets)                      # undeclared zooms
+    _check(feats, targets, src_zooms=[4])      # declared single zoom
+    got = C.composite_packed(feats, targets)
     assert {(r.z, r.x, r.y) for r in got.select("z", "x", "y").collect()} \
         == {(5, 5, 7), (4, 2, 3)}
-
-
-def test_capped_packing_parity(spark, fixture_bytes):
-    """max_pack_features splits a tile into per-layer packed rows; the
-    inlined rows must equal the uncapped (and the per-row) output."""
-    lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-    pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
-    feats = ingest.features_from_tiles(spark, [(lbuf, 4, 2, 3), (pbuf, 4, 2, 3)])
-    targets = spark.createDataFrame(
-        [(5, 4, 6, 128, None, False), (4, 2, 3, 0, None, False)],
-        "z int, x long, y long, buffer_size int, "
-        "keep_layers array<string>, compress boolean")
-    nmax = (feats.groupBy("layer").count()
-            .agg(F.max("count")).collect()[0][0])
-    _check(feats, targets, max_pack_features=int(nmax))
-
-
-def test_capped_packing_splits_over_cap_layer(spark, fixture_bytes):
-    """Unlike the byte sinks (which must raise — splitting a layer's
-    encoded message needs key/value-table merge), the relational packed
-    path SPLITS an over-cap layer into bounded buckets and the inline
-    union restores it: with a cap of 7 on a ~2000-feature layer the rows
-    still exactly match the per-row composite()."""
-    lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-    feats = ingest.features_from_tiles(spark, [(lbuf, 4, 2, 3)])
-    targets = spark.createDataFrame(
-        [(4, 2, 3, 0, None, False), (5, 4, 6, 128, None, False)],
-        "z int, x long, y long, buffer_size int, "
-        "keep_layers array<string>, compress boolean")
-    _check(feats, targets, max_pack_features=7)
 
 
 @pytest.mark.parametrize("fixture", [
@@ -162,8 +121,7 @@ def test_source_grouped_dz1_parity(spark, fixture_bytes, fixture):
     packed emit) must be row-identical to the generic composite()."""
     feats, grid = _grid_feats(spark, fixture_bytes, fixture)
     targets = _targets(spark, grid, 9, 8)
-    want = C.composite(feats, targets, join_strategy="broadcast",
-                       src_zooms=None)
+    want = R.composite_rows(feats, targets)
     got = C.overzoom_composite_packed(feats, targets, src_zoom=8)
     assert got.columns == want.columns
     w = _canon(want)
@@ -184,28 +142,29 @@ def test_source_grouped_mixed_dz0_dz2_first_wins_keep(spark, fixture_bytes):
          (5, 4, 7, None, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = C.composite(f2, t3, join_strategy="broadcast", src_zooms=None)
+    want = R.composite_rows(f2, t3)
     got = C.overzoom_composite_packed(f2, t3, src_zoom=4)
     assert got.columns == want.columns
     w = _canon(want)
     assert w and _canon(got) == w
 
 
-def test_auto_routes_single_zoom_to_source_grouped(spark, fixture_bytes):
-    """composite_packed's default src_zooms='auto' must infer the single
-    source zoom and still produce composite()'s exact rows."""
+def test_undeclared_single_zoom(spark, fixture_bytes):
+    """A single-zoom input with no declared zoom runs the winner pass and
+    still produces the reference's exact rows; declared runs the fast
+    mode."""
     feats, grid = _grid_feats(
         spark, fixture_bytes, "linestrings-properties-16-10498-22872.mvt")
     targets = _targets(spark, grid, 9, 8)
-    _check(feats, targets, _src_zooms="auto")
+    _check(feats, targets)
+    _check(feats, targets, src_zooms=[8])
 
 
-def test_multizoom_auto_routes_source_grouped(spark, fixture_bytes):
-    """Two source zooms: auto inference routes the per-zoom source-grouped
-    passes under cross-zoom winners (union merge) and stays row-identical
-    to the generic composite — cross-zoom first-wins included (both
-    sources contribute the same layer name; the z4 tile has the lower
-    tile_idx, so it owns the layer at every target both cover)."""
+def test_multizoom_declared_and_undeclared(spark, fixture_bytes):
+    """Two source zooms through the one winner pass, undeclared and
+    declared — cross-zoom first-wins included (both sources contribute
+    the same layer name; the z4 tile has the lower tile_idx, so it owns
+    the layer at every target both cover)."""
     lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
     pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
     feats = ingest.features_from_tiles(
@@ -215,9 +174,8 @@ def test_multizoom_auto_routes_source_grouped(spark, fixture_bytes):
          (6, 9, 13, 128, None, False), (4, 2, 3, 0, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    _check(feats, targets, _src_zooms="auto")
-    # and with explicitly declared zooms (skips the inference job)
-    _check(feats, targets, _src_zooms=[4, 5])
+    _check(feats, targets)
+    _check(feats, targets, src_zooms=[4, 5])
 
 
 def test_source_grouped_targets_without_keep_layers(spark, fixture_bytes):
@@ -229,10 +187,7 @@ def test_source_grouped_targets_without_keep_layers(spark, fixture_bytes):
         [(5, 4, 6, 128, False)],
         "z int, x long, y long, buffer_size int, compress boolean")
     got = C.overzoom_composite_packed(feats, bare, src_zoom=4)
-    want = C.composite(
-        feats, bare.withColumn(
-            "keep_layers", F.lit(None).cast("array<string>")),
-        join_strategy="broadcast", src_zooms=None)
+    want = R.composite_rows(feats, bare)
     assert got.columns == want.columns
     w = _canon(want)
     assert w and _canon(got) == w
@@ -243,7 +198,8 @@ def test_randomized_multizoom_relational_parity(spark, seed):
     """Randomized MIXED-ZOOM tilesets (sources at two zooms, shared layer
     names, targets descending from either or both, keep-lists, varying
     buffers) — the multi-zoom source-grouped relational route must be
-    row-identical to the generic join plan on shapes no hand case pins."""
+    row-identical to the per-row reference on shapes no hand case pins,
+    declared and undeclared."""
     import numpy as np
 
     from vtcomposite_spark.sources import mvt
@@ -308,14 +264,14 @@ def test_randomized_multizoom_relational_parity(spark, seed):
     targets = spark.createDataFrame(
         list(seen.values()), "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    _check(feats, targets, _src_zooms=[ZLO, ZHI])
+    _check(feats, targets, src_zooms=[ZLO, ZHI])
+    _check(feats, targets)
 
 
 def test_empty_declared_zooms_yield_empty(spark, fixture_bytes):
     """An explicitly-declared EMPTY src_zooms list (e.g. computed from an
     empty catalog) must yield an empty result with the right schema in
-    both the packed relational path and the fused sink — not crash the
-    multi-zoom router on zero passes."""
+    both the relational path and the fused sink."""
     buf = fixture_bytes("four-points-quadrants.mvt")
     feats = ingest.features_from_tiles(spark, [(buf, 0, 0, 0)])
     targets = spark.createDataFrame(
@@ -327,19 +283,8 @@ def test_empty_declared_zooms_yield_empty(spark, fixture_bytes):
     assert rel.columns == C.composite(feats, targets).columns
     sink = C.composite_encode_tiles(feats, targets, src_zooms=[])
     assert sink.count() == 0 and sink.columns == ["z", "x", "y", "tile"]
-    # the cap is a generic-path contract and [] takes the generic path —
-    # combining them must not raise the declared-zooms error
-    assert C.composite_packed(feats, targets, src_zooms=[],
-                              max_pack_features=10).count() == 0
-    # ANY empty iterable means declared-empty — a tuple must not silently
-    # widen to the full generic run
-    assert C.composite_packed(feats, targets, src_zooms=(),
-                              max_pack_features=10).count() == 0
+    # ANY empty iterable means declared-empty
     assert C.composite_packed(feats, targets, src_zooms=()).count() == 0
-    # a typo'd mode string reports unknown-mode, with or without the cap
-    for kw in ({}, {"max_pack_features": 10}):
-        with pytest.raises(ValueError, match="unknown mode"):
-            C.composite_packed(feats, targets, src_zooms="atuo", **kw)
 
 
 def test_all_clipped_away_yields_nothing(spark, fixture_bytes):
@@ -352,6 +297,6 @@ def test_all_clipped_away_yields_nothing(spark, fixture_bytes):
         [(8, 129, 129, 0, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = C.composite(feats, targets).count()
+    want = R.composite_rows(feats, targets).count()
     got = C.composite_packed(feats, targets).count()
     assert got == want == 0

@@ -343,13 +343,11 @@ def test_features_from_tiles_df_matches_local_ingest(spark, fixture_bytes):
     t = ingest.targets_df(spark, [{"z": 8, "x": 1, "y": 2},
                                   {"z": 8, "x": 3, "y": 4}])
     first = {(r.z, r.x, r.y): bytes(r.tile) for r in
-             C.composite_encode_tiles(local, t,
-                                      join_strategy="broadcast").collect()}
+             C.composite_encode_tiles(local, t).collect()}
     again_src = ingest.features_from_tiles_df(
         spark.createDataFrame(
             [(z, x, y, b) for (z, x, y), b in first.items()],
             "z int, x long, y long, tile binary"))
     again = {(r.z, r.x, r.y): bytes(r.tile) for r in
-             C.composite_encode_tiles(again_src, t,
-                                      join_strategy="broadcast").collect()}
+             C.composite_encode_tiles(again_src, t).collect()}
     assert again == first and len(first) == 2

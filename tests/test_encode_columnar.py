@@ -1,4 +1,5 @@
-"""Columnar encode sink (sources.mvt_vec) — byte parity with the row path.
+"""Columnar encode sink (sources.mvt_vec) — byte parity with the row
+encoder (tests/reference_plans.py).
 
 The vectorized encoder must produce EXACTLY the bytes of the
 mvt.Feature-based path for every fixture shape: typed properties, v1
@@ -8,6 +9,7 @@ tiles, multi-geometries, holes, compression.
 import pytest
 from pyspark.sql import functions as F
 
+from tests import reference_plans as R
 from vtcomposite_spark.operators import composite as C
 from vtcomposite_spark.sources import ingest, mvt, mvt_vec
 
@@ -38,9 +40,9 @@ def test_columnar_rows_byte_parity(spark, fixture_bytes, name, src, tgt):
     out = C.composite(f, t).withColumn(
         "compress", F.lit(bool(tgt.get("compress", False))))
     a = {(r.z, r.x, r.y): bytes(r.tile)
-         for r in C.encode_tiles(out, impl="columnar").collect()}
+         for r in C.encode_tiles(out).collect()}
     b = {(r.z, r.x, r.y): bytes(r.tile)
-         for r in C.encode_tiles(out, impl="rows").collect()}
+         for r in R.encode_rows(out).collect()}
     assert a == b
     assert a  # non-trivial
 
@@ -76,19 +78,20 @@ def test_varint_encode_matches_reference():
 
 @pytest.mark.parametrize("name,src,tgt", CASES)
 def test_fused_composite_encode_byte_parity(spark, fixture_bytes, name, src, tgt):
-    """composite_encode_tiles (one shuffle + one seam) must emit exactly
-    the tiles of composite() + encode_tiles(), including which tiles exist
-    (fully-clipped groups produce no row in either path)."""
+    """composite_encode_tiles (one shuffle + one seam) and composite() +
+    encode_tiles() must emit exactly the reference's tiles, including which
+    tiles exist (fully-clipped groups produce no row in any path)."""
     buf = fixture_bytes(name)
     f = ingest.features_from_tiles(spark, [(buf, *src)])
     t = ingest.targets_df(spark, [dict(tgt)])
-    out = C.composite(f, t).withColumn(
-        "compress", F.lit(bool(tgt.get("compress", False))))
     want = {(r.z, r.x, r.y): bytes(r.tile)
-            for r in C.encode_tiles(out).collect()}
+            for r in R.encode_reference(f, t).collect()}
     got = {(r.z, r.x, r.y): bytes(r.tile)
            for r in C.composite_encode_tiles(f, t).collect()}
     assert got == want
+    unfused = {(r.z, r.x, r.y): bytes(r.tile)
+               for r in C.encode_tiles(C.composite(f, t)).collect()}
+    assert unfused == want
 
 
 def test_nan_double_value_dedupe_parity(spark):
@@ -110,9 +113,9 @@ def test_nan_double_value_dedupe_parity(spark):
     t = ingest.targets_df(spark, [{"z": 0, "x": 0, "y": 0}])
     out = C.composite(f, t).withColumn("compress", F.lit(False))
     a = {(r.z, r.x, r.y): bytes(r.tile)
-         for r in C.encode_tiles(out, impl="columnar").collect()}
+         for r in C.encode_tiles(out).collect()}
     b = {(r.z, r.x, r.y): bytes(r.tile)
-         for r in C.encode_tiles(out, impl="rows").collect()}
+         for r in R.encode_rows(out).collect()}
     assert a == b and a
     # value table is shared: re-encoding the decoded layer through the row
     # path again must be byte-stable (one entry) and match the columnar bytes
@@ -146,8 +149,7 @@ def test_multi_tile_encode_parity(spark, fixture_bytes):
         F.lit(128).alias("buffer_size"),
         F.lit(None).cast("array<string>").alias("keep_layers"),
         F.lit(False).alias("compress"))
-    ct = C.composite(feats, targets, join_strategy="broadcast",
-                     src_zooms=None) \
+    ct = R.composite_rows(feats, targets) \
         .withColumn("compress", F.lit(False)).toArrow().combine_chunks()
     multi = {(z, x, y): b for z, x, y, b in mvt_vec.encode_tiles_table(ct)}
     assert len(multi) == 16
@@ -228,22 +230,18 @@ def test_capped_encode_tiles_within_layer_split_byte_parity(
 
 
 def test_capped_fused_composite_byte_parity(spark, fixture_bytes):
-    """The generic fused path honors the same cap with byte parity —
-    both per-layer packing (cap above the largest layer) and the
-    within-layer bucket split (cap far below it) — and refuses the cap
-    under source-grouped routing."""
+    """The capped route encode_tiles(composite(...), max_pack_features=k)
+    matches the fused sink byte for byte — both per-layer packing (cap
+    above the largest layer) and the within-layer bucket split (cap far
+    below it)."""
     feats = _multi_layer_feats(spark, fixture_bytes)
     t = ingest.targets_df(spark, [
         {"z": 1, "x": 0, "y": 0, "buffer_size": 128},
         {"z": 0, "x": 0, "y": 0, "compress": True}])
     want = {(r.z, r.x, r.y): bytes(r.tile)
-            for r in C.composite_encode_tiles(feats, t,
-                                              src_zooms=None).collect()}
+            for r in C.composite_encode_tiles(feats, t).collect()}
     for cap in (2500, 150):
         got = {(r.z, r.x, r.y): bytes(r.tile)
-               for r in C.composite_encode_tiles(
-                   feats, t, max_pack_features=cap).collect()}
+               for r in C.encode_tiles(C.composite(feats, t),
+                                       max_pack_features=cap).collect()}
         assert got == want and want, cap
-    with pytest.raises(ValueError, match="source-grouped"):
-        C.composite_encode_tiles(feats, t, src_zooms=[0],
-                                 max_pack_features=10)

@@ -55,8 +55,7 @@ OMITS_EXTENT = ["multipoint.mvt", "multiline.mvt", "multipolygon.mvt"]
 def _noop(spark, buf):
     feats = ingest.features_from_tiles(spark, [(buf, 15, 5238, 12666)])
     targets = ingest.targets_df(spark, [{"z": 15, "x": 5238, "y": 12666}])
-    rows = C.composite_encode_tiles(
-        feats, targets, join_strategy="broadcast").collect()
+    rows = C.composite_encode_tiles(feats, targets).collect()
     assert len(rows) == 1
     return bytes(rows[0].tile)
 

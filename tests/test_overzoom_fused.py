@@ -1,9 +1,10 @@
-"""overzoom_encode_tiles (source-grouped fused sink) — byte parity with the
-generic composite_encode_tiles under its single-source-zoom contract.
+"""The fused sink (composite_encode_tiles / overzoom_encode_tiles) — byte
+parity with the per-row reference (tests/reference_plans.py).
 
-The specialized path moves the target fan-out from the join into the
-kernel (numpy gathers), computes first-wins per source group, and applies
-keep-lists/envelope-prune per (feature, target) pair — every one of those
+The source-grouped plan moves the target fan-out from the join into the
+kernel (numpy gathers), computes first-wins per source group or from the
+keys-only winner lists, applies keep-lists/envelope-prune per (feature,
+target) pair and splices per-layer messages — every one of those
 re-arrangements must be invisible in the output bytes.
 """
 
@@ -13,14 +14,15 @@ from pyspark.sql import functions as F
 from vtcomposite_spark.operators import composite as C
 from vtcomposite_spark.sources import ingest
 
+from tests import reference_plans as R
+
 
 def _tiles(df):
     return {(r.z, r.x, r.y): bytes(r.tile) for r in df.collect()}
 
 
 def _check(feats, targets, src_zoom, partitions=None):
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
+    want = _tiles(R.encode_reference(feats, targets))
     got = _tiles(C.overzoom_encode_tiles(feats, targets, src_zoom=src_zoom,
                                          partitions=partitions))
     assert set(got) == set(want)
@@ -114,8 +116,7 @@ def test_null_buffer_size_parity(spark, fixture_bytes):
          (5, 5, 7, 128, None, False)],   # normal sibling
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
+    want = _tiles(R.encode_reference(feats, targets))
     got = _tiles(C.overzoom_encode_tiles(feats, targets, src_zoom=4))
     assert got == want and set(want) == {(5, 5, 7)}
 
@@ -127,8 +128,7 @@ def test_generic_fused_src_zooms_routes_to_specialized(spark, fixture_bytes):
     feats, grid = _grid_feats(
         spark, fixture_bytes, "linestrings-properties-16-10498-22872.mvt")
     targets = _targets(spark, grid, 9, 8)
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
+    want = _tiles(R.encode_reference(feats, targets))
     got = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=[8]))
     assert got == want and want
 
@@ -155,8 +155,7 @@ def test_multizoom_layer_interleave_parity(spark, fixture_bytes):
          (5, 4, 6, 0, None, False), (4, 2, 3, 0, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
+    want = _tiles(R.encode_reference(feats, targets))
     got = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=[4, 5]))
     assert set(got) == set(want) and want
     for k in want:
@@ -178,21 +177,16 @@ def test_multizoom_keep_layers_and_first_wins_parity(spark, fixture_bytes):
          (6, 10, 13, 128, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
+    want = _tiles(R.encode_reference(feats, targets))
     got = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=[4, 5]))
     assert got == want and want
 
 
-def test_grouped_generic_matches_join_generic(spark, fixture_bytes):
-    """src_zooms=None is the grouped generic plan since r6 (keys-only
-    winner pass + one source-address-grouped shuffle + layer splice); the
-    legacy payload-duplicating join plan stays as the cap backend and the
-    parity anchor. Byte parity between the two on the richest mixed-zoom
-    scenario (cross-zoom first-wins, renamed layers, keep-lists, gzip,
-    dz=0 passthrough, NULL buffer_size) makes every existing
-    specialized-vs-generic parity test transitively anchor on the join
-    plan."""
+def test_undeclared_zooms_match_reference(spark, fixture_bytes):
+    """The richest mixed-zoom scenario (cross-zoom first-wins, renamed
+    layers, keep-lists, gzip, dz=0 passthrough, NULL buffer_size, a
+    target with no source) through the undeclared-zoom plan: winner pass,
+    one source-address-grouped shuffle, layer splice."""
     lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
     pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
     feats = ingest.features_from_tiles(
@@ -209,10 +203,8 @@ def test_grouped_generic_matches_join_generic(spark, fixture_bytes):
          (5, 5, 7, None, None, False), (6, 63, 63, 128, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = _tiles(C._composite_encode_tiles_impl(
-        feats, targets, "broadcast", "broadcast", None, None, None,
-        _generic_impl="join"))
-    got = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None))
+    want = _tiles(R.encode_reference(feats, targets))
+    got = _tiles(C.composite_encode_tiles(feats, targets))
     assert set(got) == set(want) and want
     for k in want:
         assert got[k] == want[k], k
@@ -282,14 +274,25 @@ def test_randomized_parity_specialized_vs_generic(spark, seed):
         trows, "z int, x long, y long, buffer_size int, "
                "keep_layers array<string>, compress boolean").distinct()
     _check(feats, targets, SRC_Z)
-    if seed == 0:  # one randomized shape through the CAPPED per-layer
-        # splice route too (byte parity with the generic plan)
-        want = _tiles(C.composite_encode_tiles(feats, targets,
-                                               src_zooms=None,
-                                               join_strategy="broadcast"))
-        got = _tiles(C.composite_encode_tiles(feats, targets,
-                                              max_pack_features=1 << 20))
-        assert got == want and want
+    want = _tiles(R.encode_reference(feats, targets))
+    # declared single zoom against undeclared, on the same input: the
+    # winner-pass plan must give the fast mode's bytes and rows
+    assert _tiles(C.composite_encode_tiles(feats, targets)) == want
+    rows = C.composite(feats, targets)
+    ref_rows = R.canon_rows(R.composite_rows(feats, targets))
+    assert R.canon_rows(rows) == ref_rows
+    assert R.canon_rows(C.composite(feats, targets, src_zooms=[SRC_Z])) \
+        == ref_rows
+    # the capped sink with a cap that splits layers into bucket units; the
+    # sources' own addresses (dz=0, nothing clipped) keep whole layers
+    own = spark.createDataFrame(
+        [(*s, 0, None, False) for s in sorted(set(srcs))], targets.schema)
+    rows = C.composite(feats, own)
+    assert rows.groupBy("z", "x", "y", "layer").count() \
+        .agg(F.max("count")).collect()[0][0] > 1
+    uncapped = _tiles(C.encode_tiles(rows))
+    assert uncapped == _tiles(R.encode_reference(feats, own))
+    assert _tiles(C.encode_tiles(rows, max_pack_features=1)) == uncapped
 
 
 @pytest.mark.parametrize("seed", [10, 11, 12])
@@ -367,59 +370,59 @@ def test_randomized_parity_multizoom_vs_generic(spark, seed):
     targets = spark.createDataFrame(
         list(seen.values()), "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
-    got = _tiles(C.composite_encode_tiles(feats, targets,
-                                          src_zooms=[ZLO, ZHI]))
-    assert set(got) == set(want)
+    want = _tiles(R.encode_reference(feats, targets))
     assert want  # non-trivial
-    for k in want:
-        assert got[k] == want[k], k
+    for zooms in ([ZLO, ZHI], None):  # declared and undeclared
+        got = _tiles(C.composite_encode_tiles(feats, targets,
+                                              src_zooms=zooms))
+        assert set(got) == set(want)
+        for k in want:
+            assert got[k] == want[k], (zooms, k)
 
 
-def test_auto_infer_src_zooms_matches_generic(spark, fixture_bytes):
-    """Default src_zooms="auto" (round-5): zoom inference routes the fused
-    sink through the source-grouped strategy without caller knowledge —
-    byte-identical to the forced generic plan on a multi-zoom input."""
-    lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
+def _two_zoom_shared_tile_idx(spark):
+    """Two source tiles at z4 and z5 (the z5 tile is a child of the z4
+    one) that share tile_idx 0 and a layer name — the ingest contract
+    violation — plus one z6 target descending from both."""
+    from vtcomposite_spark.sources import mvt
+
+    def tile(x):
+        return mvt.encode_tile([mvt.Layer(name="water", features=[
+            mvt.Feature(geom_type=1, parts=[[(x, 100)]], ring_types=[0],
+                        properties={"k": "v"})])])
+
     feats = ingest.features_from_tiles(
-        spark, [(lbuf, 4, 2, 3), (lbuf, 5, 4, 6)])
-    targets = spark.createDataFrame(
-        [(6, 8, 12, 128, None, False), (6, 9, 13, 64, None, True),
-         (5, 4, 6, 0, None, False)],
-        "z int, x long, y long, buffer_size int, "
-        "keep_layers array<string>, compress boolean")
-    want = _tiles(C.composite_encode_tiles(feats, targets, src_zooms=None,
-                                           join_strategy="broadcast"))
-    got = _tiles(C.composite_encode_tiles(feats, targets))  # default: auto
-    assert got == want and want
-
-
-def test_auto_infer_unknown_mode_raises(spark, fixture_bytes):
-    lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-    feats = ingest.features_from_tiles(spark, [(lbuf, 4, 2, 3)])
-    targets = spark.createDataFrame(
-        [(5, 4, 6, 0, None, False)],
-        "z int, x long, y long, buffer_size int, "
-        "keep_layers array<string>, compress boolean")
-    with pytest.raises(ValueError, match="src_zooms"):
-        C.composite_encode_tiles(feats, targets, src_zooms="bogus")
-
-
-def test_multizoom_shared_tile_idx_raises(spark, fixture_bytes):
-    """The ingest contract guard (round-5): a tile_idx shared by source
-    tiles at DIFFERENT zooms would duplicate winner rows and silently
-    corrupt the spliced tile — the multi-zoom path must refuse it."""
-    lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-    feats = ingest.features_from_tiles(
-        spark, [(lbuf, 4, 2, 3), (lbuf, 5, 4, 6)]) \
+        spark, [(tile(1000), 4, 2, 3), (tile(2000), 5, 4, 6)]) \
         .withColumn("tile_idx", F.lit(0))
     targets = spark.createDataFrame(
-        [(6, 8, 12, 128, None, False)],
+        [(6, 8, 12, 4096, None, False)],
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
-    with pytest.raises(ValueError, match="tile_idx"):
-        C.composite_encode_tiles(feats, targets, src_zooms=[4, 5])
+    return feats, targets
+
+
+def test_multizoom_shared_tile_idx_raises(spark):
+    """The ingest contract guard: a tile_idx shared by source tiles at
+    DIFFERENT zooms would emit one layer from two source groups and
+    silently corrupt the tile. The check sits inside the plan: building
+    it succeeds, and the first action fails with the tile_idx message on
+    every multi-zoom route — declared and undeclared, sink and rows."""
+    from pyspark.errors import SparkRuntimeException
+
+    feats, targets = _two_zoom_shared_tile_idx(spark)
+    for zooms in ([4, 5], None):
+        for build in (C.composite_encode_tiles, C.composite):
+            df = build(feats, targets, src_zooms=zooms)
+            with pytest.raises(SparkRuntimeException, match="tile_idx"):
+                df.collect()
+
+
+def test_src_zooms_string_raises(spark):
+    """A zoom list given as a string (e.g. the removed "auto" mode) is
+    refused at plan build time, not read as digits."""
+    feats, targets = _two_zoom_shared_tile_idx(spark)
+    with pytest.raises(ValueError, match="src_zooms"):
+        C.composite_encode_tiles(feats, targets, src_zooms="auto")
 
 
 def test_multizoom_reingest_default_loop(spark, fixture_bytes):

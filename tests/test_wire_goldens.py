@@ -1,5 +1,5 @@
 """Wire-format freeze: SHA-256 regression goldens of the ENGINE'S OWN
-encoded bytes across the four byte-identical encode paths.
+encoded bytes across the byte-identical encode paths.
 
 These pin OUR bytes, not the reference's — the reference addon is
 unbuildable in this environment and ships no expected-output buffers
@@ -16,8 +16,8 @@ commit.
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
+from tests import reference_plans as R
 from vtcomposite_spark.operators import composite as C
 from vtcomposite_spark.sources import ingest
 
@@ -70,9 +70,9 @@ def _collect(df) -> dict:
 @pytest.mark.parametrize("case", list(GOLDENS), ids=[
     f"{c[0].split('.')[0]}-{c[2][0]}-{c[2][1]}-{c[2][2]}" for c in GOLDENS])
 def test_wire_bytes_frozen_all_paths(spark, fixture_bytes, case):
-    """Every encode path must hash to the frozen golden: generic fused,
-    source-grouped, unfused columnar, unfused rows, and the capped
-    per-layer splice."""
+    """Every encode path must hash to the frozen golden: the fused sink
+    with undeclared and declared zooms, the unfused columnar sink with and
+    without the hot-tile cap, and the per-row reference."""
     name, src, (z, x, y, buf_sz, compress) = case
     golden = GOLDENS[case]
     f = ingest.features_from_tiles(spark, [(fixture_bytes(name), *src)])
@@ -80,17 +80,15 @@ def test_wire_bytes_frozen_all_paths(spark, fixture_bytes, case):
         "z": z, "x": x, "y": y, "buffer_size": buf_sz,
         "compress": compress}])
 
+    un = C.composite(f, t)
     got = {
-        "fused_generic": _collect(
-            C.composite_encode_tiles(f, t, src_zooms=None)),
-        "source_grouped": _collect(
+        "fused_undeclared": _collect(C.composite_encode_tiles(f, t)),
+        "fused_declared": _collect(
             C.composite_encode_tiles(f, t, src_zooms=[src[0]])),
-        "fused_capped": _collect(
-            C.composite_encode_tiles(f, t, max_pack_features=1 << 20)),
+        "unfused_columnar": _collect(C.encode_tiles(un)),
+        "unfused_capped": _collect(
+            C.encode_tiles(un, max_pack_features=1 << 20)),
+        "reference": _collect(R.encode_reference(f, t)),
     }
-    un = C.composite(f, t, src_zooms=None).withColumn(
-        "compress", F.lit(bool(compress)))
-    got["unfused_columnar"] = _collect(C.encode_tiles(un))
-    got["unfused_rows"] = _collect(C.encode_tiles(un, impl="rows"))
     for path, tiles in got.items():
         assert _tileset_sha(tiles) == golden, (path, case)

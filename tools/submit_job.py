@@ -17,8 +17,8 @@ Jobs (each one of the engine's benched pipelines):
                    Iceberg table or parquet path via the table adapter;
                    ``--synthesize N`` generates the deterministic pages
                    table instead (smoke runs, no input data needed).
-* ``materialize``  feature table → ``composite_encode_tiles`` (auto
-                   source-grouped routing) over the full descendant grid
+* ``materialize``  feature table → ``composite_encode_tiles`` (declared
+                   source zoom, the fast mode) over the full descendant grid
                    at ``--target-zoom`` → z-partitioned (z, x, y, tile)
                    parquet via the table adapter.
 * ``relational``   same input/grid through ``composite_packed`` —

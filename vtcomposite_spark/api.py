@@ -62,15 +62,12 @@ def composite(tiles: list[dict], zxy: dict, options: dict | None = None,
         "buffer_size": options.get("buffer_size", 0),
         "compress": options.get("compress", False),
     }])
-    # single-request targets are a handful of rows: force the broadcast
-    # hints rather than waiting for AQE stats; the fused clip+encode path
-    # crosses the python seam once (byte-parity-tested vs the unfused
-    # pair). The request names its source zooms, so declare them: a
-    # single-zoom request routes through the source-grouped strategy
+    # the fused clip+encode path crosses the python seam once
+    # (byte-parity-tested vs the per-row reference). The request names its
+    # source zooms, so declare them: a single-zoom request takes the fast
+    # mode (no winner pass)
     tiles_out = C.composite_encode_tiles(
-        feats, targets,
-        join_strategy="broadcast", winners_join="broadcast",
-        src_zooms=sorted({t["z"] for t in tiles})).collect()
+        feats, targets, src_zooms=sorted({t["z"] for t in tiles})).collect()
     if not tiles_out:
         return mvt.gzip_sink(b"", options.get("compress", False))
     return bytes(tiles_out[0].tile)

@@ -2,38 +2,37 @@
 
 Reference lifecycle (src/vtcomposite.cpp:205-323): for one target tile, fold N
 source tiles — ancestry check, layer keep-list, first-wins layer dedupe,
-overzoom affine + box clip, serialize. Here the same semantics run as one
-declarative plan over a *features* DataFrame (one row per feature) and a
-*targets* DataFrame (one row per requested output tile):
+overzoom affine + box clip, serialize. Here the same semantics run as ONE
+lazy plan over a *features* DataFrame (one row per feature) and a *targets*
+DataFrame (one row per requested output tile), ``_source_grouped``:
 
-1. **Ancestor equi-join (J1)** — each target explodes into its ancestor tile
-   addresses (≤ z+1 rows); the join with features is a plain equi-join on
-   (src_z, src_x, src_y), so Catalyst broadcasts the (small) target side and
-   the big features scan never shuffles. This replaces the reference's
-   ``within_target`` per-tile check (src/zxy_math.hpp:8-17).
-2. **Layer keep-list (P2)** — `array_contains` filter
-   (src/vtcomposite.cpp:246-249; empty list ⇒ keep all).
-3. **First-wins layer dedupe (A2/J5)** — `min(tile_idx) over (partition by
-   target, layer)`; the earliest input tile contributing a layer name wins
-   (src/vtcomposite.cpp:210,243-251). Runs BEFORE the geometry kernel so
-   dropped layers never pay transform cost (the reference's same
-   optimization).
-4. **Overzoom + clip kernel (F1-F7)** — same-zoom rows bypass untouched (the
-   reference's ``add_existing_layer`` fast path, src/vtcomposite.cpp:253-256);
-   overzoomed rows cross to Python ONCE as Arrow batches and run the
-   vectorized numpy kernels from ``vtcomposite_spark.geometry``.
-5. **Encode sink (S3/S4)** — optional ``groupBy(z,x,y).applyInPandas`` that
-   rebuilds MVT buffers (deterministic order: tile_idx, first-seen layer,
-   feature_idx) and applies the empty-tile gzip rule.
+1. **Keys-only winners** (``_winners``) — features pre-aggregate to
+   (source address, layer, min tile_idx); the ancestor equi-join
+   (``ancestor_join``, J1) with the layer keep-list (``apply_keep_layers``,
+   P2) and min(tile_idx) per (target, layer) give each target its
+   first-wins winner list (A2/J5, src/vtcomposite.cpp:210,243-251). Dropped
+   layers never reach the geometry kernel.
+2. **One payload shuffle** — features group by source address
+   (src_z, src_x, src_y), unduplicated (bytes ∝ input); targets group by
+   the source addresses they draw from; the two meet in an equi-join.
+3. **One fan/clip kernel** (``_fan_clip``) — per source group, the kernel
+   fans (feature × target) pairs, applies the envelope prune, and runs the
+   vectorized overzoom + clip (``_overzoom_clip_batches``; same-zoom rows
+   pass through untouched, the reference's ``add_existing_layer`` fast
+   path, src/vtcomposite.cpp:253-256). Its ``out`` argument emits whole
+   encoded tiles, per-layer messages for the splice (``_merge_layer_rows``),
+   or packed relational rows that a JVM ``inline`` restores.
 
-Scale notes (100 TB): with request-scale targets the only exchange in 1-4
-is the broadcast of targets and the features scan streams map-side; with a
-planet-scale target set (a full z14 pyramid won't broadcast) the same plan
-degrades gracefully to shuffle joins — sizing is AQE's runtime decision,
-not a hard-coded hint (``join_strategy``/``winners_join`` params force it
-when plan-time certainty is wanted). The encode sink groups by (z,x,y) —
-hot tiles there are handled by AQE + the salting helpers in
-``vtcomposite_spark.plans.skew``.
+Two modes. A declared single source zoom needs no winner pass: each target
+has exactly one source group, so first-wins runs group-locally in the
+kernel and tiles encode whole. Every other input — several declared zooms
+or none — runs the winner pass, and tiles splice per layer. Building a plan
+starts no Spark job; the ``tile_idx`` contract check fails the first action.
+
+``encode_tiles`` is the separate S3/S4 sink for relational rows, with the
+``max_pack_features`` hot-tile bound. ``composite_points`` is the all-point
+specialization (pure JVM expressions). Scale: no side is force-broadcast in
+the plan; Catalyst and AQE size the joins from real statistics.
 """
 
 from __future__ import annotations
@@ -117,16 +116,12 @@ def apply_keep_layers(df: DataFrame) -> DataFrame:
     )
 
 
-def first_wins(df: DataFrame, strategy: str = "agg",
-               winners_join: str = "broadcast") -> DataFrame:
+def first_wins(df: DataFrame, winners_join: str = "broadcast") -> DataFrame:
     """A2: first tile contributing a layer name wins, per target tile
     (src/vtcomposite.cpp:210,243-251; test/vtcomposite.test.js:50-71).
 
-    ``agg`` (default): winners = groupBy(target, layer).min(tile_idx) —
-    shuffles only the 5 key columns with map-side combine, then semi-joins
-    back. ``window``: classic min-over-window; shuffles every column — only
-    preferable when the winners table would rival the features table in
-    size.
+    Winners = groupBy(target, layer).min(tile_idx) — shuffles only the 5
+    key columns with map-side combine, then semi-joins back.
 
     ``winners_join`` sizes the semi-join. ``"broadcast"`` (default) forces
     the hint: winners are keys-only (one row per tile×layer), and the
@@ -138,13 +133,6 @@ def first_wins(df: DataFrame, strategy: str = "agg",
     2.3× on the lines-overzoom bench, 9.9s auto vs 4.3s broadcast at
     1000 tiles / 2M joined rows).
     """
-    if strategy == "window":
-        w = Window.partitionBy("z", "x", "y", "layer")
-        return (
-            df.withColumn("_min_tile", F.min("tile_idx").over(w))
-            .filter(F.col("tile_idx") == F.col("_min_tile"))
-            .drop("_min_tile")
-        )
     winners = (
         df.groupBy("z", "x", "y", "layer")
         .agg(F.min("tile_idx").alias("tile_idx"))
@@ -297,18 +285,15 @@ def _overzoom_clip_batches(it: Iterator[pa.RecordBatch], out_schema: pa.Schema):
 
 
 def _overzoom_prep(df: DataFrame) -> DataFrame:
-    """dz + displacement columns and the JVM-side envelope prune, shared by
-    the relational kernel (``overzoom_clip``), the fused sink
-    (``composite_encode_tiles``) and the packed relational path
-    (``composite_packed``).
+    """dz + displacement columns and the JVM-side envelope prune for
+    target-joined feature rows (``overzoom_clip``).
 
-    The envelope pre-filter is HOISTED out of the kernel into codegen: a
-    feature whose scaled bbox misses the target clip window never crosses to
-    Python. This is the reference's cheap-reject (src/feature_builder.hpp:
-    232-238) applied where it pays most at scale — the ancestor join fans
-    each feature out to several candidate targets, and this prunes the
-    misses before the (allocation-heavy) Arrow conversion. Same-zoom rows
-    (dz == 0) always survive — they are the raw-copy fast path.
+    The envelope pre-filter runs in codegen: a feature whose scaled bbox
+    misses the target clip window never crosses to Python — the
+    reference's cheap-reject (src/feature_builder.hpp:232-238). Same-zoom
+    rows (dz == 0) always survive — they are the raw-copy fast path.
+    ``_fan_clip`` applies the same test in numpy per (feature, target)
+    pair.
     """
     df = (
         df.withColumn("dz", F.col("z") - F.col("src_z"))
@@ -364,57 +349,8 @@ def _to_arrow(dt: T.DataType) -> pa.DataType:
 
 
 # ---------------------------------------------------------------------------
-# public API
+# point specialization and seam helpers
 # ---------------------------------------------------------------------------
-
-def composite(features: DataFrame, targets: DataFrame,
-              join_strategy: str = "auto",
-              winners_join: str = "broadcast",
-              src_zooms: list[int] | None | str = "auto") -> DataFrame:
-    """Full composite pipeline, relational in/out.
-
-    Output: one row per surviving feature keyed by target (z, x, y), with
-    coordinates rewritten into the target tile's frame. Matches the
-    reference's CompositeWorker::Execute semantics (src/vtcomposite.cpp:205-323)
-    minus serialization (see ``encode_tiles``).
-
-    ``src_zooms`` routes the physical plan exactly like
-    ``composite_packed`` (the two entry points share ``_route_src_zooms``):
-    ``"auto"`` (default) infers the feature zoom levels with one tiny
-    column-pruned distinct scan (an eager job at call time) and routes the
-    SOURCE-GROUPED plan — features shuffle ONCE by source tile (bytes ∝
-    input, never input × 4^dz) and cross the python seam packed one row
-    per tile both ways (measured ~3× over the per-feature-row seam of the
-    generic plan at bench scale). Declared zooms skip the inference job.
-    ``None`` forces the generic ancestor-join plan — the parity-test
-    reference, and the scale-safe choice when the TARGET set itself is
-    planet-scale (the source-grouped route force-broadcasts the grouped
-    target lists; the generic join lets Catalyst/AQE shuffle-join
-    instead). Row-identical either way (tests/test_composite_packed.py).
-
-    ``join_strategy``/``winners_join`` apply to the generic plan only:
-    physical-join sizing for the ancestor join and the first-wins
-    semi-join — see ``ancestor_join`` / ``first_wins``. The ancestor join
-    defaults to 'auto' (Catalyst+AQE pick from real sizes); the first-wins
-    semi-join defaults to FORCED 'broadcast' of the keys-only winner set
-    (measured 2.3× over letting AQE decide — AQE still pays the probe-side
-    full-width shuffle write before converting). At planet-scale
-    winner-set cardinalities pass winners_join='auto' to avoid the driver
-    collecting the broadcast side.
-    """
-    zs = _route_src_zooms(features, src_zooms, None)
-    if zs:
-        if len(zs) == 1:
-            return overzoom_composite_packed(features, targets,
-                                             src_zoom=zs[0])
-        return _multizoom_composite_packed(features, targets, zs)
-    j = ancestor_join(features, targets, strategy=join_strategy,
-                      src_zooms=zs)
-    j = apply_keep_layers(j)
-    j = first_wins(j, winners_join=winners_join)
-    out = overzoom_clip(j)
-    return out.drop("keep_layers")
-
 
 def overzoom_clip_points_expr(df: DataFrame) -> DataFrame:
     """Point-feature overzoom+clip as PURE column expressions — no Python.
@@ -478,9 +414,8 @@ _ENCODE_OUT_SCHEMA = T.StructType([
     T.StructField("tile", T.BinaryType()),
 ])
 
-# per-(target, layer) rows of the multi-zoom source-grouped sink:
-# framed layer message + its first-seen order keys (spliced per tile by
-# _merge_layer_rows)
+# per-(target, layer) rows of the splicing sinks: framed layer message +
+# its first-seen order keys (spliced per tile by _merge_layer_rows)
 _LAYER_ROWS_SCHEMA = T.StructType([
     T.StructField("z", T.IntegerType()),
     T.StructField("x", T.LongType()),
@@ -505,13 +440,13 @@ def _pack_tiles(df: DataFrame, by_layer: bool = False) -> DataFrame:
     executor's memory — the same invariant a grouped applyInPandas needs;
     hot tiles are a skew problem before they are a packing problem.
     ``by_layer=True`` shrinks the unit to one row per (z, x, y, LAYER) —
-    the size-capped sink route: a hot multi-layer tile packs as several
+    the capped ``encode_tiles`` route: a hot multi-layer tile packs as several
     bounded rows whose encoded layer messages splice back byte-exactly
     (``_merge_layer_rows``); ``layer`` stays in the feature structs too
     (the encoder reads it per feature).
     """
     keys = ["z", "x", "y"] + (["layer"] if by_layer else [])
-    if "_pack_bucket" in df.columns:  # relational within-layer split key
+    if "_pack_bucket" in df.columns:  # within-layer split key
         keys.append("_pack_bucket")
     data_cols = [c for c in df.columns
                  if c not in _TILE_LEVEL_COLS and c != "_pack_bucket"]
@@ -560,11 +495,11 @@ def _units_batch(units):
         names=["z", "x", "y", "ord_ti", "ord_fi", "compress", "layer_bytes"])
 
 
-def _check_unit_cap(batch, max_pack_features: int, what: str) -> None:
+def _check_unit_cap(batch, max_pack_features: int) -> None:
     """Internal invariant assertion: with the ``_pack_bucket`` window in
     place every capped packed row holds at most ``max_pack_features``
     features (an over-cap LAYER splits into bounded bucket rows and the
-    sinks byte-merge the partial layer units — ``mvt.merge_layer_parts``),
+    splice byte-merges the partial layer units — ``mvt.merge_layer_parts``),
     so this can only fire on a bucketing bug. A loud kernel error beats
     silently encoding an unbounded unit; note a violating collect_list
     row has already materialized JVM-side by the time the kernel sees
@@ -579,7 +514,7 @@ def _check_unit_cap(batch, max_pack_features: int, what: str) -> None:
         y = int(batch.column("y")[i].as_py())
         lay = batch.column("layer")[i].as_py()
         raise ValueError(
-            f"{what}: layer {lay!r} of tile ({z},{x},{y}) has "
+            f"encode_tiles: layer {lay!r} of tile ({z},{x},{y}) has "
             f"{int(nf[i])} features, above max_pack_features="
             f"{max_pack_features}. The _pack_bucket window should have "
             "split this layer into bounded bucket rows — this is an "
@@ -608,501 +543,220 @@ def _unpack_batch(batch, tile_cols: list[str]):
     return cols, total, off
 
 
-def _route_src_zooms(features: DataFrame, src_zooms,
-                     max_pack_features: int | None) -> list[int] | None:
-    """Shared ``src_zooms`` normalization for the fused sink and the
-    packed relational path (ONE implementation so the two public entry
-    points cannot drift). Returns:
+# ---------------------------------------------------------------------------
+# the composite plan: keys-only winners, one payload shuffle, one kernel
+# ---------------------------------------------------------------------------
 
-    * a sorted NON-EMPTY zoom list — route the source-grouped strategy;
-    * ``[]`` — zooms were explicitly declared empty: the generic join
-      path with an empty declaration yields an empty result with the
-      right schema;
-    * ``None`` — the generic join path over all zooms.
+_SRC_KEYS = ["src_z", "src_x", "src_y"]
 
-    ``max_pack_features`` is a generic-path contract: combined with
-    declared non-empty zooms it raises (source-grouped packing bounds
-    rows by source tile content instead); with ``"auto"`` it skips the
-    inference job entirely and forces the generic path. ``"auto"``
-    otherwise infers the zoom levels with one column-pruned distinct
-    scan — an EAGER job at call time (streaming callers declare zooms
-    or pass ``None``)."""
-    if max_pack_features is not None:
-        if isinstance(src_zooms, str):
-            if src_zooms != "auto":
-                raise ValueError(f"src_zooms: unknown mode {src_zooms!r}")
-            return None  # cap forces the generic path; skip inference
-        if src_zooms is None:
-            return None
-        zooms = sorted({int(z) for z in src_zooms})
-        if zooms:
-            raise ValueError(
-                "max_pack_features applies to the generic join path; "
-                "source-grouped routing (declared src_zooms) bounds packed "
-                "rows by source tile content instead")
-        return zooms  # declared empty (any iterable): empty result
+_SHARED_TILE_IDX = (
+    "multi-zoom composite: a tile_idx is shared by source tiles at "
+    "different zooms (the winner for some (target, layer) maps to "
+    "several source zooms). tile_idx must identify ONE input tile — "
+    "re-ingest with features_from_tiles_df's default per-zoom "
+    "ordinal or pass a distinct tile_idx per input tile.")
+
+
+def _winners(features: DataFrame, targets: DataFrame,
+             zooms: list[int] | None) -> DataFrame:
+    """Keys-only first-wins: one row per target (z, x, y) carrying its
+    winner list ``wins: array<struct<layer, tile_idx>>`` (keep-lists
+    folded in) and ``win_zooms``, the source zooms that own a winner.
+
+    Features pre-aggregate to one row per (source address, layer) — a
+    column-pruned scan of five small columns — and only those rows meet
+    the ancestor-exploded targets; the min over per-source minima is the
+    min over the joined relation, so the winners equal ``first_wins``'.
+
+    The ingest contract (``tile_idx`` identifies ONE input tile) is
+    checked on the winner column itself: a (target, layer) whose winning
+    tile_idx sits at two source zooms would encode that layer twice, so
+    the first action fails with ``raise_error`` instead. The check rides
+    a column the kernel reads, so it cannot be pruned away."""
+    has_keep = "keep_layers" in targets.columns
+    fk = (features.groupBy(*_SRC_KEYS, "layer")
+          .agg(F.min("tile_idx").alias("tile_idx")))
+    tsel = ["z", "x", "y"] + (["keep_layers"] if has_keep else [])
+    cand = ancestor_join(fk, targets.select(*tsel), src_zooms=zooms)
+    if has_keep:
+        cand = apply_keep_layers(cand)
+    # lo/hi: the winning tile_idx with the lowest and the highest source
+    # zoom that holds it — they differ exactly on a contract violation
+    w = (cand.groupBy("z", "x", "y", "layer")
+         .agg(F.min(F.struct("tile_idx", "src_z")).alias("lo"),
+              F.max(F.struct((-F.col("tile_idx")).alias("neg"),
+                             "src_z")).alias("hi")))
+    tile_idx = (F.when(F.col("lo.src_z") != F.col("hi.src_z"),
+                       F.raise_error(F.lit(_SHARED_TILE_IDX)))
+                .otherwise(F.col("lo.tile_idx")))
+    return (w.groupBy("z", "x", "y")
+            .agg(F.collect_list(F.struct("layer", tile_idx.alias("tile_idx")))
+                 .alias("wins"),
+                 F.collect_set("lo.src_z").alias("win_zooms")))
+
+
+def _source_grouped(features: DataFrame, targets: DataFrame,
+                    src_zooms, partitions: int | None,
+                    out: str) -> DataFrame:
+    """The one composite plan; ``out`` is ``"tiles"`` (z, x, y, tile) or
+    ``"rows"`` (``composite``'s relational rows).
+
+    Targets explode to the source addresses they draw from and group by
+    address (the small side); features group by address — the ONE payload
+    shuffle, unduplicated rows, bytes ∝ input — and the two meet in an
+    equi-join on ``addr`` = struct(src_z, src_x, src_y) that Catalyst/AQE
+    size. ``_fan_clip`` then fans (feature × target) pairs in the kernel.
+
+    Two modes:
+
+    * one declared zoom: every target has exactly one source group, so
+      first-wins runs group-locally in the kernel and tiles encode whole;
+    * anything else (several declared zooms, or ``None``): ``_winners``
+      gives each target its winner list, the target explodes only over
+      the zooms that own a winner, and tiles encode per layer and splice
+      (``_merge_layer_rows``); relational rows need no splice.
+
+    Plan building starts no Spark job."""
     if isinstance(src_zooms, str):
-        if src_zooms != "auto":
-            raise ValueError(f"src_zooms: unknown mode {src_zooms!r}")
-        src_zooms = [r[0] for r in
-                     features.select("src_z").distinct().collect()
-                     if r[0] is not None]
-        if not src_zooms:
-            return None  # empty input: any path yields nothing
-    if src_zooms is None:
-        return None
-    return sorted({int(z) for z in src_zooms})
-
-
-def composite_encode_tiles(features: DataFrame, targets: DataFrame,
-                           join_strategy: str = "auto",
-                           winners_join: str = "broadcast",
-                           src_zooms: list[int] | None | str = "auto",
-                           partitions: int | None = None,
-                           max_pack_features: int | None = None) -> DataFrame:
-    """Fused composite→encode: (z, x, y, tile:binary) with ONE python seam.
-
-    ``composite(...)`` then ``encode_tiles(...)`` crosses the seam twice
-    (mapInArrow out-and-back, then the groupBy shuffle, then the encode
-    seam) and pays the seam's per-row cost for every intermediate feature
-    row, both ways. Tile MATERIALIZATION pipelines — the reference's only
-    output shape — never look at the intermediate rows, so this fuses the
-    clip kernel INTO the encode: join → first-wins → JVM envelope prune →
-    groupBy(z,x,y) packing ONE row per tile (``_pack_tiles``) → mapInArrow
-    batches of whole tiles → vectorized clip + MULTI-tile encode
-    (``mvt_vec.encode_tiles_table``) amortizing the per-tile fixed numpy
-    cost across the batch. One wide shuffle + one seam of tile-count rows.
-
-    ``src_zooms``: declared feature zoom levels (like ``ancestor_join``'s
-    param — sources at other zooms are ignored either way). Declared
-    zooms route through the SOURCE-GROUPED physical strategy whose
-    shuffle carries each feature once instead of once per descendant
-    target (4^dz×): one zoom → ``overzoom_encode_tiles`` directly;
-    several → ``_multizoom_encode_tiles`` (one source-grouped pass per
-    zoom + keys-only cross-zoom first-wins + per-tile layer splicing).
-    ``"auto"`` (default) INFERS them with one tiny
-    ``select(src_z).distinct()`` aggregate — column-pruned to one int
-    column of the scan — so the shuffle-∝-input strategy engages without
-    caller knowledge; the inference job runs eagerly at call time, so
-    streaming callers must declare zooms (or pass ``None``) instead.
-    ``None`` is the fully LAZY no-declared-zooms plan: since r6 it is the
-    grouped generic (``_grouped_generic_encode_tiles``) — a keys-only
-    global winner pass + ONE source-address-grouped shuffle (bytes ∝
-    input, any zoom mix, no eager job) + per-tile layer splicing — byte-
-    identical to the legacy join plan under the ingest contract
-    (tile_idx ↦ one input tile; parity-gated in
-    tests/test_overzoom_fused.py). The legacy payload-duplicating join
-    plan remains as the ``max_pack_features`` backend (the cap's
-    row_number bucketing needs the target-joined relation) and via the
-    private ``_generic_impl="join"`` (the parity-test reference;
-    ``join_strategy``/``winners_join`` only apply there).
-    ``partitions`` passes through. Results are byte-identical
-    (parity-tested) — this is a physical plan choice, not a semantic
-    switch.
-
-    Byte-identical to composite()+encode_tiles() (kernel and encoder are
-    the same code), parity-tested in tests/test_encode_columnar.py.
-
-    Targets must be UNIQUE per (z, x, y): duplicate keys with conflicting
-    options are undefined in every path (the packed seam takes
-    first(options) and the join duplicates features).
-    """
-    return _composite_encode_tiles_impl(
-        features, targets, join_strategy, winners_join, src_zooms,
-        partitions, max_pack_features, _generic_impl="grouped")
-
-
-def _composite_encode_tiles_impl(features, targets, join_strategy,
-                                 winners_join, src_zooms, partitions,
-                                 max_pack_features,
-                                 _generic_impl="grouped"):
-    import pyarrow as pa
-
-    from ..sources import mvt_vec
-
-    zs = _route_src_zooms(features, src_zooms, max_pack_features)
-    if zs:
-        if len(zs) == 1:
-            return overzoom_encode_tiles(features, targets, src_zoom=zs[0],
-                                         partitions=partitions)
-        return _multizoom_encode_tiles(features, targets, zs,
-                                       partitions=partitions)
-    if zs is None and max_pack_features is None \
-            and _generic_impl == "grouped":
-        return _grouped_generic_encode_tiles(features, targets,
-                                             partitions=partitions)
-    # legacy join plan: zs is None with the cap (its bucket window needs
-    # the joined relation) or the "join" parity reference, or [] —
-    # explicitly declared empty (the empty target explode yields an empty
-    # result with the right schema)
-
-    j = ancestor_join(features, targets, strategy=join_strategy,
-                      src_zooms=zs)
-    j = apply_keep_layers(j)
-    j = first_wins(j, winners_join=winners_join).drop("keep_layers")
-    # same prep + envelope prune as overzoom_clip, JVM-side
-    j = _overzoom_prep(j)
-
-    clip_fields = [f for f in j.schema.fields if f.name not in _KERNEL_HELPER_COLS]
-    clip_schema = pa.schema([
-        pa.field(f.name, _to_arrow(f.dataType)) for f in clip_fields])
-    kernel_names = [f.name for f in j.schema.fields]
-    if max_pack_features is not None:
-        # within-layer split: a layer beyond the cap packs as several
-        # bounded bucket rows; buckets that land in one kernel batch are
-        # re-unified by encode_tiles_table's (tile, layer) grouping, and
-        # buckets split across batches emit partial layer units that the
-        # splice byte-merges (mvt.merge_layer_parts — tag-index rewrite
-        # over verbatim geometry bytes, memory ∝ wire bytes)
-        j = j.withColumn("_pack_bucket", (
-            (F.row_number().over(
-                Window.partitionBy("z", "x", "y", "layer")
-                .orderBy("tile_idx", "feature_idx")) - 1)
-            / F.lit(int(max_pack_features))).cast("int"))
-    packed = _pack_tiles(j, by_layer=max_pack_features is not None)
-    if "_pack_bucket" in packed.columns:
-        packed = packed.drop("_pack_bucket")
-    tile_cols = [c for c in _TILE_LEVEL_COLS if c in packed.columns]
-
-    def clip_encode(it):
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            if max_pack_features is not None:
-                _check_unit_cap(batch, max_pack_features,
-                                "composite_encode_tiles")
-            cols, total, _foff = _unpack_batch(batch, tile_cols)
-            if total == 0:
-                continue
-            flat = pa.RecordBatch.from_arrays(
-                [pa.array(cols[n]) if not isinstance(cols[n], pa.Array)
-                 else cols[n] for n in kernel_names],
-                names=kernel_names)
-            clipped = list(_overzoom_clip_batches(iter([flat]), clip_schema))
-            if not clipped:
-                # every feature clipped away: no output row, exactly like
-                # the unfused path (the tile never reaches encode there)
-                continue
-            ctbl = pa.Table.from_batches(clipped, schema=clip_schema)
-            if max_pack_features is not None:
-                units = mvt_vec.encode_tiles_table(ctbl, per_layer=True)
-                if units:
-                    yield _units_batch(units)
-                continue
-            tiles = mvt_vec.encode_tiles_table(ctbl)
-            if tiles:
-                yield _tiles_batch(tiles)
-
-    if max_pack_features is not None:
-        return _merge_layer_rows(
-            packed.mapInArrow(clip_encode, schema=_LAYER_ROWS_SCHEMA))
-    return packed.mapInArrow(clip_encode, schema=_ENCODE_OUT_SCHEMA)
-
-
-def composite_packed(features: DataFrame, targets: DataFrame,
-                     join_strategy: str = "auto",
-                     winners_join: str = "broadcast",
-                     src_zooms: list[int] | None | str = "auto",
-                     partitions: int | None = None,
-                     max_pack_features: int | None = None) -> DataFrame:
-    """``composite``'s row-identical twin behind the sinks' packed seam.
-
-    Same logical output as ``composite`` (one relational row per surviving
-    feature, coordinates in the target frame); different physical plan:
-    join → first-wins → envelope prune → groupBy(z, x, y) packing ONE row
-    per tile (``_pack_tiles``) → ONE mapInArrow crossing whole tiles BOTH
-    ways (the kernel re-packs its clipped output per input tile) → JVM-side
-    ``inline`` restores the feature rows. The python seam's per-row cost is
-    payload-width-independent (~µs/row, the measured floor of the per-row
-    ``composite`` path — see ``_pack_tiles``), so crossing tile-count rows
-    instead of feature-count rows removes the relational path's dominant
-    cost; the restore is a codegen generator, not a second seam.
-
-    ``src_zooms`` mirrors ``composite_encode_tiles``: ``"auto"`` (default)
-    infers the feature zoom levels with one tiny distinct scan and routes
-    the source-grouped strategy — ONE zoom through
-    ``overzoom_composite_packed`` (features shuffle once, bytes ∝ input —
-    and the measured fastest at bench scale too), SEVERAL through
-    ``_multizoom_composite_packed`` (per-zoom source-grouped passes under
-    keys-only cross-zoom winners, merged by plain union). ``None`` forces
-    the generic join path here (the parity-test reference). The
-    inference is an eager job at call time — streaming callers declare
-    zooms or pass ``None``.
-
-    ``max_pack_features`` bounds EVERY packed row (a generic-path
-    contract, like the sink's: it forces the join route). A layer
-    beyond the cap splits into bounded per-layer BUCKETS (a row_number
-    window over the layer); relational output needs NO splice step —
-    several packed rows per tile ``inline`` to the same rows and the
-    union restores them. (The byte sinks byte-merge their bucket units
-    instead — ``mvt.merge_layer_parts``.)
-    """
-    zs = _route_src_zooms(features, src_zooms, max_pack_features)
-    if zs:
-        if len(zs) == 1:
-            return overzoom_composite_packed(features, targets,
-                                             src_zoom=zs[0],
-                                             partitions=partitions)
-        return _multizoom_composite_packed(features, targets, zs,
-                                           partitions=partitions)
-    # zs is None (generic over all zooms) or [] (explicitly declared
-    # empty — the generic join's empty target explode yields an empty
-    # result with the right schema)
-
-    j = ancestor_join(features, targets, strategy=join_strategy,
-                      src_zooms=zs)
-    j = apply_keep_layers(j)
-    j = first_wins(j, winners_join=winners_join).drop("keep_layers")
-    out_cols = [f.name for f in j.schema.fields
-                if f.name not in _KERNEL_HELPER_COLS]  # == composite() order
-    j = _overzoom_prep(j)
-
-    kernel_names = [f.name for f in j.schema.fields]
-    jp = j
-    if max_pack_features is not None:
-        # relational output needs NO splice, so a layer beyond the cap
-        # simply splits into several bounded packed rows — the inline
-        # restore unions them back. (The byte sinks cannot do this:
-        # splitting WITHIN a layer would need key/value-table-aware
-        # message merge, so they raise instead.) The bucket column is a
-        # grouping key only — _pack_tiles keeps it out of the structs.
-        jp = j.withColumn("_pack_bucket", (
-            (F.row_number().over(
-                Window.partitionBy("z", "x", "y", "layer")
-                .orderBy("tile_idx", "feature_idx")) - 1)
-            / F.lit(int(max_pack_features))).cast("int"))
-    packed = _pack_tiles(jp, by_layer=max_pack_features is not None)
-    if "_pack_bucket" in packed.columns:
-        # grouping key only — the kernel never reads it; keep it off the
-        # Arrow seam (manual projection on both sides of a Python seam)
-        packed = packed.drop("_pack_bucket")
-    tile_cols = [c for c in _TILE_LEVEL_COLS if c in packed.columns]
-    feat_fields = [f for f in j.schema.fields
-                   if f.name not in _KERNEL_HELPER_COLS
-                   and f.name not in tile_cols]
-    feat_names = [f.name for f in feat_fields]
-    clip_fields = [f for f in j.schema.fields
-                   if f.name not in _KERNEL_HELPER_COLS]
-    clip_schema = pa.schema(
-        [pa.field(f.name, _to_arrow(f.dataType)) for f in clip_fields]
-        + [pa.field("tile_ord", pa.int64())])
-    struct_type = pa.struct(
-        [pa.field(f.name, _to_arrow(f.dataType)) for f in feat_fields])
-    jfields = {f.name: f for f in j.schema.fields}
-    out_schema_spark = T.StructType(
-        [jfields[c] for c in tile_cols]
-        + [T.StructField("feats", T.ArrayType(T.StructType(feat_fields)))])
-
-    def clip_pack(it):
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            if max_pack_features is not None:
-                _check_unit_cap(batch, max_pack_features, "composite_packed")
-            cols, total, _foff = _unpack_batch(batch, tile_cols)
-            ntiles = batch.num_rows
-            counts = np.zeros(ntiles, np.int64)
-            taken = None
-            if total:
-                # packed-row ordinal per feature: carried through the clip
-                # kernel as a passthrough column so re-packing is a stable
-                # sort + bincount, not a key match
-                cols["tile_ord"] = pa.array(
-                    np.repeat(np.arange(ntiles, dtype=np.int64),
-                              np.diff(_foff)), pa.int64())
-                flat = pa.RecordBatch.from_arrays(
-                    [cols[n] if isinstance(cols[n], pa.Array)
-                     else pa.array(cols[n])
-                     for n in kernel_names + ["tile_ord"]],
-                    names=kernel_names + ["tile_ord"])
-                clipped = list(_overzoom_clip_batches(iter([flat]),
-                                                      clip_schema))
-                if clipped:
-                    ctbl = pa.Table.from_batches(clipped, schema=clip_schema)
-                    ords = ctbl.column("tile_ord").to_numpy(
-                        zero_copy_only=False)
-                    order = np.argsort(ords, kind="stable")
-                    counts = np.bincount(ords, minlength=ntiles)
-                    taken = ctbl.take(
-                        pa.array(order, pa.int64())).combine_chunks()
-            offs = np.zeros(ntiles + 1, np.int64)
-            np.cumsum(counts, out=offs[1:])
-            if taken is not None and taken.num_rows:
-                tb = taken.to_batches()[0]
-                struct = pa.StructArray.from_arrays(
-                    [tb.column(n) for n in feat_names], names=feat_names)
-            else:
-                struct = pa.array([], type=struct_type)
-            feats_out = pa.ListArray.from_arrays(
-                pa.array(offs, pa.int32()), struct)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in tile_cols] + [feats_out],
-                names=tile_cols + ["feats"])
-
-    packed_out = packed.mapInArrow(clip_pack, schema=out_schema_spark)
-    return packed_out.select(*tile_cols, F.inline("feats")).select(*out_cols)
-
-
-def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
-                          src_zoom: int | None,
-                          partitions: int | None = None,
-                          _wins: bool = False,
-                          _layer_rows: bool = False,
-                          _packed_rows: bool = False,
-                          _exploded_targets: bool = False) -> DataFrame:
-    """Single-source-zoom composite→encode, grouped by SOURCE tile.
-
-    The generic ``composite_encode_tiles`` joins features to targets first,
-    so the shuffle (and every later stage) carries each feature once PER
-    DESCENDANT TARGET — 4× at dz=1, 16× at dz=2. When every feature sits
-    at ONE source zoom (the tileset-materialization shape: overzoom a z_s
-    layer pyramid-down), each target draws from exactly one source tile,
-    so the fan-out can happen INSIDE the kernel as numpy gathers instead:
-
-    * targets group by their z_src ancestor address (tiny, broadcast);
-    * features group by (src_x, src_y) — ONE shuffle of unduplicated rows,
-      shuffle bytes ∝ input, not input × 4^dz (the 100-TB difference);
-    * the kernel fans (feature × target) pairs vectorized — per-group
-      first-wins (winners per layer are identical for every target of a
-      group, because the join would hand every target the same feature
-      set), per-target keep-list + envelope prune, then the shared clip
-      kernel and multi-tile encoder.
-
-    Byte-identical to ``composite_encode_tiles(features, targets)`` for
-    single-zoom inputs (parity-tested). Targets above the source zoom
-    (z < src_zoom) yield nothing, like the generic path's inner join.
-    Reference analog: one bench run of rules 5/10/11/15 (bench/rules.js:
-    35-152) — the request names its source tile explicitly.
-
-    Private multi-zoom plumbing (used by ``composite_encode_tiles`` when
-    several source zooms are declared): ``_wins=True`` replaces the
-    group-local first-wins with a per-target winner LIST — targets must
-    carry a ``wins: array<struct<layer,tile_idx>>`` column (globally
-    computed, keep-lists already folded in), and a feature is alive for a
-    target iff its (layer, tile_idx) is that target's winner.
-    ``_layer_rows=True`` emits one row per (target, LAYER) — the framed
-    layer message plus its first-seen order keys, uncompressed — instead
-    of whole tiles, for cross-zoom splicing by ``_merge_layer_rows``.
-    ``_packed_rows=True`` (the ``overzoom_composite_packed`` backend)
-    skips the encoder and emits one packed row per target — tile keys +
-    the clipped feature structs — for a JVM-side ``inline`` restore.
-    ``_exploded_targets=True`` (with ``src_zoom=None``) is the grouped
-    GENERIC plan's mode: targets arrive already exploded per candidate
-    source zoom, carrying ``src_z``/``src_x``/``src_y``; both sides group
-    by the full source ADDRESS (zoom included) and the kernel reads each
-    group's zoom from the batch — one pass over arbitrary zoom mixes,
-    shuffle still ∝ input.
-    """
-    import pyarrow as pa
-
-    from ..sources import mvt_vec
-
-    if _packed_rows and _layer_rows:
-        raise ValueError("_packed_rows and _layer_rows are exclusive "
-                         "output modes")
-    if (src_zoom is None) != _exploded_targets:
-        raise ValueError("src_zoom=None requires _exploded_targets "
-                         "(and vice versa)")
-
-    if _exploded_targets:
-        keys = ["src_z", "src_x", "src_y"]
-        feats = features
-        t = targets
+        raise ValueError(f"src_zooms must be a list of zoom levels or None, "
+                         f"not {src_zooms!r}")
+    zs = None if src_zooms is None else sorted({int(z) for z in src_zooms})
+    if zs is not None:
+        features = features.filter(F.col("src_z").isin(zs))
+    t = targets if "compress" in targets.columns else \
+        targets.withColumn("compress", F.lit(False))  # absent ⇒ no gzip
+    tgt_fields = list(_TILE_LEVEL_COLS)
+    single = zs is not None and len(zs) == 1
+    if single:
+        t = (t.filter(F.col("z") >= zs[0])
+             .withColumn("src_z", F.lit(zs[0]).cast(
+                 features.schema["src_z"].dataType)))
+        if "keep_layers" in t.columns:
+            tgt_fields.append("keep_layers")
     else:
-        keys = ["src_x", "src_y"]
-        feats = features.filter(F.col("src_z") == src_zoom)
-        t = (targets.filter(F.col("z") >= src_zoom)
-             .withColumn("src_x", F.call_function(
-                 "shiftright", F.col("x"), F.col("z") - F.lit(src_zoom)).cast("long"))
-             .withColumn("src_y", F.call_function(
-                 "shiftright", F.col("y"), F.col("z") - F.lit(src_zoom)).cast("long")))
-    tgt_fields = ["z", "x", "y", "buffer_size", "compress"]
-    if _wins:
+        t = (t.drop("keep_layers")
+             .join(_winners(features, targets, zs), on=["z", "x", "y"])
+             .withColumn("src_z", F.explode("win_zooms")))
         tgt_fields.append("wins")
-    elif "keep_layers" in t.columns:
-        tgt_fields.append("keep_layers")
-    tgrp = (t.groupBy(*keys)
+    t = (t.withColumn("src_x", F.call_function(
+             "shiftright", F.col("x"), F.col("z") - F.col("src_z")).cast("long"))
+         .withColumn("src_y", F.call_function(
+             "shiftright", F.col("y"), F.col("z") - F.col("src_z")).cast("long")))
+    # both sides group by ONE struct key of one type (all fields nullable,
+    # so the join needs no cast): a constant src_z (one zoom) folds out of
+    # a three-column join condition, and a cast or a narrower key would
+    # re-shuffle one side after its group-by
+    addr = F.struct(*_SRC_KEYS).cast(T.StructType(
+        [T.StructField(k, features.schema[k].dataType) for k in _SRC_KEYS]))
+    tgrp = (t.groupBy(addr.alias("addr"))
             .agg(F.collect_list(F.struct(*tgt_fields)).alias("tgts")))
 
-    data_cols = [c for c in feats.columns if c not in ("src_z", "src_x", "src_y")]
+    data_cols = [c for c in features.columns if c not in _SRC_KEYS]
+    fa = features.withColumn("addr", addr)
     if partitions:
-        # one packed row = one source tile's whole kernel+encode workload
-        # (tens of ms) — with few groups per core the default shuffle
-        # partitioning leaves stragglers; a finer hash partitioning on the
-        # group key is inherited by the agg (no extra exchange)
-        feats = feats.repartition(partitions, *keys)
-    fgrp = (feats.groupBy(*keys)
+        # one packed row = one source tile's whole kernel workload (tens of
+        # ms); a finer hash partitioning on the group key is inherited by
+        # the agg (no extra exchange) and spreads stragglers
+        fa = fa.repartition(partitions, "addr")
+    fgrp = (fa.groupBy("addr")
             .agg(F.collect_list(F.struct(*data_cols)).alias("feats")))
-    packed = fgrp.join(F.broadcast(tgrp), on=keys, how="inner")
-    if _exploded_targets:
-        # the kernel reads each group's zoom from this column
-        packed = packed.select("src_z", "feats", "tgts")
+    packed = fgrp.join(tgrp, on="addr")
 
-    feat_names = data_cols
-    kernel_names = feat_names + ["z", "x", "y", "buffer_size", "compress",
-                                 "dz", "disp_x", "disp_y"]
-    clip_fields = [f for f in features.select(*data_cols).schema.fields] + [
-        T.StructField("z", T.IntegerType()),
-        T.StructField("x", T.LongType()),
-        T.StructField("y", T.LongType()),
-        T.StructField("buffer_size", T.IntegerType()),
-        T.StructField("compress", T.BooleanType()),
-    ]
+    kout = out if out == "rows" or single else "layers"
+    res = _fan_clip(packed, features.schema, t.schema, kout)
+    if kout == "layers":
+        return _merge_layer_rows(res)
+    if kout == "tiles":
+        return res
+    tile_cols = [c for c in targets.columns if c in _TILE_LEVEL_COLS]
+    return (res.select(*_SRC_KEYS, *tile_cols, F.inline("feats"))
+            .select(*_relational_order(features, tile_cols)))
+
+
+def _relational_order(features: DataFrame, tile_cols: list[str]) -> list[str]:
+    """``composite``'s column order: the first-wins semi-join keys, then
+    the ancestor join's source keys, feature and target columns."""
+    keys = ["z", "x", "y", "layer", "tile_idx"]
+    joined = _SRC_KEYS + [c for c in features.columns
+                          if c not in _SRC_KEYS] + tile_cols
+    return keys + [c for c in joined if c not in keys]
+
+
+def _fan_clip(packed: DataFrame, feat_schema: T.StructType,
+              tgt_schema: T.StructType, out: str) -> DataFrame:
+    """The fan/clip kernel over source groups: one mapInArrow.
+
+    Each input row is one source group: ``addr`` (its source address),
+    ``feats`` (the group's features) and ``tgts`` (the targets drawing
+    from it). Per (group, target) the kernel selects the live features —
+    the target's winner list when the targets carry ``wins``, else
+    group-local first-wins plus the target's keep-list — and applies the
+    envelope prune, then runs the shared clip kernel
+    (``_overzoom_clip_batches``) on the pairs.
+
+    ``out`` picks the output: ``"tiles"`` whole encoded tiles (every
+    target in one group), ``"layers"`` framed per-(target, layer)
+    messages for ``_merge_layer_rows``, ``"rows"`` one packed row per
+    (group, target) — source keys, the target's ORIGINAL tile-level
+    values (nulls kept) and the clipped feature structs — for a JVM-side
+    ``inline``."""
+    from ..sources import mvt_vec
+
+    data_fields = [f for f in feat_schema.fields if f.name not in _SRC_KEYS]
+    data_cols = [f.name for f in data_fields]
+    head = list(_TILE_LEVEL_COLS)
+    rows = out == "rows"
+    kernel_names = data_cols + head + _KERNEL_HELPER_COLS \
+        + (["tile_ord"] if rows else [])
     clip_schema = pa.schema(
-        [pa.field(f.name, _to_arrow(f.dataType)) for f in clip_fields
-         if f.name not in _KERNEL_HELPER_COLS]
-        + ([pa.field("tile_ord", pa.int64())] if _packed_rows else []))
-    if _packed_rows:
-        kernel_names = kernel_names + ["tile_ord"]
+        [pa.field(f.name, _to_arrow(f.dataType)) for f in data_fields]
+        + [pa.field("z", pa.int32()), pa.field("x", pa.int64()),
+           pa.field("y", pa.int64()), pa.field("buffer_size", pa.int32()),
+           pa.field("compress", pa.bool_())]
+        + ([pa.field("tile_ord", pa.int64())] if rows else []))
 
-    def fan_clip_encode(it):
+    def ints(a):
+        return a.to_numpy(zero_copy_only=False).astype(_I64)
+
+    def kernel(it):
         for batch in it:
             if batch.num_rows == 0:
                 continue
             foff, fvals = _norm_list(batch.column("feats"))
             toff, tvals = _norm_list(batch.column("tgts"))
-            nfeat_total = int(foff[-1])
-            if nfeat_total == 0:
+            if int(foff[-1]) == 0:
                 continue
-
             fcol = {f.name: fvals.field(i) for i, f in enumerate(fvals.type)}
-            xs_arr = fcol["xs"]
-            xo = xs_arr.offsets.to_numpy(zero_copy_only=False).astype(_I64)
-            xv = xs_arr.values.to_numpy(zero_copy_only=False).astype(_I64)
-            ys_arr = fcol["ys"]
-            yo = ys_arr.offsets.to_numpy(zero_copy_only=False).astype(_I64)
-            yv = ys_arr.values.to_numpy(zero_copy_only=False).astype(_I64)
+            tcol = {f.name: tvals.field(i) for i, f in enumerate(tvals.type)}
+            xo, xv = ints(fcol["xs"].offsets), ints(fcol["xs"].values)
+            yo, yv = ints(fcol["ys"].offsets), ints(fcol["ys"].values)
             # per-feature bbox (xs always has >=1 vertex)
             bminx = np.minimum.reduceat(xv, xo[:-1])
             bmaxx = np.maximum.reduceat(xv, xo[:-1])
             bminy = np.minimum.reduceat(yv, yo[:-1])
             bmaxy = np.maximum.reduceat(yv, yo[:-1])
-            ext = fcol["extent"].to_numpy(zero_copy_only=False).astype(_I64)
-            ti = fcol["tile_idx"].to_numpy(zero_copy_only=False).astype(_I64)
+            ext = ints(fcol["extent"])
+            ti = ints(fcol["tile_idx"])
             layer_codes, layer_dict = mvt_vec._dict_encode(fcol["layer"])
+            nl = len(layer_dict)
 
-            tz = tvals.field(0).to_numpy(zero_copy_only=False).astype(_I64)
-            tx = tvals.field(1).to_numpy(zero_copy_only=False).astype(_I64)
-            ty = tvals.field(2).to_numpy(zero_copy_only=False).astype(_I64)
+            tz, tx, ty = ints(tcol["z"]), ints(tcol["x"]), ints(tcol["y"])
             # a NULL buffer_size would read as NaN→undefined int64 and
             # produce arbitrary prune bounds; fill for the conversion and
-            # keep the null mask — generic-path parity (its JVM envelope
-            # predicate evaluates NULL for dz>0 rows and DROPS them)
-            tbuf_arr = tvals.field(3)
-            tbuf_null = tbuf_arr.is_null().to_numpy(zero_copy_only=False)
-            tbuf = tbuf_arr.fill_null(0).to_numpy(
-                zero_copy_only=False).astype(_I64)
-            tcmp = tvals.field(4).fill_null(False).to_numpy(zero_copy_only=False)
-            has_keep = "keep_layers" in tgt_fields
-            keep_lists = tvals.field(5).to_pylist() if has_keep else None
-            win_lists = tvals.field(5).to_pylist() if _wins else None
-            if _exploded_targets:
-                # grouped generic: each group's source zoom rides the batch
-                gz = batch.column("src_z").to_numpy(
-                    zero_copy_only=False).astype(_I64)
-                tgt_zoom = np.repeat(gz, np.diff(toff))
-            else:
-                tgt_zoom = np.full(len(tz), src_zoom, _I64)
+            # keep the null mask — the JVM envelope predicate evaluates
+            # NULL for dz>0 rows and DROPS them
+            tbuf_null = tcol["buffer_size"].is_null().to_numpy(
+                zero_copy_only=False)
+            tbuf = ints(tcol["buffer_size"].fill_null(0))
+            tcmp = tcol["compress"].fill_null(False).to_numpy(
+                zero_copy_only=False)
+            win_lists = tcol["wins"].to_pylist() if "wins" in tcol else None
+            keep_lists = tcol["keep_layers"].to_pylist() \
+                if "keep_layers" in tcol else None
+            tgt_group = np.repeat(np.arange(batch.num_rows, dtype=_I64),
+                                  np.diff(toff))
+            addr = batch.column("addr")
+            tdz = tz - ints(addr.field("src_z"))[tgt_group]
 
             pair_feat: list[np.ndarray] = []
             pair_tgt: list[np.ndarray] = []
@@ -1111,45 +765,38 @@ def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
                 if f0 == f1:
                     continue
                 lc = layer_codes[f0:f1]
-                nl = len(layer_dict)
-                if _wins:
-                    alive0 = None  # per-target, built in the loop below
-                else:
-                    # first-wins per layer over the WHOLE source group —
-                    # the generic path's groupBy(target, layer).
-                    # min(tile_idx) winners are identical for every
-                    # target of the group
+                if win_lists is None:
+                    # first-wins per layer over the WHOLE source group: at
+                    # one source zoom every target of the group sees the
+                    # same feature set, so its winners are the group's
                     win = np.full(nl, np.iinfo(np.int64).max, _I64)
                     np.minimum.at(win, lc, ti[f0:f1])
                     alive0 = ti[f0:f1] == win[lc]
                 for k in range(int(toff[g]), int(toff[g + 1])):
-                    dz = int(tz[k]) - int(tgt_zoom[k])
+                    dz = int(tdz[k])
                     if dz > 0 and tbuf_null[k]:
-                        continue  # generic-path parity: NULL buffer_size
-                        # fails the envelope predicate — no features
-                    zf = np.int64(1) << np.int64(dz)
-                    if _wins:
-                        # globally-computed first-wins: a feature is alive
-                        # iff (layer, tile_idx) is this target's winner
+                        continue  # NULL buffer fails the envelope predicate
+                    if win_lists is None:
+                        alive = alive0
+                        keep = set(keep_lists[k] or ()) if keep_lists else None
+                        if keep:
+                            lmask = np.array([layer_dict[c] in keep
+                                              for c in range(nl)], bool)
+                            alive = alive & lmask[lc]
+                    else:
+                        # a feature is alive iff (layer, tile_idx) is this
+                        # target's winner
                         wd = {w["layer"]: w["tile_idx"]
                               for w in (win_lists[k] or [])}
                         wt = np.array([wd.get(layer_dict[c], -1)
                                        for c in range(nl)], _I64)
                         alive = ti[f0:f1] == wt[lc]
-                    else:
-                        alive = alive0
-                    if has_keep and keep_lists[k] is not None \
-                            and len(keep_lists[k]):
-                        keep = {s for s in keep_lists[k]}
-                        lmask = np.array(
-                            [layer_dict[c] in keep for c in range(nl)], bool)
-                        alive = alive & lmask[lc]
                     if dz > 0:
+                        zf = 1 << dz
                         e = ext[f0:f1]
-                        dx = (tx[k] & (int(zf) - 1)) * e
-                        dy = (ty[k] & (int(zf) - 1)) * e
-                        lo = -tbuf[k]
-                        hi = e + tbuf[k]
+                        dx = (tx[k] & (zf - 1)) * e
+                        dy = (ty[k] & (zf - 1)) * e
+                        lo, hi = -tbuf[k], e + tbuf[k]
                         alive = alive \
                             & (bmaxx[f0:f1] * zf - dx >= lo) \
                             & (bminx[f0:f1] * zf - dx <= hi) \
@@ -1164,11 +811,10 @@ def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
             pf = np.concatenate(pair_feat)
             pt = np.concatenate(pair_tgt)
             take = pa.array(pf, pa.int64())
-            dz_arr = tz[pt] - tgt_zoom[pt]
+            dz_arr = tdz[pt]
             zf_arr = np.int64(1) << dz_arr
             ext_p = ext[pf]
-            cols = {n: fvals.field(i).take(take)
-                    for i, n in enumerate(fn.name for fn in fvals.type)}
+            cols = {n: fcol[n].take(take) for n in data_cols}
             cols["z"] = pa.array(tz[pt].astype(np.int32), pa.int32())
             cols["x"] = pa.array(tx[pt], pa.int64())
             cols["y"] = pa.array(ty[pt], pa.int64())
@@ -1177,121 +823,115 @@ def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
             cols["dz"] = pa.array(dz_arr.astype(np.int32), pa.int32())
             cols["disp_x"] = pa.array((tx[pt] & (zf_arr - 1)) * ext_p, pa.int64())
             cols["disp_y"] = pa.array((ty[pt] & (zf_arr - 1)) * ext_p, pa.int64())
-            if _packed_rows:
-                # pt indexes the batch-flattened target list, so it is
-                # already a batch-unique target ordinal — the re-pack key
+            if rows:
+                # pt indexes the batch-flattened target list: a batch-unique
+                # (group, target) ordinal — the re-pack key
                 cols["tile_ord"] = pa.array(pt, pa.int64())
             flat = pa.RecordBatch.from_arrays(
                 [cols[n] for n in kernel_names], names=kernel_names)
             clipped = list(_overzoom_clip_batches(iter([flat]), clip_schema))
             if not clipped:
                 continue
-            if _packed_rows:
-                ctbl = pa.Table.from_batches(clipped, schema=clip_schema)
-                ords = ctbl.column("tile_ord").to_numpy(zero_copy_only=False)
-                order = np.argsort(ords, kind="stable")
-                taken = ctbl.take(pa.array(order, pa.int64())).combine_chunks()
-                uniq, ucounts = np.unique(ords, return_counts=True)
-                offs = np.zeros(len(uniq) + 1, np.int64)
-                np.cumsum(ucounts, out=offs[1:])
-                tb = taken.to_batches()[0]
-                struct = pa.StructArray.from_arrays(
-                    [tb.column(n) for n in data_cols], names=data_cols)
-                feats_out = pa.ListArray.from_arrays(
-                    pa.array(offs, pa.int32()), struct)
-                take_t = pa.array(uniq, pa.int64())
-                # tile-level values from the ORIGINAL target structs —
-                # buffer_size/compress keep their nulls (the kernel's
-                # filled copies are prune-internal), generic-path parity
-                yield pa.RecordBatch.from_arrays(
-                    [tvals.field(0).take(take_t), tvals.field(1).take(take_t),
-                     tvals.field(2).take(take_t), tvals.field(3).take(take_t),
-                     tvals.field(4).take(take_t), feats_out],
-                    names=["z", "x", "y", "buffer_size", "compress", "feats"])
+            ctbl = pa.Table.from_batches(clipped, schema=clip_schema)
+            if out == "tiles":
+                yield _tiles_batch(mvt_vec.encode_tiles_table(ctbl))
                 continue
-            if _layer_rows:
-                units = mvt_vec.encode_tiles_table(
-                    pa.Table.from_batches(clipped, schema=clip_schema),
-                    per_layer=True)
-                if units:
-                    yield _units_batch(units)
+            if out == "layers":
+                yield _units_batch(
+                    mvt_vec.encode_tiles_table(ctbl, per_layer=True))
                 continue
-            tiles = mvt_vec.encode_tiles_table(
-                pa.Table.from_batches(clipped, schema=clip_schema))
-            if tiles:
-                yield _tiles_batch(tiles)
+            ords = ctbl.column("tile_ord").to_numpy(zero_copy_only=False)
+            order = np.argsort(ords, kind="stable")
+            tb = ctbl.take(pa.array(order, pa.int64())) \
+                .combine_chunks().to_batches()[0]
+            uniq, ucounts = np.unique(ords, return_counts=True)
+            offs = np.zeros(len(uniq) + 1, np.int64)
+            np.cumsum(ucounts, out=offs[1:])
+            feats_out = pa.ListArray.from_arrays(
+                pa.array(offs, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [tb.column(n) for n in data_cols], names=data_cols))
+            take_t = pa.array(uniq, pa.int64())
+            take_g = pa.array(tgt_group[uniq], pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [addr.field(c).take(take_g) for c in _SRC_KEYS]
+                + [tcol[c].take(take_t) for c in head] + [feats_out],
+                names=_SRC_KEYS + head + ["feats"])
 
-    if _packed_rows:
-        out_schema = T.StructType([
-            T.StructField("z", T.IntegerType()),
-            T.StructField("x", T.LongType()),
-            T.StructField("y", T.LongType()),
-            T.StructField("buffer_size", T.IntegerType()),
-            T.StructField("compress", T.BooleanType()),
-            T.StructField("feats", T.ArrayType(T.StructType(
-                features.select(*data_cols).schema.fields))),
-        ])
+    if out == "rows":
+        schema = T.StructType(
+            [feat_schema[c] for c in _SRC_KEYS]
+            + [tgt_schema[c] for c in head]
+            + [T.StructField("feats", T.ArrayType(T.StructType(data_fields)))])
     else:
-        out_schema = _LAYER_ROWS_SCHEMA if _layer_rows else _ENCODE_OUT_SCHEMA
-    return packed.mapInArrow(fan_clip_encode, schema=out_schema)
+        schema = _LAYER_ROWS_SCHEMA if out == "layers" else _ENCODE_OUT_SCHEMA
+    return packed.mapInArrow(kernel, schema=schema)
+
+
+def composite(features: DataFrame, targets: DataFrame,
+              src_zooms: list[int] | None = None) -> DataFrame:
+    """Full composite pipeline, relational in/out.
+
+    Output: one row per surviving feature keyed by target (z, x, y), with
+    coordinates rewritten into the target tile's frame. Matches the
+    reference's CompositeWorker::Execute semantics (src/vtcomposite.cpp:
+    205-323) minus serialization (see ``encode_tiles``).
+
+    ``src_zooms`` declares the feature zoom levels (sources at other zooms
+    are ignored). One declared zoom takes the fast mode of
+    ``_source_grouped`` (group-local first-wins, no winner pass); several
+    or ``None`` run the keys-only winner pass. Both are lazy. Target
+    columns other than z/x/y/buffer_size/keep_layers/compress are not
+    carried.
+    """
+    return _source_grouped(features, targets, src_zooms, None, "rows")
+
+
+def composite_packed(features: DataFrame, targets: DataFrame,
+                     src_zooms: list[int] | None = None,
+                     partitions: int | None = None) -> DataFrame:
+    """``composite`` with an explicit feature-shuffle partition count."""
+    return _source_grouped(features, targets, src_zooms, partitions, "rows")
 
 
 def overzoom_composite_packed(features: DataFrame, targets: DataFrame,
                               src_zoom: int,
                               partitions: int | None = None) -> DataFrame:
-    """Source-grouped relational composite: ``composite``'s rows with the
-    sinks' shuffle shape.
+    """``composite_packed`` for a declared single source zoom."""
+    return _source_grouped(features, targets, [src_zoom], partitions, "rows")
 
-    ``composite_packed`` still pays the generic ancestor join, which
-    duplicates every feature once per descendant target (4^dz×) BEFORE the
-    pack shuffle. Under the single-source-zoom contract this path reuses
-    ``overzoom_encode_tiles``' plan — features shuffle ONCE by source tile
-    (bytes ∝ input), targets broadcast, the kernel fans (feature × target)
-    pairs as numpy gathers — and emits packed per-target rows that a
-    JVM-side ``inline`` restores to exactly ``composite``'s schema
-    (``src_z``/``src_x``/``src_y`` are re-derived from the target address:
-    at one source zoom they are ``z - dz`` arithmetic, not carried data).
-    Row-identical to ``composite`` for single-zoom inputs (parity-tested in
-    tests/test_composite_packed.py).
+
+def composite_encode_tiles(features: DataFrame, targets: DataFrame,
+                           src_zooms: list[int] | None = None,
+                           partitions: int | None = None) -> DataFrame:
+    """Fused composite→encode: (z, x, y, tile:binary) with ONE python seam.
+
+    The clip kernel and the multi-tile encoder
+    (``mvt_vec.encode_tiles_table``) run in the same mapInArrow over source
+    groups, so no intermediate feature row crosses the seam. Modes and
+    ``src_zooms`` as in ``composite``: a declared single zoom encodes whole
+    tiles; otherwise each target's winning layers encode as framed layer
+    messages and ``_merge_layer_rows`` splices them per tile (one extra
+    shuffle of output-sized blobs). ``partitions`` sets the feature
+    shuffle's partition count.
+
+    Byte-identical to ``encode_tiles(composite(...))``. A hot tile that
+    must not pack as one unit takes ``encode_tiles(composite(...),
+    max_pack_features=k)``.
+
+    Targets must be UNIQUE per (z, x, y): duplicate keys with conflicting
+    options are undefined.
     """
-    packed_out = overzoom_encode_tiles(features, targets, src_zoom=src_zoom,
-                                       partitions=partitions,
-                                       _packed_rows=True)
-    exploded = _packed_rows_to_relational(packed_out, src_zoom)
-    return exploded.select(*_relational_order(features, targets))
+    return _source_grouped(features, targets, src_zooms, partitions, "tiles")
 
 
-def _relational_order(features: DataFrame, targets: DataFrame) -> list[str]:
-    """``composite``'s exact output column order — derived from the
-    generic plan's SCHEMA (lazy, never executed), so the packed paths
-    stay drop-in. The sink contract tolerates a missing keep_layers
-    column; the schema-only twin gets a null one so the derivation
-    tolerates it too."""
-    tref = targets if "keep_layers" in targets.columns else \
-        targets.withColumn("keep_layers",
-                           F.lit(None).cast("array<string>"))
-    # src_zooms=None: the generic plan — schema-only use; the default
-    # "auto" routing would recurse (packed → _relational_order →
-    # composite → packed) and run its eager inference job
-    return composite(features, tref, src_zooms=None).columns
-
-
-def _packed_rows_to_relational(packed_out: DataFrame,
-                               src_zoom: int) -> DataFrame:
-    """JVM-side restore of a ``_packed_rows`` sink output to relational
-    feature rows: ``inline`` the feature structs (a codegen generator —
-    not a second python seam) and re-derive ``src_z/src_x/src_y`` from the
-    target address (at one source zoom they are z − dz arithmetic, not
-    carried data). Column ordering is the caller's concern."""
-    exploded = packed_out.select(
-        "z", "x", "y", "buffer_size", "compress", F.inline("feats"))
-    dz = F.col("z") - F.lit(src_zoom)
-    return (exploded
-            .withColumn("src_z", F.lit(src_zoom).cast("int"))
-            .withColumn("src_x", F.call_function(
-                "shiftright", F.col("x"), dz).cast("long"))
-            .withColumn("src_y", F.call_function(
-                "shiftright", F.col("y"), dz).cast("long")))
+def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
+                          src_zoom: int,
+                          partitions: int | None = None) -> DataFrame:
+    """``composite_encode_tiles`` for a declared single source zoom — the
+    tileset-materialization shape (overzoom a z_s pyramid down). Targets
+    above the source zoom yield nothing."""
+    return _source_grouped(features, targets, [src_zoom], partitions, "tiles")
 
 
 def _merge_layer_rows(layer_rows: DataFrame) -> DataFrame:
@@ -1352,199 +992,7 @@ def _merge_layer_rows(layer_rows: DataFrame) -> DataFrame:
     return packed.mapInArrow(splice, schema=_ENCODE_OUT_SCHEMA)
 
 
-def _multizoom_encode_tiles(features: DataFrame, targets: DataFrame,
-                            zs: list[int],
-                            partitions: int | None = None) -> DataFrame:
-    """Source-grouped materialization for MULTI-zoom tilesets: each
-    declared zoom routes through ``overzoom_encode_tiles`` (shuffle ∝
-    input, fan-out in-kernel) and the per-zoom LAYER messages splice per
-    target tile. Cross-zoom first-wins is reconciled up front with a
-    KEYS-ONLY plan: per-source-address layer minima → ancestor-exploded
-    equi-join to target keys (5 small columns, never geometry) → global
-    min(tile_idx) per (target, layer). Each target then carries its
-    winner list into the kernel, so a layer encodes in exactly one
-    zoom's pass. Byte-parity with the generic join path is gated in
-    tests/test_overzoom_fused.py.
-
-    Relies on the ingest contract that ``tile_idx`` identifies ONE input
-    tile (its zoom mapping is functional) — reusing a tile_idx across
-    source tiles at different zooms would duplicate winner rows."""
-    wins, t_base = _multizoom_wins(features, targets, zs)
-    # ONE source-address-grouped pass over all declared zooms (the
-    # grouped-generic machinery) instead of a per-zoom pass union: same
-    # shuffle bytes, half the stages/joins. Each target carries its FULL
-    # winner list; the guarded tile_idx↦tile mapping means exactly one
-    # zoom's group holds each winning tile, so each layer still encodes
-    # once — byte parity unchanged (tests/test_overzoom_fused.py).
-    winlists = (wins.groupBy("z", "x", "y")
-                .agg(F.collect_list(F.struct("layer", "tile_idx"))
-                     .alias("wins")))
-    if "compress" not in t_base.columns:
-        t_base = t_base.withColumn("compress", F.lit(False))
-    tw = t_base.join(winlists, on=["z", "x", "y"], how="inner")
-    zarr = F.array(*[F.lit(int(z)) for z in zs])
-    te = (tw.withColumn("src_z", F.explode(
-              F.filter(zarr, lambda z: z <= F.col("z"))))
-          .withColumn("src_x", F.call_function(
-              "shiftright", F.col("x"), F.col("z") - F.col("src_z"))
-              .cast("long"))
-          .withColumn("src_y", F.call_function(
-              "shiftright", F.col("y"), F.col("z") - F.col("src_z"))
-              .cast("long")))
-    feats = features.filter(F.col("src_z").isin([int(z) for z in zs]))
-    layer_rows = overzoom_encode_tiles(
-        feats, te, src_zoom=None, partitions=partitions,
-        _wins=True, _layer_rows=True, _exploded_targets=True)
-    return _merge_layer_rows(layer_rows)
-
-
-def _grouped_generic_encode_tiles(features: DataFrame, targets: DataFrame,
-                                  partitions: int | None = None) -> DataFrame:
-    """The no-declared-zooms fused plan, source-grouped (guide §8 shape:
-    decide with small rows, move big rows once).
-
-    The legacy generic plan joins features to exploded targets FIRST, so
-    its pack shuffle carries every feature once per descendant target
-    (4^dz×, full payload). Here the payload shuffles exactly once:
-
-    * **keys-only global first-wins** — features pre-aggregate to one row
-      per (src address, layer) (a column-pruned scan, 5 small columns);
-      the ancestor equi-join + min(tile_idx) over THAT gives each
-      target's winner list, keep-lists folded in. Identical winners to
-      the joined-relation aggregation: min over per-source minima is the
-      global min.
-    * targets (inner-joined to their winner lists — targets with no
-      features vanish, like the legacy inner join) explode per candidate
-      source zoom 0..z and group by source ADDRESS — the broadcast side.
-    * features group by (src_z, src_x, src_y) — the ONE payload shuffle,
-      bytes ∝ input for ANY zoom mix, no eager inference job.
-    * the shared fan/clip/encode kernel emits per-(target, layer) framed
-      messages (a target may draw layers from groups at several zooms)
-      and ``_merge_layer_rows`` splices per tile — one extra shuffle of
-      OUTPUT-sized encoded blobs, the multi-zoom sink's merge contract.
-
-    Byte-identical to the legacy join plan under the ingest contract that
-    ``tile_idx`` identifies one input tile (parity-gated, mixed-zoom
-    scenarios included). A tile_idx shared by two source tiles at
-    different zooms on the same target+layer — the case the declared-
-    multi-zoom route rejects with its guard — would emit from both
-    groups here (the legacy plan interleaved such rows instead); that
-    input violates the ingest contract in every documented path.
-
-    Scale note: the broadcast side is one row per (source address) with
-    target lists ∝ targets × (z+1); planet-scale TARGET sets belong on
-    the legacy shuffle-join plan (``_generic_impl="join"``), same
-    tradeoff as every source-grouped route."""
-    has_keep = "keep_layers" in targets.columns
-    fk = (features.groupBy("src_z", "src_x", "src_y", "layer")
-          .agg(F.min("tile_idx").alias("tile_idx")))
-    tsel = ["z", "x", "y"] + (["keep_layers"] if has_keep else [])
-    cand = ancestor_join(fk, targets.select(*tsel))
-    if has_keep:
-        cand = apply_keep_layers(cand)
-    wins = (cand.groupBy("z", "x", "y", "layer")
-            .agg(F.min("tile_idx").alias("tile_idx")))
-    winlists = (wins.groupBy("z", "x", "y")
-                .agg(F.collect_list(F.struct("layer", "tile_idx"))
-                     .alias("wins")))
-    t_base = targets.drop("keep_layers") if has_keep else targets
-    if "compress" not in t_base.columns:  # legacy-plan tolerance: absent
-        t_base = t_base.withColumn("compress", F.lit(False))  # ⇒ no gzip
-    tw = t_base.join(winlists, on=["z", "x", "y"], how="inner")
-    te = (tw.withColumn("src_z", F.explode(F.sequence(F.lit(0), F.col("z"))))
-          .withColumn("src_x", F.call_function(
-              "shiftright", F.col("x"), F.col("z") - F.col("src_z"))
-              .cast("long"))
-          .withColumn("src_y", F.call_function(
-              "shiftright", F.col("y"), F.col("z") - F.col("src_z"))
-              .cast("long")))
-    layer_rows = overzoom_encode_tiles(
-        features, te, src_zoom=None, partitions=partitions,
-        _wins=True, _layer_rows=True, _exploded_targets=True)
-    return _merge_layer_rows(layer_rows)
-
-
-def _multizoom_wins(features: DataFrame, targets: DataFrame,
-                    zs: list[int]):
-    """Cross-zoom first-wins reconciliation shared by the multi-zoom sink
-    and the multi-zoom packed relational path: keys-only global winners
-    per (target, layer) with each winner's source zoom, checkpointed, plus
-    the tile_idx-functional-mapping guard. Returns (wins, t_base)."""
-    has_keep = "keep_layers" in targets.columns
-    fk = (features.filter(F.col("src_z").isin([int(z) for z in zs]))
-          .groupBy("src_z", "src_x", "src_y", "layer")
-          .agg(F.min("tile_idx").alias("tile_idx")))
-    tcols = ["z", "x", "y"] + (["keep_layers"] if has_keep else [])
-    cand = ancestor_join(fk, targets.select(*tcols), src_zooms=zs)
-    if has_keep:
-        cand = apply_keep_layers(cand)
-    wins = (cand.groupBy("z", "x", "y", "layer")
-            .agg(F.min("tile_idx").alias("tile_idx")))
-    # zoom of each winning source tile (tile_idx ↦ one input tile). Every
-    # winner tile_idx appears in fk (wins are minima over fk), so the
-    # mapping derives from the SMALL aggregate — not a second full scan
-    # of the feature table
-    tzoom = fk.select("tile_idx", "src_z").distinct()
-    # materialize ONCE: the winners subtree (a full feature-key scan)
-    # feeds every per-zoom branch, and a union of branches re-executes
-    # shared upstream per branch (the filter/union trap) — len(zs)× the
-    # dominant scan without this. Winners are keys-only (targets×layers
-    # rows), so the checkpoint is small
-    wins = wins.join(tzoom, on="tile_idx", how="inner") \
-        .localCheckpoint(eager=True)
-    # runtime guard for the ingest contract above: a tile_idx mapping to
-    # several zooms duplicates its winner rows in the join, so the same
-    # (target, layer) would encode in MORE than one zoom pass and the
-    # spliced tile silently diverges from the generic path. Exactly the
-    # corrupting cases surface as duplicated winner keys, and the check
-    # runs on the CHECKPOINTED keys-only winners — no extra feature scan.
-    dup = (wins.groupBy("z", "x", "y", "layer").count()
-           .filter(F.col("count") > 1).limit(1).count())
-    if dup:
-        raise ValueError(
-            "multi-zoom composite: a tile_idx is shared by source tiles at "
-            "different zooms (the winner for some (target, layer) maps to "
-            "several source zooms). tile_idx must identify ONE input tile — "
-            "re-ingest with features_from_tiles_df's default per-zoom "
-            "ordinal or pass a distinct tile_idx per input tile.")
-    t_base = targets.drop("keep_layers") if has_keep else targets
-    return wins, t_base
-
-
-def _wins_for_zoom(wins: DataFrame, z_s: int) -> DataFrame:
-    """One zoom's winner lists: (z, x, y, wins: array<struct<layer,
-    tile_idx>>) for targets where zoom ``z_s`` won at least one layer."""
-    return (wins.filter(F.col("src_z") == F.lit(int(z_s)))
-            .groupBy("z", "x", "y")
-            .agg(F.collect_list(F.struct("layer", "tile_idx"))
-                 .alias("wins")))
-
-
-def _multizoom_composite_packed(features: DataFrame, targets: DataFrame,
-                                zs: list[int],
-                                partitions: int | None = None) -> DataFrame:
-    """Multi-zoom packed RELATIONAL twin of ``_multizoom_encode_tiles``:
-    the same keys-only cross-zoom winner plan and per-zoom source-grouped
-    passes, but each pass emits packed relational rows (``_packed_rows``)
-    and the merge is a plain UNION — relational output needs no byte
-    splicing, several passes' rows for one target are just that target's
-    rows. Row-identical to the generic ``composite`` (parity-tested)."""
-    wins, t_base = _multizoom_wins(features, targets, zs)
-    parts = []
-    for z_s in zs:
-        t_z = t_base.join(_wins_for_zoom(wins, z_s),
-                          on=["z", "x", "y"], how="inner")
-        packed_out = overzoom_encode_tiles(
-            features, t_z, src_zoom=int(z_s), partitions=partitions,
-            _wins=True, _packed_rows=True)
-        parts.append(_packed_rows_to_relational(packed_out, int(z_s)))
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    return merged.select(*_relational_order(features, targets))
-
-
-def encode_tiles(composited: DataFrame, impl: str = "columnar",
+def encode_tiles(composited: DataFrame,
                  max_pack_features: int | None = None) -> DataFrame:
     """S3/S4 terminal sink: (z, x, y, tile:binary).
 
@@ -1553,14 +1001,12 @@ def encode_tiles(composited: DataFrame, impl: str = "columnar",
     Compression per the `compress` flag with the empty-tile rule
     (src/vtcomposite.cpp:300-311).
 
-    ``impl="columnar"`` (default): tiles PACK to one nested row each
-    (``_pack_tiles``) and cross mapInArrow in multi-tile batches; the
-    MULTI-tile encoder (sources.mvt_vec.encode_tiles_table) amortizes the
-    per-tile fixed numpy cost across the batch (6.0 → 1.8 ms/tile vs the
-    per-group applyInArrow it replaced) and the seam pays its per-row cost
-    once per TILE, not per feature. One packed row = one tile, so a tile
-    must fit in executor memory — the invariant a grouped applyInArrow
-    needed anyway; Arrow batch BYTES are capped by
+    Tiles PACK to one nested row each (``_pack_tiles``) and cross
+    mapInArrow in multi-tile batches; the MULTI-tile encoder
+    (sources.mvt_vec.encode_tiles_table) amortizes the per-tile fixed
+    numpy cost across the batch and the seam pays its per-row cost once
+    per TILE, not per feature. One packed row = one tile, so a tile must
+    fit in executor memory; Arrow batch BYTES are capped by
     spark.sql.execution.arrow.maxBytesPerBatch (schema.get_spark).
 
     ``max_pack_features``: the HOT-TILE bound. When set, tiles pack one
@@ -1577,105 +1023,42 @@ def encode_tiles(composited: DataFrame, impl: str = "columnar",
     whole-tile pack either way (parity gated in
     tests/test_encode_columnar.py). Cost vs the default: one extra
     shuffle of encoded layer blobs (∝ output bytes).
-    ``impl="rows"``: the original applyInPandas + mvt.Feature path, kept
-    as the byte-parity reference.
     """
-    import pandas as pd
+    from ..sources import mvt_vec
 
-    from ..sources import mvt
+    capped = max_pack_features is not None
+    src = composited
+    if capped:
+        src = composited.withColumn("_pack_bucket", (
+            (F.row_number().over(
+                Window.partitionBy("z", "x", "y", "layer")
+                .orderBy("tile_idx", "feature_idx")) - 1)
+            / F.lit(int(max_pack_features))).cast("int"))
+    packed = _pack_tiles(src, by_layer=capped)
+    if capped:
+        # grouping key only — keep it off the Arrow seam
+        packed = packed.drop("_pack_bucket")
+    tile_cols = [c for c in _TILE_LEVEL_COLS if c in packed.columns]
+    flat_names = composited.columns
 
-    out_schema = _ENCODE_OUT_SCHEMA
-
-    if impl == "columnar":
-        import pyarrow as pa
-
-        from ..sources import mvt_vec
-
-        src = composited
-        if max_pack_features is not None:
-            src = composited.withColumn("_pack_bucket", (
-                (F.row_number().over(
-                    Window.partitionBy("z", "x", "y", "layer")
-                    .orderBy("tile_idx", "feature_idx")) - 1)
-                / F.lit(int(max_pack_features))).cast("int"))
-        packed = _pack_tiles(src, by_layer=max_pack_features is not None)
-        if "_pack_bucket" in packed.columns:
-            packed = packed.drop("_pack_bucket")
-        tile_cols = [c for c in _TILE_LEVEL_COLS if c in packed.columns]
-        flat_names = composited.columns
-
-        if max_pack_features is not None:
-            def encode_units(it):
-                for batch in it:
-                    if batch.num_rows == 0:
-                        continue
-                    _check_unit_cap(batch, max_pack_features, "encode_tiles")
-                    cols, total, _foff = _unpack_batch(batch, tile_cols)
-                    if total == 0:
-                        continue
-                    flat = pa.Table.from_arrays(
-                        [cols[n] for n in flat_names], names=flat_names)
-                    units = mvt_vec.encode_tiles_table(flat, per_layer=True)
-                    if units:
-                        yield _units_batch(units)
-
-            layer_rows = packed.mapInArrow(encode_units,
-                                           schema=_LAYER_ROWS_SCHEMA)
-            return _merge_layer_rows(layer_rows)
-
-        def encode_packed(it):
-            for batch in it:
-                if batch.num_rows == 0:
-                    continue
-                cols, total, _foff = _unpack_batch(batch, tile_cols)
-                if total == 0:
-                    continue
-                flat = pa.Table.from_arrays(
-                    [cols[n] for n in flat_names], names=flat_names)
-                tiles = mvt_vec.encode_tiles_table(flat)
-                if tiles:
-                    yield _tiles_batch(tiles)
-
-        return packed.mapInArrow(encode_packed, schema=out_schema)
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["tile_idx", "feature_idx"], kind="stable")
-        z = int(pdf["z"].iloc[0]); x = int(pdf["x"].iloc[0]); y = int(pdf["y"].iloc[0])
-        compress = bool(pdf["compress"].iloc[0]) if "compress" in pdf else False
-        has_types = "prop_types" in pdf.columns
-        layers: dict[str, mvt.Layer] = {}
-        order: list[str] = []
-        for row in pdf.itertuples(index=False):
-            name = row.layer
-            if name not in layers:
-                layers[name] = mvt.Layer(name=name, extent=int(row.extent),
-                                         version=int(row.layer_version or 2))
-                order.append(name)
-            starts = list(row.part_offsets) + [len(row.xs)]
-            parts = [list(zip([int(v) for v in row.xs[starts[i]:starts[i + 1]]],
-                              [int(v) for v in row.ys[starts[i]:starts[i + 1]]]))
-                     for i in range(len(starts) - 1)]
-            raw = dict(row.properties) if row.properties is not None else {}
-            if has_types and row.prop_types is not None:
-                # typed re-materialization: canonical string + tag → the
-                # original MVT value variant (parity with the reference's
-                # property_mapper, src/feature_builder.hpp:169-180); keys
-                # with no tag (engine-generated, e.g. localize outputs)
-                # encode as strings
-                tags = {k: int(t) for k, t in dict(row.prop_types).items()}
-                props = {k: mvt.from_canonical(tags.get(k, mvt.TAG_STRING), v)
-                         for k, v in raw.items()}
-                ptypes = {k: tags.get(k, mvt.TAG_STRING) for k in raw}
+    def encode_packed(it):
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            if capped:
+                _check_unit_cap(batch, max_pack_features)
+            cols, total, _foff = _unpack_batch(batch, tile_cols)
+            if total == 0:
+                continue
+            flat = pa.Table.from_arrays(
+                [cols[n] for n in flat_names], names=flat_names)
+            if capped:
+                yield _units_batch(
+                    mvt_vec.encode_tiles_table(flat, per_layer=True))
             else:
-                props, ptypes = raw, None
-            layers[name].features.append(mvt.Feature(
-                geom_type=int(row.geom_type), parts=parts,
-                ring_types=[int(r) for r in
-                            (row.ring_types if row.ring_types is not None else [])],
-                properties=props, prop_types=ptypes,
-                fid=int(row.feature_id) if row.feature_id is not None and not pd.isna(row.feature_id) else None))
-        buf = mvt.encode_tile([layers[n] for n in order])
-        buf = mvt.gzip_sink(buf, compress)
-        return pd.DataFrame({"z": [z], "x": [x], "y": [y], "tile": [buf]})
+                yield _tiles_batch(mvt_vec.encode_tiles_table(flat))
 
-    return composited.groupBy("z", "x", "y").applyInPandas(encode, schema=out_schema)
+    if capped:
+        return _merge_layer_rows(
+            packed.mapInArrow(encode_packed, schema=_LAYER_ROWS_SCHEMA))
+    return packed.mapInArrow(encode_packed, schema=_ENCODE_OUT_SCHEMA)

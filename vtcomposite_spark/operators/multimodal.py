@@ -149,24 +149,6 @@ def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
     return resize_image(media, width, height)
 
 
-def frame_sample_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling seam: with the fake codec each image is its own
-    single frame; kept so the pipeline shape (1 row → N frame rows) is real."""
-
-    def kernel(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].astype("int64"),
-                "frame_no": np.zeros(len(pdf), dtype=np.int64),
-                "payload": pdf["payload"],
-            })
-
-    schema = T.StructType([T.StructField("media_id", T.LongType()),
-                           T.StructField("frame_no", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    return media.select("media_id", "payload").mapInPandas(kernel, schema)
-
-
 # ---------------------------------------------------------------------------
 # real codecs for uncompressed standard formats (pure numpy, from the specs)
 # ---------------------------------------------------------------------------

@@ -42,11 +42,6 @@ from . import geometry as geo
 _I64 = np.int64
 
 
-def _ring_area2(xs: np.ndarray, ys: np.ndarray) -> int:
-    """Twice the shoelace area of a CLOSED ring (positive = exterior)."""
-    return int(np.sum(xs[:-1] * ys[1:] - xs[1:] * ys[:-1]))
-
-
 def _point_in_ring(px: int, py: int, xs: np.ndarray, ys: np.ndarray) -> bool:
     x0, y0 = xs[:-1], ys[:-1]
     x1, y1 = xs[1:], ys[1:]

@@ -133,8 +133,8 @@ def features_from_tiles_df(tiles: DataFrame, buf_col: str = "tile",
     zoom, first-wins only arbitrates between input tiles sharing a source
     address, which a tileset's unique (z, x, y) makes impossible — so a
     per-zoom constant loses nothing there, while keeping the multi-zoom
-    contract (tile_idx ↦ one zoom, the ``_multizoom_encode_tiles``
-    invariant) satisfied by construction and giving a deterministic
+    contract (tile_idx ↦ one zoom, which composite's winner pass
+    checks) satisfied by construction and giving a deterministic
     lower-zoom-wins order across zooms. A constant 0 (the old default)
     violated that contract for every multi-zoom re-ingest.
     Property-map entry order survives the seam (entries

@@ -209,103 +209,6 @@ def _geometry_blob(gt, vst, ven, xs_vals, ys_vals, pst, pen, po_vals):
     return blob, np.concatenate([[0], np.cumsum(feat_bytes)]).astype(_I64)
 
 
-def encode_layer_columnar(name, version, extent, gt, fid_vals, fid_valid,
-                          vst, ven, xs_vals, ys_vals, pst, pen, po_vals,
-                          keys_flat, svals_flat, tags_flat, est, een) -> bytes:
-    """One MVT layer from flat arrays; features in the given order."""
-    F = len(gt)
-    # --- property tables (first-seen; value table typed like the row path)
-    nent = een - est
-    tag_starts = np.zeros(F + 1, _I64)
-    tagblob = np.empty(0, _U8)
-    key_table: list = []
-    value_bytes: list[bytes] = []
-    if int(nent.sum()) > 0:
-        take = _multi_arange(est, een)
-        ef = np.repeat(np.arange(F, dtype=_I64), nent)
-        k_codes, key_uniq = _factorize_first_seen(keys_flat[take])
-        key_table = list(key_uniq)
-        tg = tags_flat[take]
-        s_codes, s_uniq = _factorize_first_seen(svals_flat[take])
-        # int combo (tag, string code) — second factorize on int64, cheap
-        M = _I64(len(s_uniq) + 1)
-        c_codes, c_uniq = _factorize_first_seen(tg * M + s_codes)
-        # typed dedupe over the (few) uniques — (tag, typed value) keyed,
-        # matching mvt._encode_layer's val_idx
-        remap = np.empty(len(c_uniq), _I64)
-        seen: dict = {}
-        s_uniq_l = list(s_uniq)
-        for u, c in enumerate(c_uniq.tolist()):
-            tag, sc = divmod(c, int(M))
-            tv = mvt.from_canonical(tag, s_uniq_l[sc])
-            kk = (tag, tv)
-            if kk not in seen:
-                seen[kk] = len(value_bytes)
-                value_bytes.append(_encode_value_fast(tag, tv))
-            remap[u] = seen[kk]
-        v_final = remap[c_codes]
-        twords = np.empty(2 * len(take), _U64)
-        twords[0::2] = k_codes.astype(_U64)
-        twords[1::2] = v_final.astype(_U64)
-        tagblob, tnb = varint_encode(twords)
-        tb = np.bincount(np.repeat(ef, 2), weights=tnb, minlength=F).astype(_I64)
-        tag_starts = np.concatenate([[0], np.cumsum(tb)]).astype(_I64)
-
-    geoblob, geo_starts = _geometry_blob(gt, vst, ven, xs_vals, ys_vals,
-                                         pst, pen, po_vals)
-
-    # --- vectorized feature framing ---
-    # per feature: 0x12 uv(fb_len) [0x08 uv(fid)] [0x12 uv(taglen) tags]
-    #              0x18 gt 0x22 uv(geolen) geom        (gt < 128 always)
-    taglen = np.diff(tag_starts)
-    geolen = np.diff(geo_starts)
-    has_tags = taglen > 0
-    fid_uv, fid_nb_p = varint_encode(fid_vals[fid_valid])
-    fid_nb = np.zeros(F, _I64)
-    fid_nb[fid_valid] = fid_nb_p
-    fid_len = np.where(fid_valid, 1 + fid_nb, 0)
-    taglen_uv, tagl_nb_p = varint_encode(taglen[has_tags])
-    tag_hdr = np.zeros(F, _I64)
-    tag_hdr[has_tags] = 1 + tagl_nb_p
-    geolen_uv, geol_nb = varint_encode(geolen)
-    fb_len = fid_len + tag_hdr + taglen + 2 + 1 + geol_nb + geolen
-    fb_uv, fb_nb = varint_encode(fb_len)
-    total = int((1 + fb_nb + fb_len).sum())
-    out = np.zeros(total, _U8)
-    fstart = np.concatenate([[0], np.cumsum(1 + fb_nb + fb_len)]).astype(_I64)[:-1]
-
-    out[fstart] = 0x12
-    p = fstart + 1
-    out[_multi_arange(p, p + fb_nb)] = fb_uv
-    p = p + fb_nb
-    pv = p[fid_valid]
-    out[pv] = 0x08
-    out[_multi_arange(pv + 1, pv + 1 + fid_nb[fid_valid])] = fid_uv
-    p = p + fid_len
-    pt = p[has_tags]
-    out[pt] = 0x12
-    out[_multi_arange(pt + 1, pt + tag_hdr[has_tags])] = taglen_uv
-    out[_multi_arange(p + tag_hdr, p + tag_hdr + taglen)] = tagblob
-    p = p + tag_hdr + taglen
-    out[p] = 0x18
-    out[p + 1] = gt.astype(_U8)
-    out[p + 2] = 0x22
-    out[_multi_arange(p + 3, p + 3 + geol_nb)] = geolen_uv
-    out[_multi_arange(p + 3 + geol_nb, p + 3 + geol_nb + geolen)] = geoblob
-
-    head = [b"\x78" + _uv(int(version)),
-            b"\x0a" + _uv(len(name.encode("utf-8"))) + name.encode("utf-8")]
-    tail = []
-    for k in key_table:
-        kb = k.encode("utf-8")
-        tail.append(b"\x1a" + _uv(len(kb)) + kb)
-    for vb in value_bytes:
-        tail.append(b"\x22" + _uv(len(vb)) + vb)
-    tail.append(b"\x28" + _uv(int(extent)))
-    body = b"".join(head) + out.tobytes() + b"".join(tail)
-    return b"\x1a" + _uv(len(body)) + body  # tile-level field 3
-
-
 def _np_col(tbl, name):
     import pyarrow as pa
     col = tbl.column(name)

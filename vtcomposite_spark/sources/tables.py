@@ -126,13 +126,11 @@ def write_tiles(df: DataFrame, target: str, fmt: str = "auto",
 
 def write_features(df: DataFrame, target: str, fmt: str = "auto",
                    mode: str = "append") -> None:
-    """FEATURES_SCHEMA sink partitioned by source zoom. The multi-zoom
-    composite (`_multizoom_encode_tiles`) runs one source-grouped pass
-    per declared zoom, each filtering ``src_z == z`` — over a src_z-
-    partitioned table every pass prunes to its own zoom's files at the
-    scan, so N zoom passes read each byte once, not N times (the same
-    pruning contract ``write_tiles`` gives the z-partitioned tile log;
-    plan-tested)."""
+    """FEATURES_SCHEMA sink partitioned by source zoom. Composite with
+    declared ``src_zooms`` filters ``src_z IN (zooms)`` — over a src_z-
+    partitioned table the scan prunes to the declared zooms' files (the
+    same pruning contract ``write_tiles`` gives the z-partitioned tile
+    log; plan-tested)."""
     if fmt == "iceberg" or (fmt == "auto" and _looks_like_iceberg(target)):
         if not _has_iceberg(df.sparkSession):
             raise RuntimeError(
