@@ -144,16 +144,16 @@ def build_workload(spark, sf_dir):
         reference's runs/s, which amortizes over thousands of repeats.
         The plan is REBUILT per run: re-collecting the same DataFrame lets
         Spark skip whole stages via shuffle-output reuse, which would fake
-        the number. ``packed=True`` runs composite_packed with the source
-        zoom declared (the fast mode, no winner pass) with the identical
-        consumer agg; the default runs composite with undeclared zooms."""
+        the number. Both run with the source zoom declared (the fast mode,
+        no winner pass) and the identical consumer agg; ``packed=True``
+        calls it through the composite_packed name."""
         from vtcomposite_spark.operators.composite import (composite,
                                                            composite_packed)
         feats, targets = _fixture_grid_paths(fixture_name, n_src)
 
         def run():
             rows = composite_packed(feats, targets, src_zooms=[8]) if packed \
-                else composite(feats, targets)
+                else composite(feats, targets, src_zooms=[8])
             return rows.agg(
                 F.countDistinct("z", "x", "y").alias("tiles"),
                 F.count("*").alias("feats")).collect()[0]

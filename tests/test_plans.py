@@ -279,6 +279,27 @@ def test_source_grouped_plan_no_broadcast(spark):
             assert _features_exchanges(plan) == 1, zooms
 
 
+def test_single_group_targets_encode_whole(spark):
+    """The sink picks whole-tile output from what it observes, not from
+    an option: on an undeclared single-zoom input every target's winners
+    lie in one source group, so the layer-splice half of the plan runs on
+    nothing (AQE turns it into an EmptyRelation), and the bytes equal the
+    declared mode's."""
+    from vtcomposite_spark.operators.composite import composite_encode_tiles
+    feats, targets = _points_fixture(spark)
+
+    def tiles(df):
+        return sorted((r.z, r.x, r.y, bytes(r.tile)) for r in df.collect())
+
+    out = composite_encode_tiles(feats, targets)
+    got = tiles(out)
+    assert got and got == tiles(
+        composite_encode_tiles(feats, targets, src_zooms=[4]))
+    plan = _final_plan(out).split("== Initial Plan ==")[0]
+    below_splice = plan.split("MapInArrow splice")[1].splitlines()[1]
+    assert "EmptyRelation" in below_splice
+
+
 def test_composite_plans_start_no_job(spark):
     """Building the plans of composite, composite_packed and
     composite_encode_tiles starts zero Spark jobs, with zooms declared

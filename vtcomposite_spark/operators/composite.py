@@ -25,9 +25,11 @@ DataFrame (one row per requested output tile), ``_source_grouped``:
 
 Two modes. A declared single source zoom needs no winner pass: each target
 has exactly one source group, so first-wins runs group-locally in the
-kernel and tiles encode whole. Every other input — several declared zooms
-or none — runs the winner pass, and tiles splice per layer. Building a plan
-starts no Spark job; the ``tile_idx`` contract check fails the first action.
+kernel. Every other input — several declared zooms or none — runs the
+winner pass. In both, a target whose winners lie in one source group
+encodes whole; only a target drawing from several groups splices per
+layer. Building a plan starts no Spark job; the ``tile_idx`` contract check
+fails the first action.
 
 ``encode_tiles`` is the separate S3/S4 sink for relational rows, with the
 ``max_pack_features`` hot-tile bound. ``composite_points`` is the all-point
@@ -561,18 +563,13 @@ def _winners(features: DataFrame, targets: DataFrame,
              zooms: list[int] | None) -> DataFrame:
     """Keys-only first-wins: one row per target (z, x, y) carrying its
     winner list ``wins: array<struct<layer, tile_idx>>`` (keep-lists
-    folded in) and ``win_zooms``, the source zooms that own a winner.
+    folded in), ``win_zooms``, the source zooms that own a winner, and
+    ``clash`` (see ``_checked``).
 
     Features pre-aggregate to one row per (source address, layer) — a
     column-pruned scan of five small columns — and only those rows meet
     the ancestor-exploded targets; the min over per-source minima is the
-    min over the joined relation, so the winners equal ``first_wins``'.
-
-    The ingest contract (``tile_idx`` identifies ONE input tile) is
-    checked on the winner column itself: a (target, layer) whose winning
-    tile_idx sits at two source zooms would encode that layer twice, so
-    the first action fails with ``raise_error`` instead. The check rides
-    a column the kernel reads, so it cannot be pruned away."""
+    min over the joined relation, so the winners equal ``first_wins``'."""
     has_keep = "keep_layers" in targets.columns
     fk = (features.groupBy(*_SRC_KEYS, "layer")
           .agg(F.min("tile_idx").alias("tile_idx")))
@@ -586,13 +583,26 @@ def _winners(features: DataFrame, targets: DataFrame,
          .agg(F.min(F.struct("tile_idx", "src_z")).alias("lo"),
               F.max(F.struct((-F.col("tile_idx")).alias("neg"),
                              "src_z")).alias("hi")))
-    tile_idx = (F.when(F.col("lo.src_z") != F.col("hi.src_z"),
-                       F.raise_error(F.lit(_SHARED_TILE_IDX)))
-                .otherwise(F.col("lo.tile_idx")))
     return (w.groupBy("z", "x", "y")
-            .agg(F.collect_list(F.struct("layer", tile_idx.alias("tile_idx")))
-                 .alias("wins"),
-                 F.collect_set("lo.src_z").alias("win_zooms")))
+            .agg(F.collect_list(F.struct("layer", F.col("lo.tile_idx")
+                                         .alias("tile_idx"))).alias("wins"),
+                 F.array_union(F.collect_set("lo.src_z"),
+                               F.collect_set("hi.src_z")).alias("win_zooms"),
+                 F.max(F.col("lo.src_z") != F.col("hi.src_z"))
+                 .alias("clash")))
+
+
+def _checked(t: DataFrame) -> DataFrame:
+    """The ingest contract (``tile_idx`` identifies ONE input tile): a
+    target with a ``clash`` — a (target, layer) whose winning tile_idx
+    sits at two source zooms, so the layer would encode twice — fails the
+    first action with ``raise_error``. The check rides ``wins``, a column
+    the kernel reads, so Catalyst cannot prune it; it is applied after
+    any split of the targets, so exactly one stage raises it (a clash
+    always gives two winning zooms)."""
+    return t.withColumn("wins", F.when(
+        F.col("clash"), F.raise_error(F.lit(_SHARED_TILE_IDX))
+        .cast(t.schema["wins"].dataType)).otherwise(F.col("wins")))
 
 
 def _source_grouped(features: DataFrame, targets: DataFrame,
@@ -612,9 +622,12 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
     * one declared zoom: every target has exactly one source group, so
       first-wins runs group-locally in the kernel and tiles encode whole;
     * anything else (several declared zooms, or ``None``): ``_winners``
-      gives each target its winner list, the target explodes only over
-      the zooms that own a winner, and tiles encode per layer and splice
-      (``_merge_layer_rows``); relational rows need no splice.
+      gives each target its winner list and the target explodes only over
+      the zooms that own a winner. A target whose winners lie in one
+      source group (one winning zoom — every target of a single-zoom
+      input) still encodes whole; only a target drawing from several
+      groups encodes per layer and splices (``_merge_layer_rows``).
+      Relational rows need no splice.
 
     Plan building starts no Spark job."""
     if isinstance(src_zooms, str):
@@ -648,8 +661,6 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
     # re-shuffle one side after its group-by
     addr = F.struct(*_SRC_KEYS).cast(T.StructType(
         [T.StructField(k, features.schema[k].dataType) for k in _SRC_KEYS]))
-    tgrp = (t.groupBy(addr.alias("addr"))
-            .agg(F.collect_list(F.struct(*tgt_fields)).alias("tgts")))
 
     data_cols = [c for c in features.columns if c not in _SRC_KEYS]
     fa = features.withColumn("addr", addr)
@@ -660,17 +671,28 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
         fa = fa.repartition(partitions, "addr")
     fgrp = (fa.groupBy("addr")
             .agg(F.collect_list(F.struct(*data_cols)).alias("feats")))
-    packed = fgrp.join(tgrp, on="addr")
 
-    kout = out if out == "rows" or single else "layers"
-    res = _fan_clip(packed, features.schema, t.schema, kout)
-    if kout == "layers":
-        return _merge_layer_rows(res)
-    if kout == "tiles":
-        return res
-    tile_cols = [c for c in targets.columns if c in _TILE_LEVEL_COLS]
-    return (res.select(*_SRC_KEYS, *tile_cols, F.inline("feats"))
-            .select(*_relational_order(features, tile_cols)))
+    def fan_clip(tt: DataFrame, kout: str) -> DataFrame:
+        if not single:
+            tt = _checked(tt)
+        tgrp = (tt.groupBy(addr.alias("addr"))
+                .agg(F.collect_list(F.struct(*tgt_fields)).alias("tgts")))
+        return _fan_clip(fgrp.join(tgrp, on="addr"), features.schema,
+                         tt.schema, kout)
+
+    if out == "rows":
+        tile_cols = [c for c in targets.columns if c in _TILE_LEVEL_COLS]
+        return (fan_clip(t, "rows")
+                .select(*_SRC_KEYS, *tile_cols, F.inline("feats"))
+                .select(*_relational_order(features, tile_cols)))
+    if single:
+        return fan_clip(t, "tiles")
+    # a target whose winners all lie in one source group encodes whole;
+    # only the rest encode per layer and splice. Both halves read the one
+    # features exchange (Spark reuses it).
+    one = F.size("win_zooms") == 1
+    return fan_clip(t.filter(one), "tiles").unionByName(
+        _merge_layer_rows(fan_clip(t.filter(~one), "layers")))
 
 
 def _relational_order(features: DataFrame, tile_cols: list[str]) -> list[str]:
@@ -888,32 +910,29 @@ def composite(features: DataFrame, targets: DataFrame,
 
 
 def composite_packed(features: DataFrame, targets: DataFrame,
-                     src_zooms: list[int] | None = None,
-                     partitions: int | None = None) -> DataFrame:
-    """``composite`` with an explicit feature-shuffle partition count."""
-    return _source_grouped(features, targets, src_zooms, partitions, "rows")
+                     src_zooms: list[int] | None = None) -> DataFrame:
+    """``composite`` (kept as a name)."""
+    return composite(features, targets, src_zooms)
 
 
 def overzoom_composite_packed(features: DataFrame, targets: DataFrame,
-                              src_zoom: int,
-                              partitions: int | None = None) -> DataFrame:
-    """``composite_packed`` for a declared single source zoom."""
-    return _source_grouped(features, targets, [src_zoom], partitions, "rows")
+                              src_zoom: int) -> DataFrame:
+    """``composite`` for a declared single source zoom."""
+    return composite(features, targets, [src_zoom])
 
 
 def composite_encode_tiles(features: DataFrame, targets: DataFrame,
-                           src_zooms: list[int] | None = None,
-                           partitions: int | None = None) -> DataFrame:
+                           src_zooms: list[int] | None = None) -> DataFrame:
     """Fused composite→encode: (z, x, y, tile:binary) with ONE python seam.
 
     The clip kernel and the multi-tile encoder
     (``mvt_vec.encode_tiles_table``) run in the same mapInArrow over source
     groups, so no intermediate feature row crosses the seam. Modes and
-    ``src_zooms`` as in ``composite``: a declared single zoom encodes whole
-    tiles; otherwise each target's winning layers encode as framed layer
-    messages and ``_merge_layer_rows`` splices them per tile (one extra
-    shuffle of output-sized blobs). ``partitions`` sets the feature
-    shuffle's partition count.
+    ``src_zooms`` as in ``composite``. A target whose winners lie in one
+    source group encodes whole; a target drawing from several groups
+    encodes its winning layers as framed layer messages that
+    ``_merge_layer_rows`` splices per tile (one extra shuffle of
+    output-sized blobs).
 
     Byte-identical to ``encode_tiles(composite(...))``. A hot tile that
     must not pack as one unit takes ``encode_tiles(composite(...),
@@ -922,7 +941,7 @@ def composite_encode_tiles(features: DataFrame, targets: DataFrame,
     Targets must be UNIQUE per (z, x, y): duplicate keys with conflicting
     options are undefined.
     """
-    return _source_grouped(features, targets, src_zooms, partitions, "tiles")
+    return _source_grouped(features, targets, src_zooms, None, "tiles")
 
 
 def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
@@ -930,7 +949,8 @@ def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
                           partitions: int | None = None) -> DataFrame:
     """``composite_encode_tiles`` for a declared single source zoom — the
     tileset-materialization shape (overzoom a z_s pyramid down). Targets
-    above the source zoom yield nothing."""
+    above the source zoom yield nothing. ``partitions`` sets the feature
+    shuffle's partition count."""
     return _source_grouped(features, targets, [src_zoom], partitions, "tiles")
 
 
