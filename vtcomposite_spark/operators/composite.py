@@ -6,8 +6,8 @@ overzoom affine + box clip, serialize. Here the same semantics run as ONE
 lazy plan over a *features* DataFrame (one row per feature) and a *targets*
 DataFrame (one row per requested output tile), ``_source_grouped``:
 
-1. **Keys-only winners** (``_winners``) — features pre-aggregate to
-   (source address, layer, min tile_idx); the ancestor equi-join
+1. **Keys-only winners** (``_winners``) — the address-grouped features
+   reduce to (source address, layer, min tile_idx); the ancestor equi-join
    (``ancestor_join``, J1) with the layer keep-list (``apply_keep_layers``,
    P2) and min(tile_idx) per (target, layer) give each target its
    first-wins winner list (A2/J5, src/vtcomposite.cpp:210,243-251). Dropped
@@ -559,20 +559,31 @@ _SHARED_TILE_IDX = (
     "ordinal or pass a distinct tile_idx per input tile.")
 
 
-def _winners(features: DataFrame, targets: DataFrame,
+def _winners(fgrp: DataFrame, targets: DataFrame,
              zooms: list[int] | None) -> DataFrame:
     """Keys-only first-wins: one row per target (z, x, y) carrying its
     winner list ``wins: array<struct<layer, tile_idx>>`` (keep-lists
     folded in), ``win_zooms``, the source zooms that own a winner, and
     ``clash`` (see ``_checked``).
 
-    Features pre-aggregate to one row per (source address, layer) — a
-    column-pruned scan of five small columns — and only those rows meet
-    the ancestor-exploded targets; the min over per-source minima is the
-    min over the joined relation, so the winners equal ``first_wins``'."""
+    The keys come from ``fgrp``, the features already grouped by source
+    address, so the features are read (for MVT input: decoded) once:
+    each group reduces to one row per layer — its hash partitioning on
+    ``addr`` needs no second exchange — and only those rows meet the
+    ancestor-exploded targets; the min over per-source minima is the min
+    over the joined relation, so the winners equal ``first_wins``'."""
     has_keep = "keep_layers" in targets.columns
-    fk = (features.groupBy(*_SRC_KEYS, "layer")
-          .agg(F.min("tile_idx").alias("tile_idx")))
+    keys = F.transform("feats", lambda f: F.struct(
+        f["layer"].alias("layer"), f["tile_idx"].alias("tile_idx")))
+    # the coalesce makes the keys non-nullable, so the join's inferred
+    # not-null filters fold away instead of being pushed into the features
+    # scan — that would make this exchange differ from the payload's and
+    # read (decode) the features twice. A NULL address matches no target
+    # either way (a target address is never negative).
+    fk = (fgrp.select("addr", F.inline(keys))
+          .groupBy("addr", "layer").agg(F.min("tile_idx").alias("tile_idx"))
+          .select(*[F.coalesce(F.col("addr")[k], F.lit(-1)).alias(k)
+                    for k in _SRC_KEYS], "layer", "tile_idx"))
     tsel = ["z", "x", "y"] + (["keep_layers"] if has_keep else [])
     cand = ancestor_join(fk, targets.select(*tsel), src_zooms=zooms)
     if has_keep:
@@ -636,25 +647,6 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
     zs = None if src_zooms is None else sorted({int(z) for z in src_zooms})
     if zs is not None:
         features = features.filter(F.col("src_z").isin(zs))
-    t = targets if "compress" in targets.columns else \
-        targets.withColumn("compress", F.lit(False))  # absent ⇒ no gzip
-    tgt_fields = list(_TILE_LEVEL_COLS)
-    single = zs is not None and len(zs) == 1
-    if single:
-        t = (t.filter(F.col("z") >= zs[0])
-             .withColumn("src_z", F.lit(zs[0]).cast(
-                 features.schema["src_z"].dataType)))
-        if "keep_layers" in t.columns:
-            tgt_fields.append("keep_layers")
-    else:
-        t = (t.drop("keep_layers")
-             .join(_winners(features, targets, zs), on=["z", "x", "y"])
-             .withColumn("src_z", F.explode("win_zooms")))
-        tgt_fields.append("wins")
-    t = (t.withColumn("src_x", F.call_function(
-             "shiftright", F.col("x"), F.col("z") - F.col("src_z")).cast("long"))
-         .withColumn("src_y", F.call_function(
-             "shiftright", F.col("y"), F.col("z") - F.col("src_z")).cast("long")))
     # both sides group by ONE struct key of one type (all fields nullable,
     # so the join needs no cast): a constant src_z (one zoom) folds out of
     # a three-column join condition, and a cast or a narrower key would
@@ -671,6 +663,26 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
         fa = fa.repartition(partitions, "addr")
     fgrp = (fa.groupBy("addr")
             .agg(F.collect_list(F.struct(*data_cols)).alias("feats")))
+
+    t = targets if "compress" in targets.columns else \
+        targets.withColumn("compress", F.lit(False))  # absent ⇒ no gzip
+    tgt_fields = list(_TILE_LEVEL_COLS)
+    single = zs is not None and len(zs) == 1
+    if single:
+        t = (t.filter(F.col("z") >= zs[0])
+             .withColumn("src_z", F.lit(zs[0]).cast(
+                 features.schema["src_z"].dataType)))
+        if "keep_layers" in t.columns:
+            tgt_fields.append("keep_layers")
+    else:
+        t = (t.drop("keep_layers")
+             .join(_winners(fgrp, targets, zs), on=["z", "x", "y"])
+             .withColumn("src_z", F.explode("win_zooms")))
+        tgt_fields.append("wins")
+    t = (t.withColumn("src_x", F.call_function(
+             "shiftright", F.col("x"), F.col("z") - F.col("src_z")).cast("long"))
+         .withColumn("src_y", F.call_function(
+             "shiftright", F.col("y"), F.col("z") - F.col("src_z")).cast("long")))
 
     def fan_clip(tt: DataFrame, kout: str) -> DataFrame:
         if not single:
