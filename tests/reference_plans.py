@@ -1,21 +1,26 @@
-"""The parity reference for composite: the per-row plan and the row encoder.
+"""Parity references: composite's per-row plan and row encoder, and a
+brute-force point-in-polygon join.
 
-Both are written straight from the composite semantics, one step per
-reference stage, with no source grouping, packing or splicing — the
-library's plan (``operators.composite._source_grouped``) must reproduce
-their rows as a multiset and their tiles byte for byte.
+The composite pair is written straight from the composite semantics, one
+step per reference stage, with no source grouping, packing or splicing —
+the library's plan (``operators.composite._source_grouped``) must
+reproduce their rows as a multiset and their tiles byte for byte.
 
 * ``composite_rows``: ancestor join → keep-list → first-wins semi-join →
   dz/displacement prep with the envelope prune → the Arrow clip kernel,
   one feature row per (feature, target) pair.
 * ``encode_rows``: one ``applyInPandas`` group per target tile, rebuilt
   as ``mvt.Feature`` objects and serialized by ``mvt.encode_tile``.
+* ``pip_rows``: every point against every polygon (a cross join, no cell
+  index), even-odd ray casting per ring — ``operators.joins.pip_join``
+  must return the same pairs.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -98,3 +103,34 @@ def canon_rows(df):
 
     cols = sorted(df.columns)
     return Counter(tuple(cell(r[c]) for c in cols) for r in df.collect())
+
+
+def _inside(px: float, py: float, xs, ys, part_offsets) -> bool:
+    """Even-odd rule over all rings of one polygon (holes included): an
+    edge crosses when it straddles ``py`` half-open and its intersection
+    lies right of ``px`` — the crossing rule ``pip_join`` refines with."""
+    xs = np.asarray(xs, np.float64)
+    ys = np.asarray(ys, np.float64)
+    starts = list(part_offsets) + [len(xs)]
+    crossings = 0
+    for a, b in zip(starts[:-1], starts[1:]):  # one closed ring
+        x0, y0, x1, y1 = xs[a:b - 1], ys[a:b - 1], xs[a + 1:b], ys[a + 1:b]
+        straddle = (y0 > py) != (y1 > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = x0 + (py - y0) / (y1 - y0) * (x1 - x0)
+        crossings += int(np.count_nonzero(straddle & (px < xint)))
+    return crossings % 2 == 1
+
+
+def pip_rows(points, polys, point_cols, poly_id_col="poly_id"):
+    """Sorted (*point_cols, poly_id) for every (point, polygon) pair whose
+    point lies inside the polygon; points without a location match
+    nothing."""
+    pairs = points.crossJoin(polys.select(
+        F.col(poly_id_col).alias("_poly_id"), F.col("xs").alias("_xs"),
+        F.col("ys").alias("_ys"), F.col("part_offsets").alias("_po")))
+    return sorted(
+        (*(r[c] for c in point_cols), r["_poly_id"])
+        for r in pairs.collect()
+        if r["lat"] is not None and r["lon"] is not None
+        and _inside(r["lon"], r["lat"], r["_xs"], r["_ys"], r["_po"]))

@@ -199,48 +199,3 @@ def test_v1_tolerance_skips_only_malformed(layers, data):
                 or (f.geom_type == 3 and any(len(p) < 4 for p in f.parts))
                 or not f.parts))
     assert len(rows) == n_valid
-
-
-@settings(max_examples=25 * _SCALE, deadline=None)
-@given(tile, st.data())
-def test_merge_layer_parts_fuzz_equals_whole_layer(layers, data):
-    """The capped sink's cross-batch byte merge on arbitrary typed
-    tiles: split each layer's features into random contiguous buckets,
-    encode every bucket as its own self-contained framed unit (separate
-    encoder calls — the cross-batch regime), and mvt.merge_layer_parts
-    over the units in bucket order must reproduce the whole-layer unit
-    BYTE-exactly — first-seen key/value union across NaN classes,
-    0.0/-0.0, NUL strings, int64 edges and all."""
-    from vtcomposite_spark.operators.composite import _to_arrow
-    from vtcomposite_spark.schema import FEATURES_SCHEMA
-
-    buf1 = mvt.encode_tile(layers)
-    rows = ingest.feature_rows([(buf1, 0, 0, 0)])
-    assert rows
-    for r in rows:
-        r.update({"z": 0, "x": 0, "y": 0, "compress": False})
-    fields = ([pa.field(f.name, _to_arrow(f.dataType))
-               for f in FEATURES_SCHEMA.fields]
-              + [pa.field("z", pa.int32()), pa.field("x", pa.int64()),
-                 pa.field("y", pa.int64()), pa.field("compress", pa.bool_())])
-
-    def units(rs):
-        tbl = pa.Table.from_pylist(rs, schema=pa.schema(fields))
-        out = mvt_vec.encode_tiles_table(tbl, per_layer=True)
-        assert len(out) == 1
-        return out[0][6]
-
-    by_layer = {}
-    for r in rows:
-        by_layer.setdefault(r["layer"], []).append(r)
-    for lrows in by_layer.values():
-        whole = units(lrows)
-        n = len(lrows)
-        n_cuts = data.draw(st.integers(0, min(3, n - 1)))
-        cuts = sorted(data.draw(
-            st.lists(st.integers(1, n - 1), min_size=n_cuts,
-                     max_size=n_cuts, unique=True))) if n > 1 else []
-        bounds = [0] + cuts + [n]
-        parts = [units(lrows[a:b]) for a, b in zip(bounds, bounds[1:])]
-        got = mvt.merge_layer_parts(parts) if len(parts) > 1 else parts[0]
-        assert got == whole

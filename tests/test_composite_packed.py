@@ -117,12 +117,13 @@ def test_null_buffer_size_parity(spark, fixture_bytes):
     "points-properties-16-10498-22872.mvt",
 ])
 def test_source_grouped_dz1_parity(spark, fixture_bytes, fixture):
-    """overzoom_composite_packed (features shuffle once, in-kernel fan-out,
-    packed emit) must be row-identical to the generic composite()."""
+    """composite with a declared single zoom (features shuffle once,
+    in-kernel fan-out, packed emit) must be row-identical to the per-row
+    reference."""
     feats, grid = _grid_feats(spark, fixture_bytes, fixture)
     targets = _targets(spark, grid, 9, 8)
     want = R.composite_rows(feats, targets)
-    got = C.overzoom_composite_packed(feats, targets, src_zoom=8)
+    got = C.composite(feats, targets, [8])
     assert got.columns == want.columns
     w = _canon(want)
     assert w and _canon(got) == w
@@ -143,7 +144,7 @@ def test_source_grouped_mixed_dz0_dz2_first_wins_keep(spark, fixture_bytes):
         "z int, x long, y long, buffer_size int, "
         "keep_layers array<string>, compress boolean")
     want = R.composite_rows(f2, t3)
-    got = C.overzoom_composite_packed(f2, t3, src_zoom=4)
+    got = C.composite(f2, t3, [4])
     assert got.columns == want.columns
     w = _canon(want)
     assert w and _canon(got) == w
@@ -186,7 +187,7 @@ def test_source_grouped_targets_without_keep_layers(spark, fixture_bytes):
     bare = spark.createDataFrame(
         [(5, 4, 6, 128, False)],
         "z int, x long, y long, buffer_size int, compress boolean")
-    got = C.overzoom_composite_packed(feats, bare, src_zoom=4)
+    got = C.composite(feats, bare, [4])
     want = R.composite_rows(feats, bare)
     assert got.columns == want.columns
     w = _canon(want)

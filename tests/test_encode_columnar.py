@@ -49,11 +49,11 @@ def test_columnar_rows_byte_parity(spark, fixture_bytes, name, src, tgt):
 
 def test_factorize_first_seen_nul_safe():
     """pandas.factorize hashes object strings as NUL-terminated C strings
-    and collapses 'a\\x00b' with 'a\\x00c' — the encoder's factorize must
-    not (property values are arbitrary)."""
-    import numpy as np
-    codes, uniq = mvt_vec._factorize_first_seen(
-        np.array(["a\x00b", "a\x00c", "a\x00b"], dtype=object))
+    and collapses 'a\\x00b' with 'a\\x00c' — the encoder's factorize
+    (``_dict_encode``) must not (property values are arbitrary)."""
+    import pyarrow as pa
+    codes, uniq = mvt_vec._dict_encode(
+        pa.array(["a\x00b", "a\x00c", "a\x00b"]))
     assert codes.tolist() == [0, 1, 0]
     assert list(uniq) == ["a\x00b", "a\x00c"]
 
@@ -157,91 +157,8 @@ def test_multi_tile_encode_parity(spark, fixture_bytes):
     yc = ct.column("y").to_numpy(zero_copy_only=False)
     key = (xc.astype(np.int64) << 32) | yc.astype(np.int64)
     for k in np.unique(key):
-        sel = ct.filter(pa.array(key == k))
-        z, x, y, b = mvt_vec.encode_tile_table(sel)
+        one = mvt_vec.encode_tiles_table(ct.filter(pa.array(key == k)))
+        assert len(one) == 1
+        z, x, y, b = one[0]
         assert multi[(z, x, y)] == b, (z, x, y)
 
-
-def _multi_layer_feats(spark, fixture_bytes):
-    """Two fixtures at one source address with tile 1's layers renamed —
-    a multi-layer, multi-tile composite input whose hot tiles exercise
-    per-layer packing."""
-    lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-    pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
-    feats = ingest.features_from_tiles(
-        spark, [(lbuf, 0, 0, 0), (pbuf, 0, 0, 0)])
-    return feats.withColumn(
-        "layer", F.when(F.col("tile_idx") == 1,
-                        F.concat(F.col("layer"), F.lit("_p")))
-        .otherwise(F.col("layer")))
-
-
-def test_capped_encode_tiles_byte_parity(spark, fixture_bytes):
-    """Round-5 hot-tile bound: with max_pack_features set low enough that
-    every tile packs per-LAYER, the spliced bytes must equal the
-    whole-tile pack exactly (the multi-zoom merge contract reused as a
-    size cap)."""
-    feats = _multi_layer_feats(spark, fixture_bytes)
-    t = ingest.targets_df(spark, [
-        {"z": 1, "x": 0, "y": 0, "buffer_size": 128},
-        {"z": 1, "x": 1, "y": 1, "buffer_size": 128, "compress": True}])
-    out = C.composite(feats, t).withColumn(
-        "compress", F.col("z").isNotNull() & (F.col("x") == 1))
-    want = {(r.z, r.x, r.y): bytes(r.tile)
-            for r in C.encode_tiles(out).collect()}
-    # the tile is DELIBERATELY hot: 2 layers x 2000 features = 4000 total,
-    # cap 2500 sits above the largest single layer but below the tile, so
-    # per-layer packing is both required and sufficient
-    got = {(r.z, r.x, r.y): bytes(r.tile)
-           for r in C.encode_tiles(out, max_pack_features=2500).collect()}
-    assert got == want and want
-
-
-def test_capped_encode_tiles_within_layer_split_byte_parity(
-        spark, fixture_bytes):
-    """A single layer far above the cap splits into bounded bucket units
-    and the splice byte-merges them (key/value-table-aware tag rewrite,
-    mvt.merge_layer_parts) — byte-identical to the uncapped encode. Run
-    twice: default batching (buckets re-unify inside the encoder) and
-    1-row Arrow batches, which force EVERY bucket through the
-    cross-batch merge path."""
-    feats = _multi_layer_feats(spark, fixture_bytes)
-    t = ingest.targets_df(spark, [{"z": 1, "x": 0, "y": 0,
-                                   "buffer_size": 128},
-                                  {"z": 1, "x": 1, "y": 1,
-                                   "buffer_size": 128, "compress": True}])
-    out = C.composite(feats, t).withColumn(
-        "compress", F.col("x") == 1)
-    want = {(r.z, r.x, r.y): bytes(r.tile)
-            for r in C.encode_tiles(out).collect()}
-    got = {(r.z, r.x, r.y): bytes(r.tile)
-           for r in C.encode_tiles(out, max_pack_features=150).collect()}
-    assert got == want and want
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "1")
-    try:
-        got1 = {(r.z, r.x, r.y): bytes(r.tile)
-                for r in C.encode_tiles(
-                    out, max_pack_features=150).collect()}
-    finally:
-        spark.conf.set(key, old)
-    assert got1 == want
-
-
-def test_capped_fused_composite_byte_parity(spark, fixture_bytes):
-    """The capped route encode_tiles(composite(...), max_pack_features=k)
-    matches the fused sink byte for byte — both per-layer packing (cap
-    above the largest layer) and the within-layer bucket split (cap far
-    below it)."""
-    feats = _multi_layer_feats(spark, fixture_bytes)
-    t = ingest.targets_df(spark, [
-        {"z": 1, "x": 0, "y": 0, "buffer_size": 128},
-        {"z": 0, "x": 0, "y": 0, "compress": True}])
-    want = {(r.z, r.x, r.y): bytes(r.tile)
-            for r in C.composite_encode_tiles(feats, t).collect()}
-    for cap in (2500, 150):
-        got = {(r.z, r.x, r.y): bytes(r.tile)
-               for r in C.encode_tiles(C.composite(feats, t),
-                                       max_pack_features=cap).collect()}
-        assert got == want and want, cap

@@ -1,0 +1,40 @@
+"""Repository hygiene checks that need no Spark session.
+
+``test_no_zero_reference_definitions``: every top-level function and class
+in the library is named somewhere else in the repository's Python files —
+a caller, a test, a tool or a docstring. Code with zero references goes.
+"""
+
+import ast
+import re
+from collections import defaultdict
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+LIBRARY = ROOT / "vtcomposite_spark"
+
+
+def _py_files():
+    return [p for p in ROOT.rglob("*.py") if ".git" not in p.parts]
+
+
+def test_no_zero_reference_definitions():
+    # word -> {(file, line)} over every Python file of the repository
+    seen = defaultdict(set)
+    for path in _py_files():
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            for word in re.findall(r"\w+", line):
+                seen[word].add((path, lineno))
+
+    unreferenced = []
+    for path in sorted(LIBRARY.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef)):
+                continue
+            if not seen[node.name] - {(path, node.lineno)}:
+                unreferenced.append(
+                    f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
+    assert not unreferenced, (
+        "top-level definitions nothing else names:\n"
+        + "\n".join(unreferenced))

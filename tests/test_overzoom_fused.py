@@ -283,16 +283,15 @@ def test_randomized_parity_specialized_vs_generic(spark, seed):
     assert R.canon_rows(rows) == ref_rows
     assert R.canon_rows(C.composite(feats, targets, src_zooms=[SRC_Z])) \
         == ref_rows
-    # the capped sink with a cap that splits layers into bucket units; the
-    # sources' own addresses (dz=0, nothing clipped) keep whole layers
+    # the unfused sink at the sources' own addresses (dz=0, nothing
+    # clipped), where layers keep all their features
     own = spark.createDataFrame(
         [(*s, 0, None, False) for s in sorted(set(srcs))], targets.schema)
     rows = C.composite(feats, own)
     assert rows.groupBy("z", "x", "y", "layer").count() \
         .agg(F.max("count")).collect()[0][0] > 1
-    uncapped = _tiles(C.encode_tiles(rows))
-    assert uncapped == _tiles(R.encode_reference(feats, own))
-    assert _tiles(C.encode_tiles(rows, max_pack_features=1)) == uncapped
+    assert _tiles(C.encode_tiles(rows)) \
+        == _tiles(R.encode_reference(feats, own))
 
 
 @pytest.mark.parametrize("seed", [10, 11, 12])

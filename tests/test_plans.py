@@ -65,24 +65,22 @@ def _canon(df):
 
 def test_composite_auto_join_no_broadcast_regime(spark):
     """J1 scale fallback: with every auto-broadcast disabled (the regime a
-    planet-scale target set forces), the 'auto' strategies must run the
-    whole composite on shuffle joins — no BroadcastExchange anywhere — and
-    produce exactly the forced-broadcast results."""
+    planet-scale target set forces), the unhinted ancestor join and
+    ``winners_join='auto'`` must run the whole composite on shuffle joins —
+    no BroadcastExchange anywhere — and produce exactly the
+    forced-broadcast results."""
     from vtcomposite_spark.operators.composite import composite_points
     feats, targets = _points_fixture(spark)
-    want = _canon(composite_points(
-        feats, targets, join_strategy="broadcast", winners_join="broadcast"))
+    want = _canon(composite_points(feats, targets, winners_join="broadcast"))
     assert want  # non-trivial output
     with _no_broadcast(spark):
-        out = composite_points(feats, targets,
-                               join_strategy="auto", winners_join="auto")
+        out = composite_points(feats, targets, winners_join="auto")
         got = _canon(out)  # collect first: AQE finalizes the plan on run
         plan = _final_plan(out)
     assert got == want
     assert "BroadcastExchange" not in plan
     # forced hints still broadcast even in the no-auto regime
-    hinted = composite_points(feats, targets, join_strategy="broadcast",
-                              winners_join="broadcast")
+    hinted = composite_points(feats, targets, winners_join="broadcast")
     with _no_broadcast(spark):
         hinted.collect()
         assert "BroadcastExchange" in _final_plan(hinted)
@@ -246,9 +244,9 @@ def test_packed_relational_plan_shape(spark):
     row restore is a JVM Generate (inline), not a second seam. Rows stay
     identical to the per-row reference."""
     from tests.reference_plans import composite_rows
-    from vtcomposite_spark.operators.composite import overzoom_composite_packed
+    from vtcomposite_spark.operators.composite import composite
     feats, targets = _points_fixture(spark)
-    out = overzoom_composite_packed(feats, targets, src_zoom=4)
+    out = composite(feats, targets, [4])
     got = _canon(out)  # collect first: AQE finalizes the plan on run
     want = _canon(composite_rows(feats, targets))
     assert got == want and want

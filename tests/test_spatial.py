@@ -159,8 +159,10 @@ def test_extract_geotags_keep_projection(spark):
 
 def test_pip_interior_cell_shortcut(spark):
     """P9 filter-refine upgrade: classified covering cells produce results
-    identical to the classic bbox cover, interior cells exist at a fine
-    enough zoom, and a measurable share of candidates skips the ray cast."""
+    identical to a brute-force point × polygon ray cast, interior cells
+    exist at a fine enough zoom, and a measurable share of candidates
+    skips the ray cast."""
+    from tests.reference_plans import pip_rows
     from vtcomposite_spark.operators.cells import encode_cells
     from vtcomposite_spark.operators.joins import (cover_cells_classified,
                                                    pip_join)
@@ -178,10 +180,7 @@ def test_pip_interior_cell_shortcut(spark):
 
     a = sorted((r.pid, r.poly_id) for r in
                pip_join(pts, polys, zoom=6, point_cols=["pid"]).collect())
-    b = sorted((r.pid, r.poly_id) for r in
-               pip_join(pts, polys, zoom=6, point_cols=["pid"],
-                        classify_cells=False).collect())
-    assert a == b and a
+    assert a == pip_rows(pts, polys, ["pid"]) and a
 
     cls = cover_cells_classified(polys, 6)
     n_int = cls.filter("interior").count()

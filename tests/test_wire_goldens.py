@@ -71,8 +71,8 @@ def _collect(df) -> dict:
     f"{c[0].split('.')[0]}-{c[2][0]}-{c[2][1]}-{c[2][2]}" for c in GOLDENS])
 def test_wire_bytes_frozen_all_paths(spark, fixture_bytes, case):
     """Every encode path must hash to the frozen golden: the fused sink
-    with undeclared and declared zooms, the unfused columnar sink with and
-    without the hot-tile cap, and the per-row reference."""
+    with undeclared and declared zooms, the unfused columnar sink, and the
+    per-row reference."""
     name, src, (z, x, y, buf_sz, compress) = case
     golden = GOLDENS[case]
     f = ingest.features_from_tiles(spark, [(fixture_bytes(name), *src)])
@@ -80,14 +80,11 @@ def test_wire_bytes_frozen_all_paths(spark, fixture_bytes, case):
         "z": z, "x": x, "y": y, "buffer_size": buf_sz,
         "compress": compress}])
 
-    un = C.composite(f, t)
     got = {
         "fused_undeclared": _collect(C.composite_encode_tiles(f, t)),
         "fused_declared": _collect(
             C.composite_encode_tiles(f, t, src_zooms=[src[0]])),
-        "unfused_columnar": _collect(C.encode_tiles(un)),
-        "unfused_capped": _collect(
-            C.encode_tiles(un, max_pack_features=1 << 20)),
+        "unfused_columnar": _collect(C.encode_tiles(C.composite(f, t))),
         "reference": _collect(R.encode_reference(f, t)),
     }
     for path, tiles in got.items():

@@ -240,16 +240,17 @@ output shape) use the sinks and clear the bar.
 
 ### Round 5: the packed seam applied to relational output
 
-`composite_packed` (and its source-grouped backend
-`overzoom_composite_packed`) put relational ROWS behind the same
-one-row-per-tile seam the sinks use: pack → clip kernel → re-pack per
-target in-kernel → JVM-side `inline` restores the rows (a codegen
-generator, not a second seam). This is "only fewer rows can help" —
-the decomposition above — applied to the rows-out shape it said was
-floored. Row-identical to `composite()` (tests/test_composite_packed.py:
-parity matrix incl. the source-grouped route, capped packing, and the
-multi-zoom generic fallback); `src_zooms="auto"` routes a single-zoom
-input source-grouped by default, like the sink.
+`composite_packed` (and its source-grouped backend for a declared
+single zoom, then `overzoom_composite_packed`, today `composite(..., [z])`)
+put relational ROWS behind the same one-row-per-tile seam the sinks use:
+pack → clip kernel → re-pack per target in-kernel → JVM-side `inline`
+restores the rows (a codegen generator, not a second seam). This is
+"only fewer rows can help" — the decomposition above — applied to the
+rows-out shape it said was floored. Row-identical to the per-row
+reference (tests/test_composite_packed.py: parity matrix incl. the
+declared single-zoom route and the multi-zoom winner pass); at the time,
+`src_zooms="auto"` routed a single-zoom input source-grouped by default,
+like the sink.
 
 Measured at the sinks' amortized 4× grid (identical consumer agg, plans
 rebuilt per run), interleaved best-of-3 in one calm-window session:
@@ -285,8 +286,8 @@ where a single box can demonstrate ≥0.8 honestly.
 
 ### Two-parallelism check of the packed relational path (round 5, fixed snapshot)
 
-`overzoom_composite_packed` (relational ROWS out behind the per-tile
-seam), 16,000 output tiles / 14.7M feature rows out, cold JVM per level,
+`composite(..., [z])` (then `overzoom_composite_packed`; relational ROWS
+out behind the per-tile seam), 16,000 output tiles / 14.7M feature rows out, cold JVM per level,
 best across two sessions of 3 runs each: local[2] 54.7 s (292 tiles/s) →
 local[8] 17.5 s (915 tiles/s) = **3.13×** raw over 4× cores (0.78
 efficiency). Same-hour hardware calibration (pure multiprocessing, zero

@@ -31,8 +31,8 @@ encodes whole; only a target drawing from several groups splices per
 layer. Building a plan starts no Spark job; the ``tile_idx`` contract check
 fails the first action.
 
-``encode_tiles`` is the separate S3/S4 sink for relational rows, with the
-``max_pack_features`` hot-tile bound. ``composite_points`` is the all-point
+``encode_tiles`` is the separate S3/S4 sink for relational rows: one packed
+row per target, multi-tile encode. ``composite_points`` is the all-point
 specialization (pure JVM expressions). Scale: no side is force-broadcast in
 the plan; Catalyst and AQE size the joins from real statistics.
 """
@@ -44,7 +44,7 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,23 +71,16 @@ def validate_request(tiles: list[tuple[int, int, int]], z: int, x: int, y: int) 
 
 
 def ancestor_join(features: DataFrame, targets: DataFrame,
-                  strategy: str = "auto",
                   src_zooms: list[int] | None = None) -> DataFrame:
     """J1: assign each source feature to every requested descendant target.
 
     Targets explode to (src_z, ancestor_x, ancestor_y) keys — a plain
-    equi-join; no theta-join, no per-tile predicate.
-
-    ``strategy`` picks the physical join:
-
-    * ``"auto"`` (default, the 100-TB-safe path): no hint. Catalyst
-      broadcasts small target sets at plan time; for big ones AQE reads the
-      exploded side's real shuffle size at runtime and either converts to
-      broadcast or keeps a shuffle join. A planet-scale target set (full
-      z14 pyramid ≈ 3.6×10⁸ tiles, ×15 ancestors exploded) shuffle-joins
-      instead of OOMing the driver on a forced broadcast.
-    * ``"broadcast"``: force the hint — right for request-API calls where
-      targets are a handful of rows and plan-time certainty beats stats.
+    equi-join; no theta-join, no per-tile predicate. No join hint:
+    Catalyst broadcasts small target sets at plan time; for big ones AQE
+    reads the exploded side's real shuffle size at runtime and either
+    converts to broadcast or keeps a shuffle join. A planet-scale target
+    set (full z14 pyramid ≈ 3.6×10⁸ tiles, ×15 ancestors exploded)
+    shuffle-joins instead of OOMing the driver on a forced broadcast.
 
     ``src_zooms``: when the feature table's zoom levels are known (e.g. a
     single-zoom tileset), explode targets only over those levels instead of
@@ -104,8 +97,6 @@ def ancestor_join(features: DataFrame, targets: DataFrame,
         .withColumn("src_x", F.call_function("shiftright", F.col("x"), F.col("z") - F.col("src_z")).cast("long"))
         .withColumn("src_y", F.call_function("shiftright", F.col("y"), F.col("z") - F.col("src_z")).cast("long"))
     )
-    if strategy == "broadcast":
-        t = F.broadcast(t)
     return features.join(t, on=["src_z", "src_x", "src_y"], how="inner")
 
 
@@ -396,12 +387,11 @@ def overzoom_clip_points_expr(df: DataFrame) -> DataFrame:
 
 
 def composite_points(features: DataFrame, targets: DataFrame,
-                     join_strategy: str = "auto",
                      winners_join: str = "broadcast") -> DataFrame:
     """Composite specialization for all-point features (e.g. the page
     pipeline): same plan as ``composite`` with the geometry step in pure
     expressions — zero Python crossings end-to-end."""
-    j = ancestor_join(features, targets, strategy=join_strategy)
+    j = ancestor_join(features, targets)
     j = apply_keep_layers(j)
     j = first_wins(j, winners_join=winners_join)
     return overzoom_clip_points_expr(j).drop("keep_layers")
@@ -416,7 +406,7 @@ _ENCODE_OUT_SCHEMA = T.StructType([
     T.StructField("tile", T.BinaryType()),
 ])
 
-# per-(target, layer) rows of the splicing sinks: framed layer message +
+# per-(target, layer) rows of multi-group targets: framed layer message +
 # its first-seen order keys (spliced per tile by _merge_layer_rows)
 _LAYER_ROWS_SCHEMA = T.StructType([
     T.StructField("z", T.IntegerType()),
@@ -429,7 +419,7 @@ _LAYER_ROWS_SCHEMA = T.StructType([
 ])
 
 
-def _pack_tiles(df: DataFrame, by_layer: bool = False) -> DataFrame:
+def _pack_tiles(df: DataFrame) -> DataFrame:
     """ONE row per (z, x, y): tile-level columns + a ``feats`` list of
     feature structs. The python seam's per-ROW conversion cost (JVM
     ArrowWriter + return-path InternalRow rebuild, measured ~payload-width-
@@ -441,22 +431,13 @@ def _pack_tiles(df: DataFrame, by_layer: bool = False) -> DataFrame:
     Scale note: one packed row = one tile, so a tile must fit in one
     executor's memory — the same invariant a grouped applyInPandas needs;
     hot tiles are a skew problem before they are a packing problem.
-    ``by_layer=True`` shrinks the unit to one row per (z, x, y, LAYER) —
-    the capped ``encode_tiles`` route: a hot multi-layer tile packs as several
-    bounded rows whose encoded layer messages splice back byte-exactly
-    (``_merge_layer_rows``); ``layer`` stays in the feature structs too
-    (the encoder reads it per feature).
     """
-    keys = ["z", "x", "y"] + (["layer"] if by_layer else [])
-    if "_pack_bucket" in df.columns:  # within-layer split key
-        keys.append("_pack_bucket")
-    data_cols = [c for c in df.columns
-                 if c not in _TILE_LEVEL_COLS and c != "_pack_bucket"]
+    data_cols = [c for c in df.columns if c not in _TILE_LEVEL_COLS]
     aggs = [F.collect_list(F.struct(*data_cols)).alias("feats")]
     for c in ("buffer_size", "compress"):
         if c in df.columns:
             aggs.append(F.first(c).alias(c))
-    return df.groupBy(*keys).agg(*aggs)
+    return df.groupBy("z", "x", "y").agg(*aggs)
 
 
 def _norm_list(arr):
@@ -495,32 +476,6 @@ def _units_batch(units):
          pa.array([u[5] for u in units], pa.bool_()),
          pa.array([u[6] for u in units], pa.binary())],
         names=["z", "x", "y", "ord_ti", "ord_fi", "compress", "layer_bytes"])
-
-
-def _check_unit_cap(batch, max_pack_features: int) -> None:
-    """Internal invariant assertion: with the ``_pack_bucket`` window in
-    place every capped packed row holds at most ``max_pack_features``
-    features (an over-cap LAYER splits into bounded bucket rows and the
-    splice byte-merges the partial layer units — ``mvt.merge_layer_parts``),
-    so this can only fire on a bucketing bug. A loud kernel error beats
-    silently encoding an unbounded unit; note a violating collect_list
-    row has already materialized JVM-side by the time the kernel sees
-    it, so the cap bounds the ENCODE unit, and executor sizing should
-    still assume cap-sized rows."""
-    foff, _ = _norm_list(batch.column("feats"))
-    nf = np.diff(foff)
-    if (nf > max_pack_features).any():
-        i = int(np.argmax(nf))
-        z = int(batch.column("z")[i].as_py())
-        x = int(batch.column("x")[i].as_py())
-        y = int(batch.column("y")[i].as_py())
-        lay = batch.column("layer")[i].as_py()
-        raise ValueError(
-            f"encode_tiles: layer {lay!r} of tile ({z},{x},{y}) has "
-            f"{int(nf[i])} features, above max_pack_features="
-            f"{max_pack_features}. The _pack_bucket window should have "
-            "split this layer into bounded bucket rows — this is an "
-            "internal bucketing bug, not a data problem.")
 
 
 def _unpack_batch(batch, tile_cols: list[str]):
@@ -927,12 +882,6 @@ def composite_packed(features: DataFrame, targets: DataFrame,
     return composite(features, targets, src_zooms)
 
 
-def overzoom_composite_packed(features: DataFrame, targets: DataFrame,
-                              src_zoom: int) -> DataFrame:
-    """``composite`` for a declared single source zoom."""
-    return composite(features, targets, [src_zoom])
-
-
 def composite_encode_tiles(features: DataFrame, targets: DataFrame,
                            src_zooms: list[int] | None = None) -> DataFrame:
     """Fused composite→encode: (z, x, y, tile:binary) with ONE python seam.
@@ -946,9 +895,7 @@ def composite_encode_tiles(features: DataFrame, targets: DataFrame,
     ``_merge_layer_rows`` splices per tile (one extra shuffle of
     output-sized blobs).
 
-    Byte-identical to ``encode_tiles(composite(...))``. A hot tile that
-    must not pack as one unit takes ``encode_tiles(composite(...),
-    max_pack_features=k)``.
+    Byte-identical to ``encode_tiles(composite(...))``.
 
     Targets must be UNIQUE per (z, x, y): duplicate keys with conflicting
     options are undefined.
@@ -972,10 +919,11 @@ def _merge_layer_rows(layer_rows: DataFrame) -> DataFrame:
     each layer's first feature — exactly the single-call encoder's layer
     order), concatenate, then apply the gzip/empty-tile rule. MVT layers
     are self-contained messages, so the concatenation is byte-identical
-    to encoding the tile in one call. One shuffle of encoded layer blobs
-    (∝ OUTPUT bytes) + one seam of tile-count rows."""
-    import pyarrow as pa
-
+    to encoding the tile in one call. A (target, layer) pair has one
+    winning tile_idx at one source zoom (``_checked``), and one source
+    address is one kernel row, so each layer arrives as exactly one
+    message. One shuffle of encoded layer blobs (∝ OUTPUT bytes) + one
+    seam of tile-count rows."""
     from ..sources import mvt
 
     packed = (layer_rows.groupBy("z", "x", "y")
@@ -998,25 +946,7 @@ def _merge_layer_rows(layer_rows: DataFrame) -> DataFrame:
             for i in range(batch.num_rows):
                 ps = sorted(parts[i],
                             key=lambda p: (p["ord_ti"], p["ord_fi"]))
-                names = [mvt.layer_unit_name(p["layer_bytes"]) for p in ps]
-                if len(set(names)) != len(names):
-                    # size-capped bucket units split across kernel
-                    # batches: byte-merge each duplicated layer at its
-                    # first-seen position (ord keys sort bucket 0 first,
-                    # so part order IS feature order)
-                    groups: dict = {}
-                    order = []
-                    for nm, p in zip(names, ps):
-                        if nm not in groups:
-                            groups[nm] = []
-                            order.append(nm)
-                        groups[nm].append(p["layer_bytes"])
-                    buf = b"".join(
-                        mvt.merge_layer_parts(groups[nm])
-                        if len(groups[nm]) > 1 else groups[nm][0]
-                        for nm in order)
-                else:
-                    buf = b"".join(p["layer_bytes"] for p in ps)
+                buf = b"".join(p["layer_bytes"] for p in ps)
                 tiles.append((int(zc[i]), int(xc[i]), int(yc[i]),
                               mvt.gzip_sink(buf, bool(cmp_[i]))))
             yield _tiles_batch(tiles)
@@ -1024,8 +954,7 @@ def _merge_layer_rows(layer_rows: DataFrame) -> DataFrame:
     return packed.mapInArrow(splice, schema=_ENCODE_OUT_SCHEMA)
 
 
-def encode_tiles(composited: DataFrame,
-                 max_pack_features: int | None = None) -> DataFrame:
+def encode_tiles(composited: DataFrame) -> DataFrame:
     """S3/S4 terminal sink: (z, x, y, tile:binary).
 
     Deterministic feature order: input-tile order, then first-seen layer
@@ -1038,38 +967,13 @@ def encode_tiles(composited: DataFrame,
     (sources.mvt_vec.encode_tiles_table) amortizes the per-tile fixed
     numpy cost across the batch and the seam pays its per-row cost once
     per TILE, not per feature. One packed row = one tile, so a tile must
-    fit in executor memory; Arrow batch BYTES are capped by
+    fit in executor memory — like the reference, which encodes each
+    target in one call; Arrow batch BYTES are capped by
     spark.sql.execution.arrow.maxBytesPerBatch (schema.get_spark).
-
-    ``max_pack_features``: the HOT-TILE bound. When set, tiles pack one
-    row per (z, x, y, LAYER, bucket) — a hot tile becomes several
-    bounded rows even within one layer (buckets of ``max_pack_features``
-    features in (tile_idx, feature_idx) order), encoded as
-    self-contained framed layer messages
-    (``encode_tiles_table(per_layer=True)``) and spliced back per tile
-    by ``_merge_layer_rows`` in first-seen order. Same-layer bucket
-    units that meet in one kernel batch re-unify inside the encoder;
-    units split across batches byte-merge in the splice
-    (``mvt.merge_layer_parts`` — key/value-table-aware tag rewrite over
-    verbatim geometry bytes, memory ∝ wire bytes). Byte-identical to the
-    whole-tile pack either way (parity gated in
-    tests/test_encode_columnar.py). Cost vs the default: one extra
-    shuffle of encoded layer blobs (∝ output bytes).
     """
     from ..sources import mvt_vec
 
-    capped = max_pack_features is not None
-    src = composited
-    if capped:
-        src = composited.withColumn("_pack_bucket", (
-            (F.row_number().over(
-                Window.partitionBy("z", "x", "y", "layer")
-                .orderBy("tile_idx", "feature_idx")) - 1)
-            / F.lit(int(max_pack_features))).cast("int"))
-    packed = _pack_tiles(src, by_layer=capped)
-    if capped:
-        # grouping key only — keep it off the Arrow seam
-        packed = packed.drop("_pack_bucket")
+    packed = _pack_tiles(composited)
     tile_cols = [c for c in _TILE_LEVEL_COLS if c in packed.columns]
     flat_names = composited.columns
 
@@ -1077,20 +981,11 @@ def encode_tiles(composited: DataFrame,
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            if capped:
-                _check_unit_cap(batch, max_pack_features)
             cols, total, _foff = _unpack_batch(batch, tile_cols)
             if total == 0:
                 continue
             flat = pa.Table.from_arrays(
                 [cols[n] for n in flat_names], names=flat_names)
-            if capped:
-                yield _units_batch(
-                    mvt_vec.encode_tiles_table(flat, per_layer=True))
-            else:
-                yield _tiles_batch(mvt_vec.encode_tiles_table(flat))
+            yield _tiles_batch(mvt_vec.encode_tiles_table(flat))
 
-    if capped:
-        return _merge_layer_rows(
-            packed.mapInArrow(encode_packed, schema=_LAYER_ROWS_SCHEMA))
     return packed.mapInArrow(encode_packed, schema=_ENCODE_OUT_SCHEMA)

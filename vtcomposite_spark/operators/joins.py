@@ -5,11 +5,12 @@ north rule adds (geotagged pages → tile/region polygons / POIs). Both use
 the classic filter-refine pattern over the packed z/x/y cell grid
 (PAPERS.md: PBSM-style partition-based spatial join):
 
-* **pip_join** — polygons explode to their covering cells at an index zoom
-  (coarse filter, pure column math); candidates come from a cell equi-join
-  (shuffle on cell id — AQE skew-join handles hot cells, or pre-salt via
-  plans.skew); the exact ray-cast refine runs vectorized in ONE Arrow
-  crossing.
+* **pip_join** — polygons explode to their covering cells at an index zoom,
+  classified interior/boundary (coarse filter, one Arrow pass over the
+  polygon side); candidates come from a cell equi-join (shuffle on cell
+  id — AQE skew-join handles hot cells, or pre-salt via plans.skew); the
+  exact ray-cast refine of boundary candidates runs vectorized in ONE
+  Arrow crossing.
 * **knn_join** — candidate generation from the 3×3 neighbor-cell
   neighborhood (grid method, scale path) or a broadcast cross join (brute
   method, exact baseline / oracle); top-k via row_number over (distance,
@@ -41,29 +42,6 @@ _I64 = np.int64
 # ---------------------------------------------------------------------------
 # point-in-polygon
 # ---------------------------------------------------------------------------
-
-def cover_cells(polys: DataFrame, zoom: int,
-                xs_col: str = "xs", ys_col: str = "ys") -> DataFrame:
-    """Explode each polygon to the cells covering its bbox at ``zoom``.
-
-    Pure column math (bbox → tile range → sequence cross product). The
-    refine step removes false positives, so bbox covering is sufficient
-    and keeps the build side JVM-only.
-    """
-    lon_min = F.array_min(xs_col)
-    lon_max = F.array_max(xs_col)
-    lat_min = F.array_min(ys_col)
-    lat_max = F.array_max(ys_col)
-    x0, y0 = tm.tile_xy_cols(lon_min, lat_max, zoom)  # y grows southward
-    x1, y1 = tm.tile_xy_cols(lon_max, lat_min, zoom)
-    return (
-        polys
-        .withColumn("_cx", F.explode(F.sequence(x0, x1)))
-        .withColumn("_cy", F.explode(F.sequence(y0, y1)))
-        .withColumn("cell", tm.pack_cell_col(F.lit(zoom), F.col("_cx"), F.col("_cy")))
-        .drop("_cx", "_cy")
-    )
-
 
 def _tilex_to_lon(x, zoom):
     return np.asarray(x, np.float64) / (1 << zoom) * 360.0 - 180.0
@@ -98,7 +76,7 @@ def _cover_classify_batches(it: Iterator[pa.RecordBatch],
         P = batch.num_rows
 
         vrow_all = np.repeat(np.arange(P, dtype=_I64), np.diff(off))
-        # polygon bbox -> covering cell ranges (same math as cover_cells)
+        # polygon bbox -> covering cell ranges (y grows southward)
         lon_min = np.minimum.reduceat(vx, off[:-1])
         lon_max = np.maximum.reduceat(vx, off[:-1])
         lat_min = np.minimum.reduceat(vy, off[:-1])
@@ -222,8 +200,9 @@ def _cover_classify_batches(it: Iterator[pa.RecordBatch],
 
 def cover_cells_classified(polys: DataFrame, zoom: int,
                            poly_id_col: str = "poly_id") -> DataFrame:
-    """cover_cells + interior classification in one Arrow pass over the
-    (dimension-table-sized) polygon side."""
+    """Each polygon's bbox-covering cells at ``zoom``, classified
+    interior/boundary, in one Arrow pass over the (dimension-table-sized)
+    polygon side. Cells fully outside the polygon are dropped."""
     out_spark = T.StructType([
         polys.schema[poly_id_col],
         T.StructField("poly_xs", T.ArrayType(T.DoubleType())),
@@ -248,13 +227,13 @@ def cover_cells_classified(polys: DataFrame, zoom: int,
 def _pip_refine(it: Iterator[pa.RecordBatch], out_schema: pa.Schema):
     """Vectorized even-odd ray cast: candidate rows carry (lon, lat) and the
     polygon's packed rings (closed, lon/lat degrees). Rows flagged
-    ``interior`` (their cell is fully inside the polygon) skip the cast."""
+    ``interior`` (their cell is fully inside the polygon) carry empty
+    rings (no crossings) and are inside by construction."""
     for batch in it:
         if batch.num_rows == 0:
             continue
         px = batch.column("lon").to_numpy(zero_copy_only=False)
         py = batch.column("lat").to_numpy(zero_copy_only=False)
-        has_interior = "interior" in batch.schema.names
         xs = batch.column("poly_xs")
         ys = batch.column("poly_ys")
         off = xs.offsets.to_numpy(zero_copy_only=False).astype(_I64)
@@ -290,11 +269,8 @@ def _pip_refine(it: Iterator[pa.RecordBatch], out_schema: pa.Schema):
             xint = x0 + (ppy - y0) / (y1 - y0) * (x1 - x0)
         cross = cond & (ppx < xint)
         crossings = np.bincount(erow[cross], minlength=n)
-        inside = (crossings % 2) == 1
-        if has_interior:
-            # interior-cell shortcut: those rows carry empty ring arrays
-            # (crossings 0) and are inside by construction
-            inside |= batch.column("interior").to_numpy(zero_copy_only=False)
+        inside = ((crossings % 2) == 1) \
+            | batch.column("interior").to_numpy(zero_copy_only=False)
 
         keep = pa.array(inside)
         out = batch.filter(keep)
@@ -304,30 +280,22 @@ def _pip_refine(it: Iterator[pa.RecordBatch], out_schema: pa.Schema):
 
 def pip_join(points: DataFrame, polys: DataFrame, zoom: int = 8,
              point_cols: list[str] | None = None,
-             poly_id_col: str = "poly_id",
-             classify_cells: bool = True) -> DataFrame:
+             poly_id_col: str = "poly_id") -> DataFrame:
     """J2: points (lat, lon) ⋈ polygons (poly_id, xs, ys, part_offsets).
 
     Polygon rings are CLOSED lon/lat arrays; multi-ring polygons (holes) use
     ``part_offsets`` (even-odd rule handles holes without ring types).
     Returns point columns + ``poly_id``.
 
-    ``classify_cells`` (default): the build side classifies covering cells
-    interior/boundary (cover_cells_classified) — interior candidates skip
-    the ray cast inside the single refine kernel and transport no ring
-    geometry, and fully-outside bbox cells never join at all. The classic
-    bbox cover (``False``) is kept as the correctness reference.
+    The build side classifies covering cells interior/boundary
+    (``cover_cells_classified``): interior candidates skip the ray cast
+    inside the single refine kernel and transport no ring geometry, and
+    fully-outside bbox cells never join at all.
     """
     point_cols = point_cols or [c for c in points.columns]
     pts = encode_cells(points, zoom).filter(F.col("cell").isNotNull())
-    if classify_cells:
-        pol = cover_cells_classified(polys, zoom, poly_id_col) \
-            .withColumnRenamed(poly_id_col, "poly_id")
-    else:
-        pol = cover_cells(polys, zoom).select(
-            F.col(poly_id_col).alias("poly_id"),
-            F.col("xs").alias("poly_xs"), F.col("ys").alias("poly_ys"),
-            F.col("part_offsets").alias("poly_offsets"), "cell")
+    pol = cover_cells_classified(polys, zoom, poly_id_col) \
+        .withColumnRenamed(poly_id_col, "poly_id")
     cand = pts.join(pol, on="cell", how="inner")
 
     out_cols = [*point_cols, "poly_id"]
@@ -336,9 +304,8 @@ def pip_join(points: DataFrame, polys: DataFrame, zoom: int = 8,
     from pyspark.sql.pandas.types import to_arrow_type
     out_arrow = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
                            for f in out_spark.fields])
-    keep = [*out_cols, "lat", "lon", "poly_xs", "poly_ys", "poly_offsets"]
-    if classify_cells:
-        keep.append("interior")
+    keep = [*out_cols, "lat", "lon", "poly_xs", "poly_ys", "poly_offsets",
+            "interior"]
     seen = []
     for c in keep:
         if c not in seen:

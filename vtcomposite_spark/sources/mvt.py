@@ -503,165 +503,3 @@ def gzip_sink(buf: bytes, compress: bool) -> bytes:
         return _gzip.compress(buf, mtime=0)
     return buf
 
-
-def _parse_layer_unit(framed: bytes):
-    """Framed tile-level field-3 layer message (an encode_tiles_table
-    ``per_layer=True`` unit) → (version, name, [feature bodies],
-    [key strings], [raw Value bytes], extent). Parses only the engine's
-    own canonical emission (version, name, features, keys, values,
-    extent) but walks by field tag, so any legal order decodes."""
-    pos = 0
-    tag, pos = _uvarint(framed, pos)
-    if tag != (3 << 3) | 2:
-        raise ValueError("not a framed layer message")
-    ln, pos = _uvarint(framed, pos)
-    body = framed[pos:pos + ln]
-    version = 2
-    name = None
-    feats: list[bytes] = []
-    keys: list[str] = []
-    vals: list[bytes] = []
-    extent = 4096
-    p = 0
-    while p < len(body):
-        t, p = _uvarint(body, p)
-        f, wire = t >> 3, t & 7
-        if wire == 0:
-            v, p = _uvarint(body, p)
-            if f == 15:
-                version = v
-            elif f == 5:
-                extent = v
-        elif wire == 2:
-            ln2, p = _uvarint(body, p)
-            payload = body[p:p + ln2]
-            p += ln2
-            if f == 1:
-                name = payload.decode("utf-8")
-            elif f == 2:
-                feats.append(payload)
-            elif f == 3:
-                keys.append(payload.decode("utf-8"))
-            elif f == 4:
-                vals.append(payload)
-        else:
-            raise ValueError(f"unexpected wire type {wire} in layer")
-    return version, name, feats, keys, vals, extent
-
-
-def layer_unit_name(framed: bytes) -> str:
-    """Name of a framed layer message. Returns at the name field — the
-    engine emits (version, name, features, ...), so this is O(header),
-    never O(features); the hot splice path calls it once per layer."""
-    pos = 0
-    tag, pos = _uvarint(framed, pos)
-    if tag != (3 << 3) | 2:
-        raise ValueError("not a framed layer message")
-    ln, pos = _uvarint(framed, pos)
-    end = pos + ln
-    while pos < end:
-        t, pos = _uvarint(framed, pos)
-        f, wire = t >> 3, t & 7
-        if wire == 0:
-            _, pos = _uvarint(framed, pos)
-        elif wire == 2:
-            ln2, pos = _uvarint(framed, pos)
-            if f == 1:
-                return framed[pos:pos + ln2].decode("utf-8")
-            pos += ln2
-        else:
-            raise ValueError(f"unexpected wire type {wire} in layer")
-    raise ValueError("layer message has no name field")
-
-
-def _remap_feature_tags(fb: bytes, kmap: list[int],
-                        vmap: list[int]) -> bytes:
-    """Feature message body with its packed ``tags`` field rewritten to
-    the union key/value indexes; id/type/geometry bytes copied verbatim
-    (their varints are position-independent)."""
-    parts: list[bytes] = []
-    p = 0
-    while p < len(fb):
-        t0 = p
-        t, p = _uvarint(fb, p)
-        f, wire = t >> 3, t & 7
-        if wire == 0:
-            _, p = _uvarint(fb, p)
-            parts.append(fb[t0:p])
-        elif wire == 2:
-            ln, p = _uvarint(fb, p)
-            end = p + ln
-            if f == 2:
-                idxs = []
-                q = p
-                while q < end:
-                    v, q = _uvarint(fb, q)
-                    idxs.append(v)
-                nb = bytearray()
-                for i, v in enumerate(idxs):
-                    _write_uvarint(nb, kmap[v] if i % 2 == 0 else vmap[v])
-                hdr = bytearray()
-                _write_len_delim(hdr, 2, bytes(nb))
-                parts.append(bytes(hdr))
-            else:
-                parts.append(fb[t0:end])
-            p = end
-        else:
-            raise ValueError(f"unexpected wire type {wire} in feature")
-    return b"".join(parts)
-
-
-def merge_layer_parts(parts: list[bytes]) -> bytes:
-    """Merge PARTIAL same-layer messages (the size-capped sink's bucket
-    units, in bucket order) into ONE layer message, byte-identical to
-    encoding the concatenated features in a single call.
-
-    Works at the wire level — geometry/id/type bytes are copied verbatim
-    and only the packed tag indexes are rewritten — so memory stays ∝
-    encoded bytes; the features never re-inflate to rows. Union tables
-    follow the encoders' exact first-seen discipline: keys dedupe by
-    string; values dedupe by (tag, typed value) CLASS with the rows
-    path's NaN sentinel (all NaNs one class, 0.0 == -0.0 one class), and
-    a class's stored bytes are its first-seen variant — iterating part
-    tables in part order reproduces full-sequence first-seen because
-    each part table is itself first-seen-ordered."""
-    parsed = [_parse_layer_unit(b) for b in parts]
-    version, name, extent = parsed[0][0], parsed[0][1], parsed[0][5]
-    for ver, nm, _, _, _, ext in parsed[1:]:
-        if (ver, nm, ext) != (version, name, extent):
-            raise ValueError(
-                f"cannot merge layer parts with differing header: "
-                f"{(ver, nm, ext)} vs {(version, name, extent)}")
-    ukeys: dict[str, int] = {}
-    class_of: dict = {}
-    class_bytes: list[bytes] = []
-    feats_out: list[bytes] = []
-    for _ver, _nm, feats, keys, vals, _ext in parsed:
-        kmap = [ukeys.setdefault(k, len(ukeys)) for k in keys]
-        vmap = []
-        for vb in vals:
-            tg, tv = _decode_value(vb)
-            kv = (tg, "nan") if isinstance(tv, float) and tv != tv \
-                else (tg, tv)
-            cls = class_of.get(kv)
-            if cls is None:
-                cls = class_of[kv] = len(class_bytes)
-                class_bytes.append(vb)
-            vmap.append(cls)
-        for fb in feats:
-            feats_out.append(_remap_feature_tags(fb, kmap, vmap))
-    body = bytearray()
-    _write_tag(body, 15, 0)
-    _write_uvarint(body, version)
-    _write_len_delim(body, 1, name.encode("utf-8"))
-    for fb in feats_out:
-        _write_len_delim(body, 2, fb)
-    for k in ukeys:
-        _write_len_delim(body, 3, k.encode("utf-8"))
-    for vb in class_bytes:
-        _write_len_delim(body, 4, vb)
-    _write_tag(body, 5, 0)
-    _write_uvarint(body, extent)
-    out = bytearray()
-    _write_len_delim(out, 3, bytes(body))
-    return bytes(out)

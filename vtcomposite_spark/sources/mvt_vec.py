@@ -7,8 +7,9 @@ Arrow arrays a grouped tile arrives as, with NO per-feature python:
 * ONE vectorized pass builds the geometry command stream for every feature
   of a layer (MoveTo/LineTo/ClosePath headers scattered between zigzag'd
   per-feature-cursor deltas), ONE vectorized varint pass emits the blob.
-* property key/value tables factorize first-seen (np.unique + stable
-  reorder — NUL-safe, unlike pandas' C-string hashing) with a typed
+* property key/value tables factorize with Arrow's dictionary_encode
+  (``_dict_encode`` — NUL-safe, unlike pandas' C-string hashing), reorder
+  per tile × layer to first-seen (``_local_first_seen``), with a typed
   post-dedupe so the value table is keyed on (tag, typed value) exactly
   like the row path.
 * feature protobuf framing is assembled by scattering constant bytes,
@@ -85,18 +86,6 @@ def _uv(n: int) -> bytes:
         else:
             out.append(b)
             return bytes(out)
-
-
-def _factorize_first_seen(arr: np.ndarray):
-    """(codes, uniques-in-first-seen-order). np.unique-based: python-object
-    comparison, so strings with embedded NULs factorize correctly (pandas'
-    factorize hashes object strings as NUL-terminated C strings)."""
-    uniq, first_idx, inv = np.unique(arr, return_index=True,
-                                     return_inverse=True)
-    order = np.argsort(first_idx, kind="stable")
-    rank = np.empty(len(uniq), _I64)
-    rank[order] = np.arange(len(uniq), dtype=_I64)
-    return rank[inv], uniq[order]
 
 
 def _encode_value_fast(tag: int, tv) -> bytes:
@@ -267,19 +256,6 @@ def _local_first_seen(unit_of_item: np.ndarray, code: np.ndarray,
     local_of_pair[order] = np.arange(len(uniq), dtype=_I64) - starts[pair_unit]
     return (local_of_pair[inv], starts, (uniq % ncodes)[order],
             first_idx[order])
-
-
-def encode_tile_table(tbl) -> tuple[int, int, int, bytes]:
-    """One grouped tile (pa.Table with the composite output columns) →
-    (z, x, y, tile bytes). Feature order: tile_idx, feature_idx (stable);
-    layers in first-seen order (O3, reference src/vtcomposite.cpp:239,742).
-
-    Thin wrapper over the multi-tile ``encode_tiles_table`` (the input must
-    hold exactly one distinct (z, x, y))."""
-    out = encode_tiles_table(tbl)
-    if len(out) != 1:
-        raise ValueError(f"expected one tile group, got {len(out)}")
-    return out[0]
 
 
 def encode_tiles_table(tbl, per_layer: bool = False):
