@@ -215,8 +215,8 @@ def build_workload(spark, sf_dir):
         so the strategies' ratio is readable from one artifact (the r4
         artifact compared 1× vs 4× grids, which misled). src_zooms=[8] =
         the declared single-zoom fast mode, expected to converge to the
-        line sink's number; None = undeclared zooms (winner pass + layer
-        splice) — the A/B."""
+        line sink's number; None = undeclared zooms (winner pass, and
+        multi-group targets encoded through encode_tiles) — the A/B."""
         from vtcomposite_spark.operators.composite import composite_encode_tiles
         feats, targets = _fixture_grid_paths(
             "linestrings-properties-16-10498-22872.mvt", N_LINE_SINK_SRC)
@@ -315,9 +315,10 @@ def build_workload(spark, sf_dir):
         """Round-4 multi-zoom source-grouped sink: the same line fixture
         replicated at TWO source zooms (z7 under a renamed layer, z8
         plain, distinct tile_idx per zoom — the ingest contract), every
-        z9 target spliced from both zooms' layer messages. Exercises the
-        keys-only cross-zoom first-wins plan + per-layer merge end-to-end
-        at table scale."""
+        z9 target drawing winners from both zooms. Exercises the keys-only
+        cross-zoom first-wins plan and the multi-group half of the sink
+        (clipped rows packed per target and encoded in one call by
+        encode_tiles) end-to-end at table scale."""
         from vtcomposite_spark.operators.composite import composite_encode_tiles
         from vtcomposite_spark.sources.tables import read_features, write_features
         feats8, targets = _fixture_grid_paths(

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from vtcomposite_spark import geometry as geo
+from vtcomposite_spark import polyclip
 from vtcomposite_spark import tilemath as tm
 from vtcomposite_spark.geometry import PackedParts
 
@@ -103,32 +104,40 @@ def test_line_fully_outside_dropped():
     assert len(out.part_feat) == 0
 
 
+def clip_polygons(g, ring_type, lo, hi):
+    """The engine's polygon path: dedupe, ring assembly, polygon clip."""
+    g = geo.dedupe_consecutive(g)
+    asm, rt, poly_id = geo.assemble_polygons(
+        g, np.asarray(ring_type, np.int8), lo, hi)
+    return polyclip.clip_polygons_packed(asm, rt, poly_id, lo, hi)
+
+
 def test_ring_clip_square():
     # CW square (y-down outer) half outside the box
     ring = [(-5, 0), (5, 0), (5, 10), (-5, 10), (-5, 0)]
-    g = pack([[ring]])
-    clipped, src = geo.clip_rings(g, np.array([0], I), np.array([10], I))
-    assert src.tolist() == [0]
+    clipped, rt = clip_polygons(pack([[ring]]), [1],
+                                np.array([0], I), np.array([10], I))
+    assert rt.tolist() == [1]
     parts = unpack(clipped)
     assert len(parts) == 1
     pts = parts[0][1]
     assert pts[0] == pts[-1]  # closed
-    assert set(pts[:-1]) == {(0, 0), (5, 0), (5, 10), (0, 10)}
+    assert pts == [(0, 0), (5, 0), (5, 10), (0, 10), (0, 0)]
     assert geo.ring_bboxes(clipped)[0][0] >= 0
 
 
 def test_ring_fully_inside_unchanged():
     ring = [(1, 1), (9, 1), (9, 9), (1, 9), (1, 1)]
-    g = pack([[ring]])
-    clipped, src = geo.clip_rings(g, np.array([0], I), np.array([10], I))
-    assert unpack(clipped)[0][1] == ring
+    clipped, _ = clip_polygons(pack([[ring]]), [1],
+                               np.array([0], I), np.array([10], I))
+    assert unpack(clipped) == [(0, ring)]
 
 
 def test_ring_fully_outside_dropped():
     ring = [(20, 20), (30, 20), (30, 30), (20, 30), (20, 20)]
-    g = pack([[ring]])
-    clipped, src = geo.clip_rings(g, np.array([0], I), np.array([10], I))
-    assert len(clipped.part_feat) == 0 and len(src) == 0
+    clipped, rt = clip_polygons(pack([[ring]]), [1],
+                                np.array([0], I), np.array([10], I))
+    assert len(clipped.part_feat) == 0 and len(rt) == 0
 
 
 def test_polygon_with_hole_overzoom():
@@ -143,9 +152,9 @@ def test_polygon_with_hole_overzoom():
     asm, rt, poly_id = geo.assemble_polygons(g2, ring_type, lo, hi)
     assert rt.tolist() == [1, 2]
     assert poly_id.tolist() == [0, 0]
-    clipped, src = geo.clip_rings(asm, lo, hi)
+    clipped, out_rt = polyclip.clip_polygons_packed(asm, rt, poly_id, lo, hi)
     # both rings survive (test/vtcomposite-polygons.test.js:104-131: 1 feature, 2 rings)
-    assert len(clipped.part_feat) == 2
+    assert len(clipped.part_feat) == 2 and out_rt.tolist() == [1, 2]
     pts = unpack(clipped)
     assert pts[0][1][0] == (200, 200)
 
@@ -169,8 +178,8 @@ def test_assemble_drops_orphan_inner_and_failed_envelope():
 def test_degenerate_ring_dropped_after_clip():
     # sliver collapses to fewer than 3 distinct vertices after rounding
     ring = [(0, 0), (10, 0), (10, 0), (0, 0), (0, 0)]
-    g = pack([[ring]])
-    clipped, src = geo.clip_rings(g, np.array([0], I), np.array([100], I))
+    clipped, _ = clip_polygons(pack([[ring]]), [1],
+                               np.array([0], I), np.array([100], I))
     assert len(clipped.part_feat) == 0
 
 

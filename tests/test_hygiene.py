@@ -1,8 +1,9 @@
 """Repository hygiene checks that need no Spark session.
 
-``test_no_zero_reference_definitions``: every top-level function and class
-in the library is named somewhere else in the repository's Python files —
-a caller, a test, a tool or a docstring. Code with zero references goes.
+``test_no_zero_reference_definitions``: every top-level function, class
+and module-level assignment in the library is named somewhere else in the
+repository's Python files — a caller, a test, a tool or a docstring. Code
+with zero references goes.
 """
 
 import ast
@@ -18,6 +19,17 @@ def _py_files():
     return [p for p in ROOT.rglob("*.py") if ".git" not in p.parts]
 
 
+def _top_level_names(node):
+    """(name, line) of each name a module-level statement defines."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                         ast.ClassDef)):
+        return [(node.name, node.lineno)]
+    targets = node.targets if isinstance(node, ast.Assign) else \
+        [node.target] if isinstance(node, ast.AnnAssign) else []
+    return [(t.id, node.lineno) for t in targets
+            if isinstance(t, ast.Name) and not t.id.startswith("__")]
+
+
 def test_no_zero_reference_definitions():
     # word -> {(file, line)} over every Python file of the repository
     seen = defaultdict(set)
@@ -29,12 +41,10 @@ def test_no_zero_reference_definitions():
     unreferenced = []
     for path in sorted(LIBRARY.rglob("*.py")):
         for node in ast.parse(path.read_text()).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                     ast.ClassDef)):
-                continue
-            if not seen[node.name] - {(path, node.lineno)}:
-                unreferenced.append(
-                    f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
+            for name, lineno in _top_level_names(node):
+                if not seen[name] - {(path, lineno)}:
+                    unreferenced.append(
+                        f"{path.relative_to(ROOT)}:{lineno} {name}")
     assert not unreferenced, (
         "top-level definitions nothing else names:\n"
         + "\n".join(unreferenced))

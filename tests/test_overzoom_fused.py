@@ -4,8 +4,9 @@ parity with the per-row reference (tests/reference_plans.py).
 The source-grouped plan moves the target fan-out from the join into the
 kernel (numpy gathers), computes first-wins per source group or from the
 keys-only winner lists, applies keep-lists/envelope-prune per (feature,
-target) pair and splices per-layer messages — every one of those
-re-arrangements must be invisible in the output bytes.
+target) pair and encodes a target drawing from several source groups
+from its clipped rows in one call — every one of those re-arrangements
+must be invisible in the output bytes.
 """
 
 import pytest
@@ -137,8 +138,8 @@ def test_multizoom_layer_interleave_parity(spark, fixture_bytes):
     """Mixed-zoom sources feeding ONE target with interleaved layer
     ownership (z4 tile wins layer A, z5 tile wins layer B, input-tile
     order A-tile < B-tile < another A-contributor): the multi-zoom
-    source-grouped path must splice per-zoom layer messages back into
-    the generic path's exact byte order."""
+    source-grouped path must encode the per-zoom winners in the generic
+    path's exact byte order."""
     lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
     pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
     # tile 0 at z4, tile 1 at z5 (child of tile 0), tile 2 at z4 again —
@@ -186,7 +187,7 @@ def test_undeclared_zooms_match_reference(spark, fixture_bytes):
     """The richest mixed-zoom scenario (cross-zoom first-wins, renamed
     layers, keep-lists, gzip, dz=0 passthrough, NULL buffer_size, a
     target with no source) through the undeclared-zoom plan: winner pass,
-    one source-address-grouped shuffle, layer splice."""
+    one source-address-grouped shuffle, one encode per target."""
     lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
     pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
     feats = ingest.features_from_tiles(
@@ -296,11 +297,12 @@ def test_randomized_parity_specialized_vs_generic(spark, seed):
 
 @pytest.mark.parametrize("seed", [10, 11, 12])
 def test_randomized_parity_multizoom_vs_generic(spark, seed):
-    """Randomized MIXED-ZOOM tilesets (sources at two zooms, shared layer
-    names, targets descending from either or both) — the multi-zoom
-    source-grouped plan (per-zoom fan-out + keys-only cross-zoom
-    first-wins + layer splicing) must match the generic join plan
-    byte-for-byte."""
+    """Randomized MIXED-ZOOM tilesets (sources at two zooms, each tile's
+    layers drawn from four shared names, targets descending from either
+    or both) — the multi-zoom source-grouped plan (per-zoom fan-out +
+    keys-only cross-zoom first-wins + one encode per multi-group target)
+    must match the generic join plan byte-for-byte. Every seed must give
+    at least one target whose winners come from both zooms."""
     import numpy as np
 
     from vtcomposite_spark.sources import mvt
@@ -331,34 +333,48 @@ def test_randomized_parity_multizoom_vs_generic(spark, seed):
                            fid=int(rng.integers(0, 99)) if rng.random() < .5
                            else None)
 
-    def rand_tile(nlayers):
+    def rand_tile():
+        # one or two of four shared layer names, in random order: a z4
+        # tile and its z5 child then often win different layers of one
+        # target
+        names = rng.choice(4, size=int(rng.integers(1, 3)), replace=False)
         return mvt.encode_tile([
-            mvt.Layer(name=f"L{li % 2}",
+            mvt.Layer(name=f"L{li}",
                       features=[rand_feature(int(rng.integers(1, 4)))
-                                for _ in range(rng.integers(1, 5))])
-            for li in range(nlayers)])
+                                for _ in range(rng.integers(2, 9))])
+            for li in names])
 
     ZLO, ZHI = 4, 5
-    srcs = []
-    for _ in range(5):
-        if rng.random() < 0.5:
-            srcs.append((ZLO, int(rng.integers(0, 2)), int(rng.integers(0, 2))))
+    # two z4 sources; four z5 sources, most of them children of a z4
+    # source, so the targets below them descend from both zooms; tile
+    # order (tile_idx) shuffled across zooms
+    lo = [(ZLO, int(rng.integers(0, 2)), int(rng.integers(0, 2)))
+          for _ in range(2)]
+    hi = []
+    for _ in range(4):
+        if rng.random() < 0.9:
+            _, px, py = lo[int(rng.integers(0, len(lo)))]
+            hi.append((ZHI, 2 * px + int(rng.integers(0, 2)),
+                       2 * py + int(rng.integers(0, 2))))
         else:
-            srcs.append((ZHI, int(rng.integers(0, 4)), int(rng.integers(0, 4))))
-    tiles = [(rand_tile(int(rng.integers(1, 3))), *s) for s in srcs]
+            hi.append((ZHI, int(rng.integers(0, 4)), int(rng.integers(0, 4))))
+    srcs = [(lo + hi)[i] for i in rng.permutation(len(lo) + len(hi))]
+    tiles = [(rand_tile(), *s) for s in srcs]
     from vtcomposite_spark.sources import ingest as ing
     feats = ing.features_from_tiles(spark, tiles)
 
     trows = []
     for (sz, sx, sy) in srcs:
-        for _ in range(int(rng.integers(1, 3))):
+        for _ in range(int(rng.integers(2, 5))):
             dz = int(rng.integers(0, 3))
             trows.append((
                 sz + dz,
                 (sx << dz) + int(rng.integers(0, 1 << dz)),
                 (sy << dz) + int(rng.integers(0, 1 << dz)),
                 int(rng.choice([0, 128, 4080])),
-                ["L0"] if rng.random() < 0.3 else None,
+                [f"L{li}" for li in rng.choice(4, size=int(
+                    rng.integers(1, 3)), replace=False)]
+                if rng.random() < 0.3 else None,
                 bool(rng.random() < 0.3)))
     # ONE options row per (z, x, y): duplicate target keys with
     # conflicting options are out of contract in every path (the packed
@@ -371,6 +387,9 @@ def test_randomized_parity_multizoom_vs_generic(spark, seed):
         "keep_layers array<string>, compress boolean")
     want = _tiles(R.encode_reference(feats, targets))
     assert want  # non-trivial
+    per_target = (R.composite_rows(feats, targets).groupBy("z", "x", "y")
+                  .agg(F.countDistinct("src_z").alias("n")))
+    assert per_target.filter(F.col("n") > 1).count() >= 1  # both zooms win
     for zooms in ([ZLO, ZHI], None):  # declared and undeclared
         got = _tiles(C.composite_encode_tiles(feats, targets,
                                               src_zooms=zooms))

@@ -280,9 +280,10 @@ def test_source_grouped_plan_no_broadcast(spark):
 def test_single_group_targets_encode_whole(spark):
     """The sink picks whole-tile output from what it observes, not from
     an option: on an undeclared single-zoom input every target's winners
-    lie in one source group, so the layer-splice half of the plan runs on
-    nothing (AQE turns it into an EmptyRelation), and the bytes equal the
-    declared mode's."""
+    lie in one source group, so the half of the plan that encodes
+    multi-group targets through ``encode_tiles`` runs on nothing (AQE
+    turns it into an EmptyRelation), and the bytes equal the declared
+    mode's."""
     from vtcomposite_spark.operators.composite import composite_encode_tiles
     feats, targets = _points_fixture(spark)
 
@@ -294,8 +295,8 @@ def test_single_group_targets_encode_whole(spark):
     assert got and got == tiles(
         composite_encode_tiles(feats, targets, src_zooms=[4]))
     plan = _final_plan(out).split("== Initial Plan ==")[0]
-    below_splice = plan.split("MapInArrow splice")[1].splitlines()[1]
-    assert "EmptyRelation" in below_splice
+    below_encode = plan.split("MapInArrow encode_packed")[1].splitlines()[1]
+    assert "EmptyRelation" in below_encode
 
 
 def test_composite_plans_start_no_job(spark):

@@ -16,7 +16,9 @@ commit.
 import hashlib
 
 import pytest
+from pyspark.sql import functions as F
 
+from perfbench import synth
 from tests import reference_plans as R
 from vtcomposite_spark.operators import composite as C
 from vtcomposite_spark.sources import ingest
@@ -89,3 +91,71 @@ def test_wire_bytes_frozen_all_paths(spark, fixture_bytes, case):
     }
     for path, tiles in got.items():
         assert _tileset_sha(tiles) == golden, (path, case)
+
+
+# Synthesized inputs (perfbench.synth, seed 11), so these run without the
+# reference fixtures: case → sha256 by the same recipe. Frozen from the
+# tree before multi-group targets moved from the per-layer splice to the
+# one-call encoder (2026-10-17).
+SYNTH_GOLDENS = {
+    "single_zoom":
+        "b23966002b1d49ff565bc1cf22efd2d72318ba42b43b930243db931f90fe9705",
+    "multi_group":
+        "5ae4a5c643005450143dcd768c2a6d10843218bc058cf82fdbba12148e718899",
+}
+
+_SYNTH_SEED = 11
+
+
+def _synth_case(spark, case):
+    """(features, targets, declared zooms) of one synthesized case.
+
+    ``single_zoom``: two z8 tiles overzoomed to their eight z9 children at
+    buffer 128. ``multi_group``: one z7 tile and its four z8 children, the
+    z8 tiles cut to ``water`` and ``roads`` and winning them (tile_idx 0
+    against the z7 tile's 1), so a z10 target draws those layers from its
+    z8 parent and the rest from z7; 64 compressed z10 targets at buffer
+    64, some with a keep-list (one keeps only z7 layers and so draws from
+    one source group)."""
+    def tiles(addrs):
+        return [(synth.synth_tile(_SYNTH_SEED, *a), *a) for a in addrs]
+
+    if case == "single_zoom":
+        addrs = [(8, 40, 90), (8, 41, 90)]
+        f = ingest.features_from_tiles(spark, tiles(addrs))
+        rows = [{"z": 9, "x": 2 * x + i % 2, "y": 2 * y + i // 2,
+                 "buffer_size": 128}
+                for _, x, y in addrs for i in range(4)]
+        return f, ingest.targets_df(spark, rows), [8]
+    x7, y7 = 20, 45
+    addrs = [(8, 2 * x7 + i % 2, 2 * y7 + i // 2) for i in range(4)]
+    f = ingest.features_from_tiles(spark, tiles(addrs + [(7, x7, y7)]))
+    f = (f.filter((F.col("src_z") == 7)
+                  | F.col("layer").isin("water", "roads"))
+         .withColumn("tile_idx", F.when(F.col("src_z") == 8, 0)
+                     .otherwise(1).cast(f.schema["tile_idx"].dataType)))
+    keeps = [None, ["water", "poi", "legacy"], ["roads"],
+             ["landuse", "poi"]]
+    rows = [{"z": 10, "x": 8 * x7 + i % 8, "y": 8 * y7 + i // 8,
+             "buffer_size": 64, "compress": True,
+             "keep_layers": keeps[i % 4] if i % 3 == 0 else None}
+            for i in range(64)]
+    return f, ingest.targets_df(spark, rows), [7, 8]
+
+
+@pytest.mark.parametrize("case", list(SYNTH_GOLDENS))
+def test_wire_bytes_frozen_synth(spark, case):
+    """The four encode paths hash to the frozen golden on synthesized
+    tiles: the fused sink with undeclared and declared zooms, the unfused
+    columnar sink, and the per-row reference."""
+    f, t, zooms = _synth_case(spark, case)
+    got = {
+        "fused_undeclared": _collect(C.composite_encode_tiles(f, t)),
+        "fused_declared": _collect(
+            C.composite_encode_tiles(f, t, src_zooms=zooms)),
+        "unfused_columnar": _collect(C.encode_tiles(C.composite(f, t))),
+        "reference": _collect(R.encode_reference(f, t)),
+    }
+    assert got["reference"], case
+    for path, tiles in got.items():
+        assert _tileset_sha(tiles) == SYNTH_GOLDENS[case], (path, case)

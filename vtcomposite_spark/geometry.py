@@ -28,12 +28,11 @@ Semantics ported (with file:line cites):
 * linestring clip via Liang–Barsky with run-stitching + output-side
   consecutive-dup suppression and ≥2-point validity
   (src/feature_builder.hpp:189-216; boost intersection equivalent)
-* polygon ring assembly (outer starts polygon, inners attach), envelope
-  pre-test, >3-point ring filters before and after clipping
-  (src/feature_builder.hpp:225-271) — clipping itself is vectorized
-  Sutherland–Hodgman against the 4 half-planes of the clip box, applied
-  per ring (the standard tiler approach; boost clips outer+holes jointly,
-  which differs only for holes crossing the clip boundary).
+* polygon ring assembly (outer starts polygon, inners attach) and the
+  envelope pre-test (src/feature_builder.hpp:225-243); the clip of the
+  assembled polygons is ``polyclip.clip_polygons_packed``, an exact
+  polygon overlay (outer and holes jointly, like boost) that also applies
+  the >3-point ring filter after clipping (src/feature_builder.hpp:255-271).
 """
 
 from __future__ import annotations
@@ -44,7 +43,6 @@ import numpy as np
 
 _I64 = np.int64
 EMPTY_I64 = np.empty(0, _I64)
-EMPTY_F64 = np.empty(0, np.float64)
 
 
 class PackedParts(NamedTuple):
@@ -222,145 +220,8 @@ def clip_lines(g: PackedParts, lo: np.ndarray, hi: np.ndarray) -> PackedParts:
 
 
 # ---------------------------------------------------------------------------
-# polygons — ring assembly + vectorized Sutherland–Hodgman
+# polygons — ring assembly (the clip itself is polyclip.clip_polygons_packed)
 # ---------------------------------------------------------------------------
-
-def _halfplane_pass(rx, ry, ring_start, bound_per_ring, axis, keep_ge):
-    """One Sutherland–Hodgman half-plane pass over ALL rings at once.
-
-    ``rx, ry`` float64 open rings; ``bound_per_ring`` float64[R].
-    axis 0 → clip on x, axis 1 → clip on y; keep_ge → keep val >= bound,
-    else keep val <= bound.
-    """
-    n = len(rx)
-    nrings = len(ring_start) - 1
-    if n == 0:
-        return rx, ry, ring_start
-    sizes = np.diff(ring_start)
-    ring_id = np.repeat(np.arange(nrings, dtype=_I64), sizes)
-    nxt = np.arange(1, n + 1, dtype=_I64)
-    ne = sizes > 0
-    nxt[ring_start[1:][ne] - 1] = ring_start[:-1][ne]  # wrap each ring's last edge
-
-    val = rx if axis == 0 else ry
-    bound = bound_per_ring[ring_id]
-    ins = (val >= bound) if keep_ge else (val <= bound)
-    cur_in = ins
-    nxt_in = ins[nxt]
-
-    # per edge (cur→nxt) emissions: both in → [nxt]; enter → [I, nxt];
-    # exit → [I]; both out → []
-    cross = cur_in != nxt_in
-    denom = val[nxt] - val
-    t = np.where(cross, (bound - val) / np.where(denom == 0, 1.0, denom), 0.0)
-    if axis == 0:
-        iix = bound
-        iiy = ry + t * (ry[nxt] - ry)
-    else:
-        iix = rx + t * (rx[nxt] - rx)
-        iiy = bound
-
-    counts = np.where(nxt_in, np.where(cur_in, 1, 2), np.where(cur_in, 1, 0))
-    pos = np.concatenate([[0], np.cumsum(counts)])
-    total = int(pos[-1])
-    ox = np.empty(total, np.float64)
-    oy = np.empty(total, np.float64)
-    # intersection point goes first wherever edge crosses
-    ic = np.nonzero(cross)[0]
-    ox[pos[ic]] = iix[ic] if axis == 0 else iix[ic]
-    oy[pos[ic]] = iiy[ic]
-    # nxt vertex emitted when nxt is inside, after any intersection point
-    invi = np.nonzero(nxt_in)[0]
-    off = np.where(cur_in[invi], 0, 1)
-    ox[pos[invi] + off] = rx[nxt[invi]]
-    oy[pos[invi] + off] = ry[nxt[invi]]
-
-    new_sizes = np.bincount(ring_id, weights=counts, minlength=nrings).astype(_I64)
-    new_start = np.concatenate([[0], np.cumsum(new_sizes)]).astype(_I64)
-    return ox, oy, new_start
-
-
-def clip_rings(g: PackedParts, lo: np.ndarray, hi: np.ndarray):
-    """Sutherland–Hodgman clip of CLOSED rings to per-feature boxes.
-
-    Returns ``(clipped PackedParts, src_ring)`` where ``src_ring`` maps each
-    output ring to its input ring index (so callers can carry ring_type /
-    polygon grouping through). Output rings are closed; rings left with
-    fewer than 3 distinct vertices are dropped, mirroring the >3 filter at
-    src/feature_builder.hpp:255-266.
-    """
-    nrings = len(g.part_feat)
-    if nrings == 0 or len(g.vx) == 0:
-        return (PackedParts(EMPTY_I64, EMPTY_I64, np.zeros(1, _I64), EMPTY_I64),
-                EMPTY_I64)
-
-    # strip closing vertex (first == last) → open rings
-    sizes = part_sizes(g.part_start)
-    vp = vert_part_ids(g.part_start)
-    last_idx = g.part_start[1:] - 1
-    first_idx = g.part_start[:-1]
-    closed = (g.vx[last_idx] == g.vx[first_idx]) & (g.vy[last_idx] == g.vy[first_idx]) & (sizes > 1)
-    drop = np.zeros(len(g.vx), bool)
-    drop[last_idx[closed]] = True
-    keep = ~drop
-    open_sizes = sizes - closed.astype(_I64)
-    rx = g.vx[keep].astype(np.float64)
-    ry = g.vy[keep].astype(np.float64)
-    rs = np.concatenate([[0], np.cumsum(open_sizes)]).astype(_I64)
-
-    blo = lo[g.part_feat].astype(np.float64)
-    bhi = hi[g.part_feat].astype(np.float64)
-    rx, ry, rs = _halfplane_pass(rx, ry, rs, blo, 0, True)
-    rx, ry, rs = _halfplane_pass(rx, ry, rs, bhi, 0, False)
-    rx, ry, rs = _halfplane_pass(rx, ry, rs, blo, 1, True)
-    rx, ry, rs = _halfplane_pass(rx, ry, rs, bhi, 1, False)
-
-    ix = np.rint(rx).astype(_I64)
-    iy = np.rint(ry).astype(_I64)
-    # drop rings emptied by the passes (dedupe assumes non-empty parts)
-    sz = np.diff(rs)
-    ring_alive = sz > 0
-    if not ring_alive.all():
-        vkeep0 = np.repeat(ring_alive, sz)
-        ix, iy = ix[vkeep0], iy[vkeep0]
-        rs = np.concatenate([[0], np.cumsum(sz[ring_alive])]).astype(_I64)
-    alive_idx = np.nonzero(ring_alive)[0].astype(_I64)
-    ring_feat = g.part_feat[ring_alive]
-    ded = dedupe_consecutive(PackedParts(ix, iy, rs, ring_feat))
-    # also drop a last vertex that equals the first after rounding
-    sizes = part_sizes(ded.part_start)
-    li = ded.part_start[1:] - 1
-    fi = ded.part_start[:-1]
-    dup_close = np.zeros(len(ded.vx), bool)
-    m = (sizes > 1)
-    eq = np.zeros(len(sizes), bool)
-    eq[m] = (ded.vx[li[m]] == ded.vx[fi[m]]) & (ded.vy[li[m]] == ded.vy[fi[m]])
-    dup_close[li[eq]] = True
-    keep_v = ~dup_close
-    open_sizes = sizes - eq.astype(_I64)
-
-    # keep rings with ≥3 distinct vertices, then re-close them
-    ring_ok = open_sizes >= 3
-    vkeep = keep_v & np.repeat(ring_ok, sizes)
-    kept_open = open_sizes[ring_ok]
-    out_sizes = kept_open + 1  # re-closed
-    out_start = np.concatenate([[0], np.cumsum(out_sizes)]).astype(_I64)
-    total = int(out_start[-1])
-    ox = np.empty(total, _I64)
-    oy = np.empty(total, _I64)
-    if total:
-        src_x = ded.vx[vkeep]
-        src_y = ded.vy[vkeep]
-        open_pos = np.concatenate([[0], np.cumsum(kept_open)])
-        body = np.ones(total, bool)
-        body[out_start[1:] - 1] = False  # closing slots
-        ox[body] = src_x
-        oy[body] = src_y
-        ox[out_start[1:] - 1] = src_x[open_pos[:-1]]
-        oy[out_start[1:] - 1] = src_y[open_pos[:-1]]
-    return (PackedParts(ox, oy, out_start, ring_feat[ring_ok]),
-            alive_idx[ring_ok])
-
 
 def ring_bboxes(g: PackedParts):
     """(minx, miny, maxx, maxy) per part — the envelope pre-test input

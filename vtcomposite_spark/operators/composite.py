@@ -20,19 +20,19 @@ DataFrame (one row per requested output tile), ``_source_grouped``:
    vectorized overzoom + clip (``_overzoom_clip_batches``; same-zoom rows
    pass through untouched, the reference's ``add_existing_layer`` fast
    path, src/vtcomposite.cpp:253-256). Its ``out`` argument emits whole
-   encoded tiles, per-layer messages for the splice (``_merge_layer_rows``),
-   or packed relational rows that a JVM ``inline`` restores.
+   encoded tiles or packed relational rows that a JVM ``inline`` restores.
 
 Two modes. A declared single source zoom needs no winner pass: each target
 has exactly one source group, so first-wins runs group-locally in the
 kernel. Every other input — several declared zooms or none — runs the
 winner pass. In both, a target whose winners lie in one source group
-encodes whole; only a target drawing from several groups splices per
-layer. Building a plan starts no Spark job; the ``tile_idx`` contract check
-fails the first action.
+encodes whole in the kernel; a target drawing from several groups leaves
+the kernel as relational rows that ``encode_tiles`` encodes in one call
+per target. Building a plan starts no Spark job; the ``tile_idx`` contract
+check fails the first action.
 
-``encode_tiles`` is the separate S3/S4 sink for relational rows: one packed
-row per target, multi-tile encode. ``composite_points`` is the all-point
+``encode_tiles`` is the S3/S4 sink for relational rows: one packed row per
+target, multi-tile encode. ``composite_points`` is the all-point
 specialization (pure JVM expressions). Scale: no side is force-broadcast in
 the plan; Catalyst and AQE size the joins from real statistics.
 """
@@ -406,18 +406,6 @@ _ENCODE_OUT_SCHEMA = T.StructType([
     T.StructField("tile", T.BinaryType()),
 ])
 
-# per-(target, layer) rows of multi-group targets: framed layer message +
-# its first-seen order keys (spliced per tile by _merge_layer_rows)
-_LAYER_ROWS_SCHEMA = T.StructType([
-    T.StructField("z", T.IntegerType()),
-    T.StructField("x", T.LongType()),
-    T.StructField("y", T.LongType()),
-    T.StructField("ord_ti", T.LongType()),
-    T.StructField("ord_fi", T.LongType()),
-    T.StructField("compress", T.BooleanType()),
-    T.StructField("layer_bytes", T.BinaryType()),
-])
-
 
 def _pack_tiles(df: DataFrame) -> DataFrame:
     """ONE row per (z, x, y): tile-level columns + a ``feats`` list of
@@ -461,21 +449,6 @@ def _tiles_batch(tiles):
          pa.array([t[2] for t in tiles], pa.int64()),
          pa.array([t[3] for t in tiles], pa.binary())],
         names=["z", "x", "y", "tile"])
-
-
-def _units_batch(units):
-    """encode_tiles_table(per_layer=True) rows → _LAYER_ROWS_SCHEMA batch."""
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_arrays(
-        [pa.array([u[0] for u in units], pa.int32()),
-         pa.array([u[1] for u in units], pa.int64()),
-         pa.array([u[2] for u in units], pa.int64()),
-         pa.array([u[3] for u in units], pa.int64()),
-         pa.array([u[4] for u in units], pa.int64()),
-         pa.array([u[5] for u in units], pa.bool_()),
-         pa.array([u[6] for u in units], pa.binary())],
-        names=["z", "x", "y", "ord_ti", "ord_fi", "compress", "layer_bytes"])
 
 
 def _unpack_batch(batch, tile_cols: list[str]):
@@ -591,9 +564,10 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
       gives each target its winner list and the target explodes only over
       the zooms that own a winner. A target whose winners lie in one
       source group (one winning zoom — every target of a single-zoom
-      input) still encodes whole; only a target drawing from several
-      groups encodes per layer and splices (``_merge_layer_rows``).
-      Relational rows need no splice.
+      input) still encodes whole in the kernel; a target drawing from
+      several groups leaves the kernel as relational rows, and
+      ``encode_tiles`` packs them to one row per target and encodes it in
+      one call.
 
     Plan building starts no Spark job."""
     if isinstance(src_zooms, str):
@@ -654,12 +628,13 @@ def _source_grouped(features: DataFrame, targets: DataFrame,
                 .select(*_relational_order(features, tile_cols)))
     if single:
         return fan_clip(t, "tiles")
-    # a target whose winners all lie in one source group encodes whole;
-    # only the rest encode per layer and splice. Both halves read the one
-    # features exchange (Spark reuses it).
+    # a target whose winners all lie in one source group encodes whole in
+    # the kernel; the rest leave it as rows and encode once per target.
+    # Both halves read the one features exchange (Spark reuses it).
     one = F.size("win_zooms") == 1
-    return fan_clip(t.filter(one), "tiles").unionByName(
-        _merge_layer_rows(fan_clip(t.filter(~one), "layers")))
+    return fan_clip(t.filter(one), "tiles").unionByName(encode_tiles(
+        fan_clip(t.filter(~one), "rows")
+        .select(*_TILE_LEVEL_COLS, F.inline("feats"))))
 
 
 def _relational_order(features: DataFrame, tile_cols: list[str]) -> list[str]:
@@ -684,8 +659,7 @@ def _fan_clip(packed: DataFrame, feat_schema: T.StructType,
     (``_overzoom_clip_batches``) on the pairs.
 
     ``out`` picks the output: ``"tiles"`` whole encoded tiles (every
-    target in one group), ``"layers"`` framed per-(target, layer)
-    messages for ``_merge_layer_rows``, ``"rows"`` one packed row per
+    target in one group), ``"rows"`` one packed row per
     (group, target) — source keys, the target's ORIGINAL tile-level
     values (nulls kept) and the clipped feature structs — for a JVM-side
     ``inline``."""
@@ -822,12 +796,8 @@ def _fan_clip(packed: DataFrame, feat_schema: T.StructType,
             if not clipped:
                 continue
             ctbl = pa.Table.from_batches(clipped, schema=clip_schema)
-            if out == "tiles":
+            if not rows:
                 yield _tiles_batch(mvt_vec.encode_tiles_table(ctbl))
-                continue
-            if out == "layers":
-                yield _units_batch(
-                    mvt_vec.encode_tiles_table(ctbl, per_layer=True))
                 continue
             ords = ctbl.column("tile_ord").to_numpy(zero_copy_only=False)
             order = np.argsort(ords, kind="stable")
@@ -847,13 +817,13 @@ def _fan_clip(packed: DataFrame, feat_schema: T.StructType,
                 + [tcol[c].take(take_t) for c in head] + [feats_out],
                 names=_SRC_KEYS + head + ["feats"])
 
-    if out == "rows":
+    if rows:
         schema = T.StructType(
             [feat_schema[c] for c in _SRC_KEYS]
             + [tgt_schema[c] for c in head]
             + [T.StructField("feats", T.ArrayType(T.StructType(data_fields)))])
     else:
-        schema = _LAYER_ROWS_SCHEMA if out == "layers" else _ENCODE_OUT_SCHEMA
+        schema = _ENCODE_OUT_SCHEMA
     return packed.mapInArrow(kernel, schema=schema)
 
 
@@ -890,10 +860,10 @@ def composite_encode_tiles(features: DataFrame, targets: DataFrame,
     (``mvt_vec.encode_tiles_table``) run in the same mapInArrow over source
     groups, so no intermediate feature row crosses the seam. Modes and
     ``src_zooms`` as in ``composite``. A target whose winners lie in one
-    source group encodes whole; a target drawing from several groups
-    encodes its winning layers as framed layer messages that
-    ``_merge_layer_rows`` splices per tile (one extra shuffle of
-    output-sized blobs).
+    source group encodes whole there; a target drawing from several groups
+    leaves the kernel as clipped rows that ``encode_tiles`` packs per
+    target and encodes in one call (one extra shuffle of clipped rows and
+    one more seam, paid only by those targets).
 
     Byte-identical to ``encode_tiles(composite(...))``.
 
@@ -911,47 +881,6 @@ def overzoom_encode_tiles(features: DataFrame, targets: DataFrame,
     above the source zoom yield nothing. ``partitions`` sets the feature
     shuffle's partition count."""
     return _source_grouped(features, targets, [src_zoom], partitions, "tiles")
-
-
-def _merge_layer_rows(layer_rows: DataFrame) -> DataFrame:
-    """Splice per-(target, layer) messages into whole tiles: group by
-    target, sort by the first-seen order keys (tile_idx, feature_idx of
-    each layer's first feature — exactly the single-call encoder's layer
-    order), concatenate, then apply the gzip/empty-tile rule. MVT layers
-    are self-contained messages, so the concatenation is byte-identical
-    to encoding the tile in one call. A (target, layer) pair has one
-    winning tile_idx at one source zoom (``_checked``), and one source
-    address is one kernel row, so each layer arrives as exactly one
-    message. One shuffle of encoded layer blobs (∝ OUTPUT bytes) + one
-    seam of tile-count rows."""
-    from ..sources import mvt
-
-    packed = (layer_rows.groupBy("z", "x", "y")
-              .agg(F.collect_list(
-                       F.struct("ord_ti", "ord_fi", "layer_bytes"))
-                   .alias("parts"),
-                   F.first("compress").alias("compress")))
-
-    def splice(it):
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            zc = batch.column("z").to_numpy(zero_copy_only=False)
-            xc = batch.column("x").to_numpy(zero_copy_only=False)
-            yc = batch.column("y").to_numpy(zero_copy_only=False)
-            cmp_ = batch.column("compress").fill_null(False) \
-                .to_numpy(zero_copy_only=False)
-            parts = batch.column("parts").to_pylist()
-            tiles = []
-            for i in range(batch.num_rows):
-                ps = sorted(parts[i],
-                            key=lambda p: (p["ord_ti"], p["ord_fi"]))
-                buf = b"".join(p["layer_bytes"] for p in ps)
-                tiles.append((int(zc[i]), int(xc[i]), int(yc[i]),
-                              mvt.gzip_sink(buf, bool(cmp_[i]))))
-            yield _tiles_batch(tiles)
-
-    return packed.mapInArrow(splice, schema=_ENCODE_OUT_SCHEMA)
 
 
 def encode_tiles(composited: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """Exact polygon-with-holes ∩ rectangle clipping (Weiler–Atherton for a
 convex window) — the boost::geometry::intersection parity path.
 
-Per-ring Sutherland–Hodgman (geometry.clip_rings) cannot reproduce two
+Per-ring Sutherland–Hodgman (the usual tiler clip) cannot reproduce two
 reference behaviors (test/vtcomposite-polygons.test.js:133-167):
 
 * a hole crossing the clip boundary must CARVE the clipped outer ring
@@ -68,9 +68,6 @@ def _perimeter_pos(x: float, y: float, lo: float, hi: float) -> float:
     if x == lo and y > lo:
         return 3 * w + (hi - y)
     return 0.0  # (lo, lo)
-
-
-_CORNERS = ((1, (None, None)),)
 
 
 def _corners_between(s0: float, s1: float, lo: int, hi: int):

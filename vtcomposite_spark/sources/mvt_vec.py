@@ -258,25 +258,16 @@ def _local_first_seen(unit_of_item: np.ndarray, code: np.ndarray,
             first_idx[order])
 
 
-def encode_tiles_table(tbl, per_layer: bool = False):
+def encode_tiles_table(tbl):
     """MANY tiles in one call — the per-tile fixed cost amortizer.
 
     ``tbl``: composite-output rows for any number of (z, x, y) tiles.
     Returns [(z, x, y, tile bytes), ...], byte-identical per tile to
     encoding each group alone (the parity matrix in
-    tests/test_encode_columnar.py gates this).
-
-    ``per_layer=True`` returns one row per UNIT (tile × layer) instead:
-    [(z, x, y, ord_tile_idx, ord_feature_idx, compress, layer_msg), ...]
-    where ``layer_msg`` is the complete framed tile-level field-3 message
-    for that layer — MVT layers are self-contained (their key/value
-    tables live inside the layer message), so concatenating a tile's
-    layer messages sorted by (ord_tile_idx, ord_feature_idx) — the
-    first-seen order keys — reproduces the per-tile bytes EXACTLY (no
-    gzip is applied in this mode; the caller compresses after splicing).
-    This is the multi-zoom source-grouped sink's merge contract: each
-    source zoom encodes its winning layers independently and a final
-    tile-count-sized pass splices them.
+    tests/test_encode_columnar.py gates this). Every tile is encoded
+    whole, from all of its rows, in the call that sees them — a caller
+    holding one tile's rows in several batches packs them first
+    (``operators.composite.encode_tiles``).
 
     Why it exists: per-tile encoding pays ~6 ms of fixed cost per call
     (~80 small numpy dispatches, object-string np.unique, one
@@ -538,17 +529,6 @@ def encode_tiles_table(tbl, per_layer: bool = False):
             vtab[int(unit_vtab[u]):int(unit_vtab[u + 1])],
             ext_map[int(ext_arr[r0])]))
         return b"\x1a" + _uv(len(body)) + body
-
-    if per_layer:
-        units: list[tuple[int, int, int, int, int, bool, bytes]] = []
-        for u in range(nunits):
-            r0 = int(unit_first_row[u])
-            orig = int(total_order[r0])
-            units.append((int(z_all[orig]), int(x_all[orig]),
-                          int(y_all[orig]), int(ti_all[orig]),
-                          int(fi_all[orig]), bool(compress_rows[r0]),
-                          unit_msg(u)))
-        return units
 
     results: list[tuple[int, int, int, bytes]] = []
     tile_unit_start = np.searchsorted(unit_tile, np.arange(ntiles, dtype=_I64))

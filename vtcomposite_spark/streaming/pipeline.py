@@ -187,28 +187,22 @@ def run_tile_update_stream(spark, sink_dir: str, out_dir: str,
     q.awaitTermination()
 
 
-def latest_tiles(spark, sink_dir: str,
-                 winners_join: str = "auto") -> DataFrame:
+def latest_tiles(spark, sink_dir: str) -> DataFrame:
     """The tile log's reader contract AS CODE: one row per (z, x, y) — the
     LATEST epoch wins (a later micro-batch that re-materialized a target
     supersedes the earlier bytes).
 
     Winner selection is a keys-only max-epoch aggregate (map-side combine,
     the ``first_wins`` shape) followed by a semi-join, so the tile BLOBS
-    never shuffle — only the 4 key columns do. ``winners_join="broadcast"``
-    forces the semi-join's build side broadcast (right when the winner set
-    is executor-memory-sized and plan-time certainty beats AQE stats);
-    ``"auto"`` (default) is the planet-pyramid-safe path.
+    never shuffle — only the 4 key columns do. The semi-join carries no
+    hint: AQE sizes it, which stays safe for a planet-pyramid winner set.
     """
     log = spark.read.parquet(sink_dir)
     winners = log.groupBy("z", "x", "y").agg(F.max("epoch").alias("epoch"))
-    if winners_join == "broadcast":
-        winners = F.broadcast(winners)
     return log.join(winners, on=["z", "x", "y", "epoch"], how="left_semi")
 
 
-def compact_tile_log(spark, sink_dir: str, out_dir: str | None = None,
-                     winners_join: str = "auto") -> None:
+def compact_tile_log(spark, sink_dir: str, out_dir: str | None = None) -> None:
     """Rewrite the append-only tile log to ONE row per (z, x, y): the
     ``latest_tiles`` winners, written as a single ``epoch=<max>`` partition
     so the log keeps its shape — ``streaming_encode_tiles`` resumed against
@@ -222,7 +216,7 @@ def compact_tile_log(spark, sink_dir: str, out_dir: str | None = None,
     import os
     import shutil
 
-    latest = latest_tiles(spark, sink_dir, winners_join=winners_join)
+    latest = latest_tiles(spark, sink_dir)
     max_epoch = latest.agg(F.max("epoch")).first()[0]
     if max_epoch is None:
         return  # empty log — nothing to compact
