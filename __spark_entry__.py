@@ -102,16 +102,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _tile_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
-    """lon/lat → integer tile x/y, ANSI SQL (matches tilemath.tile_xy_cols)."""
-    n = 1 << zoom
-    tx = f"greatest(0, least(CAST(floor(({lon} + 180.0) / 360.0 * {n}) AS BIGINT), {n - 1}))"
-    merc = f"ln(tan(radians({lat})) + 1.0 / cos(radians({lat})))"
-    ty = (f"greatest(0, least(CAST(floor((1.0 - {merc} / pi()) / 2.0 * {n}) AS BIGINT), "
-          f"{n - 1}))")
-    return tx, ty
-
-
 def _events_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read(spark, sf_dir, "events")
     tagged, lat, lon = geo_cols("event_id")
@@ -1550,13 +1540,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
-    tx8, ty8 = _tile_sql("lon", "lat", 8)
+    tx8, ty8 = tm.tile_xy_sql("lon", "lat", 8)
     o["tile_encode_counts"] = (
         f"SELECT {tx8} AS tx, {ty8} AS ty, count(*) AS n "
         f"FROM ({_EVENTS_POINTS_SQL}) GROUP BY 1, 2"
     )
 
-    tx10, ty10 = _tile_sql("lon", "lat", 10)
+    tx10, ty10 = tm.tile_xy_sql("lon", "lat", 10)
     o["pages_tile_assign"] = (
         "WITH pages AS (SELECT doc_id, lang, "
         f"round({_GEO_DOC['lat']}, 6) AS lat, round({_GEO_DOC['lon']}, 6) AS lon "
@@ -1751,13 +1741,13 @@ def oracle_sql() -> dict[str, str]:
         "FROM lineitem GROUP BY 1, 2, 3, 4, 5"
     )
 
-    tx8s, ty8s = _tile_sql("lon", "lat", 8)
+    tx8s, ty8s = tm.tile_xy_sql("lon", "lat", 8)
     o["salted_tile_counts"] = (
         f"SELECT {tx8s} AS tx, {ty8s} AS ty, count(*) AS n "
         f"FROM ({_EVENTS_POINTS_SQL}) GROUP BY 1, 2"
     )
 
-    tx10e, ty10e = _tile_sql("lon", "lat", 10)
+    tx10e, ty10e = tm.tile_xy_sql("lon", "lat", 10)
     level_sqls = []
     for z in range(10, 3, -1):
         shift = 1 << (10 - z)
@@ -2224,7 +2214,7 @@ def oracle_sql() -> dict[str, str]:
     o["ngram_count_export"] = ngram_counts_sql(3, 2)
 
     from vtcomposite_spark.tilemath import morton_sql
-    _tx8, _ty8 = _tile_sql("lon", "lat", 8)
+    _tx8, _ty8 = tm.tile_xy_sql("lon", "lat", 8)
     o["zorder_tile_keys"] = (
         f"WITH p AS ({_EVENTS_POINTS_SQL}), "
         f"t AS (SELECT {_tx8} AS tx, {_ty8} AS ty FROM p) "

@@ -14,10 +14,15 @@ reproduce their rows as a multiset and their tiles byte for byte.
 * ``pip_rows``: every point against every polygon (a cross join, no cell
   index), even-odd ray casting per ring — ``operators.joins.pip_join``
   must return the same pairs.
+* ``encode_cells_columns`` / ``tile_pixels_columns``: the lon/lat → tile
+  math as a Column-operator tree, the form the library built before it
+  rendered that math as SQL text (``tilemath.tile_frac_sql``) — the SQL
+  text must give the same doubles, tiles and cells bit for bit.
 """
 
 from __future__ import annotations
 
+import math
 from collections import Counter
 
 import numpy as np
@@ -134,3 +139,40 @@ def pip_rows(points, polys, point_cols, poly_id_col="poly_id"):
         for r in pairs.collect()
         if r["lat"] is not None and r["lon"] is not None
         and _inside(r["lon"], r["lat"], r["_xs"], r["_ys"], r["_po"]))
+
+
+def tile_frac_columns(lon, lat, zoom: int):
+    """Fractional tile x/y at ``zoom`` as a Column tree."""
+    n = F.call_function("shiftleft", F.lit(1), F.lit(zoom))
+    phi = F.radians(lat)
+    merc = F.log(F.tan(phi) + F.lit(1.0) / F.cos(phi))
+    return ((lon + F.lit(180.0)) / F.lit(360.0) * n,
+            (F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * n)
+
+
+def encode_cells_columns(df, zoom: int):
+    """``operators.cells.encode_cells`` over ``lat``/``lon`` as Columns."""
+    n = F.call_function("shiftleft", F.lit(1), F.lit(zoom)).cast("long")
+    fx, fy = tile_frac_columns(F.col("lon"), F.col("lat"), zoom)
+
+    def clip(c):
+        return F.greatest(F.lit(0).cast("long"),
+                          F.least(F.floor(c).cast("long"),
+                                  n - F.lit(1).cast("long")))
+
+    df = df.withColumn("tile_x", clip(fx)).withColumn("tile_y", clip(fy))
+    cell = F.when(
+        F.col("lat").isNotNull() & F.col("lon").isNotNull(),
+        F.shiftleft(F.lit(zoom).cast("long"), 58)
+        .bitwiseOR(F.shiftleft(F.col("tile_x").cast("long"), 29))
+        .bitwiseOR(F.col("tile_y").cast("long")))
+    return df.withColumn("cell", cell)
+
+
+def tile_pixels_columns(df, zoom: int, extent: int = 4096):
+    """``operators.cells.tile_pixels`` over ``lat``/``lon`` as Columns."""
+    fx, fy = tile_frac_columns(F.col("lon"), F.col("lat"), zoom)
+    return (df.withColumn("px", F.round((fx - F.floor(fx)) * extent)
+                          .cast("long"))
+            .withColumn("py", F.round((fy - F.floor(fy)) * extent)
+                        .cast("long")))

@@ -80,6 +80,46 @@ def test_tile_pixels_matches_numpy(spark):
     assert (r.px, r.py) == (640, 832)
 
 
+def test_tile_sql_matches_column_form(spark):
+    """encode_cells and tile_pixels build the lon/lat → tile math from SQL
+    text (tilemath.tile_frac_sql); it must equal the Column-operator tree
+    (tests.reference_plans) bit for bit — the fractional doubles, tiles,
+    cells and pixels — over 2M random points, every exact z12 tile edge,
+    nulls and the poles, at zooms 0 to 29."""
+    from tests import reference_plans as R
+    edge = np.arange(4097, dtype=np.float64)
+    rows = [(float(a), float(b)) for a, b in zip(
+        np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * edge / 4096)))),
+        edge / 4096 * 360.0 - 180.0)]
+    rows += [(None, 10.0), (10.0, None), (None, None), (90.0, 180.0),
+             (-90.0, -180.0), (85.0511287798066, 0.0),
+             (-85.0511287798066, 0.0)]
+    pts = spark.createDataFrame(rows, "lat double, lon double").unionByName(
+        spark.range(2_000_000, numPartitions=4).select(
+            (F.rand(1) * 180 - 90).alias("lat"),
+            (F.rand(2) * 360 - 180).alias("lon")))
+    cols = ("fx", "fy", "tile_x", "tile_y", "cell", "px", "py")
+    forms = {
+        "sql": lambda d, z: tile_pixels(encode_cells(d, z), z).withColumns(
+            dict(zip(("fx", "fy"), map(F.expr, tm.tile_frac_sql(
+                "lon", "lat", z))))),
+        "col": lambda d, z: R.tile_pixels_columns(
+            R.encode_cells_columns(d, z), z).withColumns(dict(zip(
+                ("fx", "fy"), R.tile_frac_columns(F.col("lon"),
+                                                  F.col("lat"), z))))}
+    df, diffs = pts, []
+    for z in (0, 3, 8, 12, 20, 29):
+        for name, form in forms.items():
+            df = form(df, z).withColumnsRenamed(
+                {c: f"{name}{z}_{c}" for c in cols})
+        diffs += [F.sum((~F.col(f"sql{z}_{c}").eqNullSafe(
+            F.col(f"col{z}_{c}"))).cast("int")).alias(f"z{z}_{c}")
+            for c in cols]
+    got = df.agg(F.count("*").alias("rows"), *diffs).collect()[0].asDict()
+    assert got.pop("rows") == 2_000_000 + len(rows)
+    assert not any(got.values()), {k: v for k, v in got.items() if v}
+
+
 def test_rollup_counts(spark):
     df = spark.createDataFrame(
         [("a", 37.76, -122.44), ("b", 37.77, -122.45), ("c", -10.0, 10.0)],
@@ -246,3 +286,100 @@ def test_knn_exact_skips_fallback_when_guaranteed(spark):
              for r in knn_join(pdf, sdf, 2, method="brute").collect()}
     assert a == brute
     assert b == brute  # zoom=5 cell (11.25°) >> knn radius: grid already exact
+
+
+KNN_POINT_SCHEMA = ("url string, tile_x long, lat double, lang string, "
+                    "lon double, cell long, weight double")
+
+
+def _knn_sweep_input(seed: int):
+    """Points and sites for the grid-vs-brute sweep, from ``seed``: a
+    dense site cluster (in-box exact answers), sparse sites over the
+    globe (answers outside the 3×3 box), polar points far from every
+    site (empty boxes), coincident site pairs with a point on each
+    (equal-distance ties, broken by site_id), null coordinates on both
+    sides, extra point columns, and a point input that already carries
+    tile_x and cell."""
+    rng = np.random.default_rng(seed)
+    c_lat, c_lon = 37.76 + rng.uniform(-1, 1), -122.44 + rng.uniform(-1, 1)
+    site_xy = [(c_lat + a, c_lon + b)
+               for a, b in rng.uniform(-0.02, 0.02, (12, 2))]
+    site_xy += [(a, b) for a, b in zip(rng.uniform(-55, 55, 20),
+                                        rng.uniform(-175, 175, 20))]
+    tie_xy = [site_xy[0], site_xy[12]]  # one in the cluster, one sparse
+    site_xy += tie_xy
+    ids = rng.permutation(1000)[:len(site_xy) + 2]
+    sites = [(int(i), float(a), float(b)) for i, (a, b) in zip(ids, site_xy)]
+    sites += [(int(ids[-2]), None, 1.0), (int(ids[-1]), 1.0, None)]
+    pt_xy = [(c_lat + a, c_lon + b)
+             for a, b in rng.uniform(-0.015, 0.015, (40, 2))]
+    pt_xy += [(a, b) for a, b in zip(rng.uniform(-55, 55, 40),
+                                      rng.uniform(-175, 175, 40))]
+    pt_xy += [(a, b) for a, b in zip(rng.uniform(-80, -72, 8),
+                                      rng.uniform(-175, 175, 8))]
+    pt_xy += tie_xy + [(None, 5.0), (5.0, None), (None, None)]
+    points = [(f"p{i}", -1, a if a is None else float(a), f"l{i % 3}",
+               b if b is None else float(b), -1, float(i) / 2)
+              for i, (a, b) in enumerate(pt_xy)]
+    # the generator covers what it claims
+    coords = [(la, lo) for _, la, lo in sites]
+    for xy in tie_xy:
+        assert coords.count(xy) == 2 and xy in pt_xy
+    assert any(la is None or lo is None for _, la, lo in sites)
+    assert any(p[2] is None or p[4] is None for p in points)
+    return points, sites
+
+
+def test_knn_grid_matches_brute_randomized(spark):
+    """The exact grid path returns brute force's rows — every column,
+    dist_sq and knn_rank included, in the same column order — over seeds
+    0-2, zooms 3/6/9 and k 1/3. Against ``exact=False`` (the unguarded
+    grid) the sweep checks that it covered points whose grid answer was
+    already exact, points whose box held candidates but not the answer
+    (the guarantee must fail), and points with an empty box."""
+    seen = {"in_box": 0, "failed": 0, "empty": 0}
+
+    def by_url(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r.url, []).append(tuple(r))
+        return {u: sorted(v, key=repr) for u, v in out.items()}
+
+    for seed in range(3):
+        points, sites = _knn_sweep_input(seed)
+        pdf = spark.createDataFrame(points, KNN_POINT_SCHEMA)
+        sdf = spark.createDataFrame(sites, SITE_SCHEMA)
+        for zoom in (3, 6, 9):
+            for k in (1, 3):
+                brute = knn_join(pdf, sdf, k, method="brute")
+                grid = knn_join(pdf, sdf, k, zoom=zoom)
+                assert grid.columns == brute.columns == [
+                    "url", "lat", "lang", "lon", "weight", "site_id",
+                    "dist_sq", "knn_rank"]
+                want = by_url(brute)
+                assert by_url(grid) == want, (seed, zoom, k)
+                assert len(want) == len(points) - 3  # null points drop
+                loose = by_url(knn_join(pdf, sdf, k, zoom=zoom, exact=False))
+                for url, rows in want.items():
+                    if url not in loose:
+                        seen["empty"] += 1
+                    elif loose[url] != rows:
+                        seen["failed"] += 1
+                    else:
+                        seen["in_box"] += 1
+    assert all(seen.values()), seen
+
+
+def test_knn_grid_narrow_grids(spark):
+    """On grids one or two cells wide the 3×3 box covers the world: the
+    grid answer equals brute force with and without the guarantee, and
+    no site is a candidate twice in one cell."""
+    points, sites = _knn_sweep_input(5)
+    pdf = spark.createDataFrame(points, KNN_POINT_SCHEMA)
+    sdf = spark.createDataFrame(sites, SITE_SCHEMA)
+    key = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
+    want = key(knn_join(pdf, sdf, 3, method="brute"))
+    for zoom in (0, 1):
+        for exact in (True, False):
+            assert key(knn_join(pdf, sdf, 3, zoom=zoom, exact=exact)) \
+                == want, (zoom, exact)

@@ -17,6 +17,11 @@ from pyspark.sql import functions as F
 from .. import tilemath as tm
 
 
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def encode_cells(df: DataFrame, zoom: int,
                  lat_col: str = "lat", lon_col: str = "lon",
                  out_col: str = "cell") -> DataFrame:
@@ -25,25 +30,22 @@ def encode_cells(df: DataFrame, zoom: int,
         raise ValueError(
             f"encode_cells: zoom must be in [0, {tm.MAX_CELL_ZOOM}] "
             "(cell ids pack x/y into 29-bit fields)")
-    tx, ty = tm.tile_xy_cols(F.col(lon_col), F.col(lat_col), zoom)
-    df = df.withColumn("tile_x", tx).withColumn("tile_y", ty)
-    cell = F.when(
-        F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull(),
-        tm.pack_cell_col(F.lit(zoom), F.col("tile_x"), F.col("tile_y")),
-    )
-    return df.withColumn(out_col, cell)
+    lat, lon = _ident(lat_col), _ident(lon_col)
+    tx, ty = tm.tile_xy_sql(lon, lat, zoom)
+    cell = (f"CASE WHEN {lat} IS NOT NULL AND {lon} IS NOT NULL "
+            f"THEN {tm.pack_cell_sql(zoom, 'tile_x', 'tile_y')} END")
+    return (df.withColumns({"tile_x": F.expr(tx), "tile_y": F.expr(ty)})
+            .withColumn(out_col, F.expr(cell)))
 
 
 def tile_pixels(df: DataFrame, zoom: int, extent: int = 4096,
                 lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
     """Add tile-local integer pixel coords (px, py) at ``zoom`` — the MVT
     quantization step, as column math."""
-    fx = tm.lon_to_tilex_col(F.col(lon_col), zoom)
-    fy = tm.lat_to_tiley_col(F.col(lat_col), zoom)
-    return (
-        df.withColumn("px", F.round((fx - F.floor(fx)) * extent).cast("long"))
-        .withColumn("py", F.round((fy - F.floor(fy)) * extent).cast("long"))
-    )
+    fx, fy = tm.tile_frac_sql(_ident(lon_col), _ident(lat_col), zoom)
+    return df.withColumns({
+        c: F.expr(f"CAST(round(({f} - floor({f})) * {extent}) AS BIGINT)")
+        for c, f in (("px", fx), ("py", fy))})
 
 
 def rollup_counts(df: DataFrame, from_zoom: int, to_zoom: int,

@@ -354,36 +354,27 @@ def overzoom_clip_points_expr(df: DataFrame) -> DataFrame:
     crossing costs ~40µs/row at scale, the expression path ~1µs. The page
     pipeline (one point per geotagged page) is exactly this shape.
     """
-    dz = F.col("z") - F.col("src_z")
-    zf = F.call_function("shiftleft", F.lit(1).cast("long"), dz)
-    mask = zf - F.lit(1).cast("long")
-    dxp = F.col("x").bitwiseAND(mask) * F.col("extent")
-    dyp = F.col("y").bitwiseAND(mask) * F.col("extent")
-    blo = -F.col("buffer_size").cast("long")
-    bhi = (F.col("extent") + F.col("buffer_size")).cast("long")
-
-    txs = F.transform("xs", lambda v: v * zf - dxp)
-    tys = F.transform("ys", lambda v: v * zf - dyp)
-    pairs = F.filter(
-        F.arrays_zip(txs.alias("px"), tys.alias("py")),
-        lambda p: (p["px"] >= blo) & (p["px"] <= bhi)
-        & (p["py"] >= blo) & (p["py"] <= bhi))
-    new_xs = F.when(dz == 0, F.col("xs")).otherwise(
-        F.transform(pairs, lambda p: p["px"]))
-    new_ys = F.when(dz == 0, F.col("ys")).otherwise(
-        F.transform(pairs, lambda p: p["py"]))
-    # withColumns (plural): both expressions bind to the ORIGINAL xs/ys —
-    # sequential withColumn would make new_ys's `pairs` re-read the already
-    # transformed xs and double-apply the affine
-    out = (
-        df.withColumns({"xs": new_xs, "ys": new_ys})
-        .filter(F.size("xs") > 0)
-        .withColumn("part_offsets",
-                    F.sequence(F.lit(0), F.size("xs") - 1).cast("array<int>"))
-        .withColumn("ring_types",
-                    F.transform(F.col("part_offsets"), lambda _: F.lit(0).cast("byte")))
+    zf = "shiftleft(1L, z - src_z)"
+    blo, bhi = "-CAST(buffer_size AS BIGINT)", "CAST(extent + buffer_size AS BIGINT)"
+    # the shifted points that fall inside the buffered box, as (x, y) pairs
+    pairs = (f"filter(arrays_zip("
+             f"transform(xs, v -> v * {zf} - (x & ({zf} - 1L)) * extent), "
+             f"transform(ys, v -> v * {zf} - (y & ({zf} - 1L)) * extent)), "
+             f"p -> ((p.`0` >= {blo} AND p.`0` <= {bhi})"
+             f" AND p.`1` >= {blo}) AND p.`1` <= {bhi})")
+    # both expressions bind to the ORIGINAL xs/ys (one projection) — a
+    # second projection would re-read the already transformed xs
+    return (
+        df.withColumns({
+            c: F.expr(f"CASE WHEN z - src_z = 0 THEN {c} "
+                      f"ELSE transform({pairs}, p -> p.`{i}`) END")
+            for i, c in enumerate(("xs", "ys"))})
+        .filter("size(xs) > 0")
+        .withColumn("part_offsets", F.expr(
+            "CAST(sequence(0, size(xs) - 1) AS ARRAY<INT>)"))
+        .withColumn("ring_types", F.expr(
+            "transform(part_offsets, _ -> CAST(0 AS TINYINT))"))
     )
-    return out
 
 
 def composite_points(features: DataFrame, targets: DataFrame,

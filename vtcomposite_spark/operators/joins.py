@@ -23,18 +23,19 @@ DuckDB oracles can replay the ranking exactly.
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import geometry as geo
 from .. import tilemath as tm
-from .cells import encode_cells
+from .cells import _ident, encode_cells
 
 _I64 = np.int64
 
@@ -318,22 +319,70 @@ def pip_join(points: DataFrame, polys: DataFrame, zoom: int = 8,
 # kNN
 # ---------------------------------------------------------------------------
 
-def _sq_dist(lat_a, lon_a, lat_b, lon_b):
-    """Squared equirectangular-degree distance (ANSI-SQL-replayable)."""
-    dlat = lat_a - lat_b
-    dlon = (lon_a - lon_b) * F.cos(F.radians((lat_a + lat_b) / 2))
-    return dlat * dlat + dlon * dlon
-
+# squared equirectangular-degree distance (ANSI-SQL-replayable)
+_DIST_SQ = ("(lat - site_lat) * (lat - site_lat)"
+            " + ((lon - site_lon) * cos(radians((lat + site_lat) / 2)))"
+            " * ((lon - site_lon) * cos(radians((lat + site_lat) / 2)))")
 
 _MERC_LAT_LIMIT = 85.051128779806604  # degrees(atan(sinh(pi)))
 
+# helper columns of the plan, dropped from the result (a point input that
+# already carries cell / tile_x / tile_y loses them, on every method)
+_KNN_HELPERS = ("cell", "tile_x", "tile_y", "site_lat", "site_lon", "_bound",
+                "_exact", "_fk", "_fan_id", "_fan_lat", "_fan_lon")
 
-def _tile_row_lat_col(y, zoom: int):
-    """Latitude (degrees) of tile-row boundary ``y`` at ``zoom`` — column
-    twin of the numpy _tiley_to_lat, sinh spelled out (no F.sinh)."""
-    import math
-    r = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * y / F.lit(float(1 << zoom)))
-    return F.degrees(F.atan((F.exp(r) - F.exp(-r)) / F.lit(2.0)))
+
+def _dbl(v: float) -> str:
+    """A double literal in Spark SQL (a bare ``1.0`` parses as decimal)."""
+    return f"{v!r}D"
+
+
+def _box_bound_sql(zoom: int) -> str:
+    """Squared metric distance from a point (``lat``/``lon``, cell
+    ``tile_x``/``tile_y``) to the nearest edge of its 3×3 cell box at
+    ``zoom``, as Spark SQL: no site beyond the box is nearer than this."""
+    n = 1 << zoom
+    inf = "CAST('Infinity' AS DOUBLE)"
+
+    def row_lat(y: str) -> str:
+        # latitude of tile-row boundary y — the numpy _tiley_to_lat, sinh
+        # spelled out
+        r = (f"({_dbl(math.pi)} * ({_dbl(1.0)} - {_dbl(2.0)} * ({y})"
+             f" / {_dbl(float(n))}))")
+        return f"degrees(atan((exp({r}) - exp(-{r})) / {_dbl(2.0)}))"
+
+    north, south = "tile_y - 1 >= 0", f"tile_y + 2 <= {n}"
+    lat_n = (f"(CASE WHEN {north} THEN {row_lat('tile_y - 1')}"
+             f" ELSE {_dbl(_MERC_LAT_LIMIT)} END)")
+    lat_s = (f"(CASE WHEN {south} THEN {row_lat('tile_y + 2')}"
+             f" ELSE {_dbl(-_MERC_LAT_LIMIT)} END)")
+    terms = [
+        f"CASE WHEN {north} THEN ({lat_n} - lat) * ({lat_n} - lat)"
+        f" ELSE {inf} END",
+        f"CASE WHEN {south} THEN (lat - {lat_s}) * (lat - {lat_s})"
+        f" ELSE {inf} END"]
+    if n > 3:
+        # a site east/west of the box at a latitude INSIDE the box's range
+        # has metric lon-distance ≥ edge_gap × min(cos) over that range; a
+        # site outside the range is already covered by the lat-edge terms
+        cmin = f"least(cos(radians({lat_n})), cos(radians({lat_s})))"
+
+        def lon_at(x: str) -> str:
+            return (f"({x}) / {_dbl(float(n))} * {_dbl(360.0)}"
+                    f" - {_dbl(180.0)}")
+        terms += [f"power(({lon_at('tile_x + 2')} - lon) * {cmin}, 2)",
+                  f"power((lon - {lon_at('tile_x - 1')}) * {cmin}, 2)"]
+    # with 3 columns or fewer the box wraps the whole world east-west
+    return f"least({', '.join(terms)})"
+
+
+def _top_k(cand: DataFrame, pid: str, k: int) -> DataFrame:
+    """Distance and rank of each candidate per point; the k nearest stay.
+    Ties break on ``site_id``."""
+    w = f"PARTITION BY {pid} ORDER BY dist_sq ASC NULLS LAST, site_id ASC"
+    return (cand.withColumn("dist_sq", F.expr(_DIST_SQ))
+            .withColumn("knn_rank", F.expr(f"row_number() OVER ({w})"))
+            .filter(f"knn_rank <= {k}"))
 
 
 def knn_join(points: DataFrame, sites: DataFrame, k: int,
@@ -350,114 +399,89 @@ def knn_join(points: DataFrame, sites: DataFrame, k: int,
     per-point GUARANTEE CHECK: it is provably exact iff it found k
     candidates AND its k-th distance is smaller than the distance to the
     nearest edge of its 3×3 box (no site beyond the box can beat the
-    k-th). Points that fail re-run through the brute path — at a sane
-    zoom that is a sliver of the data, so the fallback join is tiny.
-    ``exact=False`` skips the check (the documented contract is then the
-    caller's problem — pick ``zoom`` so a cell ≳ the max kNN radius).
+    k-th). Points that fail — including points with no grid candidate —
+    are ranked against every site. ``exact=False`` skips the check (the
+    documented contract is then the caller's problem — pick ``zoom`` so a
+    cell ≳ the max kNN radius).
 
-    ``site_join`` sizes the grid candidate equi-join. ``"broadcast"``
-    (default) forces the hint — right for the documented POI-dictionary
-    shape (the 9×-exploded site table stays executor-memory-sized), and
-    forcing it keeps the huge points side shuffle-free (AQE's runtime
-    conversion still pays the probe side's full shuffle WRITE first —
-    the measured first_wins lesson). ``"auto"``: no hint — the scale
-    escape hatch when sites is itself planet-sized (millions of rows ×9
-    would OOM the driver under a forced broadcast); Catalyst/AQE then
-    picks a shuffle join.
+    The exact plan reads ``points`` once and has one consumer per
+    subtree, so it is lazy (no Spark job until an action) and computes
+    nothing twice: the grid candidates left-join the points, so a point
+    without candidates keeps one row; the guarantee is a window over the
+    ranking's url partitioning (a stats join would broadcast one row per
+    point), against a box bound computed once per point; the rank-1 row
+    of each failing point fans out to every site through one keyed join
+    (exact rows carry a key no site has); and a second window re-ranks on
+    the same partitioning. At a sane zoom the failing points are a sliver
+    of the data.
+
+    ``site_join`` sizes both site joins (the grid candidates and the
+    fan-out). ``"broadcast"`` (default) forces the hint — right for the
+    documented POI-dictionary shape (the 9×-exploded site table stays
+    executor-memory-sized), and forcing it keeps the huge points side
+    shuffle-free (AQE's runtime conversion still pays the probe side's
+    full shuffle WRITE first — the measured first_wins lesson).
+    ``"auto"``: no hint — the scale escape hatch when sites is itself
+    planet-sized (millions of rows ×9 would OOM the driver under a forced
+    broadcast); Catalyst/AQE then picks shuffle joins.
+
+    Points and sites with a null coordinate are dropped on every method
+    (they have no distance; an unfiltered NULL ``dist_sq`` would rank
+    meaninglessly).
     """
-    # null-coordinate sites never match the grid's cell equi-join; drop
-    # them from brute too (an unfiltered NULL dist_sq would sort FIRST
-    # under Spark's default ordering and displace true neighbors)
-    s = sites.filter(F.col("lat").isNotNull() & F.col("lon").isNotNull()) \
-        .select(F.col(site_id_col).alias("site_id"),
-                F.col("lat").alias("site_lat"), F.col("lon").alias("site_lon"))
+    pid = _ident(point_id_col)
+    hint = F.broadcast if site_join == "broadcast" else (lambda df: df)
+    pts = points.filter("lat IS NOT NULL AND lon IS NOT NULL")
+    s = sites.filter("lat IS NOT NULL AND lon IS NOT NULL").selectExpr(
+        f"{_ident(site_id_col)} AS site_id", "lat AS site_lat",
+        "lon AS site_lon")
     if method == "brute":
-        cand = points.crossJoin(F.broadcast(s))
-    else:
-        pts = encode_cells(points, zoom).filter(F.col("cell").isNotNull())
-        n_cells = 1 << zoom
-        sc = encode_cells(
-            s.withColumnRenamed("site_lat", "lat").withColumnRenamed("site_lon", "lon"),
-            zoom)
-        sc = (
-            sc.withColumn("_ox", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])))
-            .withColumn("_oy", F.explode(F.array(*[F.lit(i) for i in (-1, 0, 1)])))
-            .withColumn("_nx", F.pmod(F.col("tile_x") + F.col("_ox"), F.lit(n_cells)))
-            .withColumn("_ny", F.col("tile_y") + F.col("_oy"))
-            .filter((F.col("_ny") >= 0) & (F.col("_ny") < n_cells))
-            .select(F.col("site_id"), F.col("lat").alias("site_lat"),
-                    F.col("lon").alias("site_lon"),
-                    tm.pack_cell_col(F.lit(zoom), F.col("_nx"), F.col("_ny")).alias("cell"))
-        )
-        if site_join == "broadcast":
-            sc = F.broadcast(sc)
-        cand = pts.join(sc, on="cell", how="inner")
+        return _top_k(pts.crossJoin(F.broadcast(s)), pid, k) \
+            .drop(*_KNN_HELPERS)
 
-    cand = cand.withColumn(
-        "dist_sq", _sq_dist(F.col("lat"), F.col("lon"),
-                            F.col("site_lat"), F.col("site_lon")))
-    w = Window.partitionBy(point_id_col).orderBy(
-        F.col("dist_sq").asc_nulls_last(), F.col("site_id").asc())
-    ranked = (
-        cand.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-    )
-    if method == "brute" or not exact:
-        return ranked.drop("cell", "tile_x", "tile_y", "site_lat", "site_lon")
+    n = 1 << zoom
+    # every site lands in the 3×3 box of cells around its own (x wraps;
+    # array_distinct keeps a site once per cell on grids under 3 wide)
+    sc = (encode_cells(s, zoom, "site_lat", "site_lon")
+          .selectExpr("site_id", "site_lat", "site_lon", "tile_x",
+                      "explode(array(tile_y - 1, tile_y, tile_y + 1)) AS _ny")
+          .filter(f"_ny >= 0 AND _ny < {n}")
+          .selectExpr("site_id", "site_lat", "site_lon", "_ny",
+                      f"explode(array_distinct(array(pmod(tile_x - 1, {n}),"
+                      f" tile_x, pmod(tile_x + 1, {n})))) AS _nx")
+          .selectExpr("site_id", "site_lat", "site_lon",
+                      tm.pack_cell_sql(zoom, "_nx", "_ny") + " AS cell"))
+    cells = encode_cells(pts, zoom)
+    if exact:
+        # once per point, before the join: evaluated per ranked row (and
+        # twice, as the rank filter is pushed below it) this trig-heavy
+        # bound took half of the operator's time on the page workload
+        cells = cells.withColumn("_bound", F.expr(_box_bound_sql(zoom)))
+    ranked = _top_k(cells.join(
+        hint(sc), "cell", "left" if exact else "inner"), pid, k)
+    if not exact:
+        return ranked.drop(*_KNN_HELPERS)
 
-    # --- per-point exactness guarantee over the 3×3 box ---
-    n_cells = 1 << zoom
-    big = F.lit(float("inf"))
-    lat_n = F.when(F.col("tile_y") - 1 >= 0,
-                   _tile_row_lat_col(F.col("tile_y") - 1, zoom)) \
-        .otherwise(F.lit(_MERC_LAT_LIMIT))
-    lat_s = F.when(F.col("tile_y") + 2 <= n_cells,
-                   _tile_row_lat_col(F.col("tile_y") + 2, zoom)) \
-        .otherwise(F.lit(-_MERC_LAT_LIMIT))
-    term_n = F.when(F.col("tile_y") - 1 >= 0,
-                    (lat_n - F.col("lat")) * (lat_n - F.col("lat"))).otherwise(big)
-    term_s = F.when(F.col("tile_y") + 2 <= n_cells,
-                    (F.col("lat") - lat_s) * (F.col("lat") - lat_s)).otherwise(big)
-    if n_cells > 3:
-        # a site east/west of the box at a latitude INSIDE the box's range
-        # has metric lon-distance ≥ edge_gap × min(cos) over that range; a
-        # site outside the range is already covered by the lat-edge terms
-        cmin = F.least(F.cos(F.radians(lat_n)), F.cos(F.radians(lat_s)))
-        lon_e = (F.col("tile_x") + 2) / F.lit(float(n_cells)) * 360.0 - 180.0
-        lon_w = (F.col("tile_x") - 1) / F.lit(float(n_cells)) * 360.0 - 180.0
-        term_e = ((lon_e - F.col("lon")) * cmin) ** 2
-        term_w = ((F.col("lon") - lon_w) * cmin) ** 2
-    else:
-        term_e = term_w = big  # 3 columns wrap the whole world
-    safe_sq = F.least(term_n, term_s, term_e, term_w)
-
-    # window aggregates over the SAME partition key as the ranking window —
-    # the flags reuse the existing shuffle; a stats-join would broadcast
-    # one row per point (a driver bomb at planet scale)
-    w2 = Window.partitionBy(point_id_col)
-    flagged = (ranked
-               .withColumn("_nc", F.count("*").over(w2))
-               .withColumn("_kth", F.max("dist_sq").over(w2))
-               .withColumn("_exact", (F.col("_nc") == k)
-                           & (F.col("_kth") < safe_sq))
-               # `sure` appears in the union branch AND (keys-only) in the
-               # fallback anti-join; the lazy checkpoint computes the
-               # grid-join+window subtree once per action instead of twice
-               # (∝ points×k rows — the operator's own output size).
-               # Within-query reuse only, nothing persists across runs.
-               .localCheckpoint(eager=False))
-    sure = flagged.filter(F.col("_exact")).drop(
-        "_nc", "_kth", "_exact",
-        "cell", "tile_x", "tile_y", "site_lat", "site_lon")
-    # fallback set = points whose guarantee failed PLUS points with no
-    # grid candidates at all (absent from ranked). Anti-join directly
-    # against `sure` (anti needs no distinct), so the grid-join+window
-    # subtree executes twice per action — once per branch — not three
-    # times; AQE sizes the anti-join. Callers doing many actions over the
-    # result should persist it (or the points input) upstream.
-    fallback_pts = (points
-                    .filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-                    .join(sure.select(point_id_col), point_id_col, "left_anti"))
-    fb = knn_join(fallback_pts, sites, k, point_id_col, site_id_col,
-                  method="brute")
-    return sure.unionByName(fb.select(*sure.columns))
+    exact_sql = (f"coalesce(count(site_lat) OVER (PARTITION BY {pid}) = {k}"
+                 f" AND max(dist_sq) OVER (PARTITION BY {pid}) < _bound,"
+                 " false)")
+    # the fan-out key: failing points (false, 0) meet every site; exact
+    # rows carry true and keep their grid site. The site side's key is
+    # computed from a column that is never null there, not written as a
+    # literal: a literal key folds out of the join and leaves a
+    # nested-loop join. Exact rows are spread by their point's hash, so a
+    # shuffled fan-out ("auto") sends only the failing points to one key.
+    fan = hint(s.selectExpr(
+        "isnull(site_lat) AS _exact", "CAST(isnull(site_lat) AS BIGINT) AS _fk",
+        "site_id AS _fan_id", "site_lat AS _fan_lat", "site_lon AS _fan_lon"))
+    fanned = (ranked.withColumn("_exact", F.expr(exact_sql))
+              .filter("_exact OR knn_rank = 1")
+              .withColumn("_fk", F.expr(
+                  f"CASE WHEN _exact THEN xxhash64({pid}) ELSE 0L END"))
+              .join(fan, ["_exact", "_fk"], "left")
+              # a failing point with no site at all has no answer
+              .filter("_exact OR _fan_lat IS NOT NULL")
+              .withColumns({c: F.expr(f"CASE WHEN _exact THEN {c} "
+                                      f"ELSE _fan_{c[5:]} END")
+                            for c in ("site_id", "site_lat", "site_lon")}))
+    return _top_k(fanned, pid, k).drop(*_KNN_HELPERS)

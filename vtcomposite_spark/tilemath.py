@@ -15,8 +15,12 @@ From-scratch re-expression of the reference's zxy math:
   math so it is reproducible in any engine).
 
 Everything exists twice: a numpy form (used inside Arrow kernels and unit
-tests) and a Column-expression form (used in DataFrame plans so Catalyst can
-push down / codegen — tile assignment never crosses into Python).
+tests) and a Spark form — SQL text or a Column expression — used in
+DataFrame plans so Catalyst can push down / codegen (tile assignment never
+crosses into Python). The lon/lat → tile math is SQL text only
+(``tile_frac_sql`` / ``tile_xy_sql``): the DuckDB oracles parse the same
+text, and building a plan from it takes one Python-to-JVM round trip per
+expression instead of several per Column operator.
 """
 
 from __future__ import annotations
@@ -198,26 +202,40 @@ def morton_spark_sql(x: str, y: str) -> str:
     return _morton_expr(x, y, lambda v, s: f"shiftleft({v}, {s})")
 
 
+def tile_frac_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
+    """Fractional tile x/y at ``zoom`` over SQL expressions ``lon``/``lat``
+    — the one lon/lat → tile formula of the Spark plans (``encode_cells``,
+    ``tile_pixels``) and of the DuckDB oracles, as text both dialects
+    parse. The evaluation order is the numpy form's: ``(lon + 180) / 360
+    * n`` is not the same double as ``(lon + 180) * (n / 360)``. One
+    ``F.expr`` of this text costs one Python-to-JVM round trip, where the
+    equivalent Column tree costs several per operator."""
+    n = 1 << zoom
+    merc = f"ln(tan(radians({lat})) + 1.0 / cos(radians({lat})))"
+    return (f"({lon} + 180.0) / 360.0 * {n}",
+            f"(1.0 - {merc} / pi()) / 2.0 * {n}")
+
+
+def tile_xy_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
+    """Integer tile x/y containing lon/lat at ``zoom``, clipped to the
+    grid like ``lonlat_to_tile`` (SQL text; see ``tile_frac_sql``)."""
+    top = (1 << zoom) - 1
+    return tuple(f"greatest(0, least(CAST(floor({f}) AS BIGINT), {top}))"
+                 for f in tile_frac_sql(lon, lat, zoom))
+
+
+def pack_cell_sql(zoom: int, x: str, y: str) -> str:
+    """Spark-SQL form of ``pack_cell`` for a constant ``zoom`` (callers
+    check it against MAX_CELL_ZOOM, as ``encode_cells`` does)."""
+    return (f"({zoom << 58} | shiftleft(CAST({x} AS BIGINT), 29)"
+            f" | CAST({y} AS BIGINT))")
+
+
 # ---------------------------------------------------------------------------
 # Spark Column forms (kept JVM-side: codegen'd, pushdown-friendly)
 # ---------------------------------------------------------------------------
 
 if _HAVE_SPARK:
-
-    def lon_to_tilex_col(lon: Column, zoom) -> Column:
-        return (lon + F.lit(180.0)) / F.lit(360.0) * F.call_function("shiftleft", F.lit(1), F.lit(zoom) if not isinstance(zoom, Column) else zoom)
-
-    def lat_to_tiley_col(lat: Column, zoom) -> Column:
-        phi = F.radians(lat)
-        merc = F.log(F.tan(phi) + F.lit(1.0) / F.cos(phi))
-        return (F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * F.call_function("shiftleft", F.lit(1), F.lit(zoom) if not isinstance(zoom, Column) else zoom)
-
-    def tile_xy_cols(lon: Column, lat: Column, zoom) -> tuple[Column, Column]:
-        n = F.call_function("shiftleft", F.lit(1), F.lit(zoom) if not isinstance(zoom, Column) else zoom).cast("long")
-        tx = F.floor(lon_to_tilex_col(lon, zoom)).cast("long")
-        ty = F.floor(lat_to_tiley_col(lat, zoom)).cast("long")
-        clip = lambda c: F.greatest(F.lit(0).cast("long"), F.least(c, n - F.lit(1).cast("long")))  # noqa: E731
-        return clip(tx), clip(ty)
 
     def within_target_col(src_z: Column, src_x: Column, src_y: Column,
                           z: Column, x: Column, y: Column) -> Column:
