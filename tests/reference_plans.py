@@ -6,9 +6,10 @@ step per reference stage, with no source grouping, packing or splicing —
 the library's plan (``operators.composite._source_grouped``) must
 reproduce their rows as a multiset and their tiles byte for byte.
 
-* ``composite_rows``: ancestor join → keep-list → first-wins semi-join →
-  dz/displacement prep with the envelope prune → the Arrow clip kernel,
-  one feature row per (feature, target) pair.
+* ``composite_rows``: ancestor join → keep-list → first-wins semi-join
+  (``first_wins_semi``) → dz/displacement prep with the envelope prune →
+  the Arrow clip kernel (``overzoom_clip``), one feature row per
+  (feature, target) pair.
 * ``encode_rows``: one ``applyInPandas`` group per target tile, rebuilt
   as ``mvt.Feature`` objects and serialized by ``mvt.encode_tile``.
 * ``pip_rows``: every point against every polygon (a cross join, no cell
@@ -27,7 +28,9 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vtcomposite_spark.operators import composite as C
 from vtcomposite_spark.sources import mvt
@@ -40,8 +43,37 @@ def composite_rows(features, targets, src_zooms=None):
         targets = targets.withColumn(
             "keep_layers", F.lit(None).cast("array<string>"))
     j = C.ancestor_join(features, targets, src_zooms=src_zooms)
-    j = C.first_wins(C.apply_keep_layers(j))
-    return C.overzoom_clip(j).drop("keep_layers")
+    j = first_wins_semi(C.apply_keep_layers(j))
+    return overzoom_clip(j).drop("keep_layers")
+
+
+def first_wins_semi(df):
+    """First-wins as an aggregate and a semi-join: the winners are
+    min(tile_idx) per (target, layer), and the rows that match one stay.
+    No join hint. Independent of the library's window form
+    (``operators.composite.first_wins``), which must keep the same rows
+    in the same column order."""
+    winners = (df.groupBy("z", "x", "y", "layer")
+               .agg(F.min("tile_idx").alias("tile_idx")))
+    return df.join(winners, on=["z", "x", "y", "layer", "tile_idx"],
+                   how="left_semi")
+
+
+def overzoom_clip(df):
+    """Per-feature overzoom affine + clip over target-joined rows as ONE
+    Arrow crossing: the dz/displacement prep with the JVM envelope prune
+    (``operators.composite._overzoom_prep``), then the clip kernel
+    (``_overzoom_clip_batches``). Same-zoom rows (dz == 0) pass through
+    untouched inside the kernel — the reference's raw-copy fast path
+    (src/vtcomposite.cpp:253-256)."""
+    df = C._overzoom_prep(df)
+    out_fields = [f for f in df.schema.fields
+                  if f.name not in C._KERNEL_HELPER_COLS]
+    out_schema = pa.schema([pa.field(f.name, C._to_arrow(f.dataType))
+                            for f in out_fields])
+    return df.mapInArrow(
+        lambda it: C._overzoom_clip_batches(it, out_schema),
+        schema=T.StructType(out_fields))
 
 
 def encode_rows(composited):

@@ -269,6 +269,129 @@ def test_randomized_multizoom_relational_parity(spark, seed):
     _check(feats, targets)
 
 
+@pytest.mark.parametrize("seed", [30, 31, 32, 33])
+def test_randomized_composite_points_parity(spark, seed):
+    """Randomized POINT tilesets — multipoints with one part per point, as
+    ingest produces them, at two zooms sharing layer names — through
+    ``composite_points`` (per-row plan, first-wins window, pure JVM
+    clip): the same columns and the same rows as a multiset as
+    ``composite`` and the per-row reference (first-wins as a semi-join).
+    The generator covers keep-lists, dz=0 targets (raw pass-through,
+    points outside the extent included), points exactly on ±buffer and a
+    NULL ``buffer_size`` on a dz=0 and on a dz>0 target, and asserts that
+    it hit a layer won by the higher zoom, a dz=0 target and an edge
+    point."""
+    import numpy as np
+
+    from vtcomposite_spark.sources import mvt
+
+    rng = np.random.default_rng(seed)
+    ZLO, ZHI, EXT = 4, 5, 4096
+
+    def point_feature(parts):
+        return mvt.Feature(geom_type=1, parts=[[p] for p in parts],
+                           ring_types=[],
+                           properties={"k": int(rng.integers(0, 5))},
+                           prop_types=None,
+                           fid=int(rng.integers(0, 99))
+                           if rng.random() < .5 else None)
+
+    def rand_points():
+        return [(int(rng.integers(-300, EXT + 300)),
+                 int(rng.integers(-300, EXT + 300)))
+                for _ in range(rng.integers(1, 4))]
+
+    lo = [(ZLO, int(rng.integers(0, 2)), int(rng.integers(0, 2)))
+          for _ in range(2)]
+    hi = []
+    for _ in range(4):
+        _, px, py = lo[int(rng.integers(0, len(lo)))]
+        hi.append((ZHI, 2 * px + int(rng.integers(0, 2)),
+                   2 * py + int(rng.integers(0, 2))))
+    # tile order (tile_idx) shuffled across zooms, a z5 tile first: it
+    # wins L0 over its z4 parent
+    srcs = [hi[0]] + [(lo + hi[1:])[i] for i in rng.permutation(
+        len(lo) + len(hi) - 1)]
+
+    def target(src, dz, buffer_size):
+        sz, sx, sy = src
+        return (sz + dz, (sx << dz) + int(rng.integers(0, 1 << dz)),
+                (sy << dz) + int(rng.integers(0, 1 << dz)), buffer_size,
+                [f"L{li}" for li in rng.choice(3, size=int(
+                    rng.integers(1, 3)), replace=False)]
+                if rng.random() < 0.3 else None,
+                bool(rng.random() < 0.3))
+
+    # a NULL buffer on a dz=0 and on a dz>0 target, then random targets
+    placed = [(hi[0], target(hi[0], 0, None)),
+              (hi[1], target(hi[1], 1, None))]
+    placed += [(s, target(s, int(rng.integers(0, 3)),
+                          int(rng.choice([0, 128, 4080]))))
+               for s in srcs for _ in range(int(rng.integers(1, 4)))]
+
+    def edge_points(src):
+        """Points that land exactly on -buffer / extent + buffer of one of
+        ``src``'s overzoomed targets, mid-window on the other axis."""
+        out = []
+        for s, (tz, tx, ty, b, _, _) in placed:
+            dz = tz - src[0]
+            if s != src or dz == 0 or b is None:
+                continue
+            cx, cy = tx - (src[1] << dz), ty - (src[2] << dz)
+            mid = (cy * EXT + EXT // 2) >> dz
+            out += [((cx * EXT - b) >> dz, mid),
+                    ((cx * EXT + EXT + b) >> dz, mid)]
+        return out
+
+    def tile(src):
+        # every tile has L0, so zooms compete for it; its edge points ride
+        # a layer of its own, which no other tile's first-wins can take
+        names = [0] + [li for li in (1, 2) if rng.random() < 0.5]
+        layers = [mvt.Layer(name=f"L{names[i]}", features=[
+            point_feature(rand_points()) for _ in range(rng.integers(1, 5))])
+            for i in rng.permutation(len(names))]
+        edge = edge_points(src)
+        if edge:
+            layers.append(mvt.Layer(name=f"E{src}",
+                                    features=[point_feature(edge)]))
+        return mvt.encode_tile(layers)
+
+    feats = ingest.features_from_tiles(spark, [(tile(s), *s) for s in srcs])
+    trows = [t for _, t in placed]
+    seen: dict = {}
+    for r in trows:
+        seen.setdefault(r[:3], r)
+    targets = spark.createDataFrame(
+        list(seen.values()), "z int, x long, y long, buffer_size int, "
+        "keep_layers array<string>, compress boolean")
+
+    want = R.composite_rows(feats, targets)
+    rows = want.collect()
+    # coverage: a (target, layer) with candidates at both zooms that the
+    # higher zoom wins, a dz=0 target, an edge point
+    cand = C.apply_keep_layers(C.ancestor_join(feats, targets)).select(
+        "z", "x", "y", "layer", "src_z", "tile_idx").collect()
+    best: dict = {}
+    zooms: dict = {}
+    for r in cand:
+        k = (r.z, r.x, r.y, r.layer)
+        zooms.setdefault(k, set()).add(r.src_z)
+        best[k] = min(best.get(k, (r.tile_idx, r.src_z)),
+                      (r.tile_idx, r.src_z))
+    assert any(len(zooms[k]) > 1 and best[k][1] == ZHI for k in best)
+    assert any(r.z == r.src_z and any(v < 0 or v >= EXT
+                                      for v in r.xs + r.ys) for r in rows)
+    assert any(r.z > r.src_z and r.buffer_size is not None and any(
+        v in (-r.buffer_size, EXT + r.buffer_size) for v in r.xs + r.ys)
+        for r in rows)
+    w = _canon(want)
+    assert w  # non-trivial
+    for got in (C.composite_points(feats, targets),
+                C.composite(feats, targets)):
+        assert got.columns == want.columns
+        assert _canon(got) == w
+
+
 def test_empty_declared_zooms_yield_empty(spark, fixture_bytes):
     """An explicitly-declared EMPTY src_zooms list (e.g. computed from an
     empty catalog) must yield an empty result with the right schema in

@@ -4,6 +4,10 @@
 and module-level assignment in the library is named somewhere else in the
 repository's Python files — a caller, a test, a tool or a docstring. Code
 with zero references goes.
+
+``test_no_unreferenced_scripts``: every script in ``tools/`` and at the
+repository root is used — another Python file names or imports it, or
+README.md or CLAUDE.md documents it. A script nothing names goes.
 """
 
 import ast
@@ -48,3 +52,18 @@ def test_no_zero_reference_definitions():
     assert not unreferenced, (
         "top-level definitions nothing else names:\n"
         + "\n".join(unreferenced))
+
+
+def test_no_unreferenced_scripts():
+    docs = [ROOT / "README.md", ROOT / "CLAUDE.md"]
+    texts = {p: p.read_text() for p in _py_files() + docs if p.exists()}
+    unused = []
+    for script in sorted([*ROOT.glob("*.py"), *ROOT.glob("tools/*.py")]):
+        stem = re.escape(script.stem)
+        # the file name (a command, a path) or an import of the module
+        named = re.compile(rf"\b{stem}\.py\b|\bimport\s+{stem}\b"
+                           rf"|\bfrom\s+{stem}\s+import\b|\btools\.{stem}\b")
+        if not any(named.search(text) for p, text in texts.items()
+                   if p != script):
+            unused.append(str(script.relative_to(ROOT)))
+    assert not unused, "scripts nothing names:\n" + "\n".join(unused)

@@ -65,33 +65,28 @@ def _canon(df):
 
 def test_composite_auto_join_no_broadcast_regime(spark):
     """J1 scale fallback: with every auto-broadcast disabled (the regime a
-    planet-scale target set forces), the unhinted ancestor join and
-    ``winners_join='auto'`` must run the whole composite on shuffle joins —
-    no BroadcastExchange anywhere — and produce exactly the
-    forced-broadcast results."""
+    planet-scale target set forces), the unhinted ancestor join and the
+    first-wins window run the whole point composite on shuffles — no
+    BroadcastExchange anywhere — and produce exactly the default
+    session's rows."""
     from vtcomposite_spark.operators.composite import composite_points
     feats, targets = _points_fixture(spark)
-    want = _canon(composite_points(feats, targets, winners_join="broadcast"))
+    want = _canon(composite_points(feats, targets))
     assert want  # non-trivial output
     with _no_broadcast(spark):
-        out = composite_points(feats, targets, winners_join="auto")
+        out = composite_points(feats, targets)
         got = _canon(out)  # collect first: AQE finalizes the plan on run
         plan = _final_plan(out)
     assert got == want
     assert "BroadcastExchange" not in plan
-    # forced hints still broadcast even in the no-auto regime
-    hinted = composite_points(feats, targets, winners_join="broadcast")
-    with _no_broadcast(spark):
-        hinted.collect()
-        assert "BroadcastExchange" in _final_plan(hinted)
 
 
 def test_ann_ivf_probe_join_regimes(spark):
     """VERDICT r3 item 2: the IVF probe join must not FORCE a broadcast —
-    under the no-auto-broadcast (planet-query-set) regime, probe_join=
-    'auto' runs the bucket equi-join as a shuffle join with identical
-    results; 'broadcast' still forces the hint (one more BroadcastExchange
-    than auto, beyond the always-forced tiny centroid joins)."""
+    under the no-auto-broadcast (planet-query-set) regime the bucket
+    equi-join runs as a shuffle join with the default session's results;
+    only the tiny centroid cross joins, forced by design, still
+    broadcast."""
     import numpy as np
 
     from vtcomposite_spark.operators import similarity as S
@@ -102,21 +97,15 @@ def test_ann_ivf_probe_join_regimes(spark):
     q = emb.limit(10)
     kw = dict(n_centroids=4, nprobe=2, centroids="seed")
     want = sorted((r.query_id, r.corpus_id, r.cos, r.rank) for r in
-                  S.ann_topk_ivf(q, emb, 3, probe_join="broadcast",
-                                 **kw).collect())
+                  S.ann_topk_ivf(q, emb, 3, **kw).collect())
     assert want
     with _no_broadcast(spark):
-        auto = S.ann_topk_ivf(q, emb, 3, probe_join="auto", **kw)
+        out = S.ann_topk_ivf(q, emb, 3, **kw)
         got = sorted((r.query_id, r.corpus_id, r.cos, r.rank)
-                     for r in auto.collect())
-        auto_plan = _final_plan(auto)
-        forced = S.ann_topk_ivf(q, emb, 3, probe_join="broadcast", **kw)
-        forced.collect()
-        forced_plan = _final_plan(forced)
+                     for r in out.collect())
+        plan = _final_plan(out)
     assert got == want
-    assert "SortMergeJoin" in auto_plan or "ShuffledHashJoin" in auto_plan
-    assert forced_plan.count("BroadcastExchange") \
-        > auto_plan.count("BroadcastExchange")
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
 def _knn_fixture(spark):
@@ -132,28 +121,22 @@ def _knn_fixture(spark):
 
 
 def test_knn_grid_site_join_regimes(spark):
-    """VERDICT r3 item 7: knn_join(grid) site-side strategy — 'auto' under
-    the no-auto-broadcast regime runs shuffle joins only (zero
-    BroadcastExchange, with exact=False and with the exact path's fan-out
-    of points that fail the guarantee) with results identical to the
-    forced-broadcast default."""
+    """VERDICT r3 item 7: knn_join(grid)'s site joins carry no hint —
+    under the no-auto-broadcast regime they run as shuffle joins only
+    (zero BroadcastExchange, with exact=False and with the exact path's
+    fan-out of points that fail the guarantee), with the default
+    session's results."""
     from vtcomposite_spark.operators.joins import knn_join
     pts, sites = _knn_fixture(spark)
     key = lambda df: sorted(  # noqa: E731
         (r.url, r.site_id, r.knn_rank, r.dist_sq) for r in df.collect())
     for exact in (False, True):
-        want = key(knn_join(pts, sites, 3, zoom=2, exact=exact,
-                            site_join="broadcast"))
+        want = key(knn_join(pts, sites, 3, zoom=2, exact=exact))
         assert len(want) == 3 * 200
         with _no_broadcast(spark):
-            auto = knn_join(pts, sites, 3, zoom=2, exact=exact,
-                            site_join="auto")
-            got = key(auto)
-            assert "BroadcastExchange" not in _final_plan(auto), exact
-            forced = knn_join(pts, sites, 3, zoom=2, exact=exact,
-                              site_join="broadcast")
-            forced.collect()
-            assert "BroadcastExchange" in _final_plan(forced), exact
+            out = knn_join(pts, sites, 3, zoom=2, exact=exact)
+            got = key(out)
+            assert "BroadcastExchange" not in _final_plan(out), exact
         assert got == want, exact
 
 
@@ -349,11 +332,9 @@ def _plan_builds():
             C.composite_encode_tiles(*_points_fixture(s), [4])),
     }
     for method, exact in (("grid", True), ("grid", False), ("brute", True)):
-        for site_join in ("broadcast", "auto"):
-            builds[f"knn_join-{method}-exact{exact}-{site_join}"] = (
-                lambda s, m=method, e=exact, j=site_join: knn_join(
-                    *_knn_fixture(s), 3, method=m, zoom=3, exact=e,
-                    site_join=j))
+        builds[f"knn_join-{method}-exact{exact}"] = (
+            lambda s, m=method, e=exact: knn_join(
+                *_knn_fixture(s), 3, method=m, zoom=3, exact=e))
     for build in (C.composite, C.composite_packed, C.composite_encode_tiles):
         for zooms in ([4], [4, 5], None):
             builds[f"{build.__name__}-{zooms}"] = (

@@ -348,7 +348,7 @@ def test_sample_rounding_half_up_and_mixture_alignment(spark):
 def test_unigram_surprisal_hand_case_and_twin(spark):
     """Corpus 'a a a b': T=4, surprisal(a)=ln(4/3), surprisal(b)=ln(4);
     doc sums/averages match the closed form; empty docs emit nothing;
-    broadcast vocab join is value-identical; DuckDB twin matches."""
+    DuckDB twin matches."""
     import math
 
     import pandas as pd
@@ -362,11 +362,6 @@ def test_unigram_surprisal_hand_case_and_twin(spark):
     mb = int(math.floor(math.log(4.0 / 1.0) * 1e6 + 0.5))
     assert out == {1: (3, 3 * ma, int(math.floor(3 * ma / 3))),
                    2: (1, mb, mb)}
-    bcast = {r.doc_id: (r.n_tokens, r.surprisal_micro_sum,
-                        r.avg_surprisal_micro)
-             for r in CH.unigram_surprisal(
-                 docs, vocab_join="broadcast").collect()}
-    assert bcast == out
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     want = {d: (n, s, a) for d, n, s, a in

@@ -129,8 +129,7 @@ def distinctive_terms_sql(group_col: str = "lang", text_col: str = "text",
 
 
 def unigram_surprisal(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      vocab_join: str = "auto") -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """Self-perplexity quality signal (the CCNet/Wiki-LM filter shape
     with the corpus itself as the language model): per document, the
     average per-token surprisal −ln(tf_corpus/T) under the corpus's
@@ -145,16 +144,15 @@ def unigram_surprisal(docs: DataFrame, id_col: str = "doc_id",
     division sum/n floored, identical in both engines.
 
     100-TB shape: one explode (rows ∝ tokens), term counts with map-side
-    combine, a term-keyed shuffle join of tokens to counts (pass
-    ``vocab_join="broadcast"`` when the vocabulary fits the driver), T
-    as a broadcast 1-row aggregate, then a keys-only per-doc groupBy.
+    combine, an unhinted term-keyed join of tokens to counts (AQE
+    broadcasts a vocabulary that fits and shuffle-joins one that does
+    not), T as a broadcast 1-row aggregate, then a keys-only per-doc
+    groupBy.
     """
     toks = docs.select(F.col(id_col).alias("_id"),
                        F.explode(TX.tokens_col(F.col(text_col))).alias("term"))
     counts = toks.groupBy("term").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
-    if vocab_join == "broadcast":
-        counts = F.broadcast(counts)
     per_tok = (toks.join(counts, "term")
                .crossJoin(F.broadcast(total))
                .select("_id", F.round(
@@ -605,8 +603,7 @@ def bigram_merge_candidates_sql(k: int = 20, min_count: int = 2,
 
 
 def bigram_surprisal(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     counts_join: str = "auto") -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """Context-aware LM quality signal: per document, the average
     bigram surprisal −ln p(w2|w1) under the corpus's own add-1-smoothed
     bigram model, p(w2|w1) = (c(w1,w2)+1)/(c(w1·)+V) with c(w1·) the
@@ -622,18 +619,16 @@ def bigram_surprisal(docs: DataFrame, id_col: str = "doc_id",
     BEFORE the order-independent per-doc sum; the bm25/dsir rule.
 
     100-TB shape: pair counts and head counts are map-side-combine
-    groupBys; the per-bigram joins key on (w1, w2)/(w1) — shuffle joins
-    by default (the pair vocabulary is corpus-sized;
-    ``counts_join="broadcast"`` forces broadcast when it fits), V rides
-    a 1-row broadcast, and the per-doc rollup is keys-only.
+    groupBys; the per-bigram joins key on (w1, w2)/(w1) and carry no hint
+    (the pair vocabulary is corpus-sized; AQE broadcasts it only when it
+    fits), V rides a 1-row broadcast, and the per-doc rollup is
+    keys-only.
     """
     bg = _bigrams(docs, id_col, text_col)
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     c1 = bg.groupBy("w1").agg(F.count("*").alias("c1"))
     vocab = (docs.select(F.explode(TX.tokens_col(F.col(text_col)))
                          .alias("w")).agg(F.count_distinct("w").alias("v")))
-    if counts_join == "broadcast":
-        c12, c1 = F.broadcast(c12), F.broadcast(c1)
     per = (bg.join(c12, ["w1", "w2"]).join(c1, "w1")
            .crossJoin(F.broadcast(vocab))
            .select("_id", F.round(F.log(

@@ -33,8 +33,10 @@ check fails the first action.
 
 ``encode_tiles`` is the S3/S4 sink for relational rows: one packed row per
 target, multi-tile encode. ``composite_points`` is the all-point
-specialization (pure JVM expressions). Scale: no side is force-broadcast in
-the plan; Catalyst and AQE size the joins from real statistics.
+specialization, a per-row plan in pure JVM expressions: ancestor join,
+keep-list, first-wins as a window keyed by the target (``first_wins``),
+point clip. Scale: no side is force-broadcast in any of these plans;
+Catalyst and AQE size the joins and exchanges from real statistics.
 """
 
 from __future__ import annotations
@@ -109,31 +111,23 @@ def apply_keep_layers(df: DataFrame) -> DataFrame:
     )
 
 
-def first_wins(df: DataFrame, winners_join: str = "broadcast") -> DataFrame:
+def first_wins(df: DataFrame) -> DataFrame:
     """A2: first tile contributing a layer name wins, per target tile
     (src/vtcomposite.cpp:210,243-251; test/vtcomposite.test.js:50-71).
 
-    Winners = groupBy(target, layer).min(tile_idx) — shuffles only the 5
-    key columns with map-side combine, then semi-joins back.
-
-    ``winners_join`` sizes the semi-join. ``"broadcast"`` (default) forces
-    the hint: winners are keys-only (one row per tile×layer), and the
-    forced broadcast keeps the FULL-WIDTH features side shuffle-free.
-    ``"auto"`` leaves it to AQE — scale-safe for planet-scale winner sets
-    (>~100M tile×layer rows, where a forced broadcast OOMs the driver) but
-    measurably slower below that: AQE's runtime conversion still pays the
-    probe side's full-width shuffle WRITE before it can decide (measured
-    2.3× on the lines-overzoom bench, 9.9s auto vs 4.3s broadcast at
-    1000 tiles / 2M joined rows).
+    A window keyed by the target: ``min(tile_idx) OVER (PARTITION BY z,
+    x, y, layer)``, and the rows that equal it stay. One consumer of
+    ``df`` and no join, so the target-joined rows are read once and
+    Catalyst/AQE size the one exchange. Rows with a NULL ``layer`` never
+    win (a window would group them together; an equi-join drops them).
+    The key columns lead, in the order ``z, x, y, layer, tile_idx``.
     """
-    winners = (
-        df.groupBy("z", "x", "y", "layer")
-        .agg(F.min("tile_idx").alias("tile_idx"))
-    )
-    if winners_join == "broadcast":
-        winners = F.broadcast(winners)
-    return df.join(winners, on=["z", "x", "y", "layer", "tile_idx"],
-                   how="left_semi")
+    keys = ["z", "x", "y", "layer", "tile_idx"]
+    return (df.filter("layer IS NOT NULL")
+            .withColumn("_first", F.expr(
+                "min(tile_idx) OVER (PARTITION BY z, x, y, layer)"))
+            .filter("tile_idx = _first")
+            .select(*keys, *[c for c in df.columns if c not in keys]))
 
 
 # ---------------------------------------------------------------------------
@@ -279,7 +273,8 @@ def _overzoom_clip_batches(it: Iterator[pa.RecordBatch], out_schema: pa.Schema):
 
 def _overzoom_prep(df: DataFrame) -> DataFrame:
     """dz + displacement columns and the JVM-side envelope prune for
-    target-joined feature rows (``overzoom_clip``).
+    target-joined feature rows, the input of ``_overzoom_clip_batches`` in
+    the per-row reference plan (``tests/reference_plans.py``).
 
     The envelope pre-filter runs in codegen: a feature whose scaled bbox
     misses the target clip window never crosses to Python — the
@@ -309,30 +304,6 @@ def _overzoom_prep(df: DataFrame) -> DataFrame:
     return df.filter(
         (F.col("dz") == 0)
         | ((bxmax >= blo) & (bxmin <= bhi) & (bymax >= blo) & (bymin <= bhi))
-    )
-
-
-def overzoom_clip(df: DataFrame) -> DataFrame:
-    """F1-F7: per-feature overzoom affine + clip as ONE Arrow crossing.
-
-    Expects target-joined rows (columns z/x/y/buffer_size present). Same-zoom
-    rows (dz == 0) pass through untouched *inside* the kernel — the
-    reference's raw-copy fast path (src/vtcomposite.cpp:253-256): no clip is
-    applied at same zoom. Keeping the fast path inside the single kernel
-    (rather than a filter/union split) keeps the plan to ONE scan and ONE
-    join — a union of filtered branches would re-execute the whole upstream
-    subtree per branch, which at 100 TB doubles the dominant cost.
-    """
-    df = _overzoom_prep(df)
-
-    out_fields = [f for f in df.schema.fields if f.name not in _KERNEL_HELPER_COLS]
-    out_schema_spark = T.StructType(out_fields)
-    out_schema_arrow = pa.schema([
-        pa.field(f.name, _to_arrow(f.dataType)) for f in out_fields])
-
-    return df.mapInArrow(
-        lambda it: _overzoom_clip_batches(it, out_schema_arrow),
-        schema=out_schema_spark,
     )
 
 
@@ -377,14 +348,15 @@ def overzoom_clip_points_expr(df: DataFrame) -> DataFrame:
     )
 
 
-def composite_points(features: DataFrame, targets: DataFrame,
-                     winners_join: str = "broadcast") -> DataFrame:
+def composite_points(features: DataFrame, targets: DataFrame) -> DataFrame:
     """Composite specialization for all-point features (e.g. the page
-    pipeline): same plan as ``composite`` with the geometry step in pure
-    expressions — zero Python crossings end-to-end."""
+    pipeline): ``composite``'s rows, with the geometry step in pure
+    expressions — zero Python crossings end-to-end. The plan is per row:
+    ancestor join, keep-list, the ``first_wins`` window keyed by target,
+    then the point clip."""
     j = ancestor_join(features, targets)
     j = apply_keep_layers(j)
-    j = first_wins(j, winners_join=winners_join)
+    j = first_wins(j)
     return overzoom_clip_points_expr(j).drop("keep_layers")
 
 

@@ -415,7 +415,7 @@ def dedupe_corpus(docs: DataFrame, pairs: DataFrame,
 
 def dedupe_lines(docs: DataFrame, min_count: int = 2,
                  text_col: str = "text", id_col: str = "doc_id",
-                 delimiter: str = "\n", hot_join: str = "auto",
+                 delimiter: str = "\n",
                  scope_col: str | None = None) -> DataFrame:
     """Corpus-level LINE deduplication — the CCNet/RefinedWeb boilerplate
     pass: lines occurring ``min_count``+ times ACROSS the corpus (nav
@@ -436,8 +436,8 @@ def dedupe_lines(docs: DataFrame, min_count: int = 2,
     100-TB shape: lines explode to rows (∝ corpus lines); the hot set is
     one groupBy(line) count with map-side combine reduced to the small
     over-threshold line strings; membership is a left join the exploded
-    side streams through (AQE broadcasts a small hot set —
-    ``hot_join="broadcast"`` forces it) and the regroup is one shuffle
+    side streams through (unhinted: AQE broadcasts a small hot set and
+    shuffle-joins a big one) and the regroup is one shuffle
     keyed by doc id. Nothing ever pairs docs. Scoping makes the hot key
     wider but ALSO splits hot-key skew across sites — the (scope, line)
     key is strictly better-distributed than (line) at crawl scale.
@@ -454,8 +454,6 @@ def dedupe_lines(docs: DataFrame, min_count: int = 2,
            .groupBy(*key).agg(F.count("*").alias("c"))
            .filter(F.col("c") >= min_count)
            .select(*key, F.lit(True).alias("_hot")))
-    if hot_join == "broadcast":
-        hot = F.broadcast(hot)
     marked = lines.join(hot, on=key, how="left")
     return (marked.groupBy(id_col).agg(
         F.count("*").alias("n_lines"),

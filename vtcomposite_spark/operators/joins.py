@@ -388,7 +388,7 @@ def _top_k(cand: DataFrame, pid: str, k: int) -> DataFrame:
 def knn_join(points: DataFrame, sites: DataFrame, k: int,
              point_id_col: str = "url", site_id_col: str = "site_id",
              method: str = "grid", zoom: int = 6,
-             exact: bool = True, site_join: str = "broadcast") -> DataFrame:
+             exact: bool = True) -> DataFrame:
     """J3: for each point, its k nearest sites.
 
     ``brute``: broadcast cross join — exact; right when sites is small
@@ -415,22 +415,16 @@ def knn_join(points: DataFrame, sites: DataFrame, k: int,
     the same partitioning. At a sane zoom the failing points are a sliver
     of the data.
 
-    ``site_join`` sizes both site joins (the grid candidates and the
-    fan-out). ``"broadcast"`` (default) forces the hint — right for the
-    documented POI-dictionary shape (the 9×-exploded site table stays
-    executor-memory-sized), and forcing it keeps the huge points side
-    shuffle-free (AQE's runtime conversion still pays the probe side's
-    full shuffle WRITE first — the measured first_wins lesson).
-    ``"auto"``: no hint — the scale escape hatch when sites is itself
-    planet-sized (millions of rows ×9 would OOM the driver under a forced
-    broadcast); Catalyst/AQE then picks shuffle joins.
+    The grid path's two site joins (the candidates and the fan-out) carry
+    no hint: Catalyst broadcasts a POI-dictionary-sized site table on its
+    own statistics, and a planet-sized one shuffle-joins instead of
+    OOMing the driver on a forced broadcast.
 
     Points and sites with a null coordinate are dropped on every method
     (they have no distance; an unfiltered NULL ``dist_sq`` would rank
     meaninglessly).
     """
     pid = _ident(point_id_col)
-    hint = F.broadcast if site_join == "broadcast" else (lambda df: df)
     pts = points.filter("lat IS NOT NULL AND lon IS NOT NULL")
     s = sites.filter("lat IS NOT NULL AND lon IS NOT NULL").selectExpr(
         f"{_ident(site_id_col)} AS site_id", "lat AS site_lat",
@@ -457,8 +451,8 @@ def knn_join(points: DataFrame, sites: DataFrame, k: int,
         # twice, as the rank filter is pushed below it) this trig-heavy
         # bound took half of the operator's time on the page workload
         cells = cells.withColumn("_bound", F.expr(_box_bound_sql(zoom)))
-    ranked = _top_k(cells.join(
-        hint(sc), "cell", "left" if exact else "inner"), pid, k)
+    ranked = _top_k(cells.join(sc, "cell", "left" if exact else "inner"),
+                    pid, k)
     if not exact:
         return ranked.drop(*_KNN_HELPERS)
 
@@ -470,10 +464,10 @@ def knn_join(points: DataFrame, sites: DataFrame, k: int,
     # computed from a column that is never null there, not written as a
     # literal: a literal key folds out of the join and leaves a
     # nested-loop join. Exact rows are spread by their point's hash, so a
-    # shuffled fan-out ("auto") sends only the failing points to one key.
-    fan = hint(s.selectExpr(
+    # shuffled fan-out sends only the failing points to one key.
+    fan = s.selectExpr(
         "isnull(site_lat) AS _exact", "CAST(isnull(site_lat) AS BIGINT) AS _fk",
-        "site_id AS _fan_id", "site_lat AS _fan_lat", "site_lon AS _fan_lon"))
+        "site_id AS _fan_id", "site_lat AS _fan_lat", "site_lon AS _fan_lon")
     fanned = (ranked.withColumn("_exact", F.expr(exact_sql))
               .filter("_exact OR knn_rank = 1")
               .withColumn("_fk", F.expr(

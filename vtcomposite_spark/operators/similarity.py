@@ -100,22 +100,17 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int, iters: int = 3,
 def ann_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int,
                  n_centroids: int = 16, nprobe: int = 4,
                  vec_col: str = "embedding", id_col: str = "vec_id",
-                 centroids: str = "kmeans", kmeans_iters: int = 3,
-                 probe_join: str = "auto") -> DataFrame:
+                 centroids: str = "kmeans", kmeans_iters: int = 3) -> DataFrame:
     """IVF bucketed ANN. ``centroids="kmeans"`` (default) runs
     ``kmeans_centroids``; ``"seed"`` uses the raw lowest-id seed (the old
     degenerate behavior, kept for comparison tests).
 
-    ``probe_join`` sizes the bucket equi-join of corpus×probes (the
-    probes table is queries×nprobe rows CARRYING FULL VECTORS):
-
-    * ``"auto"`` (default, the 100-TB-safe path): no hint — Catalyst/AQE
-      broadcasts small probe sets and shuffle-joins big ones. At
-      training-data scale the query side is itself a large table (e.g.
-      dedup-a-shard-against-the-corpus), where a forced broadcast OOMs
-      the driver.
-    * ``"broadcast"``: force the hint — right for interactive top-k with
-      a handful of queries, where plan-time certainty beats stats.
+    The bucket equi-join of corpus×probes (the probes table is
+    queries×nprobe rows CARRYING FULL VECTORS) carries no hint:
+    Catalyst/AQE broadcast small probe sets and shuffle-join big ones. At
+    training-data scale the query side is itself a large table (e.g.
+    dedup-a-shard-against-the-corpus), where a forced broadcast would OOM
+    the driver.
 
     The two centroid-assignment crossJoins always force-broadcast ``cent``
     — that side is C×D doubles, driver-sized by construction.
@@ -155,8 +150,6 @@ def ann_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int,
         .filter(F.col("r") <= nprobe)
         .select("query_id", "qv", F.col("centroid_id").alias("bucket"))
     )
-    if probe_join == "broadcast":
-        probes = F.broadcast(probes)
     cand = (
         assigned.join(probes, on="bucket")
         .filter(F.col("query_id") != F.col("corpus_id"))

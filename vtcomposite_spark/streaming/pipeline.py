@@ -192,8 +192,8 @@ def latest_tiles(spark, sink_dir: str) -> DataFrame:
     LATEST epoch wins (a later micro-batch that re-materialized a target
     supersedes the earlier bytes).
 
-    Winner selection is a keys-only max-epoch aggregate (map-side combine,
-    the ``first_wins`` shape) followed by a semi-join, so the tile BLOBS
+    Winner selection is a keys-only max-epoch aggregate (map-side
+    combine) followed by a semi-join, so the tile BLOBS
     never shuffle — only the 4 key columns do. The semi-join carries no
     hint: AQE sizes it, which stays safe for a planet-pyramid winner set.
     """
