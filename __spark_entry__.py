@@ -529,7 +529,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def knn_sites(spark, sf):
         pts = _events_points(spark, sf)
         out = knn_join(pts, _sites(spark, sf), k=3,
-                       point_id_col="event_id", method="brute")
+                       point_id_col="event_id")
         return out.select("event_id", "site_id", "knn_rank")
     q["knn_sites"] = knn_sites
 

@@ -393,8 +393,7 @@ def build_workload(spark, sf_dir):
             F.col("n_nationkey").alias("site_id"),
             (((F.col("n_nationkey") * 7) % 160) - 80 + 0.5).cast("double").alias("lat"),
             (((F.col("n_nationkey") * 29) % 360) - 180 + 0.5).cast("double").alias("lon"))
-        out = knn_join(pts, sites, k=3, point_id_col="event_id",
-                       method="grid", zoom=3)
+        out = knn_join(pts, sites, k=3, point_id_col="event_id", zoom=3)
         counters["knn_rows"] = out.count()
 
     def pip_join_stage():

@@ -108,12 +108,12 @@ def test_ann_ivf_probe_join_regimes(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
 
-def _knn_fixture(spark):
+def _knn_fixture(spark, n_sites=40):
     pts = spark.range(0, 200).select(
         F.col("id").cast("string").alias("url"),
         ((F.col("id") * 37 % 160) / F.lit(1.0) - 80).alias("lat"),
         ((F.col("id") * 53 % 360) / F.lit(1.0) - 180).alias("lon"))
-    sites = spark.range(0, 40).select(
+    sites = spark.range(0, n_sites).select(
         F.col("id").alias("site_id"),
         ((F.col("id") * 41 % 160) / F.lit(1.0) - 80).alias("lat"),
         ((F.col("id") * 59 % 360) / F.lit(1.0) - 180).alias("lon"))
@@ -122,10 +122,11 @@ def _knn_fixture(spark):
 
 def test_knn_grid_site_join_regimes(spark):
     """VERDICT r3 item 7: knn_join(grid)'s site joins carry no hint —
-    under the no-auto-broadcast regime they run as shuffle joins only
-    (zero BroadcastExchange, with exact=False and with the exact path's
-    fan-out of points that fail the guarantee), with the default
-    session's results."""
+    under the no-auto-broadcast regime (where the exact path takes the
+    grid route too) they run as shuffle joins only (zero
+    BroadcastExchange, with exact=False and with the exact path's fan-out
+    of points that fail the guarantee), with the default session's
+    results."""
     from vtcomposite_spark.operators.joins import knn_join
     pts, sites = _knn_fixture(spark)
     key = lambda df: sorted(  # noqa: E731
@@ -138,6 +139,38 @@ def test_knn_grid_site_join_regimes(spark):
             got = key(out)
             assert "BroadcastExchange" not in _final_plan(out), exact
         assert got == want, exact
+
+
+def test_knn_join_routes_by_site_size(spark, monkeypatch):
+    """knn_join's exact path picks its plan from the site side's size
+    estimate: a 33-row site table takes brute force (one
+    BroadcastNestedLoopJoin, one Window, no fan-out join on ``_fk``); the
+    same table takes the grid when broadcasts are off and when
+    ``_BRUTE_MAX_BYTES`` is 0. The three return the same rows, dist_sq
+    and knn_rank included."""
+    from vtcomposite_spark.operators import joins as J
+    pts, sites = _knn_fixture(spark, n_sites=33)
+
+    def run():
+        out = J.knn_join(pts, sites, 3, zoom=3)
+        rows = sorted(map(tuple, out.collect()))
+        # the adaptive plan prints its initial plan after the final one
+        return rows, _final_plan(out).split("== Initial Plan ==")[0]
+
+    want, plan = run()
+    assert len(want) == 3 * 200
+    assert plan.count("BroadcastNestedLoopJoin") == 1
+    assert plan.count("Window [") == 1
+    assert "_fk" not in plan
+    with _no_broadcast(spark):
+        no_bc, grid_plan = run()
+    monkeypatch.setattr(J, "_BRUTE_MAX_BYTES", 0)
+    zero, zero_plan = run()
+    for p in (grid_plan, zero_plan):
+        assert "BroadcastNestedLoopJoin" not in p
+        assert "_fk" in p
+    assert no_bc == want
+    assert zero == want
 
 
 def test_ancestor_join_src_zooms_restriction(spark):
@@ -290,6 +323,13 @@ def test_single_group_targets_encode_whole(spark):
     assert "EmptyRelation" in below_encode
 
 
+def _grid_knn(spark):
+    """knn_join's exact path on the grid route: broadcasts off."""
+    from vtcomposite_spark.operators.joins import knn_join
+    with _no_broadcast(spark):
+        return knn_join(*_knn_fixture(spark), 3, zoom=3)
+
+
 def _plan_builds():
     """Every public operator the BENCHMARK workloads call, as a build of
     its plan from in-memory inputs (a parquet read runs a schema job of
@@ -331,10 +371,11 @@ def _plan_builds():
         "features_from_tiles_df": lambda s: features_from_tiles_df(
             C.composite_encode_tiles(*_points_fixture(s), [4])),
     }
-    for method, exact in (("grid", True), ("grid", False), ("brute", True)):
-        builds[f"knn_join-{method}-exact{exact}"] = (
-            lambda s, m=method, e=exact: knn_join(
-                *_knn_fixture(s), 3, method=m, zoom=3, exact=e))
+    # the exact path reads the site side's size estimate while it builds
+    builds["knn_join-brute"] = lambda s: knn_join(*_knn_fixture(s), 3, zoom=3)
+    builds["knn_join-grid"] = _grid_knn
+    builds["knn_join-exactFalse"] = lambda s: knn_join(
+        *_knn_fixture(s), 3, zoom=3, exact=False)
     for build in (C.composite, C.composite_packed, C.composite_encode_tiles):
         for zooms in ([4], [4, 5], None):
             builds[f"{build.__name__}-{zooms}"] = (

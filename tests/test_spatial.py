@@ -1,6 +1,7 @@
 """Pages source, cell encoding, PIP join, kNN join tests."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -10,6 +11,8 @@ from vtcomposite_spark.operators.cells import encode_cells, rollup_counts, tile_
 from vtcomposite_spark.operators.joins import knn_join, pip_join
 from vtcomposite_spark.sources.pages import (
     extract_geotags, pages_from_documents, synthesize_pages)
+
+from .test_plans import _final_plan, _no_broadcast
 
 POINT_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -170,6 +173,24 @@ SITE_SCHEMA = T.StructType([
 ])
 
 
+def _site_frame(spark, sites):
+    """A site table the optimizer can size: built from pandas through
+    Arrow it is a LocalRelation, so knn_join's exact path takes the brute
+    route in the default session. (A frame built from a Python list is
+    RDD-backed, reports no size and always takes the grid route.)"""
+    return spark.createDataFrame(
+        pd.DataFrame(sites, columns=SITE_SCHEMA.names), SITE_SCHEMA)
+
+
+def _collect_route(df, route):
+    """``df.collect()``, asserting from the final plan which kNN route
+    ran: brute force is a BroadcastNestedLoopJoin, the grid has none."""
+    rows = df.collect()
+    assert ("BroadcastNestedLoopJoin" in _final_plan(df)) \
+        == (route == "brute"), route
+    return rows
+
+
 def test_knn_grid_matches_brute(spark):
     rng = np.random.default_rng(42)
     pts = [(f"u{i}", float(la), float(lo)) for i, (la, lo) in enumerate(
@@ -177,12 +198,13 @@ def test_knn_grid_matches_brute(spark):
     sites = [(int(i), float(la), float(lo)) for i, (la, lo) in enumerate(
         zip(rng.uniform(37.0, 38.0, 25), rng.uniform(-123.0, -122.0, 25)))]
     pdf = spark.createDataFrame(pts, POINT_SCHEMA)
-    sdf = spark.createDataFrame(sites, SITE_SCHEMA)
-    brute = knn_join(pdf, sdf, 3, method="brute")
+    sdf = _site_frame(spark, sites)
+    b = {(r.url, r.knn_rank): r.site_id
+         for r in _collect_route(knn_join(pdf, sdf, 3), "brute")}
     # zoom chosen so one cell (~0.7° at z9... ) covers the knn radius: z7
-    grid = knn_join(pdf, sdf, 3, method="grid", zoom=7)
-    b = {(r.url, r.knn_rank): r.site_id for r in brute.collect()}
-    g = {(r.url, r.knn_rank): r.site_id for r in grid.collect()}
+    with _no_broadcast(spark):
+        g = {(r.url, r.knn_rank): r.site_id
+             for r in _collect_route(knn_join(pdf, sdf, 3, zoom=7), "grid")}
     assert b == g
     assert len(b) == 60 * 3
 
@@ -195,6 +217,30 @@ def test_extract_geotags_keep_projection(spark):
     a = {r.url: (r.lat, r.lon) for r in slim.collect()}
     b = {r.url: (r.lat, r.lon) for r in full.collect()}
     assert a == b
+
+
+def test_extract_geotags_malformed_position(spark):
+    """A geo.position value the tag regex accepts but that is not two
+    numbers (``1.2.3;4``, ``.;4``) leaves the page untagged (NULL lat/lon,
+    like a page with no tag) instead of failing the task — in a plain
+    and in a gzipped payload; well-formed neighbours still parse."""
+    import gzip
+
+    def tag(v):
+        return f'<html><meta name="geo.position" content="{v}"></html>' \
+            .encode()
+
+    rows = [("bad", tag("1.2.3;4")), ("bad_gz", gzip.compress(tag("1.2.3;4"))),
+            ("dot", tag(".;4")), ("good", tag("37.5;-122.25")),
+            ("good_gz", gzip.compress(tag("-1.5;2"))),
+            ("untagged", b"<html></html>"), ("null", None)]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    got = {r.url: (r.lat, r.lon)
+           for r in extract_geotags(pages, keep=["url"]).collect()}
+    assert got == {"bad": (None, None), "bad_gz": (None, None),
+                   "dot": (None, None), "good": (37.5, -122.25),
+                   "good_gz": (-1.5, 2.0), "untagged": (None, None),
+                   "null": (None, None)}
 
 
 def test_pip_interior_cell_shortcut(spark):
@@ -247,20 +293,21 @@ def test_knn_grid_exactness_fallback(spark):
         (5, -40.0, -170.0),
     ]
     pdf = spark.createDataFrame(pts, POINT_SCHEMA).withColumnRenamed("url", "url")
-    sdf = spark.createDataFrame(sites, SITE_SCHEMA)
+    sdf = _site_frame(spark, sites)
     brute = {(r.url, r.knn_rank): r.site_id
-             for r in knn_join(pdf, sdf, 3, method="brute").collect()}
-    grid = {(r.url, r.knn_rank): r.site_id
-            for r in knn_join(pdf, sdf, 3, method="grid", zoom=6).collect()}
+             for r in _collect_route(knn_join(pdf, sdf, 3), "brute")}
+    with _no_broadcast(spark):
+        grid = {(r.url, r.knn_rank): r.site_id for r in _collect_route(
+            knn_join(pdf, sdf, 3, zoom=6), "grid")}
     assert grid == brute
     # "near" finds sites 1,2 in-box but its k-th (site 3, ~12° away) is
     # outside the box; "lonely" has an EMPTY 3x3 box — both must fall back
     assert grid[("near", 3)] == 3
     assert grid[("lonely", 1)] == 4
     # the unguarded contract mode reproduces the old truncated answer
-    loose = knn_join(pdf, sdf, 3, method="grid", zoom=6, exact=False)
+    loose = knn_join(pdf, sdf, 3, zoom=6, exact=False)
     by_pt = {}
-    for r in loose.collect():
+    for r in _collect_route(loose, "grid"):
         by_pt.setdefault(r.url, []).append(r.site_id)
     assert len(by_pt.get("near", [])) < 3  # k-th neighbor missed
     assert "lonely" not in by_pt
@@ -276,14 +323,14 @@ def test_knn_exact_skips_fallback_when_guaranteed(spark):
     sites = [(int(i), float(la), float(lo)) for i, (la, lo) in enumerate(
         zip(rng.uniform(37.0, 38.0, 40), rng.uniform(-123.0, -122.0, 40)))]
     pdf = spark.createDataFrame(pts, POINT_SCHEMA)
-    sdf = spark.createDataFrame(sites, SITE_SCHEMA)
-    a = {(r.url, r.knn_rank): r.site_id
-         for r in knn_join(pdf, sdf, 2, method="grid", zoom=5).collect()}
-    b = {(r.url, r.knn_rank): r.site_id
-         for r in knn_join(pdf, sdf, 2, method="grid", zoom=5,
-                           exact=False).collect()}
+    sdf = _site_frame(spark, sites)
+    with _no_broadcast(spark):
+        a = {(r.url, r.knn_rank): r.site_id
+             for r in _collect_route(knn_join(pdf, sdf, 2, zoom=5), "grid")}
+    b = {(r.url, r.knn_rank): r.site_id for r in _collect_route(
+        knn_join(pdf, sdf, 2, zoom=5, exact=False), "grid")}
     brute = {(r.url, r.knn_rank): r.site_id
-             for r in knn_join(pdf, sdf, 2, method="brute").collect()}
+             for r in _collect_route(knn_join(pdf, sdf, 2), "brute")}
     assert a == brute
     assert b == brute  # zoom=5 cell (11.25°) >> knn radius: grid already exact
 
@@ -331,7 +378,8 @@ def _knn_sweep_input(seed: int):
 
 
 def test_knn_grid_matches_brute_randomized(spark):
-    """The exact grid path returns brute force's rows — every column,
+    """The exact grid route (no broadcast) returns the brute route's rows
+    (the default session) — every column,
     dist_sq and knn_rank included, in the same column order — over seeds
     0-2, zooms 3/6/9 and k 1/3. Against ``exact=False`` (the unguarded
     grid) the sweep checks that it covered points whose grid answer was
@@ -339,27 +387,30 @@ def test_knn_grid_matches_brute_randomized(spark):
     (the guarantee must fail), and points with an empty box."""
     seen = {"in_box": 0, "failed": 0, "empty": 0}
 
-    def by_url(df):
+    def by_url(df, route):
         out = {}
-        for r in df.collect():
+        for r in _collect_route(df, route):
             out.setdefault(r.url, []).append(tuple(r))
         return {u: sorted(v, key=repr) for u, v in out.items()}
 
     for seed in range(3):
         points, sites = _knn_sweep_input(seed)
         pdf = spark.createDataFrame(points, KNN_POINT_SCHEMA)
-        sdf = spark.createDataFrame(sites, SITE_SCHEMA)
+        sdf = _site_frame(spark, sites)
         for zoom in (3, 6, 9):
             for k in (1, 3):
-                brute = knn_join(pdf, sdf, k, method="brute")
-                grid = knn_join(pdf, sdf, k, zoom=zoom)
+                brute = knn_join(pdf, sdf, k)
+                with _no_broadcast(spark):
+                    grid = knn_join(pdf, sdf, k, zoom=zoom)
+                    got = by_url(grid, "grid")
                 assert grid.columns == brute.columns == [
                     "url", "lat", "lang", "lon", "weight", "site_id",
                     "dist_sq", "knn_rank"]
-                want = by_url(brute)
-                assert by_url(grid) == want, (seed, zoom, k)
+                want = by_url(brute, "brute")
+                assert got == want, (seed, zoom, k)
                 assert len(want) == len(points) - 3  # null points drop
-                loose = by_url(knn_join(pdf, sdf, k, zoom=zoom, exact=False))
+                loose = by_url(knn_join(pdf, sdf, k, zoom=zoom, exact=False),
+                               "grid")
                 for url, rows in want.items():
                     if url not in loose:
                         seen["empty"] += 1
@@ -376,10 +427,12 @@ def test_knn_grid_narrow_grids(spark):
     no site is a candidate twice in one cell."""
     points, sites = _knn_sweep_input(5)
     pdf = spark.createDataFrame(points, KNN_POINT_SCHEMA)
-    sdf = spark.createDataFrame(sites, SITE_SCHEMA)
-    key = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
-    want = key(knn_join(pdf, sdf, 3, method="brute"))
-    for zoom in (0, 1):
-        for exact in (True, False):
-            assert key(knn_join(pdf, sdf, 3, zoom=zoom, exact=exact)) \
-                == want, (zoom, exact)
+    sdf = _site_frame(spark, sites)
+    key = lambda df, route: sorted(  # noqa: E731
+        map(tuple, _collect_route(df, route)), key=repr)
+    want = key(knn_join(pdf, sdf, 3), "brute")
+    with _no_broadcast(spark):
+        for zoom in (0, 1):
+            for exact in (True, False):
+                assert key(knn_join(pdf, sdf, 3, zoom=zoom, exact=exact),
+                           "grid") == want, (zoom, exact)

@@ -370,7 +370,8 @@ def enrich_pages(pages: DataFrame, keep: list[str] | None = None,
 
 
 def extract_geotags(pages: DataFrame, keep: list[str] | None = None) -> DataFrame:
-    """pages + (lat, lon) columns; null for ungeotagged rows.
+    """pages + (lat, lon) columns; null for ungeotagged rows, and for rows
+    whose first geo.position tag does not hold two numbers (``1.2.3;4``).
 
     Single mapInPandas pass (a struct-returning pandas_udf would risk one
     UDF evaluation per extracted field): gzip-sniff each html payload
@@ -411,8 +412,11 @@ def extract_geotags(pages: DataFrame, keep: list[str] | None = None) -> DataFram
                     b = gzip.decompress(b)
                 m = pat.search(b)
                 if m:
-                    lats[i] = float(m.group(1))
-                    lons[i] = float(m.group(2))
+                    try:
+                        lat, lon = float(m.group(1)), float(m.group(2))
+                    except ValueError:  # malformed: untagged, not a failure
+                        continue
+                    lats[i], lons[i] = lat, lon
             out = pdf[out_cols].copy()
             out["lat"] = lats
             out["lon"] = lons
