@@ -1152,10 +1152,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         host equals OR is a subdomain of a listed domain (dot-suffix
         explode + broadcast semi-join; lookalike hosts and mid-string
         hits must NOT match — tests/test_web.py pins the semantics)."""
+        import pandas as pd
+
         from vtcomposite_spark.operators import web as W
         docs = _synth_hosts(spark, sf)
+        # pandas-built: a sized LocalRelation the unhinted joins can
+        # broadcast (a list-built frame is RDD-backed and unsized)
         bl = spark.createDataFrame(
-            [("example.org",), ("site2.example.com",)], "domain string")
+            pd.DataFrame({"domain": ["example.org", "site2.example.com"]}),
+            "domain string")
         return W.blocklist_filter(docs, bl) \
             .select("doc_id", "host", "blocked")
     q["domain_blocklist"] = domain_blocklist
@@ -1166,8 +1171,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d{id}) against a 5-host robots corpus exercising shared UA
         groups, longest-match precedence, Allow ties, empty Disallow,
         groupless rules, case-insensitive agents, and absent robots.
-        operators/web.py robots_allowed (broadcast rules, one
+        operators/web.py robots_allowed (unhinted rules join, one
         min(struct) winner agg per url — no window over the corpus)."""
+        import pandas as pd
+
         from vtcomposite_spark.operators import web as W
         g = F.expr("doc_id div 4")
         urls = _read(spark, sf, "documents").select(F.concat(
@@ -1176,8 +1183,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .otherwise(F.lit(".example.com")),
             F.lit("/p"), (F.col("doc_id") % 4).cast("string"),
             F.lit("/d"), F.col("doc_id").cast("string")).alias("url"))
-        robots = spark.createDataFrame(
-            _ROBOTS_CORPUS, "host string, robots_txt string")
+        robots = spark.createDataFrame(  # sized, as in domain_blocklist
+            pd.DataFrame(_ROBOTS_CORPUS, columns=["host", "robots_txt"]),
+            "host string, robots_txt string")
         return W.robots_allowed(urls, robots, agent="cc-bot")
     q["robots_crawl_filter"] = robots_crawl_filter
 
@@ -1298,8 +1306,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Benchmark decontamination (the Gopher/GPT-3 n-gram-collision
         protocol): every doc sharing any word 8-gram with the benchmark
         subset (doc_id % 25 == 0, standing in for an eval set) is
-        flagged with its distinct-collision count. Benchmark gram set
-        broadcasts; training grams stay map-side — only hit grams
+        flagged with its distinct-collision count. The benchmark gram
+        set joins unhinted (broadcast while small); only hit grams
         shuffle."""
         docs = _read(spark, sf, "documents")
         bench = docs.filter(F.col("doc_id") % 25 == 0)

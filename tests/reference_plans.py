@@ -1,5 +1,7 @@
-"""Parity references: composite's per-row plan and row encoder, and a
-brute-force point-in-polygon join.
+"""Parity references: composite's per-row plan and row encoder, a
+brute-force point-in-polygon join, the per-polygon clip, and the Column
+and numpy twins the library's SQL-text and batch forms are checked
+against.
 
 The composite pair is written straight from the composite semantics, one
 step per reference stage, with no source grouping, packing or splicing —
@@ -19,6 +21,15 @@ reproduce their rows as a multiset and their tiles byte for byte.
   math as a Column-operator tree, the form the library built before it
   rendered that math as SQL text (``tilemath.tile_frac_sql``) — the SQL
   text must give the same doubles, tiles and cells bit for bit.
+* ``clip_polygon``: one polygon ∩ window at a time — cut every ring into
+  inside-window chains (``_ring_chains``), then the library's shared
+  ``polyclip._trace_and_assemble``. ``polyclip.clip_polygons_packed``
+  must emit the same rings in the same order (tests/test_polyclip.py).
+* ``minhash_sig_col``: the MinHash signature as one Column expression;
+  ``functions.hashing.minhash_sig_sql`` must give the same values.
+* ``sniff_mime_sql``: DuckDB twin of ``functions.text.sniff_mime_col``.
+* ``lonlat_to_tile_px``, ``unpack_cell``, ``parent_cell``: numpy tile
+  math the cell and pixel kernels are checked against.
 """
 
 from __future__ import annotations
@@ -32,7 +43,11 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vtcomposite_spark import tilemath as tm
+from vtcomposite_spark.functions import hashing as H
+from vtcomposite_spark.functions import text as TX
 from vtcomposite_spark.operators import composite as C
+from vtcomposite_spark.polyclip import _trace_and_assemble
 from vtcomposite_spark.sources import mvt
 
 
@@ -208,3 +223,190 @@ def tile_pixels_columns(df, zoom: int, extent: int = 4096):
                           .cast("long"))
             .withColumn("py", F.round((fy - F.floor(fy)) * extent)
                         .cast("long")))
+
+
+def _point_in_ring(px: int, py: int, xs: np.ndarray, ys: np.ndarray) -> bool:
+    x0, y0 = xs[:-1], ys[:-1]
+    x1, y1 = xs[1:], ys[1:]
+    cond = (y0 > py) != (y1 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xi = x0 + (py - y0) / (y1 - y0) * (x1 - x0)
+    return bool(np.count_nonzero(cond & (px < xi)) % 2)
+
+
+def _perimeter_pos(x: float, y: float, lo: float, hi: float) -> float:
+    """Position along the window boundary in canonical orientation.
+
+    side 0: y=lo, x lo→hi ; side 1: x=hi, y lo→hi ;
+    side 2: y=hi, x hi→lo ; side 3: x=lo, y hi→lo.
+    Corners are assigned to the side they START (s = k*w).
+    """
+    w = hi - lo
+    if y == lo and x < hi:
+        return x - lo
+    if x == hi and y < hi:
+        return w + (y - lo)
+    if y == hi and x > lo:
+        return 2 * w + (hi - x)
+    if x == lo and y > lo:
+        return 3 * w + (hi - y)
+    return 0.0  # (lo, lo)
+
+
+def _ring_chains(xs: np.ndarray, ys: np.ndarray, lo: int, hi: int):
+    """Cut a CLOSED ring into inside-window chains.
+
+    Returns (status, chains): status ∈ {"inside", "outside", "crossing"};
+    chains = list of (points list, s_entry, s_exit).
+    """
+    oxs, oys = xs[:-1], ys[:-1]  # open ring
+    ins = (oxs >= lo) & (oxs <= hi) & (oys >= lo) & (oys <= hi)
+    n = len(oxs)
+
+    # fast classifications
+    if ins.all():
+        return "inside", []
+
+    # rotate so vertex 0 is strictly outside (exists when not all inside)
+    start = int(np.argmax(~ins))
+    rx = np.concatenate([oxs[start:], oxs[:start]])
+    ry = np.concatenate([oys[start:], oys[:start]])
+
+    # walk edges (closed): vertex i -> i+1 (mod n)
+    ex0 = rx.astype(np.float64)
+    ey0 = ry.astype(np.float64)
+    ex1 = np.concatenate([ex0[1:], ex0[:1]])
+    ey1 = np.concatenate([ey0[1:], ey0[:1]])
+    dx, dy = ex1 - ex0, ey1 - ey0
+    t0 = np.zeros(n)
+    t1 = np.ones(n)
+    visible = np.ones(n, bool)
+    for p, q in ((-dx, ex0 - lo), (dx, hi - ex0), (-dy, ey0 - lo), (dy, hi - ey0)):
+        nz = p != 0
+        r = np.where(nz, q / np.where(nz, p, 1.0), 0.0)
+        visible &= nz | (q >= 0)
+        t0 = np.where(nz & (p < 0), np.maximum(t0, r), t0)
+        t1 = np.where(nz & (p > 0), np.minimum(t1, r), t1)
+    visible &= t0 <= t1
+
+    if not visible.any():
+        return "outside", []
+
+    ax = np.where(t0 == 0.0, ex0, np.rint(ex0 + t0 * dx))
+    ay = np.where(t0 == 0.0, ey0, np.rint(ey0 + t0 * dy))
+    bx = np.where(t1 == 1.0, ex1, np.rint(ex0 + t1 * dx))
+    by = np.where(t1 == 1.0, ey1, np.rint(ey0 + t1 * dy))
+
+    rins = np.concatenate([ins[start:], ins[:start]])
+    rins_next = np.concatenate([rins[1:], rins[:1]])
+
+    chains = []
+    cur: list[tuple[int, int]] | None = None
+    for i in range(n):
+        if not visible[i]:
+            continue
+        a = (int(ax[i]), int(ay[i]))
+        b = (int(bx[i]), int(by[i]))
+        if cur is None:
+            cur = [a]
+        elif not rins[i]:  # edge starts outside: previous chain ended earlier
+            # (can happen when visibility is a single touching point)
+            chains.append(cur)
+            cur = [a]
+        if not cur or cur[-1] != b:
+            cur.append(b)
+        if not rins_next[i]:  # edge leaves the window (or ends outside)
+            chains.append(cur)
+            cur = None
+    if cur is not None:
+        chains.append(cur)
+
+    out = []
+    for ch in chains:
+        # drop consecutive dups already handled; degenerate single points out
+        if len(ch) < 2 and True:
+            # a touch-point chain: keep only if it truly has extent
+            if len(ch) == 1:
+                continue
+        s_in = _perimeter_pos(ch[0][0], ch[0][1], lo, hi)
+        s_out = _perimeter_pos(ch[-1][0], ch[-1][1], lo, hi)
+        out.append((ch, s_in, s_out))
+    if not out:
+        return "outside", []
+    return "crossing", out
+
+
+def clip_polygon(rings: list[tuple[np.ndarray, np.ndarray]], lo: int, hi: int):
+    """Clip one polygon (ring 0 = outer, rest holes; CLOSED int64 arrays)
+    to the window. Returns a list of output polygons, each a list of CLOSED
+    (xs, ys) rings (ring 0 outer). The batch driver feeds the same
+    assembly from globally-vectorized chain cutting."""
+    infos = []
+    for xs, ys in rings:
+        status, ch = _ring_chains(xs, ys, lo, hi)
+        surrounds = False
+        pts = None
+        if status == "outside":
+            c = (lo + hi) / 2.0
+            surrounds = _point_in_ring(c, c, xs.astype(np.float64),
+                                       ys.astype(np.float64))
+        elif status == "inside":
+            pts = list(zip(xs.tolist(), ys.tolist()))
+        infos.append((status, ch, surrounds, pts))
+    return _trace_and_assemble(infos, lo, hi)
+
+
+def minhash_sig_col(text, k: int = 8, n: int = 3):
+    """k-element MinHash signature.
+
+    ONE md5 per shingle (its first 8 hex chars → 32-bit int via conv), then
+    k affine permutations (a_j·h + b_j) mod 2^31−1 with min-reduce — k
+    integer ops instead of k digests per shingle. Same values replayed by
+    ``minhash_sig_sql`` (strpos-based hex parse, identical arithmetic).
+    """
+    sh = H.shingles_col(text, n)
+    hs = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10)
+                     .cast("long"))
+    sig = [
+        F.array_min(F.transform(hs, lambda h: (h * a + b) % H._MERSENNE31))
+        for a, b in H._perm_consts(k)
+    ]
+    return F.array(*sig)
+
+
+def sniff_mime_sql(c: str) -> str:
+    """DuckDB twin of ``functions.text.sniff_mime_col`` (``c`` = a BLOB column; DuckDB has no blob substr, so
+    the head slice happens on the hex string)."""
+    head = f"substr(upper(hex({c})), 1, 128)"
+    cases = " ".join(
+        f"WHEN starts_with({head}, '{p}') THEN '{l}'"
+        for p, l in TX._MAGIC_PREFIXES)
+    return (f"CASE WHEN {c} IS NULL THEN NULL {cases} "
+            f"WHEN regexp_matches({head}, '{TX.HTML_HEX_PAT}') THEN 'html' "
+            f"WHEN regexp_matches({head}, '{TX.XML_HEX_PAT}') THEN 'xml' "
+            "ELSE 'other' END")
+
+
+def lonlat_to_tile_px(lon, lat, zoom, extent=4096):
+    """Integer tile-local pixel coords (the MVT encoder quantization)."""
+    fx = tm.lon_to_tilex(lon, zoom)
+    fy = tm.lat_to_tiley(lat, zoom)
+    tx = np.floor(fx).astype(np.int64)
+    ty = np.floor(fy).astype(np.int64)
+    px = np.round((fx - tx) * extent).astype(np.int64)
+    py = np.round((fy - ty) * extent).astype(np.int64)
+    return tx, ty, px, py
+
+
+def unpack_cell(cell):
+    cell = np.asarray(cell, dtype=np.int64)
+    z = cell >> 58
+    x = (cell >> 29) & ((1 << 29) - 1)
+    y = cell & ((1 << 29) - 1)
+    return z, x, y
+
+
+def parent_cell(cell, parent_z):
+    z, x, y = unpack_cell(cell)
+    dz = z - np.int64(parent_z)
+    return tm.pack_cell(np.full_like(z, parent_z), x >> dz, y >> dz)

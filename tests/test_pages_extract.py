@@ -132,8 +132,8 @@ def test_keep_pruning_and_null_html(spark):
 
 def test_sniff_mime_hand_matrix_both_engines(spark):
     import gzip as _gz
-    from vtcomposite_spark.functions.text import (sniff_mime_col,
-                                                  sniff_mime_sql)
+    from tests.reference_plans import sniff_mime_sql
+    from vtcomposite_spark.functions.text import sniff_mime_col
     payloads = [
         _gz.compress(b"x"), b"%PDF-1.4 junk", b"\x89PNG\r\n\x1a\n....",
         b"\xff\xd8\xff\xe0JFIF", b"GIF89a...", b"PK\x03\x04zip",

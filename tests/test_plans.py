@@ -1,14 +1,10 @@
-"""Skew (salted two-phase agg), lineage/checkpoint-resume, and physical-
-join-strategy tests (J1 scale fallback: VERDICT r1 items 4-5)."""
+"""Skew (salted two-phase agg) and physical-join-strategy tests (J1 scale fallback: VERDICT r1 items 4-5)."""
 
 import contextlib
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from vtcomposite_spark.plans import lineage as L
 from vtcomposite_spark.plans import skew as K
 
 
@@ -214,41 +210,6 @@ def test_salted_agg_min_max_sum(spark):
         F.sum("id").alias("s"), F.min("id").alias("mn"),
         F.max("id").alias("mx")).collect()}
     assert out == want
-
-
-def test_partition_lineage(spark):
-    df = spark.range(0, 100, numPartitions=4).select(
-        (F.col("id") % 2).alias("z"), F.col("id").cast("string").alias("s"))
-    lin = L.partition_lineage(df, ["z"]).collect()
-    assert sum(r.rows for r in lin) == 100
-    assert all(r.bytes > 0 for r in lin)
-    assert {r.partition_id for r in lin} <= {0, 1, 2, 3}
-
-
-def test_write_level_and_resume(spark):
-    root = tempfile.mkdtemp(prefix="vtc_lineage_")
-    try:
-        calls = []
-
-        def build(z):
-            calls.append(z)
-            return spark.range(0, 10 * (z + 1)).select(
-                F.lit(z).alias("z"), F.col("id"))
-
-        r1 = L.run_levels(spark, root, [0, 1], build)
-        assert r1[0]["rows"] == 10 and r1[1]["rows"] == 20
-        assert calls == [0, 1]
-        # resume: both levels done, nothing recomputed, a new level runs
-        r2 = L.run_levels(spark, root, [0, 1, 2], build)
-        assert r2[0] == {"skipped": True} and r2[1] == {"skipped": True}
-        assert r2[2]["rows"] == 30
-        assert calls == [0, 1, 2]
-        # data actually written and partitioned
-        z1 = spark.read.parquet(f"{root}/z=1__data")
-        assert z1.count() == 20
-        assert L.completed_levels(spark, root) == {0, 1, 2}
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _features_exchanges(plan: str) -> int:

@@ -7,6 +7,7 @@ import os
 import numpy as np
 import pytest
 
+from tests.reference_plans import clip_polygon
 from vtcomposite_spark import polyclip
 from vtcomposite_spark.geometry import PackedParts
 from vtcomposite_spark.sources import mvt
@@ -29,14 +30,14 @@ def counts(polys):
 def test_fully_inside_passthrough():
     outer = ring([(1, 1), (9, 1), (9, 9), (1, 9), (1, 1)])
     hole = ring([(3, 3), (3, 5), (5, 5), (5, 3), (3, 3)])
-    out = polyclip.clip_polygon([outer, hole], 0, 10)
+    out = clip_polygon([outer, hole], 0, 10)
     assert counts(out) == [[5, 5]]
 
 
 def test_simple_bite():
     # CW square half outside the right edge
     outer = ring([(5, 2), (15, 2), (15, 8), (5, 8), (5, 2)])
-    out = polyclip.clip_polygon([outer], 0, 10)
+    out = clip_polygon([outer], 0, 10)
     assert len(out) == 1
     xs, ys = out[0][0]
     assert set(zip(xs.tolist(), ys.tolist())) == {(5, 2), (10, 2), (10, 8), (5, 8)}
@@ -44,7 +45,7 @@ def test_simple_bite():
 
 def test_outer_surrounds_window():
     outer = ring([(-100, -100), (100, -100), (100, 100), (-100, 100), (-100, -100)])
-    out = polyclip.clip_polygon([outer], 0, 10)
+    out = clip_polygon([outer], 0, 10)
     assert counts(out) == [[5]]
     xs, ys = out[0][0]
     assert set(zip(xs.tolist(), ys.tolist())) == {(0, 0), (10, 0), (10, 10), (0, 10)}
@@ -53,19 +54,19 @@ def test_outer_surrounds_window():
 def test_hole_surrounds_window():
     outer = ring([(-100, -100), (100, -100), (100, 100), (-100, 100), (-100, -100)])
     hole = ring([(-50, -50), (-50, 50), (50, 50), (50, -50), (-50, -50)])
-    assert polyclip.clip_polygon([outer, hole], 0, 10) == []
+    assert clip_polygon([outer, hole], 0, 10) == []
 
 
 def test_fully_outside_dropped():
     outer = ring([(20, 20), (30, 20), (30, 30), (20, 30), (20, 20)])
-    assert polyclip.clip_polygon([outer], 0, 10) == []
+    assert clip_polygon([outer], 0, 10) == []
 
 
 def test_hole_crossing_boundary_carves_outer():
     # outer surrounds window; hole bites into the window's right side
     outer = ring([(-100, -100), (100, -100), (100, 100), (-100, 100), (-100, -100)])
     hole = ring([(8, 4), (8, 6), (20, 6), (20, 4), (8, 4)])  # CCW (hole)
-    out = polyclip.clip_polygon([outer, hole], 0, 10)
+    out = clip_polygon([outer, hole], 0, 10)
     assert len(out) == 1
     xs, ys = out[0][0]
     pts = set(zip(xs.tolist(), ys.tolist()))
@@ -78,7 +79,7 @@ def test_hole_splitting_window():
     # hole slices the window horizontally through the middle -> 2 polygons
     outer = ring([(-100, -100), (100, -100), (100, 100), (-100, 100), (-100, -100)])
     hole = ring([(-50, 4), (-50, 6), (50, 6), (50, 4), (-50, 4)])
-    out = polyclip.clip_polygon([outer, hole], 0, 10)
+    out = clip_polygon([outer, hole], 0, 10)
     assert len(out) == 2
     all_pts = [set(zip(r[0][0].tolist(), r[0][1].tolist())) for r in out]
     assert {(0, 0), (10, 0), (10, 4), (0, 4)} in all_pts
@@ -108,7 +109,7 @@ def test_boost_parity_polygons_with_holes_golden():
             elif polys:
                 polys[-1].append((xs, ys))
         for poly in polys:
-            all_polys.extend(polyclip.clip_polygon(poly, lo, hi))
+            all_polys.extend(clip_polygon(poly, lo, hi))
     assert counts(all_polys) == [[6], [95, 25, 23, 18, 26, 18, 14, 16]]
 
 
@@ -186,7 +187,7 @@ def test_batch_driver_equals_per_polygon_reference(name, buf, dz, ddx, ddy):
         rings = [(asm.vx[asm.part_start[ri]:asm.part_start[ri + 1]],
                   asm.vy[asm.part_start[ri]:asm.part_start[ri + 1]])
                  for ri in range(s, e)]
-        for p in polyclip.clip_polygon(rings, int(flo[s]), int(hi[asm.part_feat[s]])):
+        for p in clip_polygon(rings, int(flo[s]), int(hi[asm.part_feat[s]])):
             for k, (xs, ys) in enumerate(p):
                 want.append((int(asm.part_feat[s]), 1 if k == 0 else 2,
                              xs.tolist(), ys.tolist()))

@@ -1,10 +1,7 @@
-"""Gap-based sessionization: batch hand cases, DuckDB twin parity on
-the events table, and the streaming machine (cross-batch session
-continuation, micro-batch-slicing invariance, out-of-order raise)."""
+"""Gap-based sessionization: batch hand cases and DuckDB twin parity on
+the events table."""
 
 import datetime as dt
-import shutil
-import tempfile
 
 import duckdb
 import pytest
@@ -67,56 +64,6 @@ def test_sessionize_duckdb_twin_parity(spark):
     assert gots == wants
     # sanity: multiple sessions actually exist in the fixture
     assert max(s[1] for s in gots) > 1
-
-
-def test_stream_sessionize_matches_batch_across_slicings(spark):
-    """The same ordered log through two different micro-batch slicings
-    yields the exact batch assignment: sessions stay open across
-    batches (user 1's 20m event continues batch-1's session), and the
-    checkpointed state survives the restart between drains."""
-    from vtcomposite_spark.streaming.pipeline import run_sessionize_stream
-
-    b1 = [_ev(1, 1, 0), _ev(2, 1, 10), _ev(3, 2, 0)]
-    b2 = [_ev(4, 1, 20), _ev(5, 1, 120), _ev(6, 2, 40)]
-    batch = {tuple(r) for r in SE.sessionize(_mk(spark, b1 + b2)).collect()}
-
-    src = tempfile.mkdtemp(prefix="vtc_se_src_")
-    out = tempfile.mkdtemp(prefix="vtc_se_out_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_se_ck_")
-    try:
-        _mk(spark, b1).coalesce(1).write.mode("append").parquet(src)
-        run_sessionize_stream(spark, src, out, ckpt)
-        _mk(spark, b2).coalesce(1).write.mode("append").parquet(src)
-        run_sessionize_stream(spark, src, out, ckpt)
-        got = {tuple(r) for r in spark.read.parquet(out).collect()}
-        assert got == batch
-    finally:
-        for d in (src, out, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_sessionize_out_of_order_raises(spark):
-    """An event older than the user's last seen event time fails LOUD —
-    silent mis-assignment is the one forbidden outcome."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from vtcomposite_spark.streaming.pipeline import run_sessionize_stream
-
-    src = tempfile.mkdtemp(prefix="vtc_seo_src_")
-    out = tempfile.mkdtemp(prefix="vtc_seo_out_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_seo_ck_")
-    try:
-        _mk(spark, [_ev(1, 1, 60)]).coalesce(1) \
-            .write.mode("append").parquet(src)
-        run_sessionize_stream(spark, src, out, ckpt)
-        _mk(spark, [_ev(2, 1, 0)]).coalesce(1) \
-            .write.mode("append").parquet(src)
-        with pytest.raises(StreamingQueryException,
-                           match="out-of-order"):
-            run_sessionize_stream(spark, src, out, ckpt)
-    finally:
-        for d in (src, out, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_event_window_counts_hand_and_twin(spark):

@@ -1,237 +1,9 @@
-"""Structured Streaming wrapper test: file-source micro-batches through the
-same extraction/cell kernels, watermarked windowed tile counts."""
+"""Structured Streaming: the stateless text operators run unchanged on a
+file-source stream."""
 
 import shutil
-import tempfile
 
-import pytest
 from pyspark.sql import functions as F
-
-from vtcomposite_spark.sources.pages import synthesize_pages
-from vtcomposite_spark.streaming.pipeline import run_file_stream
-
-
-def test_streaming_tile_counts_match_batch(spark):
-    src = tempfile.mkdtemp(prefix="vtc_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_stream_ckpt_")
-    try:
-        pages = synthesize_pages(spark, 300, partitions=3)
-        pages.write.mode("overwrite").parquet(src)
-
-        run_file_stream(spark, src, ckpt, zoom=8, table_name="tc_stream")
-        got = spark.sql("select cell, sum(n_pages) n from tc_stream group by cell")
-        stream_counts = {r.cell: r.n for r in got.collect()}
-
-        # batch ground truth through the same kernels
-        from vtcomposite_spark.operators.cells import encode_cells
-        from vtcomposite_spark.sources.pages import extract_geotags
-        batch = encode_cells(
-            extract_geotags(spark.read.parquet(src)).filter(F.col("lat").isNotNull()), 8)
-        batch_counts = {r.cell: r.n for r in
-                        batch.groupBy("cell").agg(F.count("*").alias("n")).collect()}
-        assert stream_counts == batch_counts
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_encode_tiles_matches_batch(spark, fixture_bytes):
-    """Stream-materialized tiles must byte-match the batch fused sink when
-    each source tile's features arrive within one micro-batch (the
-    documented contract): two source tiles land as two files, the stream
-    drains with availableNow, and the union of per-epoch outputs equals
-    the all-at-once batch output."""
-    import tempfile
-
-    from vtcomposite_spark.operators.composite import composite_encode_tiles
-    from vtcomposite_spark.sources import ingest
-    from vtcomposite_spark.streaming.pipeline import streaming_encode_tiles
-
-    src = tempfile.mkdtemp(prefix="vtc_sink_src_")
-    snk = tempfile.mkdtemp(prefix="vtc_sink_out_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_sink_ckpt_")
-    try:
-        buf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-        feats = ingest.features_from_tiles(spark, [(buf, 8, 0, 0), (buf, 8, 1, 1)])
-        # one file per source tile = the atomic-arrival contract
-        for sx in (0, 1):
-            feats.filter(F.col("src_x") == sx).coalesce(1) \
-                .write.mode("append").parquet(src)
-        targets = spark.createDataFrame(
-            [(9, 2 * sx + dx, 2 * sx + dy, 128, None, False)
-             for sx in (0, 1) for dx in (0, 1) for dy in (0, 1)],
-            "z int, x long, y long, buffer_size int, "
-            "keep_layers array<string>, compress boolean")
-
-        streaming_encode_tiles(spark, src, targets, snk, ckpt, src_zoom=8)
-        got = {(r.z, r.x, r.y): bytes(r.tile)
-               for r in spark.read.parquet(snk).collect()}
-        want = {(r.z, r.x, r.y): bytes(r.tile)
-                for r in composite_encode_tiles(feats, targets).collect()}
-        assert got == want and want
-    finally:
-        for d in (src, snk, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def test_tile_log_latest_epoch_and_compaction(spark, fixture_bytes):
-    """Two micro-batches materialize the SAME target tile (different
-    feature sets): the raw log holds both epochs, latest_tiles resolves to
-    the second batch's bytes — byte-equal to a batch run over the second
-    batch's features alone — and compact_tile_log rewrites the log in
-    place to exactly those winner rows (latest_tiles over the compacted
-    log unchanged)."""
-    import tempfile
-
-    from vtcomposite_spark.operators.composite import composite_encode_tiles
-    from vtcomposite_spark.sources import ingest
-    from vtcomposite_spark.streaming.pipeline import (
-        compact_tile_log, latest_tiles, streaming_encode_tiles)
-
-    src = tempfile.mkdtemp(prefix="vtc_log_src_")
-    snk = tempfile.mkdtemp(prefix="vtc_log_out_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_log_ckpt_")
-    try:
-        lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-        pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
-        f1 = ingest.features_from_tiles(spark, [(lbuf, 8, 0, 0)])
-        f2 = ingest.features_from_tiles(spark, [(pbuf, 8, 0, 0)])
-        targets = spark.createDataFrame(
-            [(9, dx, dy, 128, None, False) for dx in (0, 1) for dy in (0, 1)],
-            "z int, x long, y long, buffer_size int, "
-            "keep_layers array<string>, compress boolean")
-
-        # batch 1, then batch 2 against the SAME source tile address —
-        # separate stream runs (shared checkpoint) = separate epochs
-        f1.coalesce(1).write.mode("append").parquet(src)
-        streaming_encode_tiles(spark, src, targets, snk, ckpt, src_zoom=8)
-        f2.coalesce(1).write.mode("append").parquet(src)
-        streaming_encode_tiles(spark, src, targets, snk, ckpt, src_zoom=8)
-
-        log = spark.read.parquet(snk)
-        assert log.select("epoch").distinct().count() == 2
-        assert log.count() > log.select("z", "x", "y").distinct().count()
-
-        want = {(r.z, r.x, r.y): bytes(r.tile)
-                for r in composite_encode_tiles(f2, targets).collect()}
-        got = {(r.z, r.x, r.y): bytes(r.tile)
-               for r in latest_tiles(spark, snk).collect()}
-        assert got == want and want
-
-        compact_tile_log(spark, snk)
-        compacted = spark.read.parquet(snk)
-        assert compacted.count() == len(want)  # one row per tile
-        assert {(r.z, r.x, r.y): bytes(r.tile)
-                for r in latest_tiles(spark, snk).collect()} == want
-    finally:
-        for d in (src, snk, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_latest_tile_updates_change_feed(spark, fixture_bytes):
-    """The stateful change feed: (1) draining a two-epoch log emits winner
-    TRANSITIONS only — per tile the emitted epochs are unique and the
-    final one is the log's max, with the superseding batch's bytes; (2) a
-    re-delivered STALE epoch file, processed under the same checkpoint,
-    emits zero rows (per-tile max-epoch state survives across runs)."""
-    import tempfile
-
-    from vtcomposite_spark.operators.composite import composite_encode_tiles
-    from vtcomposite_spark.sources import ingest
-    from vtcomposite_spark.streaming.pipeline import (
-        run_tile_update_stream, streaming_encode_tiles)
-
-    src = tempfile.mkdtemp(prefix="vtc_cf_src_")
-    snk = tempfile.mkdtemp(prefix="vtc_cf_out_")
-    ck1 = tempfile.mkdtemp(prefix="vtc_cf_ck1_")
-    ck2 = tempfile.mkdtemp(prefix="vtc_cf_ck2_")
-    dirs = [src, snk, ck1, ck2]
-    try:
-        lbuf = fixture_bytes("linestrings-properties-16-10498-22872.mvt")
-        pbuf = fixture_bytes("polygons-properties-16-10498-22872.mvt")
-        f1 = ingest.features_from_tiles(spark, [(lbuf, 8, 0, 0)])
-        f2 = ingest.features_from_tiles(spark, [(pbuf, 8, 0, 0)])
-        targets = spark.createDataFrame(
-            [(9, dx, dy, 128, None, False) for dx in (0, 1) for dy in (0, 1)],
-            "z int, x long, y long, buffer_size int, "
-            "keep_layers array<string>, compress boolean")
-        f1.coalesce(1).write.mode("append").parquet(src)
-        streaming_encode_tiles(spark, src, targets, snk, ck1, src_zoom=8)
-        f2.coalesce(1).write.mode("append").parquet(src)
-        streaming_encode_tiles(spark, src, targets, snk, ck1, src_zoom=8)
-
-        feed = tempfile.mkdtemp(prefix="vtc_cf_feed_")
-        dirs.append(feed)
-        run_tile_update_stream(spark, snk, feed, ck2,
-                               max_files_per_trigger=1)
-        got = spark.read.parquet(feed).collect()
-        per_key = {}
-        for r in got:
-            per_key.setdefault((r.z, r.x, r.y), []).append((r.epoch, bytes(r.tile)))
-        want = {(r.z, r.x, r.y): bytes(r.tile)
-                for r in composite_encode_tiles(f2, targets).collect()}
-        assert set(per_key) == set(want)
-        for k, emitted in per_key.items():
-            epochs = [e for e, _ in emitted]
-            assert len(epochs) == len(set(epochs))  # one transition per epoch
-            top_epoch, top_bytes = max(emitted)
-            assert top_epoch == 1 and top_bytes == want[k]
-
-        # stale re-delivery: copy the epoch=0 data back in as a NEW file —
-        # the state (max epoch 1 per tile) must suppress every row
-        stale = spark.read.parquet(f"{snk}/epoch=0")  # epoch rides the dir
-        stale.coalesce(1).write.mode("append").parquet(f"{snk}/epoch=0")
-        n_before = spark.read.parquet(feed).count()
-        run_tile_update_stream(spark, snk, feed, ck2,
-                               max_files_per_trigger=1)
-        assert spark.read.parquet(feed).count() == n_before
-    finally:
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_dedupe_docs_first_seen_wins(spark):
-    """Streaming exact dedupe: (1) within one micro-batch the lowest id
-    per text wins (the batch exact_dedupe keep rule); (2) a later batch
-    under the same checkpoint emits only never-seen texts — even when
-    its duplicate has a LOWER id (first-arrival-wins, the stream
-    contract); (3) replaying batch-1's file emits zero rows (state
-    survives the checkpointed restart)."""
-    import tempfile
-
-    from vtcomposite_spark.operators.dedupe import exact_dedupe
-    from vtcomposite_spark.streaming.pipeline import run_doc_dedupe_stream
-
-    src = tempfile.mkdtemp(prefix="vtc_dd_src_")
-    out = tempfile.mkdtemp(prefix="vtc_dd_out_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_dd_ck_")
-    try:
-        b1 = spark.createDataFrame(
-            [(10, "alpha beta"), (11, "alpha beta"), (12, "gamma")],
-            "doc_id long, text string")
-        b1.coalesce(1).write.mode("append").parquet(src)
-        run_doc_dedupe_stream(spark, src, out, ckpt)
-        got1 = {(r.doc_id, r.text) for r in spark.read.parquet(out).collect()}
-        want1 = {(r.keep_id,) for r in exact_dedupe(b1).collect()}
-        assert {(i,) for i, _ in got1} == want1
-        assert got1 == {(10, "alpha beta"), (12, "gamma")}
-
-        # batch 2: dup of "gamma" with a LOWER id + one new text
-        b2 = spark.createDataFrame(
-            [(5, "gamma"), (13, "delta")], "doc_id long, text string")
-        b2.coalesce(1).write.mode("append").parquet(src)
-        run_doc_dedupe_stream(spark, src, out, ckpt)
-        got2 = {(r.doc_id, r.text) for r in spark.read.parquet(out).collect()}
-        assert got2 == got1 | {(13, "delta")}  # 5 suppressed: seen in b1
-
-        # replay batch 1's rows as a new file: nothing new may emit
-        b1.coalesce(1).write.mode("append").parquet(src)
-        run_doc_dedupe_stream(spark, src, out, ckpt)
-        assert {(r.doc_id, r.text)
-                for r in spark.read.parquet(out).collect()} == got2
-    finally:
-        for d in (src, out, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_streaming_text_quality_matches_batch(spark):
@@ -272,51 +44,3 @@ def test_streaming_text_quality_matches_batch(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_stream_dedupe_urls_canonical_frontier(spark):
-    """Streaming crawl frontier: the dedupe identity is the CANONICAL
-    URL — a later batch re-offering the same page under a different
-    spelling (http/www/tracking params) emits nothing, while a genuinely
-    new page passes; replay stays suppressed across a checkpointed
-    restart."""
-    import tempfile
-
-    from vtcomposite_spark.streaming.pipeline import stream_dedupe_urls
-
-    src = tempfile.mkdtemp(prefix="vtc_uf_src_")
-    out = tempfile.mkdtemp(prefix="vtc_uf_out_")
-    ckpt = tempfile.mkdtemp(prefix="vtc_uf_ck_")
-
-    def drain():
-        stream = spark.readStream.schema("doc_id long, url string") \
-            .parquet(src)
-        q = (stream_dedupe_urls(stream).writeStream
-             .format("parquet").option("path", out)
-             .outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    try:
-        b1 = spark.createDataFrame(
-            [(1, "https://a.com/x"), (2, "http://www.a.com/x?utm_s=1")],
-            "doc_id long, url string")
-        b1.coalesce(1).write.mode("append").parquet(src)
-        drain()
-        got1 = {(r.doc_id, r.url) for r in spark.read.parquet(out).collect()}
-        assert got1 == {(1, "https://a.com/x")}  # same canonical page
-
-        b2 = spark.createDataFrame(
-            [(3, "https://A.com/x#frag"), (4, "https://b.com/y")],
-            "doc_id long, url string")
-        b2.coalesce(1).write.mode("append").parquet(src)
-        drain()
-        got2 = {(r.doc_id, r.url) for r in spark.read.parquet(out).collect()}
-        assert got2 == got1 | {(4, "https://b.com/y")}
-
-        b1.coalesce(1).write.mode("append").parquet(src)  # replay
-        drain()
-        assert {(r.doc_id, r.url)
-                for r in spark.read.parquet(out).collect()} == got2
-    finally:
-        for d in (src, out, ckpt):
-            shutil.rmtree(d, ignore_errors=True)

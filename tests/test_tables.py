@@ -149,39 +149,6 @@ def test_features_table_prunes_on_src_z(spark, fixture_bytes, tmp_path):
     shutil.rmtree(out, ignore_errors=True)
 
 
-def test_bucketed_features_elide_exchange(spark, tmp_path):
-    """write_features_bucketed pays the source-tile shuffle ONCE at
-    ingest: a groupBy on the bucket key over the catalog scan has NO
-    Exchange, while the same aggregation over the raw parquet path
-    (bucket spec lost) must shuffle — the control that proves the plan
-    difference comes from the bucket metadata."""
-    from pyspark.sql import functions as F
-
-    from vtcomposite_spark.sources import tables as T
-
-    feats = spark.range(0, 5000).select(
-        (F.col("id") % 16).cast("long").alias("src_x"),
-        ((F.col("id") * 7) % 16).cast("long").alias("src_y"),
-        F.col("id").alias("feature_id"))
-    spark.sql("DROP TABLE IF EXISTS feats_bucket_test")
-    T.write_features_bucketed(feats, "feats_bucket_test", buckets=8)
-    try:
-        back = T.read_features_bucketed(spark, "feats_bucket_test")
-        agg = back.groupBy("src_x", "src_y").agg(F.count("*").alias("n"))
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert agg.count() == 16
-        loc = (spark.sql("DESCRIBE TABLE EXTENDED feats_bucket_test")
-               .filter("col_name = 'Location'").collect()[0][1]
-               .replace("file:", ""))
-        control = (spark.read.parquet(loc)
-                   .groupBy("src_x", "src_y").agg(F.count("*").alias("n")))
-        cplan = control._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in cplan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS feats_bucket_test")
-
-
 def test_zordered_sink_prunes_spatial_ranges(spark, tmp_path):
     """Z-order-clustered tile sink: (1) range read == brute filter,
     row-exact; (2) the zkey BETWEEN predicate reaches the parquet scan

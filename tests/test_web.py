@@ -107,13 +107,17 @@ def test_latest_snapshot_duckdb_twin_parity(spark):
 
 
 def test_blocklist_plan_shape(spark):
-    """Scale-shape gate: both blocklist joins are forced broadcasts (the
-    blocklist and the bad-host keys are driver-sized dimensions by
-    construction) — doc payloads must never shuffle."""
-    docs = spark.createDataFrame(
-        [(i, f"s{i % 7}.example.com") for i in range(100)],
+    """Scale-shape gate, small side: with sizes the optimizer can read (a
+    pandas-built frame is a LocalRelation; a list-built one is RDD-backed
+    and unsized), both blocklist joins broadcast by their size estimate
+    before any job runs — doc payloads do not shuffle. The large-side
+    route is test_blocklist_auto_regime_matches_broadcast."""
+    docs = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": range(100),
+         "host": [f"s{i % 7}.example.com" for i in range(100)]}),
         "doc_id long, host string")
-    bl = spark.createDataFrame([("example.com",)], "domain string")
+    bl = spark.createDataFrame(pd.DataFrame({"domain": ["example.com"]}),
+                               "domain string")
     plan = W.blocklist_filter(docs, bl) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastExchange") >= 2
@@ -157,10 +161,10 @@ def test_crawl_diff_duckdb_twin_parity(spark):
 
 
 def test_blocklist_auto_regime_matches_broadcast(spark):
-    """flag_join='auto' under the no-auto-broadcast regime (the
-    planet-scale simulation from test_plans) must shuffle-join and
-    return identical rows."""
-    from tests.test_plans import _no_broadcast
+    """Under the no-auto-broadcast regime (the planet-scale simulation
+    from test_plans) the default plan forces no broadcast: both joins
+    shuffle, and the rows equal the default session's."""
+    from tests.test_plans import _final_plan, _no_broadcast
 
     docs = spark.createDataFrame(
         [(i, f"s{i % 7}.example.com") for i in range(200)],
@@ -170,9 +174,11 @@ def test_blocklist_auto_regime_matches_broadcast(spark):
     want = {(r.doc_id, r.blocked)
             for r in W.blocklist_filter(docs, bl).collect()}
     with _no_broadcast(spark):
-        auto = W.blocklist_filter(docs, bl, flag_join="auto")
-        got = {(r.doc_id, r.blocked) for r in auto.collect()}
+        out = W.blocklist_filter(docs, bl)
+        got = {(r.doc_id, r.blocked) for r in out.collect()}
+        plan = _final_plan(out)  # after the run: AQE's final plan
     assert got == want
+    assert "BroadcastExchange" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -265,15 +271,19 @@ def test_parse_robots_rules(spark):
 
 
 def test_robots_auto_regime_matches_broadcast(spark):
-    from tests.test_plans import _no_broadcast
+    """Under the no-auto-broadcast regime the default plan forces no
+    broadcast of the rules table, and the rows equal the default
+    session's."""
+    from tests.test_plans import _final_plan, _no_broadcast
     rob, urls = _robots_frames(spark)
     want = {(r.url, r.allowed)
             for r in W.robots_allowed(urls, rob).collect()}
     with _no_broadcast(spark):
-        got = {(r.url, r.allowed)
-               for r in W.robots_allowed(urls, rob,
-                                         rules_join="auto").collect()}
+        out = W.robots_allowed(urls, rob)
+        got = {(r.url, r.allowed) for r in out.collect()}
+        plan = _final_plan(out)  # after the run: AQE's final plan
     assert got == want
+    assert "BroadcastExchange" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -4,10 +4,12 @@ engine with the query surface of mapbox/vtcomposite, re-expressed for
 
 Request-compatible surface:   api.composite / api.localize
 DataFrame engine surface:     operators.* (composite, localize, cells,
-                              joins, dedupe, similarity, multimodal)
-Kernels (numpy/Arrow):        geometry, tilemath
-Sources/sinks:                sources.mvt (codec), sources.pages, sources.ingest
-Scale plumbing:               plans.skew (salting), plans.lineage (resume)
+                              joins, dedupe, similarity, web, raster,
+                              multimodal images, ...)
+Kernels (numpy/Arrow):        geometry, polyclip, tilemath
+Sources/sinks:                sources.mvt (codec), sources.pages,
+                              sources.ingest, sources.tables, sources.warc
+Scale plumbing:               plans.skew (salting)
 """
 
 from .api import composite, localize  # noqa: F401

@@ -48,25 +48,11 @@ def _perm_consts(k: int) -> list[tuple[int, int]]:
             for j in range(1, k + 1)]
 
 
-def minhash_sig_col(text: Column, k: int = 8, n: int = 3) -> Column:
-    """k-element MinHash signature.
-
-    ONE md5 per shingle (its first 8 hex chars → 32-bit int via conv), then
-    k affine permutations (a_j·h + b_j) mod 2^31−1 with min-reduce — k
-    integer ops instead of k digests per shingle. Same values replayed by
-    ``minhash_sig_sql`` (strpos-based hex parse, identical arithmetic).
-    """
-    sh = shingles_col(text, n)
-    hs = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10)
-                     .cast("long"))
-    sig = [
-        F.array_min(F.transform(hs, lambda h: (h * a + b) % _MERSENNE31))
-        for a, b in _perm_consts(k)
-    ]
-    return F.array(*sig)
-
-
 def minhash_sig_sql(c: str, k: int = 8, n: int = 3) -> str:
+    """k-element MinHash signature, DuckDB twin of
+    ``operators.dedupe.minhash_signatures``: ONE md5 per shingle (its
+    first 8 hex chars → 32-bit int), then k affine permutations
+    (a_j·h + b_j) mod 2^31−1 with min-reduce."""
     sh = shingles_sql(c, n)
     hex8 = hex_to_int_sql("md5(s)", 8)
     hs = f"list_transform({sh}, s -> {hex8})"

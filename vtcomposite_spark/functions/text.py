@@ -449,19 +449,6 @@ def sniff_mime_col(payload: Column) -> Column:
             .otherwise(F.lit("other")))
 
 
-def sniff_mime_sql(c: str) -> str:
-    """DuckDB twin (``c`` = a BLOB column; DuckDB has no blob substr, so
-    the head slice happens on the hex string)."""
-    head = f"substr(upper(hex({c})), 1, 128)"
-    cases = " ".join(
-        f"WHEN starts_with({head}, '{p}') THEN '{l}'"
-        for p, l in _MAGIC_PREFIXES)
-    return (f"CASE WHEN {c} IS NULL THEN NULL {cases} "
-            f"WHEN regexp_matches({head}, '{HTML_HEX_PAT}') THEN 'html' "
-            f"WHEN regexp_matches({head}, '{XML_HEX_PAT}') THEN 'xml' "
-            "ELSE 'other' END")
-
-
 # --- SURT keys (Sort-friendly URI Reordering Transform) ---
 #
 # The Common-Crawl/OpenWayback index key: host labels reversed and

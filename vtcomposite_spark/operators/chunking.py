@@ -260,8 +260,7 @@ def sample_mixture(docs: DataFrame, rates, group_col: str = "lang",
 
 def dsir_logratio(docs: DataFrame, target: DataFrame,
                   buckets: int = 4096, id_col: str = "doc_id",
-                  text_col: str = "text", salt: str = "dsir",
-                  counts_join: str = "broadcast") -> DataFrame:
+                  text_col: str = "text", salt: str = "dsir") -> DataFrame:
     """Data Selection via Importance Resampling (the DSIR shape, Xie et
     al. 2023): score every raw document by how much more likely its
     tokens are under a TARGET subcorpus's hashed-unigram distribution
@@ -281,9 +280,8 @@ def dsir_logratio(docs: DataFrame, target: DataFrame,
     identically in the SQL twin, so the full oracle gate verifies it
     value-exact.
 
-    100-TB shape: both bucket-count tables have ≤ ``buckets`` rows —
-    broadcast by default (``counts_join="auto"`` leaves the strategy to
-    AQE for huge bucket counts); totals are 1-row broadcast aggregates;
+    100-TB shape: both bucket-count tables have ≤ ``buckets`` ≤ 65,536
+    rows and are always broadcast; totals are 1-row broadcast aggregates;
     the token explode is rows ∝ tokens with map-side-combine counts and
     a keys-only per-doc groupBy. No all-pairs, no driver collect.
     """
@@ -305,8 +303,8 @@ def dsir_logratio(docs: DataFrame, target: DataFrame,
     tc = toks(target).groupBy("b").agg(F.count("*").alias("tcnt"))
     tot = rc.agg(F.sum("rcnt").alias("rtot")).crossJoin(
         tc.agg(F.coalesce(F.sum("tcnt"), F.lit(0)).alias("ttot")))
-    if counts_join == "broadcast":
-        rc, tc = F.broadcast(rc), F.broadcast(tc)
+    # ≤ buckets ≤ 65,536 rows each, whatever the corpus size
+    rc, tc = F.broadcast(rc), F.broadcast(tc)
     num = ((F.coalesce(F.col("tcnt"), F.lit(0)) + 1).cast("double")
            / (F.col("ttot") + buckets))
     den = ((F.col("rcnt") + 1).cast("double")
@@ -461,55 +459,6 @@ def pack_sequences(docs: DataFrame, seq_tokens: int = 2048,
         (lo - F.col("seq_idx") * seq_tokens).cast("long")
         .alias("seq_tok_start"),
         (hi - lo).cast("long").alias("n_toks"))
-
-
-def write_sequences(docs: DataFrame, path: str, seq_tokens: int = 2048,
-                    shard_sequences: int = 1024, id_col: str = "doc_id",
-                    text_col: str = "text", mode: str = "error") -> DataFrame:
-    """MATERIALIZE the packed training sequences: join the
-    ``pack_sequences`` slice map back onto the token stream and write
-    one row per sequence — (seq_idx, tokens array<string>, n_toks) —
-    as parquet sharded by ``shard`` = seq_idx div shard_sequences (the
-    fixed-size training-shard layout a data loader reads; map tokens
-    to ids downstream with ``bpe_apply``'s vocabulary if needed).
-    Returns the per-shard manifest (shard, n_sequences, n_tokens) read
-    back from the written files — the resume/accounting record, like
-    the WET sink's manifest.
-
-    100-TB shape: rows ∝ tokens end to end — posexplode the token
-    stream, equi-join the slice map on the doc id (each doc carries at
-    most n/seq_tokens + 1 slices, so the range filter's duplication is
-    ~1), shift to sequence-local positions, and regroup by sequence.
-    Every full sequence has exactly ``seq_tokens`` tokens; the final
-    one may be short. Conservation (Σ shard n_tokens == Σ doc tokens)
-    is tested."""
-    if shard_sequences < 1:
-        raise ValueError("shard_sequences must be >= 1")
-    spans = pack_sequences(docs, seq_tokens, id_col, text_col)
-    toks = docs.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(TX.tokens_col(F.col(text_col))).alias("p", "tok"))
-    placed = (toks.join(spans.withColumnRenamed(id_col, "_id"), "_id")
-              .filter((F.col("p") >= F.col("doc_tok_start"))
-                      & (F.col("p") < F.col("doc_tok_start")
-                         + F.col("n_toks")))
-              .select("seq_idx",
-                      (F.col("seq_tok_start") + F.col("p")
-                       - F.col("doc_tok_start")).alias("spos"), "tok"))
-    seqs = (placed.groupBy("seq_idx")
-            .agg(F.array_sort(F.collect_list(F.struct("spos", "tok")))
-                 .alias("st"))
-            .select("seq_idx",
-                    F.transform("st", lambda s: s["tok"]).alias("tokens"))
-            .withColumn("n_toks", F.size("tokens").cast("long"))
-            .withColumn("shard",
-                        F.expr(f"seq_idx div {shard_sequences}")))
-    seqs.write.mode(mode).partitionBy("shard").parquet(path)
-    back = docs.sparkSession.read.parquet(path)
-    return (back.groupBy("shard")
-            .agg(F.count("*").alias("n_sequences"),
-                 F.sum("n_toks").alias("n_tokens"))
-            .orderBy("shard"))
 
 
 def pack_sequences_sql(seq_tokens: int = 2048, table: str = "documents",

@@ -549,27 +549,25 @@ def dedupe_substrings(docs: DataFrame, k: int = 8,
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
                   text_col: str = "text", id_col: str = "doc_id",
-                  bench_text_col: str | None = None,
-                  bench_join: str = "broadcast") -> DataFrame:
+                  bench_text_col: str | None = None) -> DataFrame:
     """Benchmark DECONTAMINATION: flag training docs that share any word
     n-gram with an evaluation/benchmark set — the n-gram-collision
     protocol the Gopher and GPT-3 appendices describe (13-grams there;
     ``n`` is a parameter). Returns one row per doc:
     (id, n_hits = distinct colliding n-grams, contaminated flag).
 
-    100-TB shape: the benchmark side reduces to a DISTINCT gram set
-    (benchmarks are MBs — broadcast by default, ``bench_join="auto"`` for
-    outsized ones); training grams explode to rows (∝ tokens) but stay
-    MAP-SIDE through the broadcast join — only the HIT grams (tiny) reach
-    the count-distinct shuffle, and the final left join is keys-only.
+    100-TB shape: the benchmark side reduces to a DISTINCT gram set, joined
+    with no hint — Catalyst's size estimate and AQE's runtime conversion
+    broadcast it while it is small (benchmarks are MBs), so training grams
+    explode to rows (∝ tokens) but stay MAP-SIDE; only the HIT grams
+    (tiny) reach the count-distinct shuffle, and the final left join is
+    keys-only.
     No global distinct over corpus grams anywhere.
     """
     bt = bench_text_col or text_col
     bg = (benchmark
           .select(F.explode(H.shingles_col(F.col(bt), n)).alias("gram"))
           .distinct())
-    if bench_join == "broadcast":
-        bg = F.broadcast(bg)
     tg = docs.select(
         F.col(id_col),
         F.explode(H.shingles_col(F.col(text_col), n)).alias("gram"))

@@ -440,6 +440,12 @@ def knn_join(points: DataFrame, sites: DataFrame, k: int,
     1,000   25,124 B  6.32 / 10.32 s        7.32 / 9.65 s
     ======  ========  ====================  ====================
 
+    A site frame built from a Python list (``spark.createDataFrame`` over
+    a list) is RDD-backed: the optimizer sizes it at ``Long.MaxValue``,
+    so it always takes the grid route, however few sites it holds. Build
+    a small site table from pandas or read it from parquet to let the
+    estimate choose brute force.
+
     ``exact=False`` always runs the grid and skips the check (the
     documented contract is then the caller's problem — pick ``zoom`` so a
     cell ≳ the max kNN radius).

@@ -28,31 +28,23 @@ def domain_suffixes_col(host):
 
 def blocklist_filter(docs: DataFrame, blocklist: DataFrame,
                      host_col: str = "host",
-                     domain_col: str = "domain",
-                     flag_join: str = "broadcast") -> DataFrame:
+                     domain_col: str = "domain") -> DataFrame:
     """Mark every doc whose host equals — or is a subdomain of — a
     blocklisted domain: input rows + a ``blocked`` boolean.
 
     100-TB shape: the suffix explode is rows ∝ docs × label-depth
-    (~4), keys-only; the blocklist itself is always a broadcast
-    dimension (UT1-sized lists are a few MB). ``flag_join`` sizes the
-    join of the matched BAD-HOST key set back onto the docs:
-    ``"broadcast"`` (default — right while bad hosts are a driver-sized
-    set) or ``"auto"`` (no hint; Catalyst/AQE picks — the escape hatch
-    when a coarse blocklist entry matches millions of hosts). Doc
-    payloads never shuffle under broadcast; under auto they shuffle
-    once on the host key. Callers drop with
-    ``.filter(~F.col('blocked'))``."""
-    if flag_join not in ("broadcast", "auto"):
-        raise ValueError("flag_join must be 'broadcast' or 'auto'")
+    (~4), keys-only. Neither join carries a hint: the blocklist is the
+    caller's input, of any size, and the matched BAD-HOST key set grows
+    with the corpus (a coarse entry can match millions of hosts).
+    Catalyst's size estimate and AQE's runtime conversion broadcast a
+    side while it is small and shuffle on the key otherwise. Callers
+    drop with ``.filter(~F.col('blocked'))``."""
     s = (docs.select(F.col(host_col),
                      F.explode(domain_suffixes_col(F.col(host_col)))
                      .alias("_sfx"))
-         .join(F.broadcast(blocklist.select(
-             F.col(domain_col).alias("_sfx"))), "_sfx", "left_semi")
+         .join(blocklist.select(F.col(domain_col).alias("_sfx")),
+               "_sfx", "left_semi")
          .select(F.col(host_col).alias("_bad_host")).distinct())
-    if flag_join == "broadcast":
-        s = F.broadcast(s)
     return (docs.join(s, docs[host_col] == s["_bad_host"], "left")
             .withColumn("blocked", F.col("_bad_host").isNotNull())
             .drop("_bad_host"))
@@ -421,26 +413,21 @@ def robots_sitemaps_sql(robots_sql: str, host_col: str = "host",
 
 def robots_allowed(urls: DataFrame, robots: DataFrame, agent: str = "*",
                    url_col: str = "url", host_col: str = "host",
-                   txt_col: str = "robots_txt",
-                   rules_join: str = "broadcast") -> DataFrame:
+                   txt_col: str = "robots_txt") -> DataFrame:
     """(url, allowed): evaluate every url against its host's robots.txt
     under the RFC 9309 precedence (longest matching path wins; tie →
     Allow). The match path is the url's path+query (fragment dropped),
     '/' when empty.
 
-    100-TB shape: the parsed rules table is per-host small —
-    ``rules_join='broadcast'`` (default) ships it to the url scan so
-    urls never shuffle; ``'auto'`` is the escape hatch for pathological
-    robots corpora. The candidate explode is rows ∝ urls ×
-    rules-per-host (bounded), keys-only; the winner is one
+    100-TB shape: the parsed rules table grows with the robots corpus,
+    so its join carries no hint — Catalyst's size estimate and AQE's
+    runtime conversion broadcast it to the url scan while it is small
+    and shuffle both sides on the host otherwise. The candidate explode
+    is rows ∝ urls × rules-per-host (bounded), keys-only; the winner is one
     min(struct(-len, disallow_rank)) aggregate per url — longest path,
     Allow on ties — no window over the url corpus."""
-    if rules_join not in ("broadcast", "auto"):
-        raise ValueError("rules_join must be 'broadcast' or 'auto'")
     from ..functions.text import SCHEME_HOST_PATTERN, url_host_col
     rules = parse_robots(robots, agent, host_col, txt_col)
-    if rules_join == "broadcast":
-        rules = F.broadcast(rules)
     u = urls.select(
         F.col(url_col),
         # hostnames are case-insensitive (RFC 4343); parse_robots

@@ -42,34 +42,6 @@ from . import geometry as geo
 _I64 = np.int64
 
 
-def _point_in_ring(px: int, py: int, xs: np.ndarray, ys: np.ndarray) -> bool:
-    x0, y0 = xs[:-1], ys[:-1]
-    x1, y1 = xs[1:], ys[1:]
-    cond = (y0 > py) != (y1 > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xi = x0 + (py - y0) / (y1 - y0) * (x1 - x0)
-    return bool(np.count_nonzero(cond & (px < xi)) % 2)
-
-
-def _perimeter_pos(x: float, y: float, lo: float, hi: float) -> float:
-    """Position along the window boundary in canonical orientation.
-
-    side 0: y=lo, x lo→hi ; side 1: x=hi, y lo→hi ;
-    side 2: y=hi, x hi→lo ; side 3: x=lo, y hi→lo.
-    Corners are assigned to the side they START (s = k*w).
-    """
-    w = hi - lo
-    if y == lo and x < hi:
-        return x - lo
-    if x == hi and y < hi:
-        return w + (y - lo)
-    if y == hi and x > lo:
-        return 2 * w + (hi - x)
-    if x == lo and y > lo:
-        return 3 * w + (hi - y)
-    return 0.0  # (lo, lo)
-
-
 def _corners_between(s0: float, s1: float, lo: int, hi: int):
     """Window corners strictly between perimeter positions s0 → s1
     (walking forward, cyclic)."""
@@ -87,89 +59,6 @@ def _corners_between(s0: float, s1: float, lo: int, hi: int):
     return out
 
 
-def _ring_chains(xs: np.ndarray, ys: np.ndarray, lo: int, hi: int):
-    """Cut a CLOSED ring into inside-window chains.
-
-    Returns (status, chains): status ∈ {"inside", "outside", "crossing"};
-    chains = list of (points list, s_entry, s_exit).
-    """
-    oxs, oys = xs[:-1], ys[:-1]  # open ring
-    ins = (oxs >= lo) & (oxs <= hi) & (oys >= lo) & (oys <= hi)
-    n = len(oxs)
-
-    # fast classifications
-    if ins.all():
-        return "inside", []
-
-    # rotate so vertex 0 is strictly outside (exists when not all inside)
-    start = int(np.argmax(~ins))
-    rx = np.concatenate([oxs[start:], oxs[:start]])
-    ry = np.concatenate([oys[start:], oys[:start]])
-
-    # walk edges (closed): vertex i -> i+1 (mod n)
-    ex0 = rx.astype(np.float64)
-    ey0 = ry.astype(np.float64)
-    ex1 = np.concatenate([ex0[1:], ex0[:1]])
-    ey1 = np.concatenate([ey0[1:], ey0[:1]])
-    dx, dy = ex1 - ex0, ey1 - ey0
-    t0 = np.zeros(n)
-    t1 = np.ones(n)
-    visible = np.ones(n, bool)
-    for p, q in ((-dx, ex0 - lo), (dx, hi - ex0), (-dy, ey0 - lo), (dy, hi - ey0)):
-        nz = p != 0
-        r = np.where(nz, q / np.where(nz, p, 1.0), 0.0)
-        visible &= nz | (q >= 0)
-        t0 = np.where(nz & (p < 0), np.maximum(t0, r), t0)
-        t1 = np.where(nz & (p > 0), np.minimum(t1, r), t1)
-    visible &= t0 <= t1
-
-    if not visible.any():
-        return "outside", []
-
-    ax = np.where(t0 == 0.0, ex0, np.rint(ex0 + t0 * dx))
-    ay = np.where(t0 == 0.0, ey0, np.rint(ey0 + t0 * dy))
-    bx = np.where(t1 == 1.0, ex1, np.rint(ex0 + t1 * dx))
-    by = np.where(t1 == 1.0, ey1, np.rint(ey0 + t1 * dy))
-
-    rins = np.concatenate([ins[start:], ins[:start]])
-    rins_next = np.concatenate([rins[1:], rins[:1]])
-
-    chains = []
-    cur: list[tuple[int, int]] | None = None
-    for i in range(n):
-        if not visible[i]:
-            continue
-        a = (int(ax[i]), int(ay[i]))
-        b = (int(bx[i]), int(by[i]))
-        if cur is None:
-            cur = [a]
-        elif not rins[i]:  # edge starts outside: previous chain ended earlier
-            # (can happen when visibility is a single touching point)
-            chains.append(cur)
-            cur = [a]
-        if not cur or cur[-1] != b:
-            cur.append(b)
-        if not rins_next[i]:  # edge leaves the window (or ends outside)
-            chains.append(cur)
-            cur = None
-    if cur is not None:
-        chains.append(cur)
-
-    out = []
-    for ch in chains:
-        # drop consecutive dups already handled; degenerate single points out
-        if len(ch) < 2 and True:
-            # a touch-point chain: keep only if it truly has extent
-            if len(ch) == 1:
-                continue
-        s_in = _perimeter_pos(ch[0][0], ch[0][1], lo, hi)
-        s_out = _perimeter_pos(ch[-1][0], ch[-1][1], lo, hi)
-        out.append((ch, s_in, s_out))
-    if not out:
-        return "outside", []
-    return "crossing", out
-
-
 def _ring_area2_py(pts) -> int:
     """Twice the shoelace area of a CLOSED ring of (x, y) tuples — pure
     python (exact int math; small rings, no numpy alloc overhead)."""
@@ -181,7 +70,8 @@ def _ring_area2_py(pts) -> int:
 
 def _point_in_ring_py(px, py, pts) -> bool:
     """Even-odd test against a CLOSED ring of tuples — pure-python twin of
-    ``_point_in_ring`` (identical float64 formula per crossing edge)."""
+    the numpy ring test in tests/reference_plans.py (identical float64
+    formula per crossing edge)."""
     cnt = 0
     for i in range(len(pts) - 1):
         x0, y0 = pts[i]
@@ -190,26 +80,6 @@ def _point_in_ring_py(px, py, pts) -> bool:
             if px < x0 + (py - y0) / (y1 - y0) * (x1 - x0):
                 cnt += 1
     return bool(cnt % 2)
-
-
-def clip_polygon(rings: list[tuple[np.ndarray, np.ndarray]], lo: int, hi: int):
-    """Clip one polygon (ring 0 = outer, rest holes; CLOSED int64 arrays)
-    to the window. Returns a list of output polygons, each a list of CLOSED
-    (xs, ys) rings (ring 0 outer). Reference path for tests; the batch
-    driver feeds the same assembly from globally-vectorized chain cutting."""
-    infos = []
-    for xs, ys in rings:
-        status, ch = _ring_chains(xs, ys, lo, hi)
-        surrounds = False
-        pts = None
-        if status == "outside":
-            c = (lo + hi) / 2.0
-            surrounds = _point_in_ring(c, c, xs.astype(np.float64),
-                                       ys.astype(np.float64))
-        elif status == "inside":
-            pts = list(zip(xs.tolist(), ys.tolist()))
-        infos.append((status, ch, surrounds, pts))
-    return _trace_and_assemble(infos, lo, hi)
 
 
 def _trace_and_assemble(infos, lo: int, hi: int):
@@ -339,8 +209,10 @@ def _trace_and_assemble(infos, lo: int, hi: int):
 
 
 def _perimeter_pos_vec(x, y, lo, hi):
-    """Vectorized ``_perimeter_pos`` — identical branch order via np.select
-    (first condition wins)."""
+    """Position along the window boundary in canonical orientation —
+    side 0: y=lo, x lo→hi; side 1: x=hi, y lo→hi; side 2: y=hi, x hi→lo;
+    side 3: x=lo, y hi→lo; corners belong to the side they START. The
+    first condition wins (np.select), as in the per-point reference."""
     w = hi - lo
     conds = [(y == lo) & (x < hi), (x == hi) & (y < hi),
              (y == hi) & (x > lo), (x == lo) & (y > lo)]
@@ -352,10 +224,11 @@ def _cut_chains_global(flo: np.ndarray, fhi: np.ndarray,
                        cand: np.ndarray, v_in: np.ndarray,
                        ox: np.ndarray, oy: np.ndarray,
                        ostart: np.ndarray, osizes: np.ndarray):
-    """``_ring_chains`` over ALL candidate rings at once.
+    """Cut ALL candidate rings into inside-window chains at once.
 
     One Liang–Barsky pass over every edge of every boundary-candidate ring
-    (rotated so vertex 0 is outside, exactly as the per-ring version), then
+    (rotated so vertex 0 is outside, exactly as the per-ring reference
+    ``clip_polygon`` in tests/reference_plans.py), then
     vectorized chain segmentation/dedup. Returns per-ring chain-count plus
     flat chain arrays for the per-polygon assembly, and the surround-parity
     flags for rings that produced no usable chain.

@@ -7,13 +7,11 @@ DataFrames, so the storage layer is exactly two functions. ``format=
 (spark.sql.catalog.* + iceberg-spark-runtime on the classpath) and falls
 back to parquet otherwise — THIS sandbox ships no iceberg-spark-runtime
 jar, so here the Iceberg branch is exercised only up to its clearly
-reported error (tested), exactly like the compressed-codec seam in
-operators.multimodal.
+reported error (tested).
 
-Scale layout: tile outputs partition by zoom (and bucket by x at the
-caller's option) so planet-pyramid writes prune on z at read time;
-Iceberg additionally gives snapshot isolation + hidden partitioning for
-the resume-from-checkpoint story in plans.lineage.
+Scale layout: tile outputs partition by zoom so planet-pyramid writes
+prune on z at read time; Iceberg additionally gives snapshot isolation +
+hidden partitioning.
 """
 
 from __future__ import annotations
@@ -166,33 +164,6 @@ def read_features(spark: SparkSession, source: str,
     from pyspark.sql import functions as F
     return spark.read.parquet(source) \
         .withColumn("src_z", F.col("src_z").cast("int"))
-
-
-def write_features_bucketed(df: DataFrame, table: str, buckets: int = 64,
-                            bucket_cols: tuple = ("src_x", "src_y"),
-                            mode: str = "overwrite") -> None:
-    """FEATURES sink BUCKETED by source-tile coordinates (Spark-native
-    hash bucketing via ``bucketBy`` + ``saveAsTable``; works on the
-    in-memory/Hive catalog alike). Every downstream operation keyed by
-    the source tile — the source-grouped overzoom's per-source-tile
-    regroup, first-wins winner joins, tile-log reconciliation — then
-    reads a scan that already SATISFIES the hash distribution, so
-    Catalyst drops the Exchange: at 100 TB the one big shuffle of the
-    materialization pipeline is paid once at ingest, not per job
-    (plan-gated in tests/test_tables.py). Rows are sorted inside each
-    bucket by the bucket key, so per-source-tile kernels also stream
-    runs instead of re-sorting."""
-    (df.write.format("parquet").mode(mode)
-     .bucketBy(buckets, *bucket_cols)
-     .sortBy(*bucket_cols)
-     .saveAsTable(table))
-
-
-def read_features_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Catalog scan of a bucketed features table (``spark.table`` —
-    reading the parquet PATH would drop the bucket spec and with it the
-    exchange elision)."""
-    return spark.table(table)
 
 
 def write_tiles_zordered(df: DataFrame, path: str, mode: str = "append",

@@ -213,20 +213,13 @@ def parse_warc_bytes(buf: bytes, parse_http: bool = True,
 # reader
 # ---------------------------------------------------------------------------
 
-#: the binaryFile source's fixed schema (needed explicitly for streaming)
-BINARY_FILE_SCHEMA = T.StructType([
-    T.StructField("path", T.StringType()),
-    T.StructField("modificationTime", T.TimestampType()),
-    T.StructField("length", T.LongType()),
-    T.StructField("content", T.BinaryType()),
-])
-
-
-def _records_frame(files: DataFrame, parse_http: bool,
-                   keep_payload: bool) -> DataFrame:
-    """(path, content) rows → one row per WARC record. Works unchanged
-    on batch and streaming frames (the seam is stateless)."""
-    files = files.select("path", "content")
+def read_warc(spark: SparkSession, path: str, parse_http: bool = True,
+              keep_payload: bool = True) -> DataFrame:
+    """WARC files under ``path`` (glob ok) → one row per record
+    (WARC_SCHEMA). One binaryFile row per file; the parse seam ships
+    (path, content) in and never ships the file blob back out."""
+    files = spark.read.format("binaryFile").load(path).select(
+        "path", "content")
     schema = WARC_SCHEMA if keep_payload else T.StructType(
         [f for f in WARC_SCHEMA.fields if f.name != "html"])
 
@@ -245,23 +238,6 @@ def _records_frame(files: DataFrame, parse_http: bool,
                     {f.name: [] for f in schema.fields})
 
     return files.mapInPandas(kernel, schema=schema)
-
-
-def read_warc(spark: SparkSession, path: str, parse_http: bool = True,
-              keep_payload: bool = True) -> DataFrame:
-    """WARC files under ``path`` (glob ok) → one row per record
-    (WARC_SCHEMA). One binaryFile row per file; the parse seam ships
-    (path, content) in and never ships the file blob back out."""
-    return _records_frame(spark.read.format("binaryFile").load(path),
-                          parse_http, keep_payload)
-
-
-def warc_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Response records as the pages frame contract (url, warc_ts, html)
-    — feed straight into pages.extract_text / extract_geotags."""
-    return (read_warc(spark, path, parse_http=True)
-            .filter(F.col("warc_type") == "response")
-            .select("url", "warc_ts", "html"))
 
 
 def cdx_index(records: DataFrame) -> DataFrame:
@@ -284,86 +260,6 @@ def cdx_index(records: DataFrame) -> DataFrame:
                      "warc_ts", "url", "warc_file", "record_offset"))
     return (keyed.repartitionByRange("surt", "warc_ts")
             .sortWithinPartitions("surt", "warc_ts"))
-
-
-def write_wet(pages: DataFrame, out_dir: str, url_col: str = "url",
-              ts_col: str = "warc_ts", text_col: str = "extracted",
-              per_record_gzip: bool = True) -> DataFrame:
-    """Materialize extracted text as WET (WARC conversion records) —
-    the format Common Crawl publishes its text layer in, so the
-    engine's output drops into any WET consumer. One file per
-    partition, written executor-side (``out_dir`` must be shared
-    storage on a real cluster), records in partition order; returns
-    the manifest (wet_file, n_records) — an ACTION-triggering frame
-    the caller counts/collects.
-
-    The text payload is the UTF-8 bytes of ``text_col`` verbatim, so
-    warc_pages(read) → extract_text → write_wet → read_warc round-trips
-    the north-rule byte-identical text. Gzip members carry mtime=0:
-    same rows per partition → same file bytes."""
-    import os as _os
-
-    cols = pages.select(F.col(url_col).alias("url"),
-                        F.col(ts_col).alias("warc_ts"),
-                        F.col(text_col).alias("text"))
-    out_schema = T.StructType([
-        T.StructField("wet_file", T.StringType()),
-        T.StructField("n_records", T.LongType()),
-    ])
-
-    def kernel(pdfs):
-        import pandas as _pd
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        recs = []
-        for pdf in pdfs:
-            for u, ts, tx in zip(pdf["url"], pdf["warc_ts"], pdf["text"]):
-                if tx is None:
-                    continue
-                recs.append({"url": u, "warc_ts": ts,
-                             "payload": str(tx).encode("utf-8"),
-                             "warc_type": "conversion"})
-        if not recs:
-            yield _pd.DataFrame({"wet_file": [], "n_records": []})
-            return
-        path = _os.path.join(
-            out_dir, f"part-{pid:05d}.warc.wet"
-            + (".gz" if per_record_gzip else ""))
-        write_warc(recs, path, per_record_gzip=per_record_gzip,
-                   http_wrap=False)
-        yield _pd.DataFrame({"wet_file": [path],
-                             "n_records": [len(recs)]})
-
-    _os.makedirs(out_dir, exist_ok=True)
-    return cols.mapInPandas(kernel, schema=out_schema)
-
-
-def read_wet(spark: SparkSession, path: str) -> DataFrame:
-    """(url, warc_ts, text) from WET files — conversion records with
-    the payload decoded back to text."""
-    recs = read_warc(spark, path, parse_http=False)
-    return (recs.filter(F.col("warc_type") == "conversion")
-            .select("url", "warc_ts",
-                    F.decode(F.col("html"), "UTF-8").alias("text")))
-
-
-def stream_warc_pages(spark: SparkSession, path: str,
-                      parse_http: bool = True,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming twin of :func:`warc_pages`: warc files landing under
-    ``path`` become micro-batches of response-record pages rows — the
-    ingestion front of an incremental crawl pipeline (compose with
-    streaming.pipeline.stream_dedupe_urls / stream_dedupe_docs
-    downstream; the file source's checkpoint makes each warc
-    exactly-once). binaryFile requires an explicit schema when
-    streaming; ``maxFilesPerTrigger`` bounds a micro-batch to a known
-    number of ~1 GB warcs — the natural backpressure unit."""
-    reader = spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (_records_frame(reader.load(path), parse_http, True)
-            .filter(F.col("warc_type") == "response")
-            .select("url", "warc_ts", "html"))
 
 
 def surt_domain_range(domain: str,

@@ -66,17 +66,6 @@ def lonlat_to_tile(lon, lat, zoom):
     return tx, ty
 
 
-def lonlat_to_tile_px(lon, lat, zoom, extent=4096):
-    """Integer tile-local pixel coords (the MVT encoder quantization)."""
-    fx = lon_to_tilex(lon, zoom)
-    fy = lat_to_tiley(lat, zoom)
-    tx = np.floor(fx).astype(np.int64)
-    ty = np.floor(fy).astype(np.int64)
-    px = np.round((fx - tx) * extent).astype(np.int64)
-    py = np.round((fy - ty) * extent).astype(np.int64)
-    return tx, ty, px, py
-
-
 def within_target(src_z, src_x, src_y, z, x, y):
     """Ancestry predicate (reference src/zxy_math.hpp:8-17).
 
@@ -114,20 +103,6 @@ def pack_cell(z, x, y):
     if np.any(z > MAX_CELL_ZOOM) or np.any(z < 0):
         raise ValueError(f"pack_cell: zoom must be in [0, {MAX_CELL_ZOOM}]")
     return (z << 58) | (np.asarray(x, dtype=np.int64) << 29) | np.asarray(y, dtype=np.int64)
-
-
-def unpack_cell(cell):
-    cell = np.asarray(cell, dtype=np.int64)
-    z = cell >> 58
-    x = (cell >> 29) & ((1 << 29) - 1)
-    y = cell & ((1 << 29) - 1)
-    return z, x, y
-
-
-def parent_cell(cell, parent_z):
-    z, x, y = unpack_cell(cell)
-    dz = z - np.int64(parent_z)
-    return pack_cell(np.full_like(z, parent_z), x >> dz, y >> dz)
 
 
 # ---------------------------------------------------------------------------
