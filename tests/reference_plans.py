@@ -28,8 +28,18 @@ reproduce their rows as a multiset and their tiles byte for byte.
 * ``minhash_sig_col``: the MinHash signature as one Column expression;
   ``functions.hashing.minhash_sig_sql`` must give the same values.
 * ``sniff_mime_sql``: DuckDB twin of ``functions.text.sniff_mime_col``.
-* ``lonlat_to_tile_px``, ``unpack_cell``, ``parent_cell``: numpy tile
-  math the cell and pixel kernels are checked against.
+* ``lonlat_to_tile_px``: numpy lon/lat → tile-pixel math for the
+  four-points golden pixels.
+* ``extract_links_col`` / ``extract_anchors_col``: link and anchor
+  extraction as one higher-order Column expression each, the Spark side
+  of the hand matrices against ``functions.text.extract_links_sql`` /
+  ``extract_anchors_sql`` (tests/test_pages_links.py).
+* ``hyperplane_bit_col`` / ``hyperplane_band_key_col``: hyperplane LSH
+  band keys as Column expressions; ``operators.dedupe.
+  hyperplane_lsh_buckets`` (the batched matmul) must bucket identically.
+* ``burn_points`` / ``burn_lines`` / ``fill_polygon``: per-feature raster
+  burns; ``operators.raster.rasterize_tiles``' batch kernels must match
+  them pixel for pixel (tests/test_raster.py).
 """
 
 from __future__ import annotations
@@ -398,15 +408,115 @@ def lonlat_to_tile_px(lon, lat, zoom, extent=4096):
     return tx, ty, px, py
 
 
-def unpack_cell(cell):
-    cell = np.asarray(cell, dtype=np.int64)
-    z = cell >> 58
-    x = (cell >> 29) & ((1 << 29) - 1)
-    y = cell & ((1 << 29) - 1)
-    return z, x, y
+def extract_links_col(html_str, base_url):
+    """array<string> of resolved outlink urls as one higher-order Column
+    expression (nulls for dropped hrefs filtered out; duplicates
+    preserved) — the Spark twin of ``functions.text.extract_links_sql``
+    for the hand matrices."""
+    hrefs = F.regexp_extract_all(html_str, F.lit(TX.HREF_PATTERN), F.lit(1))
+    return F.filter(
+        F.transform(hrefs, lambda x: TX.resolve_href_col(x, base_url)),
+        lambda x: x.isNotNull())
 
 
-def parent_cell(cell, parent_z):
-    z, x, y = unpack_cell(cell)
-    dz = z - np.int64(parent_z)
-    return tm.pack_cell(np.full_like(z, parent_z), x >> dz, y >> dz)
+def extract_anchors_col(html_str, base_url):
+    """array<struct<dst_url, anchor>> as one higher-order Column
+    expression — the Spark twin of ``functions.text.extract_anchors_sql``.
+    Anchor text = the element's tag-stripped body, whitespace collapsed
+    and trimmed; unresolvable hrefs drop with their text."""
+    elems = F.regexp_extract_all(
+        html_str, F.lit(TX.ANCHOR_ELEM_PATTERN), F.lit(0))
+
+    def mk(e):
+        txt = F.trim(F.regexp_replace(
+            F.regexp_replace(e, F.lit(r"(?s)<[^>]*>"), F.lit("")),
+            F.lit(r"\s+"), F.lit(" ")))
+        href = F.regexp_extract(e, TX.HREF_PATTERN, 1)
+        return F.struct(
+            TX.resolve_href_col(href, base_url).alias("dst_url"),
+            txt.alias("anchor"))
+
+    return F.filter(F.transform(elems, mk),
+                    lambda s: s["dst_url"].isNotNull())
+
+
+def hyperplane_bit_col(vec, table: int, bit: int, dim: int):
+    """'1'/'0' sign bit of the hyperplane projection as a Column: a sum
+    of signed integer milli-units, like ``hashing.hyperplane_bit_sql``."""
+    term = None
+    for i, s in enumerate(H.hyperplane_signs(table, bit, dim)):
+        t = F.round(F.try_element_at(vec, F.lit(i + 1)).cast("double")
+                    * 1000).cast("long")
+        t = t if s > 0 else -t
+        term = t if term is None else term + t
+    return F.when(term >= 0, F.lit("1")).otherwise(F.lit("0"))
+
+
+def hyperplane_band_key_col(vec, table: int, bits: int, dim: int):
+    """One table's band key as a Column expression;
+    ``operators.dedupe.hyperplane_lsh_buckets`` must give the same keys."""
+    return F.concat(F.lit(f"{table}:"), *[
+        hyperplane_bit_col(vec, table, b, dim) for b in range(bits)])
+
+
+def burn_points(acc, pxs, pys, R, extent):
+    """Scatter one count per point into the R×R grid ``acc``."""
+    px = (pxs * R) // extent
+    py = (pys * R) // extent
+    ok = (px >= 0) & (px < R) & (py >= 0) & (py < R)
+    np.add.at(acc, (py[ok], px[ok]), 1)
+
+
+def burn_lines(acc, vx, vy, starts, R, extent):
+    """Unit-step sampling along each part's segments; consecutive
+    duplicate pixels collapse so a segment adds ≤1 per pixel crossed.
+    Per-feature reference of ``operators.raster._burn_lines_batch``."""
+    for s, e in zip(starts[:-1], starts[1:]):
+        if e - s < 2:
+            continue
+        xs = vx[s:e] * R / extent
+        ys = vy[s:e] * R / extent
+        pts = []
+        for i in range(len(xs) - 1):
+            n = int(max(abs(xs[i + 1] - xs[i]), abs(ys[i + 1] - ys[i]))) + 1
+            t = np.linspace(0.0, 1.0, n + 1)
+            pts.append(np.stack([xs[i] + t * (xs[i + 1] - xs[i]),
+                                 ys[i] + t * (ys[i + 1] - ys[i])], axis=1))
+        p = np.concatenate(pts)
+        pix = np.floor(p).astype(np.int64)
+        keep = np.ones(len(pix), bool)
+        keep[1:] = (pix[1:] != pix[:-1]).any(axis=1)
+        pix = pix[keep]
+        ok = (pix[:, 0] >= 0) & (pix[:, 0] < R) \
+            & (pix[:, 1] >= 0) & (pix[:, 1] < R)
+        np.add.at(acc, (pix[ok, 1], pix[ok, 0]), 1)
+
+
+def fill_polygon(acc, vx, vy, starts, R, extent):
+    """Even-odd scanline fill over ALL rings of one feature (holes carve
+    by parity). Pixel centers sample at (c + 0.5) in pixel space.
+    Per-feature reference of ``operators.raster._fill_polygons_batch``."""
+    sx = vx * R / extent
+    sy = vy * R / extent
+    xints: dict[int, list] = {}
+    for s, e in zip(starts[:-1], starts[1:]):
+        rx, ry = sx[s:e], sy[s:e]
+        for i in range(len(rx) - 1):
+            y0, y1 = ry[i], ry[i + 1]
+            if y0 == y1:
+                continue
+            lo, hi = (y0, y1) if y0 < y1 else (y1, y0)
+            r0 = max(0, int(np.ceil(lo - 0.5)))
+            r1 = min(R - 1, int(np.floor(hi - 0.5 - 1e-12)))
+            for r in range(r0, r1 + 1):
+                yc = r + 0.5
+                if (y0 > yc) != (y1 > yc):
+                    xi = rx[i] + (yc - y0) / (y1 - y0) * (rx[i + 1] - rx[i])
+                    xints.setdefault(r, []).append(xi)
+    for r, xs in xints.items():
+        xs.sort()
+        for a, b in zip(xs[0::2], xs[1::2]):
+            c0 = max(0, int(np.ceil(a - 0.5)))
+            c1 = min(R - 1, int(np.floor(b - 0.5)))
+            if c1 >= c0:
+                acc[r, c0:c1 + 1] += 1

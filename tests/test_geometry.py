@@ -13,7 +13,6 @@ import pytest
 
 from vtcomposite_spark import geometry as geo
 from vtcomposite_spark import polyclip
-from vtcomposite_spark import tilemath as tm
 from vtcomposite_spark.geometry import PackedParts
 
 I = np.int64
@@ -53,9 +52,8 @@ def test_four_points_overzoom_z1():
     pts = [(640, 832), (3040, 912), (800, 2576), (2928, 2288)]
     g = pack([[[p]] for p in pts])
     zf = np.full(4, 2, I)
-    dx, dy = tm.displacement(np.zeros(4, I), 4096, 1, 0, 0)
-    dxa = np.full(4, dx[0] if dx.shape else dx, I)
-    g2 = geo.affine(g, zf, np.broadcast_to(dx, (4,)).copy(), np.broadcast_to(dy, (4,)).copy())
+    # z1/0/0 sits at the origin of z0/0/0: displacement (0, 0)
+    g2 = geo.affine(g, zf, np.zeros(4, I), np.zeros(4, I))
     lo = np.full(4, 0, I)
     hi = np.full(4, 4096, I)
     out = geo.clip_points(g2, lo, hi)
@@ -67,8 +65,8 @@ def test_four_points_overzoom_z3():
     pts = [(640, 832), (3040, 912), (800, 2576), (2928, 2288)]
     g = pack([[[p]] for p in pts])
     zf = np.full(4, 8, I)
-    dx, dy = tm.displacement(np.zeros(4, I), 4096, 3, 1, 1)
-    g2 = geo.affine(g, zf, np.full(4, int(dx[0]), I), np.full(4, int(dy[0]), I))
+    # z3/1/1 inside z0/0/0: (x mod 8, y mod 8) * 4096 = (4096, 4096)
+    g2 = geo.affine(g, zf, np.full(4, 4096, I), np.full(4, 4096, I))
     out = geo.clip_points(g2, np.zeros(4, I), np.full(4, 4096, I))
     assert unpack(out) == [(0, [(1024, 2560)])]
 

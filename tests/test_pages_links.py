@@ -8,8 +8,8 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from vtcomposite_spark.functions.text import (extract_links_col,
-                                              extract_links_sql)
+from tests.reference_plans import extract_anchors_col, extract_links_col
+from vtcomposite_spark.functions.text import extract_links_sql
 from vtcomposite_spark.operators import graph as GR
 from vtcomposite_spark.sources.pages import (encode_html_pages,
                                              extract_links,
@@ -150,8 +150,7 @@ ANCHOR_EXPECT = [
 
 
 def test_anchor_hand_matrix_both_engines(spark):
-    from vtcomposite_spark.functions.text import (extract_anchors_col,
-                                                  extract_anchors_sql)
+    from vtcomposite_spark.functions.text import extract_anchors_sql
     base, html = ANCHOR_CASES[0]
     df = spark.createDataFrame([(base, html)], "url string, h string")
     got = [ (s.dst_url, s.anchor) for s in df.select(

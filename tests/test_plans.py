@@ -292,11 +292,11 @@ def _grid_knn(spark):
 
 
 def _plan_builds():
-    """Every public operator the BENCHMARK workloads call, as a build of
-    its plan from in-memory inputs (a parquet read runs a schema job of
-    its own). ``minhash_candidate_pairs`` still cuts its plan with a lazy
-    checkpoint, which AQE makes eager; it is not listed here."""
+    """Every public operator the BENCHMARK workloads call, and
+    ``minhash_candidate_pairs``, as a build of its plan from in-memory
+    inputs (a parquet read runs a schema job of its own)."""
     from vtcomposite_spark.operators import composite as C
+    from vtcomposite_spark.operators import dedupe as D
     from vtcomposite_spark.operators.cells import encode_cells, tile_pixels
     from vtcomposite_spark.operators.joins import knn_join, pip_join
     from vtcomposite_spark.operators.localize import localize
@@ -331,6 +331,10 @@ def _plan_builds():
             C.composite(*_points_fixture(s), [4])),
         "features_from_tiles_df": lambda s: features_from_tiles_df(
             C.composite_encode_tiles(*_points_fixture(s), [4])),
+        "minhash_candidate_pairs": lambda s: D.minhash_candidate_pairs(
+            s.createDataFrame(
+                [(i, f"alpha beta gamma delta {i % 3}") for i in range(20)],
+                "doc_id long, text string")),
     }
     # the exact path reads the site side's size estimate while it builds
     builds["knn_join-brute"] = lambda s: knn_join(*_knn_fixture(s), 3, zoom=3)

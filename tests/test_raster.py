@@ -1,10 +1,10 @@
-"""Raster↔vector operators: burn-in semantics, exact point round-trip,
-marching-squares vectorization, and raster→vector→MVT end-to-end."""
+"""Raster↔vector operators: burn-in semantics, the batch burns against
+the per-feature references, and the exact point round-trip."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
+from tests import reference_plans as RP
 from vtcomposite_spark.operators import raster as R
 from vtcomposite_spark.operators.multimodal import decode_pnm
 
@@ -66,7 +66,8 @@ def test_rasterize_line_burn(spark):
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_batch_burn_equals_per_feature_reference(spark, seed):
     """The batch-global line/polygon/point burns must match the
-    per-feature reference twins (_burn_points/_burn_lines/_fill_polygon)
+    per-feature references (tests/reference_plans.py burn_points /
+    burn_lines / fill_polygon)
     pixel-for-pixel on randomized mixed-geometry multi-tile batches —
     the polyclip batch==per-polygon equivalence pattern."""
     rng = np.random.default_rng(seed)
@@ -118,11 +119,11 @@ def test_batch_burn_equals_per_feature_reference(spark, seed):
         vy = np.array(ys, np.int64)
         starts = np.concatenate([np.array(po, np.int64), [len(vx)]])
         if gt == 1:
-            R._burn_points(acc, vx, vy, RES, ext)
+            RP.burn_points(acc, vx, vy, RES, ext)
         elif gt == 2:
-            R._burn_lines(acc, vx, vy, starts, RES, ext)
+            RP.burn_lines(acc, vx, vy, starts, RES, ext)
         else:
-            R._fill_polygon(acc, vx, vy, starts, RES, ext)
+            RP.fill_polygon(acc, vx, vy, starts, RES, ext)
     assert set(got) == set(want)
     from vtcomposite_spark.operators.multimodal import decode_pnm as dec
     for x, acc in want.items():
@@ -143,75 +144,3 @@ def test_raster_to_points_exact_inverse(spark):
         k = ((i * 64 + 1) * 64 // 4096, (i * 128 + 3) * 64 // 4096)
         want[k] = want.get(k, 0) + 1
     assert pts == want
-
-
-def test_contours_roundtrip_to_mvt(spark):
-    """raster → vector → TILE: contour the filled-rectangle raster,
-    feed the polylines through the encode sink, decode, and find the
-    ring back in tile coordinates."""
-    from vtcomposite_spark.operators import composite as C
-    from vtcomposite_spark.sources import mvt
-
-    o = [8, 24, 24, 8, 8]
-    oy = [8, 8, 24, 24, 8]
-    df = _feat_rows(spark, [(3, [v * 128 for v in o],
-                             [v * 128 for v in oy], [0])])
-    ras = R.rasterize_tiles(df, resolution=32)
-    cont = R.raster_contours(ras, level=1, scale_to_extent=4096)
-    rows = cont.collect()
-    assert len(rows) == 1 and rows[0].closed
-    feats = cont.select(
-        F.lit(0).alias("tile_idx"), "z", "x", "y",
-        F.lit("contours").alias("layer"), F.lit(2).alias("layer_version"),
-        F.lit(4096).alias("extent"),
-        F.col("contour_idx").alias("feature_idx"),
-        F.lit(None).cast("long").alias("feature_id"),
-        F.lit(2).cast("byte").alias("geom_type"),
-        F.transform("xs", lambda v: F.round(v).cast("long")).alias("xs"),
-        F.transform("ys", lambda v: F.round(v).cast("long")).alias("ys"),
-        F.array(F.lit(0)).alias("part_offsets"),
-        F.array(F.lit(0).cast("byte")).alias("ring_types"),
-        F.create_map(F.lit("level"), F.lit("1")).alias("properties"),
-        F.lit(False).alias("compress"))
-    tiles = C.encode_tiles(feats).collect()
-    assert len(tiles) == 1
-    dec = mvt.decode_tile(bytes(tiles[0].tile))
-    f = dec[0].features[0]
-    assert f.geom_type == 2
-    xs = [p[0] for p in f.parts[0]]
-    ys = [p[1] for p in f.parts[0]]
-    # the ring hugs the rectangle boundary (pixels 8..23 at 128/px,
-    # contour at half-pixel offsets): all vertices within one pixel of it
-    assert min(xs) >= 8 * 128 - 128 and max(xs) <= 24 * 128 + 128
-    assert min(ys) >= 8 * 128 - 128 and max(ys) <= 24 * 128 + 128
-    assert f.parts[0][0] == f.parts[0][-1]  # closed
-
-
-def test_contour_shapes_unit():
-    img = np.zeros((12, 12), np.uint8)
-    img[2:9, 2:9] = 3
-    img[4:7, 4:7] = 0
-    rings = R._contour_tile(img, 1)
-    assert sorted(c for _, _, c in rings) == [True, True]  # outer + hole
-    assert R._contour_tile(np.zeros((4, 4), np.uint8), 1) == []
-
-
-def test_contour_batch_equals_per_cell_reference():
-    """Round-5: the vectorized case-table emission (_contour_tile_batch,
-    what raster_contours runs) must reproduce the per-cell reference twin
-    EXACTLY — chain point lists, order, closed flags (coordinates are 0.5
-    multiples, so float == is exact). Random noise maximizes saddle
-    density; the checkerboard is all-saddles."""
-    rng = np.random.default_rng(7)
-    imgs = [rng.integers(0, 3, (int(rng.integers(3, 40)),
-                                int(rng.integers(3, 40)))).astype(np.uint8)
-            for _ in range(8)]
-    hole = np.zeros((12, 12), np.uint8)
-    hole[2:9, 2:9] = 3
-    hole[4:7, 4:7] = 0
-    imgs += [hole, np.zeros((4, 4), np.uint8), np.full((6, 6), 9, np.uint8),
-             (np.indices((16, 16)).sum(0) % 2).astype(np.uint8)]
-    for img in imgs:
-        for level in (1, 2):
-            assert R._contour_tile_batch(img, level) == \
-                R._contour_tile(img, level)

@@ -7,8 +7,9 @@ Golden sources:
 """
 
 import numpy as np
+from pyspark.sql import functions as F
 
-from tests.reference_plans import lonlat_to_tile_px, parent_cell, unpack_cell
+from tests.reference_plans import lonlat_to_tile_px
 from vtcomposite_spark import tilemath as tm
 
 FOUR_POINTS = [
@@ -27,15 +28,14 @@ def test_four_points_z0_pixels():
     # first point quantizes to (640, 832): ×2 == golden (1280,1664)
     # (test/vtcomposite-points.test.js:41-73 asserts 2× original)
     assert px[0] == 640 and py[0] == 832
-    # overzoom z0→z3/1/1: p*8 − 4096 == golden (1024, 2560)
-    dx, dy = tm.displacement(np.array([0]), 4096, 3, 1, 1)
-    assert dx[0] == 4096 and dy[0] == 4096
-    assert px[0] * 8 - dx[0] == 1024
-    assert py[0] * 8 - dy[0] == 2560
 
 
-def test_displacement_matches_reference_bitwalk():
-    # brute-force the reference loop (src/zxy_math.hpp:19-40) vs closed form
+def test_displacement_matches_reference_bitwalk(spark):
+    """The composite plan's disp_x/disp_y columns
+    (``operators.composite._overzoom_prep``) equal the reference's
+    bit-walk loop (src/zxy_math.hpp:19-40)."""
+    from vtcomposite_spark.operators.composite import _overzoom_prep
+
     def ref_disp(source_z, tile_size, z, x, y):
         half = tile_size >> 1
         dx = dy = 0
@@ -49,39 +49,69 @@ def test_displacement_matches_reference_bitwalk():
             y >>= 1
         return dx, dy
 
+    # the golden overzoom z0 → z3/1/1 first, then random tiles
+    cases = [(0, 3, 1, 1)]
     rng = np.random.default_rng(42)
     for _ in range(200):
         sz = int(rng.integers(0, 10))
         z = sz + int(rng.integers(0, 8))
         x = int(rng.integers(0, 1 << z)) if z else 0
         y = int(rng.integers(0, 1 << z)) if z else 0
-        dx, dy = tm.displacement(np.array([sz]), 4096, z, x, y)
-        assert (int(dx[0]), int(dy[0])) == ref_disp(sz, 4096, z, x, y)
+        cases.append((sz, z, x, y))
+    # one vertex at the origin and a buffer wider than any displacement,
+    # so the envelope prune keeps every row
+    df = spark.createDataFrame(
+        [(i, *c, 4096, [0], [0], 1 << 30) for i, c in enumerate(cases)],
+        "i int, src_z int, z int, x long, y long, extent int, "
+        "xs array<int>, ys array<int>, buffer_size int")
+    got = {r.i: (r.disp_x, r.disp_y)
+           for r in _overzoom_prep(df).select("i", "disp_x", "disp_y")
+           .collect()}
+    assert got == {i: ref_disp(sz, 4096, z, x, y)
+                   for i, (sz, z, x, y) in enumerate(cases)}
+    # overzoom z0→z3/1/1 of the first four-points pixel (640, 832):
+    # p*8 − 4096 == golden (1024, 2560)
+    assert got[0] == (4096, 4096)
+    assert (640 * 8 - got[0][0], 832 * 8 - got[0][1]) == (1024, 2560)
 
 
-def test_within_target():
-    # reference src/zxy_math.hpp:8-17 semantics
-    assert tm.within_target(0, 0, 0, 3, 5, 2).all()
-    assert tm.within_target(3, 5, 2, 3, 5, 2).all()
-    assert not tm.within_target(2, 1, 1, 3, 5, 2).any()   # wrong branch
-    assert not tm.within_target(4, 10, 4, 3, 5, 2).any()  # deeper than target
-    # z1 ancestor of z3/5/2 is (5>>2, 2>>2) = (1, 0)
-    assert tm.within_target(1, 1, 0, 3, 5, 2).all()
+def test_within_target(spark):
+    """``within_target_col`` (the __spark_entry__ keep predicate) on the
+    reference src/zxy_math.hpp:8-17 semantics: (src tile, target, want)."""
+    cases = [((0, 0, 0), (3, 5, 2), True),
+             ((3, 5, 2), (3, 5, 2), True),
+             ((2, 1, 1), (3, 5, 2), False),   # wrong branch
+             ((4, 10, 4), (3, 5, 2), False),  # deeper than target
+             # z1 ancestor of z3/5/2 is (5>>2, 2>>2) = (1, 0)
+             ((1, 1, 0), (3, 5, 2), True)]
+    df = spark.createDataFrame(
+        [(i, *s, *t) for i, (s, t, _) in enumerate(cases)],
+        "i int, src_z int, src_x long, src_y long, z int, x long, y long")
+    keep = tm.within_target_col(*(F.col(c) for c in (
+        "src_z", "src_x", "src_y", "z", "x", "y")))
+    got = {r.i: r.keep for r in df.select("i", keep.alias("keep")).collect()}
+    assert got == {i: want for i, (_, _, want) in enumerate(cases)}
 
 
-def test_cell_pack_roundtrip():
+def test_cell_pack_roundtrip(spark):
+    """``pack_cell_col`` lays a cell out as (z << 58) | (x << 29) | y and
+    ``unpack_cell_cols`` inverts it."""
     rng = np.random.default_rng(7)
     z = rng.integers(0, 29, 1000)
-    x = rng.integers(0, 1 << 28, 1000)
-    y = rng.integers(0, 1 << 28, 1000)
-    x = x % (1 << z)
-    y = y % (1 << z)
-    c = tm.pack_cell(z, x, y)
-    z2, x2, y2 = unpack_cell(c)
-    assert (z2 == z).all() and (x2 == x).all() and (y2 == y).all()
-    pc = parent_cell(c, 0)
-    pz, px_, py_ = unpack_cell(pc)
-    assert (pz == 0).all() and (px_ == 0).all() and (py_ == 0).all()
+    x = rng.integers(0, 1 << 28, 1000) % (1 << z)
+    y = rng.integers(0, 1 << 28, 1000) % (1 << z)
+    df = spark.createDataFrame(
+        [(int(a), int(b), int(c)) for a, b, c in zip(z, x, y)],
+        "z int, x long, y long")
+    cell = df.withColumn("cell", tm.pack_cell_col(
+        F.col("z"), F.col("x"), F.col("y")))
+    back = tm.unpack_cell_cols(F.col("cell"))
+    rows = cell.select("z", "x", "y", "cell", *(
+        c.alias(n) for c, n in zip(back, ("z2", "x2", "y2")))).collect()
+    assert len(rows) == 1000
+    for r in rows:
+        assert r.cell == (r.z << 58) | (r.x << 29) | r.y
+        assert (r.z2, r.x2, r.y2) == (r.z, r.x, r.y)
 
 
 # --- Morton / Z-order keys ---

@@ -6,7 +6,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from tests.reference_plans import minhash_sig_col
+from tests.reference_plans import hyperplane_band_key_col, minhash_sig_col
 from vtcomposite_spark.functions import hashing as H
 from vtcomposite_spark.functions import text as TX
 from vtcomposite_spark.operators import dedupe as D
@@ -471,15 +471,6 @@ def test_ngram_jaccard_refine(spark):
     assert 0.5 <= out[0].jaccard < 1.0
 
 
-def test_simhash_dedupe_groups_identical(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta"),
-         (3, "one two three four five six")], ["doc_id", "text"])
-    rows = D.simhash_dedupe(df).collect()
-    assert sorted((r.keep_id, r.n_dups) for r in rows) == [(1, 2), (3, 1)]
-
-
 def test_simhash_near_dup_pairs_complete_vs_brute(spark):
     """Uncapped block-permutation candidates + bit_count refine must find
     EXACTLY the all-pairs Hamming-≤d set (Manku pigeonhole completeness),
@@ -701,8 +692,8 @@ def test_kmeans_centroids_deterministic_and_separating(spark):
 
 
 def test_hyperplane_udf_matches_expression_form(spark):
-    """The matmul pandas_udf (hot path) and the column-expression form (the
-    DuckDB-oracle reference) must bucket identically — including HALF_UP
+    """The matmul pandas_udf (hot path) and the column-expression form
+    (tests/reference_plans.py) must bucket identically — including HALF_UP
     rounding of negative milli-units, where numpy's default banker's
     rounding would diverge from Spark/DuckDB round()."""
     import numpy as np
@@ -714,7 +705,7 @@ def test_hyperplane_udf_matches_expression_form(spark):
     udf_keys = {(r.vec_id, r.band_key) for r in D.hyperplane_lsh_buckets(
         emb, tables=3, bits=5, dim=16).collect()}
     expr = emb.select("vec_id", F.explode(F.array(*[
-        H.hyperplane_band_key_col(F.col("embedding"), t, 5, 16)
+        hyperplane_band_key_col(F.col("embedding"), t, 5, 16)
         for t in range(3)])).alias("band_key"))
     expr_keys = {(r.vec_id, r.band_key) for r in expr.collect()}
     assert udf_keys == expr_keys
@@ -730,7 +721,7 @@ def test_hyperplane_short_vectors_match_expression_form(spark):
     udf_keys = {(r.vec_id, r.band_key) for r in D.hyperplane_lsh_buckets(
         emb, tables=2, bits=3, dim=4).collect()}
     expr = emb.select("vec_id", F.explode(F.array(*[
-        H.hyperplane_band_key_col(F.col("embedding"), t, 3, 4)
+        hyperplane_band_key_col(F.col("embedding"), t, 3, 4)
         for t in range(2)])).alias("band_key"))
     expr_keys = {(r.vec_id, r.band_key) for r in expr.collect()}
     assert udf_keys == expr_keys
@@ -777,13 +768,6 @@ def test_netpbm_roundtrip_and_auto_decode(spark):
     for r in feats:
         assert 0 <= r.mean_px <= 255
         assert sum(r.histogram) == r.width * r.height
-
-
-def test_compressed_codec_seam_still_declared(spark):
-    med = MM.synthesize_media(spark, 1, partitions=1)
-    import pytest as _pytest
-    with _pytest.raises(NotImplementedError):
-        MM.decode_image(med, codec="real")
 
 
 def test_near_dup_components_raises_without_fixpoint(spark):

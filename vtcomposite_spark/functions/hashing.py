@@ -185,25 +185,12 @@ def hyperplane_signs(table: int, bit: int, dim: int) -> list[int]:
     return out
 
 
-def hyperplane_bit_col(vec: Column, table: int, bit: int, dim: int) -> Column:
-    """'1'/'0' sign bit of the hyperplane projection. The projection is a
-    sum of SIGNED INTEGER milli-units (round(x*1000) as long), so it is
-    order-independent and bit-identical across engines — a float dot
-    product could flip sign under a different summation order (the
-    round-2 float-avg drift lesson)."""
-    signs = hyperplane_signs(table, bit, dim)
-    term = None
-    for i, s in enumerate(signs):
-        t = F.round(F.try_element_at(vec, F.lit(i + 1)).cast("double")
-                    * 1000).cast("long")
-        t = t if s > 0 else -t
-        term = t if term is None else term + t
-    return F.when(term >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-
 def hyperplane_bit_sql(c: str, table: int, bit: int, dim: int) -> str:
-    """DuckDB twin of hyperplane_bit_col — same literal signs, same
-    integer milli-unit projection."""
+    """'1'/'0' sign bit of the hyperplane projection in DuckDB SQL. The
+    projection is a sum of SIGNED INTEGER milli-units (round(x*1000) as
+    BIGINT), so it is order-independent and bit-identical across engines
+    — a float dot product could flip sign under a different summation
+    order (the round-2 float-avg drift lesson)."""
     signs = hyperplane_signs(table, bit, dim)
     terms = [
         f"({'' if s > 0 else '-'}CAST(round(CAST({c}[{i + 1}] AS DOUBLE)"
@@ -212,14 +199,8 @@ def hyperplane_bit_sql(c: str, table: int, bit: int, dim: int) -> str:
     return f"(CASE WHEN ({' + '.join(terms)}) >= 0 THEN '1' ELSE '0' END)"
 
 
-def hyperplane_band_key_col(vec: Column, table: int, bits: int,
-                            dim: int) -> Column:
-    return F.concat(F.lit(f"{table}:"), *[
-        hyperplane_bit_col(vec, table, b, dim) for b in range(bits)])
-
-
 def hyperplane_band_key_sql(c: str, table: int, bits: int, dim: int) -> str:
-    if bits == 0:  # degenerate single-bucket table, same as the twins
+    if bits == 0:  # degenerate single-bucket table, same as the batch
         return f"'{table}:'"
     parts = " || ".join(hyperplane_bit_sql(c, table, b, dim)
                         for b in range(bits))
@@ -228,16 +209,16 @@ def hyperplane_band_key_sql(c: str, table: int, bits: int, dim: int) -> str:
 
 def hyperplane_band_keys_batch(mat, tables: int, bits: int,
                                dim: int | None = None) -> list[list[str]]:
-    """Vectorized twin of hyperplane_band_key_col for a 2-D float batch:
-    ONE int64 matmul against the stacked sign matrix instead of
-    tables×bits×dim expression nodes (the expression form exceeds the JVM
-    codegen method limit past ~1k terms and falls back to interpreted —
-    this is the hot path at scale; the expression/SQL forms remain the
-    oracle-parity reference). Rounding matches Spark/DuckDB round():
-    HALF_UP away from zero, NOT numpy's banker's rounding."""
+    """``hyperplane_band_key_sql``'s keys for a 2-D float batch: ONE
+    int64 matmul against the stacked sign matrix instead of
+    tables×bits×dim expression nodes (a Column-expression form exceeds
+    the JVM codegen method limit past ~1k terms and falls back to
+    interpreted; tests/reference_plans.py keeps it as the parity
+    reference). Rounding matches Spark/DuckDB round(): HALF_UP away from
+    zero, NOT numpy's banker's rounding."""
     import numpy as np
-    # a NULL embedding behaves like an empty one: the expression twin's
-    # try_element_at(NULL_vec, i) is NULL ⇒ projection NULL ⇒ every bit '0'
+    # a NULL embedding behaves like an empty one: the SQL twin's
+    # NULL_vec[i] is NULL ⇒ projection NULL ⇒ every bit '0'
     # — the NaN-pad path below produces exactly that, so substituting []
     # keeps the declared engine/oracle bit-identity instead of crashing
     rows = [r if r is not None else [] for r in mat]
@@ -250,8 +231,8 @@ def hyperplane_band_keys_batch(mat, tables: int, bits: int,
     if dim is None:
         dim = max(len(r) for r in rows)
     # ragged / short vectors: NaN-pad so the projection collapses to NaN
-    # and every bit reads '0' — exactly the expression twin's behavior
-    # (try_element_at past the end is NULL ⇒ whole sum NULL ⇒ otherwise-'0')
+    # and every bit reads '0' — exactly the SQL twin's behavior (an
+    # index past the end is NULL ⇒ whole sum NULL ⇒ ELSE '0')
     lens = np.array([len(r) for r in rows])
     if (lens == lens[0]).all() and int(lens[0]) >= dim:
         m = np.asarray(np.stack(rows), dtype=np.float64)[:, :dim]

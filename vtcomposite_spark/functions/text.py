@@ -502,7 +502,8 @@ def resolve_href_col(href: Column, base_url: Column) -> Column:
     """Resolved absolute url for one href (null = dropped). Plain
     columns — the operator path explodes hrefs first and applies this
     in codegen (nested-HOF outer-expression re-evaluation is the repo's
-    documented hazard; the HOF form below is for oracle parity)."""
+    documented hazard; the HOF form is a parity reference in
+    tests/reference_plans.py)."""
     sh = F.regexp_extract(base_url, SCHEME_HOST_PATTERN, 0)
     scheme = F.regexp_extract(base_url, _SCHEME_PREFIX, 0)
     rest = F.regexp_replace(
@@ -518,15 +519,6 @@ def resolve_href_col(href: Column, base_url: Column) -> Column:
             .when(h.startswith("//"), F.concat(scheme, h))
             .when(h.startswith("/"), F.concat(sh, h))
             .otherwise(F.concat(dirp, h)))
-
-
-def extract_links_col(html_str: Column, base_url: Column) -> Column:
-    """array<string> of resolved outlink urls (nulls for dropped hrefs
-    filtered out; duplicates preserved — dedupe is the caller's call)."""
-    hrefs = F.regexp_extract_all(html_str, F.lit(HREF_PATTERN), F.lit(1))
-    return F.filter(
-        F.transform(hrefs, lambda x: resolve_href_col(x, base_url)),
-        lambda x: x.isNotNull())
 
 
 def _resolve_href_sql(href_expr: str, base_c: str) -> str:
@@ -550,7 +542,9 @@ def _resolve_href_sql(href_expr: str, base_c: str) -> str:
 
 
 def extract_links_sql(html_c: str, base_c: str) -> str:
-    """DuckDB twin of :func:`extract_links_col`."""
+    """list of resolved outlink urls in DuckDB SQL (dropped hrefs
+    filtered out; duplicates preserved — dedupe is the caller's call):
+    the oracle form of ``sources.pages.extract_links``."""
     pat = HREF_PATTERN.replace("'", "''")
     resolve = _resolve_href_sql("x", base_c)
     return (f"list_filter(list_transform("
@@ -564,32 +558,12 @@ def extract_links_sql(html_c: str, base_c: str) -> str:
 ANCHOR_ELEM_PATTERN = r"(?is)<a\s[^>]*>.*?</a>"
 
 
-def extract_anchors_col(html_str: Column, base_url: Column) -> Column:
-    """array<struct<dst_url, anchor>> — outlinks WITH their anchor text
-    (the classic web-retrieval signal: what other pages call a page).
-    Anchor text = the element's tag-stripped body, whitespace collapsed
-    and trimmed (anchors are display text, not the byte-identity
-    ``extract_text`` path — collapsing is the point here). Unresolvable
-    hrefs (fragment-only, non-http schemes) drop with their text."""
-    elems = F.regexp_extract_all(
-        html_str, F.lit(ANCHOR_ELEM_PATTERN), F.lit(0))
-
-    def mk(e: Column) -> Column:
-        txt = F.trim(F.regexp_replace(
-            F.regexp_replace(e, F.lit(r"(?s)<[^>]*>"), F.lit("")),
-            F.lit(r"\s+"), F.lit(" ")))
-        href = F.regexp_extract(e, HREF_PATTERN, 1)
-        return F.struct(
-            resolve_href_col(href, base_url).alias("dst_url"),
-            txt.alias("anchor"))
-
-    return F.filter(F.transform(elems, mk),
-                    lambda s: s["dst_url"].isNotNull())
-
-
 def extract_anchors_sql(html_c: str, base_c: str) -> str:
-    """DuckDB twin of :func:`extract_anchors_col` — a list of
-    struct(dst_url, anchor); unnest + field access in the caller."""
+    """Outlinks WITH their anchor text in DuckDB SQL — the oracle form of
+    ``sources.pages.extract_anchors``: a list of struct(dst_url, anchor);
+    unnest + field access in the caller. Anchor text = the element's
+    tag-stripped body, whitespace collapsed and trimmed; unresolvable
+    hrefs (fragment-only, non-http schemes) drop with their text."""
     epat = ANCHOR_ELEM_PATTERN.replace("'", "''")
     hpat = HREF_PATTERN.replace("'", "''")
     txt = ("trim(regexp_replace(regexp_replace(x, '(?s)<[^>]*>', '', 'g'), "

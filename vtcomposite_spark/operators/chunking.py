@@ -735,8 +735,7 @@ def bpe_train(docs: DataFrame, merges: int = 3, id_col: str = "doc_id",
 
 
 def bpe_apply(docs: DataFrame, rules: "list[tuple]",
-              id_col: str = "doc_id", text_col: str = "text",
-              checkpoint_every: int = 4) -> DataFrame:
+              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Corpus-scale BPE tokenizer INFERENCE: tokenize every document
     with a trained merge list (``bpe_train``'s output, or plain
     ``(a, b)`` pairs) — the apply half of the tokenizer lifecycle that
@@ -778,7 +777,8 @@ def bpe_apply(docs: DataFrame, rules: "list[tuple]",
     t = t.localCheckpoint(eager=True)
     for i, (a, b) in enumerate(pairs, 1):
         t = _bpe_apply_merge(_bpe_paired(t, []), a, b, [])
-        if i % checkpoint_every == 0 and i < len(pairs):
+        # cut the merge chain's lineage every 4 merges
+        if i % 4 == 0 and i < len(pairs):
             t = t.localCheckpoint(eager=True)
     syms = t.select(
         "word", "sym",

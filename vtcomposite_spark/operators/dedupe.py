@@ -1,12 +1,14 @@
 """Deduplication operators for the documents table — the training-data
-pipeline family (exact, MinHash-LSH, SimHash, n-gram Jaccard, embedding
-cosine). All candidate generation is equi-join/groupBy on deterministic
-md5-derived keys (portable to the DuckDB oracle); no pairwise O(n²) stage
-ever runs un-bucketed.
+pipeline family (exact, MinHash-LSH, SimHash near-dup pairs, n-gram
+Jaccard, embedding cosine). All candidate generation is equi-join/groupBy
+on deterministic md5-derived keys (portable to the DuckDB oracle); no
+pairwise O(n²) stage ever runs un-bucketed.
 
 Scale notes: every operator is a single shuffle on a hash key with map-side
 combine; LSH band keys are near-uniform (md5), so no skew handling is
-needed beyond AQE. The pair-refine stages join only within buckets.
+needed beyond AQE. The pair-refine stages join only within buckets, and
+MinHash candidate pairs come from one groupBy of the band table (each
+band's sorted id list emits its pairs), not from a self-join.
 """
 
 from __future__ import annotations
@@ -71,20 +73,19 @@ def minhash_lsh_buckets(df: DataFrame, text_col: str = "text",
 def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", k: int = 8,
                             bands: int = 4, shingle_n: int = 3) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing any LSH band."""
-    # both self-join sides read the bucket table; without a cut the
-    # k×shingle md5 signature pass runs twice per action. Keys-only
-    # (band_key, id) rows — cheap to materialize once; within-query
-    # reuse only, nothing persists across runs.
-    b = minhash_lsh_buckets(df, text_col, id_col, k, bands, shingle_n) \
-        .localCheckpoint(eager=False)
-    l = b.select(F.col("band_key"), F.col(id_col).alias("a"))
-    r = b.select(F.col("band_key"), F.col(id_col).alias("b"))
-    return (
-        l.join(r, on="band_key")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b").distinct()
-    )
+    """Distinct candidate pairs (a < b) sharing any LSH band.
+
+    One consumer of the bucket table: group by ``band_key`` into a
+    sorted id list, then emit each id with every larger id of its list.
+    A self-join would read the bucket table twice and, with no exchange
+    reuse, run the k×shingle md5 signature pass twice per action."""
+    ids = (minhash_lsh_buckets(df, text_col, id_col, k, bands, shingle_n)
+           .groupBy("band_key")
+           .agg(F.array_sort(F.collect_set(id_col)).alias("ids")))
+    a = ids.select("ids", F.explode("ids").alias("a"))
+    return (a.select("a", F.explode(F.filter(
+        "ids", lambda x: x > F.col("a"))).alias("b"))
+        .distinct())
 
 
 def simhash_values(df: DataFrame, text_col: str = "text",
@@ -111,17 +112,6 @@ def simhash_values(df: DataFrame, text_col: str = "text",
     return agg.select(F.col(id_col), sim.alias("simhash"))
 
 
-def simhash_dedupe(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Group by exact SimHash value (Hamming-0 buckets); near-dup variant
-    joins on bit-masked sub-keys. Docs with no shingle are excluded."""
-    return (
-        simhash_values(df, text_col, id_col, bits)
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
-    )
-
-
 def _simhash_blocks(bits: int, n_blocks: int) -> list[tuple[int, int]]:
     """(shift, width) per block, widest blocks first — the Manku et al.
     2007 pigeonhole split: two fingerprints within Hamming distance d
@@ -143,8 +133,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
                            max_bucket: int | None = None) -> DataFrame:
     """Hamming-≤d SimHash near-dup pairs → (a, b, hamming), a < b.
 
-    The missing half of ``simhash_dedupe`` (exact Hamming-0 buckets):
-    block-permutation candidate generation — split the ``bits``-wide
+    Block-permutation candidate generation — split the ``bits``-wide
     fingerprint into d+1 blocks; by pigeonhole, any pair within Hamming
     distance d shares at least one block verbatim, so an equi-join per
     block finds EVERY such pair — then exact refinement by
@@ -594,11 +583,10 @@ def hyperplane_lsh_buckets(df: DataFrame, vec_col: str = "embedding",
     could never recover a near-dup across one sign flip. Collision
     probability per table is (1 − θ/π)^bits for angle θ.
 
-    Projection runs as ONE Arrow-batched int64 matmul (pandas_udf): the
-    equivalent column-expression form (functions.hashing.
-    hyperplane_band_key_col, value-identical, kept as the DuckDB-oracle
-    reference) is tables×bits×dim codegen nodes and trips the JVM method
-    limit into interpreted mode past ~1k terms.
+    Projection runs as ONE Arrow-batched int64 matmul (pandas_udf,
+    value-identical to ``functions.hashing.hyperplane_band_key_sql``): the
+    equivalent column-expression form is tables×bits×dim codegen nodes and
+    trips the JVM method limit into interpreted mode past ~1k terms.
     """
     @F.pandas_udf("array<string>")
     def band_keys(vecs: pd.Series) -> pd.Series:

@@ -6,10 +6,9 @@ UNCOMPRESSED netpbm formats, implemented in pure numpy from the public
 spec: P5 (PGM, grayscale) and P6 (PPM, RGB) decode into the feature
 kernel; ``encode_pgm`` writes P5 (``operators.raster`` renders with it).
 
-COMPRESSED codecs (JPEG/PNG) need external libraries this container does
-not ship; ``codec="real"`` raises NotImplementedError at the exact seam
-where Pillow would plug in — everything around the seam (schemas,
-batching) is identical either way.
+COMPRESSED codecs (JPEG/PNG) need external libraries (Pillow, libvips)
+that are not dependencies; ``_decode_any_image`` is where one would plug
+in — everything around it (schemas, batching) stays the same.
 
 A deterministic in-house fake (b"IMG1" + width:uint16 + height:uint16 +
 row-major bytes, from ``synthesize_media``) is kept for plumbing tests
@@ -72,26 +71,18 @@ def _decode_fake(payload: bytes):
     return w, h, px
 
 
-def decode_image(media: DataFrame, codec: str = "auto") -> DataFrame:
+def decode_image(media: DataFrame) -> DataFrame:
     """payload → (width, height, mean_px, 16-bin histogram), Arrow-batched.
 
-    ``auto`` (default) sniffs the payload: netpbm P5/P6 decode for real
-    (RGB reduces to per-pixel mean for the gray features), IMG1 via the
-    fake. ``codec="real"`` is the seam for COMPRESSED formats
-    (JPEG/PNG via Pillow/libvips) — not available in this environment.
+    Sniffs each payload: netpbm P5/P6 decode for real (RGB reduces to
+    per-pixel mean for the gray features), IMG1 via the fake.
     """
-    if codec == "real":
-        raise NotImplementedError(
-            "compressed image codecs (JPEG/PNG) are not installed in this "
-            "environment; plug Pillow/libvips in here — the Spark plumbing "
-            "is identical (uncompressed netpbm decodes natively)")
-    dec = _decode_fake if codec == "fake" else _decode_any_image
 
     def kernel(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:
             ws, hs, means, hists = [], [], [], []
             for payload in pdf["payload"]:
-                w, h, px = dec(bytes(payload))
+                w, h, px = _decode_any_image(bytes(payload))
                 ws.append(w)
                 hs.append(h)
                 means.append(float(px.mean()))

@@ -11,10 +11,7 @@ uint8.
 
 Raster→vector: ``raster_to_points`` explodes nonzero pixels back to
 (px, py, value) rows — the exact inverse for point rasters, which makes
-the round trip SQL-replayable and oracle-gated; ``raster_contours`` runs
-marching squares on a level threshold and emits stitched polyline
-features in TILE coordinates, ready to flow back into the composite →
-encode sinks (raster → vector → MVT end-to-end).
+the round trip SQL-replayable and oracle-gated.
 
 Kernels run over packed-per-tile Arrow batches (the encode sinks'
 `_pack_tiles` pattern). ALL three geometry types burn batch-globally with
@@ -25,9 +22,10 @@ duplicates per part, and scatter with one bincount; polygons explode
 every non-horizontal edge to its scanline crossings, pair the sorted
 crossings per (feature, row) by even-odd parity, and fill the intervals
 with a difference-array + cumsum (one bincount pair). The per-feature
-``_burn_lines`` / ``_fill_polygon`` remain as the REFERENCE twins — the
-batch kernels must match them pixel-for-pixel (the equivalence matrix in
-tests/test_raster.py, the polyclip batch==per-polygon pattern).
+reference burns (``burn_points`` / ``burn_lines`` / ``fill_polygon``)
+live in tests/reference_plans.py — the batch kernels must match them
+pixel-for-pixel (the equivalence matrix in tests/test_raster.py, the
+polyclip batch==per-polygon pattern).
 """
 
 from __future__ import annotations
@@ -38,10 +36,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.mvt_vec import _multi_arange
+from ..geometry import multi_arange
 from .composite import _TILE_LEVEL_COLS, _pack_tiles, _unpack_batch
 from .multimodal import decode_pnm, encode_pgm
 
@@ -56,73 +53,10 @@ RASTER_SCHEMA = T.StructType([
 ])
 
 
-def _burn_points(acc, pxs, pys, R, extent):
-    px = (pxs * R) // extent
-    py = (pys * R) // extent
-    ok = (px >= 0) & (px < R) & (py >= 0) & (py < R)
-    np.add.at(acc, (py[ok], px[ok]), 1)
-
-
-def _burn_lines(acc, vx, vy, starts, R, extent):
-    """Unit-step sampling along each part's segments; consecutive
-    duplicate pixels collapse so a segment adds ≤1 per pixel crossed.
-    PER-FEATURE REFERENCE twin of ``_burn_lines_batch`` (kept as the
-    burn-semantics spec; the kernel runs the batch version)."""
-    for s, e in zip(starts[:-1], starts[1:]):
-        if e - s < 2:
-            continue
-        xs = vx[s:e] * R / extent
-        ys = vy[s:e] * R / extent
-        pts = []
-        for i in range(len(xs) - 1):
-            n = int(max(abs(xs[i + 1] - xs[i]), abs(ys[i + 1] - ys[i]))) + 1
-            t = np.linspace(0.0, 1.0, n + 1)
-            pts.append(np.stack([xs[i] + t * (xs[i + 1] - xs[i]),
-                                 ys[i] + t * (ys[i + 1] - ys[i])], axis=1))
-        p = np.concatenate(pts)
-        pix = np.floor(p).astype(np.int64)
-        keep = np.ones(len(pix), bool)
-        keep[1:] = (pix[1:] != pix[:-1]).any(axis=1)
-        pix = pix[keep]
-        ok = (pix[:, 0] >= 0) & (pix[:, 0] < R) \
-            & (pix[:, 1] >= 0) & (pix[:, 1] < R)
-        np.add.at(acc, (pix[ok, 1], pix[ok, 0]), 1)
-
-
-def _fill_polygon(acc, vx, vy, starts, R, extent):
-    """Even-odd scanline fill over ALL rings of one feature (holes carve
-    by parity). Pixel centers sample at (c + 0.5) in pixel space.
-    PER-FEATURE REFERENCE twin of ``_fill_polygons_batch``."""
-    sx = vx * R / extent
-    sy = vy * R / extent
-    xints: dict[int, list] = {}
-    for s, e in zip(starts[:-1], starts[1:]):
-        rx, ry = sx[s:e], sy[s:e]
-        for i in range(len(rx) - 1):
-            y0, y1 = ry[i], ry[i + 1]
-            if y0 == y1:
-                continue
-            lo, hi = (y0, y1) if y0 < y1 else (y1, y0)
-            r0 = max(0, int(np.ceil(lo - 0.5)))
-            r1 = min(R - 1, int(np.floor(hi - 0.5 - 1e-12)))
-            for r in range(r0, r1 + 1):
-                yc = r + 0.5
-                if (y0 > yc) != (y1 > yc):
-                    xi = rx[i] + (yc - y0) / (y1 - y0) * (rx[i + 1] - rx[i])
-                    xints.setdefault(r, []).append(xi)
-    for r, xs in xints.items():
-        xs.sort()
-        for a, b in zip(xs[0::2], xs[1::2]):
-            c0 = max(0, int(np.ceil(a - 0.5)))
-            c1 = min(R - 1, int(np.floor(b - 0.5)))
-            if c1 >= c0:
-                acc[r, c0:c1 + 1] += 1
-
-
 def _scatter_points_batch(counts, sx_i, sy_i, tile_of_pt, R):
     """Point burn for the whole batch: ONE flat bincount over the linear
     (tile, py, px) index. ``sx_i``/``sy_i`` are already integer pixel
-    coords (the (v * R) // extent of ``_burn_points``)."""
+    coords (the (v * R) // extent of the reference ``burn_points``)."""
     ok = (sx_i >= 0) & (sx_i < R) & (sy_i >= 0) & (sy_i < R)
     if not ok.any():
         return
@@ -136,9 +70,9 @@ def _burn_lines_batch(counts, sx, sy, part_starts, part_tile, R):
 
     ``sx``/``sy``: scaled (pixel-space float) vertex coords of every line
     part, concatenated; ``part_starts``: (P+1,) vertex offsets;
-    ``part_tile``: (P,) tile ordinal per part. Semantics are
-    ``_burn_lines`` exactly: per segment ``n = floor(max(|dx|,|dy|)) + 1``
-    unit steps sampled at t = k/n (linspace endpoints reproduced
+    ``part_tile``: (P,) tile ordinal per part. Semantics are the
+    reference ``burn_lines`` exactly: per segment
+    ``n = floor(max(|dx|,|dy|)) + 1`` unit steps sampled at t = k/n (linspace endpoints reproduced
     bit-for-bit: t = k * (1/n), t_n forced to 1.0), floor to pixels,
     consecutive duplicates collapsed PER PART (across segment joints)."""
     nvert = len(sx)
@@ -184,8 +118,8 @@ def _fill_polygons_batch(counts, sx, sy, ring_starts, ring_feat, feat_tile, R):
     ``ring_starts``: (Q+1,) vertex offsets of every ring; ``ring_feat``:
     (Q,) feature ordinal per ring (parity pools ALL rings of a feature —
     holes carve); ``feat_tile``: feature ordinal → tile ordinal.
-    Semantics are ``_fill_polygon`` exactly: non-horizontal edges explode
-    to their candidate scanlines, the (y0 > yc) != (y1 > yc) parity test
+    Semantics are the reference ``fill_polygon`` exactly: non-horizontal
+    edges explode to their candidate scanlines, the (y0 > yc) != (y1 > yc) parity test
     keeps true crossings, crossings sort per (feature, row) and pair up,
     and each [a, b) pair fills ceil(a-0.5)..floor(b-0.5) via a
     difference-array scatter + one cumsum."""
@@ -323,11 +257,11 @@ def rasterize_tiles(composited: DataFrame, resolution: int = 256) -> DataFrame:
                 def gather(sel):
                     """(scaled float verts, part starts, part→feature) for
                     the selected absolute feature indices."""
-                    vtake = _multi_arange(xo[sel], xo[sel + 1])
+                    vtake = multi_arange(xo[sel], xo[sel + 1])
                     nv = xo[sel + 1] - xo[sel]
                     new_off = np.concatenate(
                         [[0], np.cumsum(nv)]).astype(np.int64)
-                    ptake = _multi_arange(poo[sel], poo[sel + 1])
+                    ptake = multi_arange(poo[sel], poo[sel + 1])
                     npart = poo[sel + 1] - poo[sel]
                     part_feat = np.repeat(
                         np.arange(len(sel), dtype=np.int64), npart)
@@ -341,7 +275,7 @@ def rasterize_tiles(composited: DataFrame, resolution: int = 256) -> DataFrame:
 
                 psel = fsel[gts == 1]
                 if len(psel):
-                    vtake = _multi_arange(xo[psel], xo[psel + 1])
+                    vtake = multi_arange(xo[psel], xo[psel + 1])
                     nv = xo[psel + 1] - xo[psel]
                     ve = np.repeat(ext[psel], nv)
                     vt = np.repeat(tile_of_feat[psel - f0], nv)
@@ -426,177 +360,3 @@ def raster_to_points(rasters: DataFrame) -> DataFrame:
     return rasters.select("z", "x", "y", "raster").mapInPandas(
         kernel, schema=POINTS_SCHEMA)
 
-
-CONTOUR_SCHEMA = T.StructType([
-    T.StructField("z", T.IntegerType()),
-    T.StructField("x", T.LongType()),
-    T.StructField("y", T.LongType()),
-    T.StructField("contour_idx", T.IntegerType()),
-    T.StructField("closed", T.BooleanType()),
-    T.StructField("xs", T.ArrayType(T.DoubleType())),
-    T.StructField("ys", T.ArrayType(T.DoubleType())),
-])
-
-
-_MS_SEGMENTS = {
-    # marching-squares case table: corner bits (tl=8, tr=4, br=2, bl=1) →
-    # DIRECTED segments (edge_from, edge_to); edges: 0=top 1=right
-    # 2=bottom 3=left. Directions are CONSISTENTLY wound (inside kept on
-    # one side), so adjacent cells' segments chain head-to-tail and
-    # closed regions stitch into closed rings. Saddles (5, 10) resolve to
-    # the two-corner separation.
-    1: [(2, 3)], 2: [(1, 2)], 3: [(1, 3)], 4: [(0, 1)],
-    5: [(0, 3), (2, 1)], 6: [(0, 2)], 7: [(0, 3)],
-    8: [(3, 0)], 9: [(2, 0)], 10: [(3, 2), (1, 0)],
-    11: [(1, 0)], 12: [(3, 1)], 13: [(2, 1)], 14: [(3, 2)],
-}
-
-
-def _edge_point(cy, cx, edge):
-    if edge == 0:
-        return (cx + 0.5, cy)
-    if edge == 1:
-        return (cx + 1.0, cy + 0.5)
-    if edge == 2:
-        return (cx + 0.5, cy + 1.0)
-    return (cx, cy + 0.5)
-
-
-def _contour_tile(img: np.ndarray, level: int):
-    """Marching squares over the padded binary mask → stitched polylines
-    in PIXEL-CORNER coordinates (deterministic order)."""
-    b = np.pad(img >= level, 1).astype(np.int8)
-    tl = b[:-1, :-1]
-    tr = b[:-1, 1:]
-    br = b[1:, 1:]
-    bl = b[1:, :-1]
-    case = tl * 8 + tr * 4 + br * 2 + bl * 1
-    segs = []
-    ys_, xs_ = np.nonzero((case > 0) & (case < 15))
-    for cy, cx in zip(ys_.tolist(), xs_.tolist()):
-        for e_in, e_out in _MS_SEGMENTS[case[cy, cx]]:
-            segs.append((_edge_point(cy, cx, e_in),
-                         _edge_point(cy, cx, e_out)))
-    # stitch: consistent winding means every chain continues at the
-    # unique unconsumed segment starting where the last one ended
-    nxt: dict = {}
-    for a, bpt in segs:
-        nxt.setdefault(a, []).append(bpt)
-    chains = []
-    for a0, _ in sorted(segs):
-        if not nxt.get(a0):
-            continue
-        chain = [a0, nxt[a0].pop()]
-        while nxt.get(chain[-1]) and chain[-1] != a0:
-            chain.append(nxt[chain[-1]].pop())
-        chains.append((chain, chain[0] == chain[-1]))
-    # -1: un-pad back to pixel coordinates
-    return [([p[0] - 1 for p in c], [p[1] - 1 for p in c], closed)
-            for c, closed in chains]
-
-
-# vectorized emission tables for _contour_tile_batch: first/second directed
-# segment per case (second only at the saddles 5/10), and edge midpoints in
-# DOUBLED units so every coordinate is an exact integer (0.5 steps → ×2)
-_MS_SEG1_IN = np.full(16, -1, np.int64)
-_MS_SEG1_OUT = np.full(16, -1, np.int64)
-_MS_SEG2_IN = np.full(16, -1, np.int64)
-_MS_SEG2_OUT = np.full(16, -1, np.int64)
-for _c, _segs in _MS_SEGMENTS.items():
-    _MS_SEG1_IN[_c], _MS_SEG1_OUT[_c] = _segs[0]
-    if len(_segs) > 1:
-        _MS_SEG2_IN[_c], _MS_SEG2_OUT[_c] = _segs[1]
-_EDGE_DX2 = np.array([1, 2, 1, 0], np.int64)   # 2×(_edge_point dx)
-_EDGE_DY2 = np.array([0, 1, 2, 1], np.int64)
-
-
-def _contour_tile_batch(img: np.ndarray, level: int):
-    """``_contour_tile``'s batch-global twin (the `_burn_lines_batch`
-    pattern applied to the inverse direction): segment EMISSION is one
-    case-table lookup over the whole boundary-cell set — per-case affine
-    endpoint tables in doubled integer units, saddle second segments
-    spliced in per-cell order — and only chain STITCHING stays Python,
-    over packed int64 point keys instead of float tuples. Equivalence
-    with the per-cell reference is gated in tests/test_raster.py
-    (result lists compare ==, coordinates are exact 0.5 multiples)."""
-    b = np.pad(img >= level, 1).astype(np.int8)
-    case = (b[:-1, :-1] * 8 + b[:-1, 1:] * 4
-            + b[1:, 1:] * 2 + b[1:, :-1] * 1)
-    ys_, xs_ = np.nonzero((case > 0) & (case < 15))
-    if not len(ys_):
-        return []
-    cv = case[ys_, xs_]
-    two = (cv == 5) | (cv == 10)
-    n1 = len(cv)
-    counts = 1 + two.astype(np.int64)
-    pos = np.zeros(n1, np.int64)
-    np.cumsum(counts[:-1], out=pos[1:])
-    total = int(pos[-1] + counts[-1])
-    e_in = np.empty(total, np.int64)
-    e_out = np.empty(total, np.int64)
-    cy = np.empty(total, np.int64)
-    cx = np.empty(total, np.int64)
-    e_in[pos] = _MS_SEG1_IN[cv]
-    e_out[pos] = _MS_SEG1_OUT[cv]
-    cy[pos] = ys_
-    cx[pos] = xs_
-    p2 = pos[two] + 1
-    e_in[p2] = _MS_SEG2_IN[cv[two]]
-    e_out[p2] = _MS_SEG2_OUT[cv[two]]
-    cy[p2] = ys_[two]
-    cx[p2] = xs_[two]
-    # point key = (2x << 32) | 2y: integer, and numeric order == the
-    # reference's (x, y) tuple lexicographic order (2y < 2^32)
-    ka = ((2 * cx + _EDGE_DX2[e_in]) << 32) | (2 * cy + _EDGE_DY2[e_in])
-    kb = ((2 * cx + _EDGE_DX2[e_out]) << 32) | (2 * cy + _EDGE_DY2[e_out])
-    order = np.lexsort((kb, ka))
-    ka_l = ka.tolist()
-    kb_l = kb.tolist()
-    nxt: dict = {}
-    for a, bk in zip(ka_l, kb_l):  # emission order = the reference's
-        nxt.setdefault(a, []).append(bk)
-    chains = []
-    for i in order.tolist():
-        a0 = ka_l[i]
-        if not nxt.get(a0):
-            continue
-        chain = [a0, nxt[a0].pop()]
-        while nxt.get(chain[-1]) and chain[-1] != a0:
-            chain.append(nxt[chain[-1]].pop())
-        chains.append((chain, chain[0] == chain[-1]))
-    # decode keys: /2 back to corner units, -1 un-pads (exact: 0.5 steps)
-    return [([(k >> 32) * 0.5 - 1 for k in c],
-             [(k & 0xFFFFFFFF) * 0.5 - 1 for k in c], closed)
-            for c, closed in chains]
-
-
-def raster_contours(rasters: DataFrame, level: int = 1,
-                    scale_to_extent: int | None = 4096) -> DataFrame:
-    """Raster→vector: marching-squares iso-contours at ``level`` over each
-    tile's raster, stitched into polylines. ``scale_to_extent`` maps pixel
-    corners back to tile coordinates so the output can flow into the
-    composite/encode sinks (raster → vector → MVT)."""
-
-    def kernel(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            out = {f.name: [] for f in CONTOUR_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                w, h, c, px = decode_pnm(bytes(row.raster))
-                img = px.reshape(h, w)
-                # per-axis scale: a non-square raster maps each axis to the
-                # full extent independently
-                sx = (scale_to_extent / w) if scale_to_extent else 1.0
-                sy = (scale_to_extent / h) if scale_to_extent else 1.0
-                for i, (cxs, cys, closed) in enumerate(
-                        _contour_tile_batch(img, level)):
-                    out["z"].append(row.z)
-                    out["x"].append(row.x)
-                    out["y"].append(row.y)
-                    out["contour_idx"].append(i)
-                    out["closed"].append(closed)
-                    out["xs"].append([v * sx for v in cxs])
-                    out["ys"].append([v * sy for v in cys])
-            yield pd.DataFrame(out)
-
-    return rasters.select("z", "x", "y", "raster").mapInPandas(
-        kernel, schema=CONTOUR_SCHEMA)

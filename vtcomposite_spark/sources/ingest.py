@@ -13,6 +13,7 @@ src/feature_builder.hpp:169-180).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..schema import FEATURES_SCHEMA
 from . import mvt
@@ -88,6 +89,38 @@ def feature_rows(tiles: list[tuple[bytes, int, int, int]],
     return rows
 
 
+def _entry_rows(tiles: list[tuple[bytes, int, int, int]]) -> list[dict]:
+    """``feature_rows`` with both maps as entries arrays in property
+    order: one entries array drives BOTH maps so their entry orders
+    align, and ``_with_maps`` rebuilds the maps JVM-side in that order."""
+    rows = feature_rows(tiles)
+    for r in rows:
+        r["prop_types"] = [{"key": k, "value": r["prop_types"][k]}
+                           for k in r["properties"]]
+        r["properties"] = [{"key": k, "value": v}
+                           for k, v in r["properties"].items()]
+    return rows
+
+
+def _entry_t(vt):
+    return T.ArrayType(T.StructType([
+        T.StructField("key", T.StringType()), T.StructField("value", vt)]))
+
+
+# FEATURES_SCHEMA with the two maps as ``_entry_rows``' entries arrays
+_ENTRIES_SCHEMA = T.StructType([
+    T.StructField(f.name, _entry_t(
+        T.StringType() if f.name == "properties" else T.ByteType()))
+    if f.name in ("properties", "prop_types") else f
+    for f in FEATURES_SCHEMA.fields])
+
+
+def _with_maps(df: DataFrame) -> DataFrame:
+    from pyspark.sql import functions as F
+    return df.withColumns({"properties": F.map_from_entries("properties"),
+                           "prop_types": F.map_from_entries("prop_types")})
+
+
 def features_from_tiles(spark: SparkSession,
                         tiles: list[tuple[bytes, int, int, int]]) -> DataFrame:
     """createDataFrame does NOT preserve python-dict entry order for map
@@ -96,27 +129,8 @@ def features_from_tiles(spark: SparkSession,
     (src/vtcomposite.cpp:871-877), so properties travel as an ordered
     entries array and become a map via map_from_entries (order-preserving).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    rows = feature_rows(tiles)
-    for r in rows:
-        # one entries array drives BOTH maps so their entry orders align
-        r["prop_types"] = [{"key": k, "value": r["prop_types"][k]}
-                           for k in r["properties"]]
-        r["properties"] = [{"key": k, "value": v} for k, v in r["properties"].items()]
-
-    def entry_t(vt):
-        return T.ArrayType(T.StructType([
-            T.StructField("key", T.StringType()), T.StructField("value", vt)]))
-    overrides = {"properties": entry_t(T.StringType()),
-                 "prop_types": entry_t(T.ByteType())}
-    schema = T.StructType([
-        T.StructField(f.name, overrides[f.name]) if f.name in overrides else f
-        for f in FEATURES_SCHEMA.fields])
-    df = spark.createDataFrame(rows, schema=schema)
-    return df.withColumns({"properties": F.map_from_entries("properties"),
-                           "prop_types": F.map_from_entries("prop_types")})
+    return _with_maps(spark.createDataFrame(_entry_rows(tiles),
+                                            schema=_ENTRIES_SCHEMA))
 
 
 def features_from_tiles_df(tiles: DataFrame, buf_col: str = "tile",
@@ -146,21 +160,7 @@ def features_from_tiles_df(tiles: DataFrame, buf_col: str = "tile",
 
     import pandas as pd
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def entry_t(vt):
-        return T.ArrayType(T.StructType([
-            T.StructField("key", T.StringType()),
-            T.StructField("value", vt)]))
-
-    overrides = {"properties": entry_t(T.StringType()),
-                 "prop_types": entry_t(T.ByteType())}
-    out_schema = T.StructType([
-        T.StructField(f.name, overrides.get(f.name, f.dataType))
-        if f.name in overrides else f for f in FEATURES_SCHEMA.fields])
-    cols = [f.name for f in out_schema.fields]
-
+    cols = [f.name for f in _ENTRIES_SCHEMA.fields]
     sel = ["z", "x", "y", buf_col] + ([tile_idx_col] if tile_idx_col else [])
 
     def decode(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -169,22 +169,15 @@ def features_from_tiles_df(tiles: DataFrame, buf_col: str = "tile",
             for row in pdf.itertuples(index=False):
                 ti = int(getattr(row, tile_idx_col)) if tile_idx_col \
                     else int(row.z)
-                rows = feature_rows([(bytes(getattr(row, buf_col)),
-                                      int(row.z), int(row.x), int(row.y))])
-                for r in rows:
+                for r in _entry_rows([(bytes(getattr(row, buf_col)),
+                                       int(row.z), int(row.x), int(row.y))]):
                     r["tile_idx"] = ti
-                    r["prop_types"] = [
-                        {"key": k, "value": r["prop_types"][k]}
-                        for k in r["properties"]]
-                    r["properties"] = [{"key": k, "value": v}
-                                       for k, v in r["properties"].items()]
                     out.append(r)
             yield pd.DataFrame(out, columns=cols) if out \
                 else pd.DataFrame({c: [] for c in cols})
 
-    df = tiles.select(*sel).mapInPandas(decode, schema=out_schema)
-    return df.withColumns({"properties": F.map_from_entries("properties"),
-                           "prop_types": F.map_from_entries("prop_types")})
+    return _with_maps(tiles.select(*sel).mapInPandas(
+        decode, schema=_ENTRIES_SCHEMA))
 
 
 def targets_df(spark: SparkSession, targets: list[dict]) -> DataFrame:

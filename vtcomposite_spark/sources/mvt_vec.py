@@ -25,22 +25,12 @@ import struct
 
 import numpy as np
 
+from ..geometry import multi_arange
 from . import mvt
 
 _I64 = np.int64
 _U64 = np.uint64
 _U8 = np.uint8
-
-
-def _multi_arange(starts, stops):
-    starts = np.asarray(starts, _I64)
-    stops = np.asarray(stops, _I64)
-    lens = stops - starts
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, _I64)
-    shift = np.repeat(starts - np.concatenate([[0], np.cumsum(lens)[:-1]]), lens)
-    return shift + np.arange(total, dtype=_I64)
 
 
 def varint_encode(vals: np.ndarray):
@@ -121,7 +111,7 @@ def _geometry_blob(gt, vst, ven, xs_vals, ys_vals, pst, pen, po_vals):
     pf = np.repeat(np.arange(F, dtype=_I64), nparts)
     if len(pf) == 0:
         return np.empty(0, _U8), np.zeros(F + 1, _I64)
-    rel = po_vals[_multi_arange(pst, pen)].astype(_I64)
+    rel = po_vals[multi_arange(pst, pen)].astype(_I64)
     abs_start = rel + vst[pf]
     abs_end = np.empty_like(abs_start)
     abs_end[:-1] = abs_start[1:]
@@ -168,7 +158,7 @@ def _geometry_blob(gt, vst, ven, xs_vals, ys_vals, pst, pen, po_vals):
     cp = np.nonzero(unit_kind == 3)[0]
     words[unit_off[1:][cp] - 1] = _U64(7)
 
-    kept_take = _multi_arange(abs_start, kept_end)
+    kept_take = multi_arange(abs_start, kept_end)
     kx = xs_vals[kept_take].astype(_I64)
     ky = ys_vals[kept_take].astype(_I64)
     kv_part = np.repeat(np.arange(len(pf), dtype=_I64), nkept_part)
@@ -475,31 +465,31 @@ def encode_tiles_table(tbl):
 
     out[fstart] = 0x12
     p = fstart + 1
-    out[_multi_arange(p, p + fb_nb)] = fb_uv
+    out[multi_arange(p, p + fb_nb)] = fb_uv
     p = p + fb_nb
     pv = p[fid_valid]
     out[pv] = 0x08
-    out[_multi_arange(pv + 1, pv + 1 + fid_nb[fid_valid])] = fid_uv
+    out[multi_arange(pv + 1, pv + 1 + fid_nb[fid_valid])] = fid_uv
     p = p + fid_len
     pt = p[has_tags]
     out[pt] = 0x12
-    out[_multi_arange(pt + 1, pt + tag_hdr[has_tags])] = taglen_uv
-    out[_multi_arange(p + tag_hdr, p + tag_hdr + taglen)] = tagblob
+    out[multi_arange(pt + 1, pt + tag_hdr[has_tags])] = taglen_uv
+    out[multi_arange(p + tag_hdr, p + tag_hdr + taglen)] = tagblob
     p = p + tag_hdr + taglen
     out[p] = 0x18
     out[p + 1] = gt_all.astype(_U8)
     out[p + 2] = 0x22
-    out[_multi_arange(p + 3, p + 3 + geol_nb)] = geolen_uv
-    out[_multi_arange(p + 3 + geol_nb, p + 3 + geol_nb + geolen)] = geoblob
+    out[multi_arange(p + 3, p + 3 + geol_nb)] = geolen_uv
+    out[multi_arange(p + 3 + geol_nb, p + 3 + geol_nb + geolen)] = geoblob
     frames = out.tobytes()
 
     # --- per-unit key/value table bytes: ONE vectorized gather of the
     # pre-encoded per-code chunks, sliced per unit
     kblob, kb_off = _bytes_blob(key_entry_bytes)
     vblob, vb_off = _bytes_blob(val_entry_bytes)
-    ktab = kblob[_multi_arange(kb_off[unit_key_codes],
+    ktab = kblob[multi_arange(kb_off[unit_key_codes],
                                kb_off[unit_key_codes + 1])].tobytes()
-    vtab = vblob[_multi_arange(vb_off[unit_val_codes],
+    vtab = vblob[multi_arange(vb_off[unit_val_codes],
                                vb_off[unit_val_codes + 1])].tobytes()
     klen = kb_off[unit_key_codes + 1] - kb_off[unit_key_codes]
     vlen = vb_off[unit_val_codes + 1] - vb_off[unit_val_codes]

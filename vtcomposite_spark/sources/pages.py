@@ -279,8 +279,8 @@ def extract_links(pages: DataFrame, keep: list[str] | None = None,
     run on these edges, src = ``url_col``). Sniff/decode in the thin
     Python seam, then href harvesting (regexp_extract_all) and RFC
     3986-subset resolution (functions/text.py resolve_href_col) as
-    CODEGEN over exploded hrefs — the HOF form exists only as the
-    oracle-parity twin. Rows ∝ anchors; dropped hrefs (non-http
+    CODEGEN over exploded hrefs — the HOF form is a parity reference in
+    tests/reference_plans.py. Rows ∝ anchors; dropped hrefs (non-http
     schemes, empty/fragment-only) never materialize."""
     from ..functions.text import HREF_PATTERN, resolve_href_col
     keep = keep or [url_col]

@@ -79,6 +79,30 @@ def _has_iceberg(spark: SparkSession) -> bool:
             return False
 
 
+def _require_iceberg(spark: SparkSession) -> None:
+    if not _has_iceberg(spark):
+        raise RuntimeError(
+            "iceberg-spark-runtime is not on this session's classpath; "
+            "add the runtime jar + a spark.sql.catalog.* config, or "
+            "pass a parquet path (fmt='parquet')")
+
+
+def _iceberg_write(df: DataFrame, target: str, mode: str) -> None:
+    """writeTo with the table's own partition spec: append | overwrite
+    (createOrReplace) | error (create — fails if the table exists, like
+    parquet's ErrorIfExists)."""
+    _require_iceberg(df.sparkSession)
+    w = df.writeTo(target)
+    if mode == "append":
+        w.append()
+    elif mode == "overwrite":
+        w.createOrReplace()
+    elif mode in ("error", "errorifexists"):
+        w.create()
+    else:
+        raise ValueError(f"unsupported Iceberg write mode {mode!r}")
+
+
 def read_pages(spark: SparkSession, source: str,
                fmt: str = "auto") -> DataFrame:
     """pages table (url, warc_ts, html, text, lang) from an Iceberg table
@@ -87,11 +111,7 @@ def read_pages(spark: SparkSession, source: str,
     parquet directory routes to parquet."""
     if fmt == "iceberg" or (fmt == "auto"
                             and _looks_like_iceberg(source, reading=True)):
-        if not _has_iceberg(spark):
-            raise RuntimeError(
-                "iceberg-spark-runtime is not on this session's classpath; "
-                "add the runtime jar + a spark.sql.catalog.* config, or "
-                "pass a parquet path (fmt='parquet')")
+        _require_iceberg(spark)
         return spark.read.format("iceberg").load(source)
     return spark.read.parquet(source)
 
@@ -104,22 +124,9 @@ def write_tiles(df: DataFrame, target: str, fmt: str = "auto",
     (Iceberg: create — fails if the table exists, like parquet's
     ErrorIfExists)."""
     if fmt == "iceberg" or (fmt == "auto" and _looks_like_iceberg(target)):
-        if not _has_iceberg(df.sparkSession):
-            raise RuntimeError(
-                "iceberg-spark-runtime is not on this session's classpath; "
-                "add the runtime jar + a spark.sql.catalog.* config, or "
-                "pass a parquet path (fmt='parquet')")
-        w = df.writeTo(target)
-        if mode == "append":
-            w.append()
-        elif mode == "overwrite":
-            w.createOrReplace()
-        elif mode in ("error", "errorifexists"):
-            w.create()
-        else:
-            raise ValueError(f"unsupported Iceberg write mode {mode!r}")
-        return
-    df.write.mode(mode).partitionBy("z").parquet(target)
+        _iceberg_write(df, target, mode)
+    else:
+        df.write.mode(mode).partitionBy("z").parquet(target)
 
 
 def write_features(df: DataFrame, target: str, fmt: str = "auto",
@@ -130,22 +137,9 @@ def write_features(df: DataFrame, target: str, fmt: str = "auto",
     same pruning contract ``write_tiles`` gives the z-partitioned tile
     log; plan-tested)."""
     if fmt == "iceberg" or (fmt == "auto" and _looks_like_iceberg(target)):
-        if not _has_iceberg(df.sparkSession):
-            raise RuntimeError(
-                "iceberg-spark-runtime is not on this session's classpath; "
-                "add the runtime jar + a spark.sql.catalog.* config, or "
-                "pass a parquet path (fmt='parquet')")
-        w = df.writeTo(target)
-        if mode == "append":
-            w.append()
-        elif mode == "overwrite":
-            w.createOrReplace()
-        elif mode in ("error", "errorifexists"):
-            w.create()
-        else:
-            raise ValueError(f"unsupported Iceberg write mode {mode!r}")
-        return
-    df.write.mode(mode).partitionBy("src_z").parquet(target)
+        _iceberg_write(df, target, mode)
+    else:
+        df.write.mode(mode).partitionBy("src_z").parquet(target)
 
 
 def read_features(spark: SparkSession, source: str,
@@ -155,11 +149,7 @@ def read_features(spark: SparkSession, source: str,
     type)."""
     if fmt == "iceberg" or (fmt == "auto"
                             and _looks_like_iceberg(source, reading=True)):
-        if not _has_iceberg(spark):
-            raise RuntimeError(
-                "iceberg-spark-runtime is not on this session's classpath; "
-                "add the runtime jar + a spark.sql.catalog.* config, or "
-                "pass a parquet path (fmt='parquet')")
+        _require_iceberg(spark)
         return spark.read.format("iceberg").load(source)
     from pyspark.sql import functions as F
     return spark.read.parquet(source) \

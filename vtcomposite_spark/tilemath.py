@@ -2,25 +2,27 @@
 
 From-scratch re-expression of the reference's zxy math:
 
-* ``within_target`` — tile-ancestry predicate
+* ``within_target_col`` — tile-ancestry predicate
   (reference: src/zxy_math.hpp:8-17).
-* ``displacement``  — origin offset of a target tile inside its overzoomed
-  ancestor, in scaled coordinates (reference: src/zxy_math.hpp:19-40).
-  We use the closed form ``dx = (x mod 2^dz) * extent`` of the reference's
-  bit-walk loop.
 * ``lon/lat → tile`` — Web-Mercator forward projection, identical formula to
   the reference's test helper (test/vtcomposite-points.test.js:11-17) and
   TUTORIAL.md:87-113.
-* cell ids — packed z/x/y quadtree key (H3/S2-style stand-in; pure integer
-  math so it is reproducible in any engine).
+* cell ids — packed z/x/y quadtree key, cell = (z << 58) | (x << 29) | y
+  (H3/S2-style stand-in; pure integer math so it is reproducible in any
+  engine).
 
-Everything exists twice: a numpy form (used inside Arrow kernels and unit
-tests) and a Spark form — SQL text or a Column expression — used in
-DataFrame plans so Catalyst can push down / codegen (tile assignment never
-crosses into Python). The lon/lat → tile math is SQL text only
-(``tile_frac_sql`` / ``tile_xy_sql``): the DuckDB oracles parse the same
-text, and building a plan from it takes one Python-to-JVM round trip per
-expression instead of several per Column operator.
+The origin offset of a target tile inside its overzoomed ancestor
+(reference: src/zxy_math.hpp:19-40) is the closed form
+``dx = (x mod 2^dz) * extent`` of the reference's bit-walk loop; the
+composite plan computes it inline (``operators.composite``).
+
+The numpy forms serve Arrow kernels and local range math; DataFrame
+plans use a Spark form — SQL text or a Column expression — so Catalyst
+can push down / codegen (tile assignment never crosses into Python). The
+lon/lat → tile math is SQL text only (``tile_frac_sql`` /
+``tile_xy_sql``): the DuckDB oracles parse the same text, and building a
+plan from it takes one Python-to-JVM round trip per expression instead
+of several per Column operator.
 """
 
 from __future__ import annotations
@@ -37,9 +39,8 @@ try:  # Column-expression variants need pyspark; numpy variants do not.
 except ImportError:  # pragma: no cover
     _HAVE_SPARK = False
 
-MAX_ZOOM = 30
 # cell ids pack x/y into 29-bit fields; z=30 coords would silently corrupt
-# the z and x fields, so cells cap one zoom below tile math's MAX_ZOOM
+# the z and x fields, so cells cap at zoom 29
 MAX_CELL_ZOOM = 29
 
 
@@ -66,48 +67,9 @@ def lonlat_to_tile(lon, lat, zoom):
     return tx, ty
 
 
-def within_target(src_z, src_x, src_y, z, x, y):
-    """Ancestry predicate (reference src/zxy_math.hpp:8-17).
-
-    True iff the source tile is the target tile or one of its ancestors.
-    """
-    src_z = np.asarray(src_z, dtype=np.int64)
-    src_x = np.asarray(src_x, dtype=np.int64)
-    src_y = np.asarray(src_y, dtype=np.int64)
-    dz = np.maximum(np.int64(z) - src_z, 0)
-    ok_z = src_z <= z
-    return ok_z & ((np.int64(x) >> dz) == src_x) & ((np.int64(y) >> dz) == src_y)
-
-
-def displacement(src_z, extent, z, x, y):
-    """Closed form of reference src/zxy_math.hpp:19-40 bit-walk.
-
-    dx = (x mod 2^dz) * extent ; dy = (y mod 2^dz) * extent.
-    """
-    dz = np.int64(z) - np.asarray(src_z, dtype=np.int64)
-    mask = (np.int64(1) << dz) - 1
-    dx = (np.asarray(x, dtype=np.int64) & mask) * np.int64(extent)
-    dy = (np.asarray(y, dtype=np.int64) & mask) * np.int64(extent)
-    return dx, dy
-
-
-def pack_cell(z, x, y):
-    """Pack (z, x, y) into one int64 quadkey-style cell id.
-
-    Layout: cell = (z << 58) | (x << 29) | y — valid for z <= MAX_CELL_ZOOM
-    (= 29, so x,y < 2^29 fit their bit fields; tile math's MAX_ZOOM=30 does
-    NOT apply to cell ids). Pure integer math so the same expression is
-    writable in ANSI SQL.
-    """
-    z = np.asarray(z, dtype=np.int64)
-    if np.any(z > MAX_CELL_ZOOM) or np.any(z < 0):
-        raise ValueError(f"pack_cell: zoom must be in [0, {MAX_CELL_ZOOM}]")
-    return (z << 58) | (np.asarray(x, dtype=np.int64) << 29) | np.asarray(y, dtype=np.int64)
-
-
 # ---------------------------------------------------------------------------
 # Morton / Z-order keys — the locality-preserving STORAGE order
-# (pack_cell is the LOOKUP key: exact-tile equi-joins; morton_key is the
+# (the cell id is the LOOKUP key: exact-tile equi-joins; morton_key is the
 # layout key: nearby tiles get nearby keys, and a quadtree subtree is one
 # contiguous key range, so parquet min/max stats prune spatial reads)
 # ---------------------------------------------------------------------------
@@ -200,8 +162,9 @@ def tile_xy_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
 
 
 def pack_cell_sql(zoom: int, x: str, y: str) -> str:
-    """Spark-SQL form of ``pack_cell`` for a constant ``zoom`` (callers
-    check it against MAX_CELL_ZOOM, as ``encode_cells`` does)."""
+    """Spark-SQL cell id (z << 58) | (x << 29) | y for a constant
+    ``zoom`` (callers check it against MAX_CELL_ZOOM, as ``encode_cells``
+    does)."""
     return (f"({zoom << 58} | shiftleft(CAST({x} AS BIGINT), 29)"
             f" | CAST({y} AS BIGINT))")
 
@@ -216,11 +179,6 @@ if _HAVE_SPARK:
                           z: Column, x: Column, y: Column) -> Column:
         dz = z - src_z
         return (src_z <= z) & (F.call_function("shiftright", x, dz) == src_x) & (F.call_function("shiftright", y, dz) == src_y)
-
-    def displacement_cols(src_z: Column, extent: Column,
-                          z: Column, x: Column, y: Column) -> tuple[Column, Column]:
-        mask = F.call_function("shiftleft", F.lit(1).cast("long"), z - src_z) - F.lit(1).cast("long")
-        return (x.bitwiseAND(mask) * extent).cast("long"), (y.bitwiseAND(mask) * extent).cast("long")
 
     def pack_cell_col(z: Column, x: Column, y: Column) -> Column:
         return (
